@@ -35,10 +35,9 @@ def _roundtrip(spark: SparkSession, df: DataFrame, key_col: str,
                sort_keys: list[str], stripe_rows: int = 8192,
                force_codecs: dict | None = None) -> DataFrame:
     """decode(encode(df)) — the engine's identity contract, in memory."""
-    stripes = pipeline.encode_dataframe(
-        df, key_col=key_col, order_col=None, sort_keys=sort_keys,
-        stripe_rows=stripe_rows, force_codecs=force_codecs)
-    return pipeline.decode_dataframe(stripes, columns=df.columns, schema=df.schema)
+    return pipeline.roundtrip(df, key_col, sort_keys=sort_keys,
+                              stripe_rows=stripe_rows,
+                              force_codecs=force_codecs)
 
 
 def _read(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
@@ -329,12 +328,8 @@ def q_pruned_decode(spark, sf_dir):
     pushdown, the read_stripe_column analog)."""
     _pin(spark)
     df = _read(spark, sf_dir, "events")
-    stripes = pipeline.encode_dataframe(df, "event_id", None,
-                                        sort_keys=["event_id"], stripe_rows=8192)
-    import pyspark.sql.types as T
-    schema = T.StructType([df.schema["event_id"], df.schema["event_type"]])
-    return pipeline.decode_dataframe(stripes, columns=["event_id", "event_type"],
-                                     schema=schema)
+    return pipeline.roundtrip(df, "event_id", columns=["event_id", "event_type"],
+                              sort_keys=["event_id"], stripe_rows=8192)
 
 
 def q_stride_pruned_lookup(spark, sf_dir):
@@ -344,13 +339,11 @@ def q_stride_pruned_lookup(spark, sf_dir):
     RowIndexEntry analog; pinned by tests/test_stride_index.py)."""
     _pin(spark)
     df = _read(spark, sf_dir, "events")
-    stripes = pipeline.encode_dataframe(df, "event_id", None,
-                                        sort_keys=["event_id"],
-                                        stripe_rows=8192, index_rows=256)
     lo, hi = 3000, 3050
-    out = pipeline.decode_dataframe(
-        stripes, columns=["event_id", "event_type", "value"],
-        stride_range=("event_id", lo, hi))
+    out = pipeline.roundtrip(
+        df, "event_id", columns=["event_id", "event_type", "value"],
+        stride_range=("event_id", lo, hi), sort_keys=["event_id"],
+        stripe_rows=8192, index_rows=256)
     return out.filter(F.col("event_id").between(lo, hi))
 
 
@@ -377,30 +370,21 @@ def q_codec_selection(spark, sf_dir):
             recs = []
             for row in pdf.to_dict("records"):
                 arr = stripe_mod.decode_column(row)
-                kind = row["col_kind"]
-                if isinstance(arr, (pa.Array, pa.ChunkedArray)):
-                    if isinstance(arr, pa.ChunkedArray):
-                        arr = arr.combine_chunks()
-                    if pa.types.is_string(arr.type) or pa.types.is_binary(arr.type):
-                        arr = arr.cast(pa.large_binary())
-                        offs = np.frombuffer(arr.buffers()[1], dtype=np.int64,
-                                             count=len(arr) + 1)
-                        blob = (arr.buffers()[2].to_pybytes()
-                                if arr.buffers()[2] is not None else b"")
-                        raw = blob + np.diff(offs).tobytes()
-                    else:
-                        raw = np.ascontiguousarray(
-                            arr.to_numpy(zero_copy_only=False)).tobytes()
+                if pa.types.is_string(arr.type) or pa.types.is_binary(arr.type):
+                    arr = arr.cast(pa.large_binary())
+                    offs = np.frombuffer(arr.buffers()[1], dtype=np.int64,
+                                         count=len(arr) + 1)
+                    blob = (arr.buffers()[2].to_pybytes()
+                            if arr.buffers()[2] is not None else b"")
+                    raw = blob + np.diff(offs).tobytes()
                 else:
-                    a = np.asarray(arr)
-                    if a.dtype.kind == "M":
-                        a = a.view("int64")
-                    elif a.dtype == bool:
-                        a = a.astype(np.uint8)
-                    raw = np.ascontiguousarray(a).tobytes()
+                    if pa.types.is_boolean(arr.type):
+                        arr = arr.cast(pa.uint8())  # a byte per value
+                    raw = arr.buffers()[1].to_pybytes()[
+                        :len(arr) * arr.type.byte_width]
                 payload = sum(len(row[s]) for s in
                               ("data", "length", "dict_data", "extra"))
-                recs.append((row["col_name"], kind, row["codec"],
+                recs.append((row["col_name"], row["col_kind"], row["codec"],
                              int(row["raw_bytes"]), int(row["enc_bytes"]),
                              payload, len(deflate.compress(raw))))
             if recs:

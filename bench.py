@@ -307,9 +307,7 @@ def main() -> None:
 
     from orc_format_spark import pipeline
     t0 = time.perf_counter()
-    stripes = pipeline.encode_dataframe(df, "conv_id", "turn_idx",
-                                        stripe_rows=STRIPE_ROWS)
-    dec = pipeline.decode_dataframe(stripes, columns=df.columns, schema=df.schema)
+    dec = pipeline.roundtrip(df, "conv_id", "turn_idx", stripe_rows=STRIPE_ROWS)
     dec.count()
     queries["encode_decode_transcripts"] = time.perf_counter() - t0
 

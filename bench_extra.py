@@ -91,10 +91,8 @@ def main() -> None:
         runs = []
         for _ in range(repeats):
             t0 = time.perf_counter()
-            stripes = pipeline.encode_dataframe(df, "conv_id", "turn_idx",
-                                                stripe_rows=STRIPE_ROWS)
-            dec = pipeline.decode_dataframe(stripes, columns=df.columns,
-                                            schema=df.schema)
+            dec = pipeline.roundtrip(df, "conv_id", "turn_idx",
+                                     stripe_rows=STRIPE_ROWS)
             dec.count()
             runs.append(time.perf_counter() - t0)
         queries["encode_decode_transcripts"] = min(runs)
@@ -114,8 +112,8 @@ def main() -> None:
                                                 stripe_rows=STRIPE_ROWS)
             with open(f"{plans_dir}/encode_transcripts_{suffix}.txt", "w") as f:
                 f.write(plan_of(stripes))
-            dec = pipeline.decode_dataframe(stripes, columns=df.columns,
-                                            schema=df.schema)
+            dec = pipeline.roundtrip(df, "conv_id", "turn_idx",
+                                     stripe_rows=STRIPE_ROWS)
             with open(f"{plans_dir}/encode_decode_transcripts_{suffix}.txt",
                       "w") as f:
                 f.write(plan_of(dec))

@@ -7,13 +7,17 @@ Execution model (SURVEY.md §3.4):
       -> bucket = pmod(xxhash64(key), n_buckets), salt = order // salt_rows
          (salting defuses long-conversation skew: one conversation can span
          several stripes; decode's global orderBy reassembles it)
-      -> groupBy(bucket, salt).applyInPandas(encode_stripe)   [one shuffle]
+      -> repartition by (bucket, salt) + sortWithinPartitions [one shuffle]
+      -> mapInArrow(encode_stripe_arrow per (bucket, salt) run)
       -> stripes rows (one per stripe-column)  [+ manifest agg, lineage rows]
     DECODE: stripes table
       -> optional column pruning (filter col_name — predicate pushdown to
          the parquet scan) and stripe pruning (manifest min/max)
-      -> groupBy(stripe_id).applyInPandas(decode_stripe)      [one shuffle]
+      -> repartition(stripe_id) + sortWithinPartitions        [one shuffle]
+      -> mapInArrow(decode_stripe_arrow per stripe)
       -> orderBy(sort keys) at comparison time only
+    ROUNDTRIP: ENCODE then the DECODE kernel in the same stage — the encode
+      output is already stripe-clustered, so no second shuffle
 
 The stripes-as-rows layout is the Spark analog of the reference's
 stripe/stream container (src/read/mod.rs:117-159): locating one column's
@@ -514,6 +518,18 @@ def _reassemble_structs(df: DataFrame, schema: T.StructType) -> DataFrame:
                       for f in schema.fields])
 
 
+def _n_buckets(df: DataFrame, stripe_rows: int,
+               n_rows: int | None = None) -> int:
+    """One hash bucket per ``stripe_rows`` input rows; the row count comes
+    from parquet footers when ``df`` is file-backed, else from one count
+    job."""
+    if n_rows is None:
+        n_rows = _estimate_rows(df)
+    if n_rows is None:
+        n_rows = df.count()
+    return max((n_rows + stripe_rows - 1) // stripe_rows, 1)
+
+
 def _estimate_rows(df: DataFrame) -> int | None:
     """Row count from parquet FOOTERS when ``df`` is file-backed — metadata
     only, no data scan (kills the count() pre-pass the encode job used to
@@ -576,11 +592,7 @@ def encode_dataframe(df: DataFrame, key_col: str, order_col: str | None = None,
     kinds = column_kinds(df)
     sort_keys = sort_keys or [k for k in (key_col, order_col) if k]
     if n_buckets is None:
-        if n_rows is None:
-            n_rows = _estimate_rows(df)  # parquet footers: no data scan
-        if n_rows is None:
-            n_rows = df.count()  # non-file source (e.g. generated): one job
-        n_buckets = max((n_rows + stripe_rows - 1) // stripe_rows, 1)
+        n_buckets = _n_buckets(df, stripe_rows, n_rows)
 
     salt = (F.floor(F.col(order_col) / F.lit(stripe_rows)).cast("long")
             if order_col else F.lit(0))
@@ -635,15 +647,10 @@ def encode_dataframe(df: DataFrame, key_col: str, order_col: str | None = None,
                 bloom_cols=set(bloom_cols or ())))
         yield stripe_mod.stripe_rows_to_batch(rows)
 
-    out = keyed.mapInArrow(encode_partition, STRIPE_SCHEMA)
-    # The output is stripe-clustered BY CONSTRUCTION: each (bucket, salt)
-    # group lands whole in one partition and its column rows are emitted
-    # contiguously. Tag the exact object so decode_dataframe can skip its
-    # re-clustering exchange when handed this output directly (the
-    # in-memory roundtrip path); any derived DataFrame (filter, read-back
-    # from storage) loses the tag and keeps the safe re-shuffle.
-    out._ofs_stripe_clustered = True
-    return out
+    # stripe-clustered by construction: each (bucket, salt) group lands
+    # whole in one partition and its column rows are emitted contiguously
+    # (what lets roundtrip decode it without a second shuffle)
+    return keyed.mapInArrow(encode_partition, STRIPE_SCHEMA)
 
 
 def _schema_from_kinds(by_name: dict[str, str],
@@ -723,6 +730,13 @@ def infer_schema_from_manifest(spark: SparkSession, out_dir: str,
     return infer_schema(read_stripes(spark, out_dir), columns)
 
 
+def _arrow_schema(schema: T.StructType):
+    """Arrow schema of decoded batches; Spark timestamps map to tz=UTC
+    (the decoder's int64s are UTC instants)."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    return to_arrow_schema(schema)
+
+
 def decode_dataframe(stripes: DataFrame, columns: list[str] | None = None,
                      schema: T.StructType | None = None,
                      stride_range: tuple | None = None) -> DataFrame:
@@ -737,18 +751,53 @@ def decode_dataframe(stripes: DataFrame, columns: list[str] | None = None,
     decode ONLY the strides whose per-stride [min,max] for that column
     overlaps [lo, hi] (sub-stripe skipping). The caller applies the exact
     residual predicate; strides are a superset of matching rows.
+
+    The stripe rows are always re-clustered on ``stripe_id`` (one shuffle);
+    :func:`roundtrip` decodes an in-memory encode without it. Same
+    AQE-coalescing consideration as the encode side: stripe rows are
+    byte-light but expand ~10x on decode, so a parallel task count is
+    pinned. cores*1, not cores*4: same boundary-cost argument as
+    _work_partitions (the decode kernel is ~15x cheaper than encode, so the
+    Arrow boundary dominates even harder here).
     """
+    if schema is None:
+        schema, columns = infer_schema(stripes, columns)
+    cores = stripes.sparkSession.sparkContext.defaultParallelism
+    clustered = (stripes.repartition(cores, "stripe_id")
+                 .sortWithinPartitions("stripe_id"))
+    return _decode_clustered(clustered, schema, columns, stride_range)
+
+
+def roundtrip(df: DataFrame, key_col: str, order_col: str | None = None, *,
+              columns: list[str] | None = None,
+              stride_range: tuple | None = None,
+              **encode_kwargs) -> DataFrame:
+    """decode(encode(df)) in memory, as ONE stage: scan -> exchange -> sort
+    -> encode kernel -> col_name filter -> decode kernel. The encode output
+    is already stripe-contiguous per partition, so the encoded bytes are
+    never shuffled a second time. The decoded schema is ``df.schema``
+    (restricted to ``columns``); ``encode_kwargs`` go to
+    :func:`encode_dataframe`, ``stride_range`` as in
+    :func:`decode_dataframe`."""
+    schema = (T.StructType([df.schema[c] for c in columns]) if columns
+              else df.schema)
+    stripes = encode_dataframe(df, key_col, order_col, **encode_kwargs)
+    return _decode_clustered(stripes, schema, None, stride_range)
+
+
+def _decode_clustered(stripes: DataFrame, schema: T.StructType,
+                      columns: list[str] | None,
+                      stride_range: tuple | None) -> DataFrame:
+    """Decode stripe-column rows whose partitions each hold whole stripes
+    with every stripe's rows contiguous — no exchange of its own."""
     nested_schema = None
-    if schema is not None and any(
-            isinstance(f.dataType, (T.StructType, T.MapType))
-            or (isinstance(f.dataType, T.ArrayType)
-                and _needs_decompose(f.dataType))
-            for f in schema.fields):
+    if any(isinstance(f.dataType, (T.StructType, T.MapType))
+           or (isinstance(f.dataType, T.ArrayType)
+               and _needs_decompose(f.dataType))
+           for f in schema.fields):
         nested_schema = schema
         schema = _flat_schema(schema)
         columns = [f.name for f in schema.fields]
-    if schema is None:
-        schema, columns = infer_schema(stripes, columns)
     elif columns is None:
         columns = [f.name for f in schema.fields]
     if nested_schema is None and any(_STRUCT_SEP in c for c in columns):
@@ -757,41 +806,18 @@ def decode_dataframe(stripes: DataFrame, columns: list[str] | None = None,
     scan_cols = list(columns)
     if stride_range is not None and stride_range[0] not in scan_cols:
         scan_cols.append(stride_range[0])  # stats live on the predicate col
+    # the filter keeps row order, so per-stripe contiguity still holds
     pruned = stripes.filter(F.col("col_name").isin(scan_cols))
-    spark = stripes.sparkSession
-    # When ``stripes`` is the direct output of encode_dataframe it is
-    # already stripe-contiguous per partition (the `_ofs_stripe_clustered`
-    # tag), so the re-clustering exchange below would shuffle the encoded
-    # bytes a second time for nothing — skipping it fuses encode and
-    # decode into ONE stage (scan -> exchange -> sort -> encode kernel ->
-    # col_name filter -> decode kernel); the filter preserves row order,
-    # so per-stripe contiguity still holds. Read-back-from-storage paths
-    # (decode_job et al.) never carry the tag and keep the safe re-shuffle:
-    # same AQE-coalescing consideration as the encode side — stripe rows
-    # are byte-light but expand ~10x on decode, so a parallel task count
-    # is pinned. cores*1, not cores*4: same boundary-cost argument as
-    # _work_partitions (the decode kernel is ~15x cheaper than encode, so
-    # the Arrow boundary dominates even harder here).
-    if not getattr(stripes, "_ofs_stripe_clustered", False):
-        cores = spark.sparkContext.defaultParallelism
-        pruned = (pruned.repartition(cores, "stripe_id")
-                  .sortWithinPartitions("stripe_id"))
-
-    try:  # arrow schema of the decoded output (timestamps carry session tz)
-        from pyspark.sql.pandas.types import to_arrow_schema
-        tz = spark.conf.get("spark.sql.session.timeZone")
-        target_schema = to_arrow_schema(schema, timezone=tz)
-    except TypeError:
-        target_schema = to_arrow_schema(schema)
+    target_schema = _arrow_schema(schema)
 
     def decode_partition(batches):
-        """STREAMING per-stripe decode: rows arrive sorted by stripe_id
-        (the partition-local sort above), so each stripe is decoded and
-        yielded as soon as its last row has arrived — task memory is
-        bounded by one stripe's rows plus one incoming Arrow batch, not by
-        the whole partition (the encode side bounds its partitions via the
-        STRIPES_PER_PARTITION floor; this is the decode-side analog, and
-        matters at scale where one task may own thousands of stripes)."""
+        """STREAMING per-stripe decode: each stripe's rows arrive
+        contiguously, so each stripe is decoded and yielded as soon as its
+        last row has arrived — task memory is bounded by one stripe's rows
+        plus one incoming Arrow batch, not by the whole partition (the
+        encode side bounds its partitions via the STRIPES_PER_PARTITION
+        floor; this is the decode-side analog, and matters at scale where
+        one task may own thousands of stripes)."""
         import numpy as np
         import pyarrow as pa
         pending = None  # rows of the stripe straddling the batch boundary
@@ -864,12 +890,7 @@ def decode_job_clustered(spark: SparkSession, out_dir: str,
     cores = spark.sparkContext.defaultParallelism
     file_keep = file_keep.repartition(cores * 2)
 
-    try:
-        from pyspark.sql.pandas.types import to_arrow_schema
-        tz = spark.conf.get("spark.sql.session.timeZone")
-        target_schema = to_arrow_schema(schema, timezone=tz)
-    except TypeError:
-        target_schema = to_arrow_schema(schema)
+    target_schema = _arrow_schema(schema)
     want = list(columns)
 
     def decode_files(batches):
@@ -1088,11 +1109,11 @@ def encode_job(spark: SparkSession, df: DataFrame, out_dir: str,
     different n_buckets/stripe_rows/key_col raises (lineage records them).
     """
     if n_buckets is None:
-        n_rows = _estimate_rows(df)
-        if n_rows is None:
-            n_rows = df.count()
-        n_buckets = max((n_rows + stripe_rows - 1) // stripe_rows, 1)
-    run_id = uuid.uuid4().hex[:12]
+        n_buckets = _n_buckets(df, stripe_rows)
+    # letter-led like compact_job's "c..." ids: Spark's partition inference
+    # would read an all-hex run=<id> as a number (66e240854352 as a decimal
+    # with a huge exponent, hanging any read of the table)
+    run_id = "r" + uuid.uuid4().hex[:11]
     if bloom_cols is None:
         bloom_cols = [key_col]
     params = {"n_buckets": n_buckets, "stripe_rows": stripe_rows,

@@ -1,5 +1,5 @@
-"""Stripe-level encode/decode over pandas DataFrames (one stripe = one
-``applyInPandas`` group; the Spark glue lives in :mod:`.pipeline`).
+"""Stripe-level encode/decode over Arrow arrays (one stripe = one slice of
+a sorted ``mapInArrow`` partition; the Spark glue lives in :mod:`.pipeline`).
 
 A stripe is the engine's unit of parallelism — the analog of the reference's
 ORC stripe (StripeInformation, /root/reference/src/proto.rs:206-217), stored
@@ -7,6 +7,10 @@ as ROWS of a stripes table: one row per (stripe, column) with the column's
 streams as binary fields (SURVEY.md §1.5). Nullability is structural, like
 the reference's Present stream (boolean RLE over the validity bitmap; Data
 holds only non-null values — tests/it/deserialize.rs:13-25).
+
+There is one encoder (:func:`encode_column`, Arrow in) and one decoder
+(:func:`_decode_column_parts` + :func:`_to_arrow_array`, Arrow out) per
+column, with zero per-row Python: strings stay Arrow buffers end to end.
 """
 
 from __future__ import annotations
@@ -15,7 +19,6 @@ import re
 import zlib
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 
 from . import selector
@@ -93,39 +96,6 @@ def spark_kind(dtype_str: str) -> str:
     raise ValueError(f"unsupported column type: {dtype_str}")
 
 
-def _values_and_mask(series: pd.Series, kind: str):
-    """Split a column into (non-null values, validity bool array)."""
-    isna = series.isna().to_numpy()
-    valid = ~isna
-    nn = series[valid] if isna.any() else series
-    if kind in INT_KINDS:
-        vals = nn.to_numpy(dtype=np.int64, na_value=0) if len(nn) else np.zeros(0, np.int64)
-    elif kind == "timestamp":
-        v = pd.to_datetime(nn)
-        vals = v.to_numpy(dtype="datetime64[us]").astype(np.int64)
-    elif kind == "date":
-        vals = pd.to_datetime(nn).to_numpy(dtype="datetime64[D]").astype(np.int64)
-    elif kind in ("float32", "float64"):
-        vals = nn.to_numpy(dtype=np.float32 if kind == "float32" else np.float64)
-    elif kind == "bool":
-        vals = nn.to_numpy(dtype=bool)
-    elif kind == "string":
-        vals = nn.astype(object).to_numpy()
-    else:
-        raise ValueError(kind)
-    return vals, valid
-
-
-def _raw_nbytes(vals, kind: str) -> int:
-    if kind == "string":
-        if len(vals) == 0:
-            return 0
-        if isinstance(vals, (pa.Array, pa.ChunkedArray)):
-            return int(vals.nbytes)
-        return int(pa.array(vals, type=pa.large_utf8()).nbytes)
-    return int(np.asarray(vals).nbytes)
-
-
 def _checksum(vals, valid: np.ndarray, kind: str) -> str:
     """crc32 over canonical value bytes + validity bitmap (lineage integrity).
 
@@ -155,9 +125,9 @@ def _checksum(vals, valid: np.ndarray, kind: str) -> str:
     return f"{crc:08x}"
 
 
-def _values_and_mask_arrow(arr: pa.Array, kind: str):
-    """Arrow-native split into (non-null values, validity) — zero per-row
-    Python, no pandas object materialization (strings stay Arrow)."""
+def _values_and_mask(arr: pa.Array, kind: str):
+    """Split a column into (non-null values, validity bool array) — zero
+    per-row Python; strings stay Arrow."""
     if isinstance(arr, pa.ChunkedArray):
         arr = arr.combine_chunks()
     valid = np.asarray(arr.is_valid())
@@ -270,19 +240,17 @@ def _unpack_child_row(blob: bytes, child_kind: str) -> dict:
     return r
 
 
-def encode_column(series, kind: str, force_codec: str | None = None,
+def encode_column(arr: pa.Array | pa.ChunkedArray, kind: str,
+                  force_codec: str | None = None,
                   with_bloom: bool = False) -> dict:
     """Encode one column of one stripe; returns a stripe-column row dict.
-    Accepts a pandas Series or an Arrow (Chunked)Array. ``with_bloom``
-    attaches a distinct-value bloom (point-lookup stripe pruning)."""
-    n = len(series)
-    if ((kind.startswith("array_") or kind.startswith("list:"))
-            and not isinstance(series, (pa.Array, pa.ChunkedArray))):
-        series = pa.Array.from_pandas(series)
-    if isinstance(series, (pa.Array, pa.ChunkedArray)):
-        vals, valid = _values_and_mask_arrow(series, kind)
-    else:
-        vals, valid = _values_and_mask(series, kind)
+    ``with_bloom`` attaches a distinct-value bloom (point-lookup stripe
+    pruning)."""
+    if not isinstance(arr, (pa.Array, pa.ChunkedArray)):
+        raise TypeError("encode_column takes a pyarrow Array or "
+                        f"ChunkedArray, not {type(arr).__name__}")
+    n = len(arr)
+    vals, valid = _values_and_mask(arr, kind)
     n_nulls = int(n - valid.sum())
     row = {
         "col_kind": kind, "n_rows": n, "n_nulls": n_nulls,
@@ -340,14 +308,11 @@ def encode_column(series, kind: str, force_codec: str | None = None,
         enc = selector.encode_strings(vals, force_codec=force_codec)
         row.update(codec=enc["codec"], data=enc["data"], length=enc["length"],
                    dict_data=enc["dict_data"], extra=enc["extra"], ndv=enc["ndv"])
-        raw = _raw_nbytes(vals, kind)
+        raw = int(vals.nbytes) if len(vals) else 0
         if len(vals):
-            if isinstance(vals, (pa.Array, pa.ChunkedArray)):
-                import pyarrow.compute as pc
-                mm = pc.min_max(vals).as_py()
-                lo, hi = mm["min"], mm["max"]
-            else:
-                lo, hi = min(vals), max(vals)
+            import pyarrow.compute as pc
+            mm = pc.min_max(vals).as_py()
+            lo, hi = mm["min"], mm["max"]
             # min truncation is safe (understating a minimum keeps the bound
             # valid); max needs the upper-bound-preserving increment. Note:
             # string stats compare lexicographically — numeric predicates
@@ -513,8 +478,8 @@ def _parse_stride_index(blob: bytes) -> list[dict]:
     return strides, pos
 
 
-def encode_column_strided(series, kind: str, index_rows: int,
-                          force_codec: str | None = None,
+def encode_column_strided(arr: pa.Array | pa.ChunkedArray, kind: str,
+                          index_rows: int, force_codec: str | None = None,
                           with_bloom: bool = False) -> dict:
     """Encode one column as concatenated per-stride sub-encodings with a
     stride index in ``extra`` (codec='strided'). Each stride is decodable
@@ -522,16 +487,14 @@ def encode_column_strided(series, kind: str, index_rows: int,
     if kind.startswith("list:"):
         # nested lists carry no range predicates; skip the stride layout
         # and keep the recursive child packing whole-stripe
-        return encode_column(series, kind, force_codec=force_codec,
+        return encode_column(arr, kind, force_codec=force_codec,
                              with_bloom=with_bloom)
-    if isinstance(series, pd.Series):
-        series = pa.Array.from_pandas(series)
-    if isinstance(series, pa.ChunkedArray):
-        series = series.combine_chunks()
-    n = len(series)
+    if isinstance(arr, pa.ChunkedArray):
+        arr = arr.combine_chunks()
+    n = len(arr)
     parts = []
     for lo in range(0, max(n, 1), index_rows):
-        sl = series.slice(lo, min(index_rows, n - lo))
+        sl = arr.slice(lo, min(index_rows, n - lo))
         parts.append(encode_column(sl, kind, force_codec=force_codec))
     streams = {s: b"".join(p[s] for p in parts) for s in _STREAMS}
     ints_like = (kind in INT_KINDS or kind in ("timestamp", "date")
@@ -554,9 +517,7 @@ def encode_column_strided(series, kind: str, index_rows: int,
     row["bloom"] = b""
     if with_bloom:
         from . import bloom as bloom_mod
-        vals_all, _ = (_values_and_mask_arrow(series, kind)
-                       if isinstance(series, (pa.Array, pa.ChunkedArray))
-                       else _values_and_mask(series, kind))
+        vals_all, _ = _values_and_mask(arr, kind)
         if (not isinstance(vals_all, tuple)
                 and getattr(vals_all, "ndim", 1) == 1):
             row["bloom"] = bloom_mod.build(vals_all)
@@ -686,120 +647,16 @@ def _default_arrow_type(kind: str) -> pa.DataType:
     raise ValueError(kind)
 
 
-def decode_column(row: dict) -> pa.Array | np.ndarray:
-    """Decode one stripe-column row back to a full-length array with nulls."""
-    n = int(row["n_rows"])
-    n_nulls = int(row["n_nulls"])
+def decode_column(row: dict) -> pa.Array:
+    """Decode one stripe-column row back to a full-length Arrow array with
+    nulls, typed by the column kind's default Arrow type."""
     kind = row["col_kind"]
-    if row["codec"] == "strided":
-        return _to_arrow_array(_decode_strided_parts(row), kind,
-                               _default_arrow_type(kind))
-    if (kind.startswith("array_") or kind.startswith("decimal_")
-            or kind.startswith("list:")):
-        return _to_arrow_array(_decode_column_parts(row), kind,
-                               _default_arrow_type(kind))
-    comp, comp2 = (row["compression"] or "none|none").split("|")
-    data = deflate.decompress(row["data"]) if comp == "zlib" else row["data"]
-    dict_data = deflate.decompress(row["dict_data"]) if comp2 == "zlib" else row["dict_data"]
-    valid = (boolean_rle.decode_bools(row["present"], n) if n_nulls
-             else np.ones(n, dtype=bool))
-    n_valid = n - n_nulls
-    codec = row["codec"]
-
-    if kind in INT_KINDS or kind in ("timestamp", "date"):
-        vals = selector.decode_ints(codec, data, row["extra"], n_valid)
-    elif kind in ("float32", "float64"):
-        if codec.startswith("alp:"):
-            vals = selector.decode_floats_alp(codec, data, dict_data,
-                                              row["extra"], n_valid)
-        elif codec == "float_shuf":
-            vals = selector.decode_float_shuffle(data, n_valid, kind)
-        else:
-            vals = floats.decode(data, n_valid, kind)
-    elif kind == "bool":
-        vals = boolean_rle.decode_bools(data, n_valid)
-    elif kind == "string":
-        arr = selector.decode_strings(codec, data, row["length"], dict_data,
-                                      row["extra"], n_valid, row["ndv"])
-        if n_nulls:
-            idx = np.full(n, 0, dtype=np.int64)
-            idx[valid] = np.arange(n_valid)
-            return arr.take(pa.array(idx, mask=~valid))
-        return arr
-    else:
-        raise ValueError(kind)
-
-    if not n_nulls:
-        return _typed(vals, kind)
-    full = np.zeros(n, dtype=vals.dtype if kind not in INT_KINDS else np.int64)
-    full[valid] = vals
-    return _typed_nullable(full, valid, kind)
-
-
-def _typed(vals: np.ndarray, kind: str):
-    if kind == "timestamp":
-        return vals.astype("datetime64[us]")
-    if kind == "date":
-        return vals.astype("datetime64[D]").astype("datetime64[s]")
-    if kind in INT_KINDS:
-        return vals.astype(kind)
-    return vals
-
-
-def _typed_nullable(full: np.ndarray, valid: np.ndarray, kind: str):
-    """Full-length array + validity -> pandas-compatible nullable column."""
-    if kind == "timestamp":
-        out = full.astype("datetime64[us]")
-        s = pd.Series(out)
-        s[~valid] = pd.NaT
-        return s
-    if kind == "date":
-        out = full.astype("datetime64[D]").astype("datetime64[s]")
-        s = pd.Series(out)
-        s[~valid] = pd.NaT
-        return s
-    if kind in INT_KINDS:
-        return pd.arrays.IntegerArray(full.astype(kind), mask=~valid)
-    if kind in ("float32", "float64"):
-        out = full.astype(kind)
-        out[~valid] = np.nan
-        return out
-    if kind == "bool":
-        return pd.arrays.BooleanArray(full.astype(bool), mask=~valid)
-    raise ValueError(kind)
-
-
-def encode_stripe(pdf: pd.DataFrame, kinds: dict[str, str], stripe_id: str,
-                  bucket: int, sort_keys: list[str] | None = None,
-                  force_codecs: dict[str, str] | None = None) -> pd.DataFrame:
-    """Encode one stripe (one group) -> stripe-column rows DataFrame."""
-    if sort_keys:
-        pdf = pdf.sort_values(sort_keys, kind="mergesort", ignore_index=True)
-    force_codecs = force_codecs or {}
-    rows = []
-    for col, kind in kinds.items():
-        row = encode_column(pdf[col], kind, force_codec=force_codecs.get(col))
-        row.update(stripe_id=stripe_id, bucket=bucket, col_name=col)
-        rows.append(row)
-    out = pd.DataFrame(rows, columns=STRIPE_COLUMNS)
-    out["ndv"] = out["ndv"].astype("Int64")  # Arrow-safe nullable long
-    return out
-
-
-def decode_stripe(stripe_rows: pd.DataFrame, columns: list[str] | None = None) -> pd.DataFrame:
-    """Decode one stripe's rows back into the original row layout."""
-    by_col = {r["col_name"]: r for r in stripe_rows.to_dict("records")}
-    cols = columns or list(by_col)
-    out = {}
-    for c in cols:
-        arr = decode_column(by_col[c])
-        out[c] = arr.to_pandas() if isinstance(arr, pa.Array) else arr
-    return pd.DataFrame(out)
+    return _to_arrow_array(_decode_column_parts(row), kind,
+                           _default_arrow_type(kind))
 
 
 # ---------------------------------------------------------------------------
-# Arrow-native stripe path (used by pipeline's mapInArrow jobs): strings
-# never materialize as Python objects, numerics never pass through pandas.
+# stripe path of pipeline's mapInArrow jobs
 # ---------------------------------------------------------------------------
 
 STRIPE_PA_SCHEMA = pa.schema([
@@ -877,7 +734,8 @@ def decode_stripe_arrow(rows: list[dict], columns: list[str],
 
 
 def _decode_column_parts(row: dict):
-    """decode_column, but returning (values, valid) without pandas."""
+    """Decode one stripe-column row to (non-null values, validity);
+    :func:`_to_arrow_array` scatters that into a full-length array."""
     if row["codec"] == "strided":
         return _decode_strided_parts(row)
     n = int(row["n_rows"])

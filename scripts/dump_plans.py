@@ -38,9 +38,9 @@ def main() -> None:
               "- decode FROM STORAGE: `PushedFilters` containing\n"
               "  `In(col_name, ...)` at the parquet scan (projection pushdown\n"
               "  into the stripes table), one Exchange on stripe_id,\n"
-              "  partition-local Sort, Arrow UDF. Decode of an IN-MEMORY\n"
-              "  encode output fuses instead: no second Exchange at all (the\n"
-              "  encode output is already stripe-clustered; the whole\n"
+              "  partition-local Sort, Arrow UDF. `pipeline.roundtrip` of an\n"
+              "  IN-MEMORY frame fuses instead: no second Exchange at all\n"
+              "  (the encode output is already stripe-clustered; the whole\n"
               "  roundtrip is one stage).\n"
               "- pruned decode: additional `BroadcastHashJoin ... LeftSemi` from\n"
               "  the manifest predicate, broadcast (never shuffled).\n\n")

@@ -268,3 +268,55 @@ def test_balanced_encode_placement(spark):
     probes_enc = pipeline._partition_probes(p_enc)
     targets = [pipeline._murmur3_long(m) % p_enc for m in probes_enc]
     assert targets == list(range(p_enc))
+
+
+def test_hash_placement_matches_balanced_placement(spark, df, monkeypatch):
+    """Above _BALANCE_MAX_GROUPS the encode shuffle places stripe groups by
+    hash of (bucket, salt) instead of the probe column: only which task
+    encodes a stripe may move — the stripes, their bytes and the decoded
+    rows stay identical."""
+    import pandas as pd
+
+    cols = ["stripe_id", "col_name", "codec", "data", "checksum"]
+
+    def encode():
+        stripes = pipeline.encode_dataframe(df, "conv_id", "turn_idx",
+                                            stripe_rows=300, n_buckets=6)
+        plan = stripes._jdf.queryExecution().executedPlan().toString()
+        return plan, sorted(tuple(r) for r in stripes.select(cols).collect())
+
+    plan, balanced = encode()
+    assert "__probe" in plan
+    monkeypatch.setattr(pipeline, "_BALANCE_MAX_GROUPS", 0)
+    plan, hashed = encode()
+    assert "__probe" not in plan and "hashpartitioning(__bucket" in plan
+    assert hashed == balanced
+
+    got = (pipeline.roundtrip(df, "conv_id", "turn_idx", stripe_rows=300,
+                              n_buckets=6)
+           .orderBy("conv_id", "turn_idx").toPandas())
+    exp = df.orderBy("conv_id", "turn_idx").toPandas()
+    pd.testing.assert_frame_equal(got, exp, check_exact=True)
+
+
+def test_encode_run_id_is_never_inferred_as_a_number(spark, df, tmp_path,
+                                                     monkeypatch):
+    """Run dirs are ``run=<run_id>``; with partition type inference on, an
+    all-digit id would read back as a number (and ``66e240854352`` as a
+    decimal with a 10^240854352 exponent). Run ids are letter-led."""
+    import uuid
+
+    from pyspark.sql import types as T
+
+    out = str(tmp_path / "enc")
+    with monkeypatch.context() as m:
+        m.setattr(uuid, "uuid4",
+                  lambda: uuid.UUID("00000000004200000000000000000000"))
+        stats = pipeline.encode_job(spark, df, out, stripe_rows=300,
+                                    n_buckets=6)
+    with pytest.raises(ValueError):
+        float(stats["run_id"])
+    assert spark.conf.get(
+        "spark.sql.sources.partitionColumnTypeInference.enabled") == "true"
+    run = spark.read.parquet(f"{out}/stripes").schema["run"]
+    assert isinstance(run.dataType, T.StringType)

@@ -47,6 +47,30 @@ def test_roundtrip_matches_driver_side_oracle(spark):
     assert_frames_equal(exp, got)
 
 
+def _executed_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_roundtrip_decodes_without_a_stripe_exchange(spark, small_transcripts):
+    """roundtrip decodes the encode output in the encode's own stage — no
+    re-clustering exchange on stripe_id — and is bit-identical."""
+    df = small_transcripts
+    dec = pipeline.roundtrip(df, "conv_id", "turn_idx", stripe_rows=500)
+    got = dec.orderBy("conv_id", "turn_idx").toPandas()
+    assert "hashpartitioning(stripe_id" not in _executed_plan(dec)
+    assert_frames_equal(df.orderBy("conv_id", "turn_idx").toPandas(), got)
+
+
+def test_decode_dataframe_always_reclusters(spark, small_transcripts):
+    """decode_dataframe cannot know its input is stripe-clustered, so it
+    always shuffles on stripe_id — also for a derived encode output."""
+    stripes = pipeline.encode_dataframe(small_transcripts, "conv_id",
+                                        "turn_idx", stripe_rows=500)
+    dec = pipeline.decode_dataframe(stripes.filter(F.col("n_rows") > 0))
+    assert dec.count() == small_transcripts.count()
+    assert "hashpartitioning(stripe_id" in _executed_plan(dec)
+
+
 def test_column_pruned_decode(spark, small_transcripts):
     df = small_transcripts
     stripes = pipeline.encode_dataframe(df, "conv_id", "turn_idx", stripe_rows=500)

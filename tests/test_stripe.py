@@ -1,4 +1,4 @@
-"""Pandas-level stripe encode/decode over the reference's golden column
+"""Arrow-level stripe encode/decode over the reference's golden column
 families (FIXTURES.md §B mirrors /root/reference/write.py:5-23,83-116 and
 tests/it/main.rs:26-316). Nulls exercise the Present stream exactly like the
 reference's validity model (tests/it/deserialize.rs:13-25).
@@ -6,6 +6,7 @@ reference's validity model (tests/it/deserialize.rs:13-25).
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pytest
 
 from orc_format_spark import stripe
@@ -13,25 +14,19 @@ from orc_format_spark import stripe
 rng = np.random.default_rng(42)
 
 
-def roundtrip(series: pd.Series, kind: str):
-    row = stripe.encode_column(series, kind)
-    out = stripe.decode_column(row)
-    if hasattr(out, "to_pandas"):
-        out = out.to_pandas()
-    return row, pd.Series(out)
+def arrow(values, kind: str, mask=None) -> pa.Array:
+    return pa.array(values, type=stripe._default_arrow_type(kind), mask=mask)
 
 
-def assert_same(expected: pd.Series, got: pd.Series):
-    e, g = expected.reset_index(drop=True), got.reset_index(drop=True)
-    assert len(e) == len(g)
-    na = e.isna()
-    assert (na == g.isna()).all(), "null positions differ"
-    if na.any():
-        e, g = e[~na], g[~na.to_numpy()]
-    if e.dtype.kind == "f":
-        assert (e.to_numpy() == g.to_numpy(dtype=e.dtype)).all()
-    else:
-        assert (e.to_numpy() == g.to_numpy()).all()
+def roundtrip(arr: pa.Array, kind: str):
+    row = stripe.encode_column(arr, kind)
+    return row, stripe.decode_column(row)
+
+
+def assert_same(expected: pa.Array, got: pa.Array):
+    assert len(expected) == len(got)
+    assert got.is_null().equals(expected.is_null()), "null positions differ"
+    assert got.equals(expected)
 
 
 # --- reference write.py golden families (exact literals) --------------------
@@ -65,9 +60,9 @@ FAMILIES = [
 @pytest.mark.parametrize("name,values,kind,codecs", FAMILIES,
                          ids=[f[0] for f in FAMILIES])
 def test_reference_golden_family(name, values, kind, codecs):
-    s = pd.Series(values, dtype="object" if None in values or kind == "string" else None)
-    row, got = roundtrip(s, kind)
-    assert_same(pd.Series(values), got)
+    arr = arrow(values, kind)
+    row, got = roundtrip(arr, kind)
+    assert_same(arr, got)
     if codecs:
         assert row["codec"] in codecs, f"{name}: {row['codec']} not in {codecs}"
     if None in values:
@@ -75,57 +70,60 @@ def test_reference_golden_family(name, values, kind, codecs):
         assert len(row["present"]) > 0, "Present stream required with nulls"
 
 
+def test_encode_column_rejects_non_arrow_input():
+    with pytest.raises(TypeError, match="pyarrow"):
+        stripe.encode_column(pd.Series([1, 2, 3]), "int64")
+    with pytest.raises(TypeError, match="pyarrow"):
+        stripe.encode_column(np.arange(3), "int64")
+
+
 def test_f32_long_long():
     # write.py:112-116 — 10^6 random f32 values
     vals = rng.random(1_000_000).astype(np.float32)
-    row, got = roundtrip(pd.Series(vals), "float32")
-    assert (got.to_numpy(dtype=np.float32) == vals).all()
+    row, got = roundtrip(arrow(vals, "float32"), "float32")
+    assert (got.to_numpy() == vals).all()
 
 
 def test_timestamp_roundtrip_microsecond_precision():
     us = 1_735_689_600_000_000 + np.cumsum(rng.integers(1, 300, 5000)) * 1_000_000
     us[::577] += 7  # sub-second offsets must survive exactly
-    s = pd.Series(us.astype("datetime64[us]"))
-    row, got = roundtrip(s, "timestamp")
-    assert (got.to_numpy().astype("datetime64[us]") == s.to_numpy()).all()
+    ts = us.astype("datetime64[us]")
+    row, got = roundtrip(arrow(ts, "timestamp"), "timestamp")
+    assert (got.to_numpy() == ts).all()
     assert row["codec"] in ("rle_v2", "for", "for_scale")
 
 
 def test_timestamp_with_nulls():
     us = (1_735_689_600_000_000 + np.arange(100) * 1_000_000).astype("datetime64[us]")
-    s = pd.Series(us)
-    s[s.index % 7 == 0] = pd.NaT
-    row, got = roundtrip(s, "timestamp")
-    assert (got.isna() == s.isna()).all()
-    assert (got.dropna().to_numpy().astype("datetime64[us]")
-            == s.dropna().to_numpy()).all()
+    arr = arrow(us, "timestamp", mask=np.arange(100) % 7 == 0)
+    row, got = roundtrip(arr, "timestamp")
+    assert got.is_null().equals(arr.is_null())
+    assert got.drop_null().equals(arr.drop_null())
 
 
 def test_all_null_column():
-    s = pd.Series([None] * 100, dtype="object")
-    row, got = roundtrip(s, "string")
+    row, got = roundtrip(arrow([None] * 100, "string"), "string")
     assert row["n_nulls"] == 100
-    assert got.isna().all()
+    assert got.null_count == 100
 
 
 def test_empty_stripe():
-    pdf = pd.DataFrame({"a": pd.Series([], dtype="int64"),
-                        "b": pd.Series([], dtype="object")})
-    enc = stripe.encode_stripe(pdf, {"a": "int64", "b": "string"}, "s", 0)
-    dec = stripe.decode_stripe(enc)
-    assert len(dec) == 0 and list(dec.columns) == ["a", "b"]
+    tbl = pa.table({"a": arrow([], "int64"), "b": arrow([], "string")})
+    rows = stripe.encode_stripe_arrow(tbl, {"a": "int64", "b": "string"}, "s", 0)
+    dec = stripe.decode_stripe_arrow(rows, ["a", "b"], tbl.schema)
+    assert dec.num_rows == 0 and dec.schema.names == ["a", "b"]
 
 
 def test_checksum_changes_with_data():
-    r1 = stripe.encode_column(pd.Series([1, 2, 3]), "int64")
-    r2 = stripe.encode_column(pd.Series([1, 2, 4]), "int64")
+    r1 = stripe.encode_column(arrow([1, 2, 3], "int64"), "int64")
+    r2 = stripe.encode_column(arrow([1, 2, 4], "int64"), "int64")
     assert r1["checksum"] != r2["checksum"]
 
 
 def test_deterministic_encode():
-    vals = pd.Series(rng.integers(0, 100, 10_000))
-    a = stripe.encode_column(vals, "int64")
-    b = stripe.encode_column(vals.copy(), "int64")
+    vals = rng.integers(0, 100, 10_000)
+    a = stripe.encode_column(arrow(vals, "int64"), "int64")
+    b = stripe.encode_column(arrow(vals.copy(), "int64"), "int64")
     assert a["data"] == b["data"] and a["checksum"] == b["checksum"]
 
 
@@ -133,16 +131,18 @@ def test_compression_beats_zlib_of_raw_baseline():
     """Compressed-size bar (BASELINE.md): encoded bytes ≤ zlib(raw columns)."""
     import zlib
     n = 50_000
-    pdf = pd.DataFrame({
-        "turn_idx": np.arange(n, dtype=np.int32),
-        "role": rng.choice(["user", "assistant", "system", "tool"], n),
-        "ts": (1_735_689_600_000_000 + np.cumsum(rng.integers(1, 300, n))
-               * 1_000_000).astype("datetime64[us]"),
-    })
+    turn_idx = np.arange(n, dtype=np.int32)
+    role = rng.choice(["user", "assistant", "system", "tool"], n)
+    ts = (1_735_689_600_000_000 + np.cumsum(rng.integers(1, 300, n))
+          * 1_000_000).astype("datetime64[us]")
     kinds = {"turn_idx": "int32", "role": "string", "ts": "timestamp"}
-    enc = stripe.encode_stripe(pdf, kinds, "s", 0)
-    ours = int(enc["enc_bytes"].sum())
-    baseline = (len(zlib.compress(pdf["turn_idx"].to_numpy().tobytes(), 6))
-                + len(zlib.compress("\x00".join(pdf["role"]).encode(), 6))
-                + len(zlib.compress(pdf["ts"].to_numpy().tobytes(), 6)))
+    tbl = pa.table({c: arrow(v, kinds[c]) for c, v in
+                    (("turn_idx", turn_idx), ("role", role), ("ts", ts))})
+    rows = stripe.encode_stripe_arrow(tbl, kinds, "s", 0)
+    ours = sum(r["enc_bytes"] for r in rows)
+    baseline = (len(zlib.compress(turn_idx.tobytes(), 6))
+                + len(zlib.compress("\x00".join(role).encode(), 6))
+                + len(zlib.compress(ts.tobytes(), 6)))
     assert ours <= baseline, f"ours {ours} > zlib baseline {baseline}"
+    dec = stripe.decode_stripe_arrow(rows, list(kinds), tbl.schema)
+    assert pa.Table.from_batches([dec]).equals(tbl)
