@@ -360,39 +360,37 @@ def q_codec_selection(spark, sf_dir):
     stripes = pipeline.encode_dataframe(df, "event_id", None,
                                         sort_keys=["event_id"], stripe_rows=8192)
 
-    def trial(batches):
+    def trial(batch):
         import numpy as np
-        import pandas as pd
         import pyarrow as pa
         from orc_format_spark import stripe as stripe_mod
         from orc_format_spark.codecs import deflate
-        for pdf in batches:
-            recs = []
-            for row in pdf.to_dict("records"):
-                arr = stripe_mod.decode_column(row)
-                if pa.types.is_string(arr.type) or pa.types.is_binary(arr.type):
-                    arr = arr.cast(pa.large_binary())
-                    offs = np.frombuffer(arr.buffers()[1], dtype=np.int64,
-                                         count=len(arr) + 1)
-                    blob = (arr.buffers()[2].to_pybytes()
-                            if arr.buffers()[2] is not None else b"")
-                    raw = blob + np.diff(offs).tobytes()
-                else:
-                    if pa.types.is_boolean(arr.type):
-                        arr = arr.cast(pa.uint8())  # a byte per value
-                    raw = arr.buffers()[1].to_pybytes()[
-                        :len(arr) * arr.type.byte_width]
-                payload = sum(len(row[s]) for s in
-                              ("data", "length", "dict_data", "extra"))
-                recs.append((row["col_name"], row["col_kind"], row["codec"],
-                             int(row["raw_bytes"]), int(row["enc_bytes"]),
-                             payload, len(deflate.compress(raw))))
-            if recs:
-                yield pd.DataFrame(recs, columns=[
-                    "col_name", "col_kind", "codec", "raw_bytes",
-                    "enc_bytes", "payload_bytes", "zlib_bytes"])
+        recs = []
+        for row in batch.to_pylist():
+            arr = stripe_mod.decode_column(row)
+            if pa.types.is_string(arr.type) or pa.types.is_binary(arr.type):
+                arr = arr.cast(pa.large_binary())
+                offs = np.frombuffer(arr.buffers()[1], dtype=np.int64,
+                                     count=len(arr) + 1)
+                blob = (arr.buffers()[2].to_pybytes()
+                        if arr.buffers()[2] is not None else b"")
+                raw = blob + np.diff(offs).tobytes()
+            else:
+                if pa.types.is_boolean(arr.type):
+                    arr = arr.cast(pa.uint8())  # a byte per value
+                raw = arr.buffers()[1].to_pybytes()[
+                    :len(arr) * arr.type.byte_width]
+            payload = sum(len(row[s]) for s in
+                          ("data", "length", "dict_data", "extra"))
+            recs.append({"col_name": row["col_name"],
+                         "col_kind": row["col_kind"], "codec": row["codec"],
+                         "raw_bytes": row["raw_bytes"],
+                         "enc_bytes": row["enc_bytes"],
+                         "payload_bytes": payload,
+                         "zlib_bytes": len(deflate.compress(raw))})
+        return pa.Table.from_pylist(recs)
 
-    per = stripes.mapInPandas(trial, schema=(
+    per = pipeline.run_kernel(stripes, stripes.columns, trial, (
         "col_name string, col_kind string, codec string, raw_bytes long, "
         "enc_bytes long, payload_bytes long, zlib_bytes long"))
     return (per.groupBy("col_name", "col_kind", "codec")
@@ -674,19 +672,17 @@ def q_multimodal_meta(spark, sf_dir):
     header-only metadata extraction (the Spark plumbing is real; the codec
     is the documented stub)."""
     _pin(spark)
-    ids = _read(spark, sf_dir, "documents").select("doc_id")
+    docs = _read(spark, sf_dir, "documents")
 
-    from collections.abc import Iterator
-    import pandas as pd
+    def attach(batch):
+        import pyarrow as pa
+        return pa.table({
+            "blob_id": batch.column("doc_id"),
+            "blob": pa.array([multimodal.make_fake_blob(i) for i in
+                              batch.column("doc_id").to_pylist()], pa.binary())})
 
-    def attach(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame({
-                "blob_id": pdf["doc_id"],
-                "blob": [multimodal.make_fake_blob(int(i)) for i in pdf["doc_id"]],
-            })
-
-    blobs = ids.mapInPandas(attach, schema="blob_id long, blob binary")
+    blobs = pipeline.run_kernel(docs, ["doc_id"], attach,
+                                "blob_id long, blob binary")
     return multimodal.extract_metadata(blobs, "blob", "blob_id")
 
 

@@ -14,7 +14,8 @@ Layout:
     codecs/    pure-numpy codec kernels (no Spark imports)
     selector   per-column codec auto-selection (NDV / run hist / entropy)
     stripe     Arrow-level stripe encode/decode (one stripe = one sorted run)
-    pipeline   Spark jobs: encode/decode DataFrames, lineage, resume
+    pipeline   Spark jobs: encode/decode DataFrames, lineage, resume;
+               run_kernel, the Arrow runner of every operator kernel
     transcripts  deterministic synthetic transcripts generator (FIXTURES.md A)
     ops/       large-scale training-data pipeline operators (dedup, ANN,
                text analysis, multimodal plumbing)

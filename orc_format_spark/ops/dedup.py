@@ -3,9 +3,9 @@
 Scale notes (100 TB design point):
   - exact dedup is a hash groupBy — one shuffle on the hash, map-side
     partial aggregation free via Catalyst;
-  - MinHash-LSH: per-doc signatures are computed in a vectorized pandas UDF
-    (ONE numpy pass over the whole Arrow batch — texts are concatenated into
-    a single uint8 buffer, shingle hashes / per-doc minima fall out of
+  - MinHash-LSH: per-doc signatures are computed by an Arrow kernel
+    (ONE numpy pass over the whole Arrow batch — the string column's UTF-8
+    buffer is read in place, shingle hashes / per-doc minima fall out of
     sliding windows + segmented reduceat; zero per-doc Python loops), then
     band buckets explode and the candidate join shuffles ONLY on
     (band, bucket) — pairs never materialize globally;
@@ -24,12 +24,12 @@ Scale notes (100 TB design point):
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..pipeline import _binary_view, _vectors, run_kernel
 
 # deterministic minhash parameters
 _MERSENNE = (1 << 61) - 1
@@ -64,54 +64,12 @@ def _pows(k: int) -> np.ndarray:
                     dtype=np.uint64)
 
 
-# minimum rows a _spread task should carry: each mapInPandas task pays a
-# fixed JVM<->Python Arrow boundary (~10-20 ms); below a few hundred rows
-# the boundary dominates the numpy kernel, so fanning a tiny input out to
-# every core is strictly slower than fewer, larger tasks (guide §2.2/§4.1).
-# Volume-derived, not a local[32] constant: big inputs still get full
-# parallelism (the rows/512 target exceeds core count long before the
-# n_files >= cores short-circuit takes over).
-SPREAD_ROWS_PER_TASK = 512
-
-
-def _spread(df: DataFrame) -> DataFrame:
-    """Give the CPU-bound shingling UDFs volume-appropriate parallelism.
-
-    A small-ish parquet input arrives as one or two scan partitions (byte
-    -based splitting), which would serialize the numpy work onto one core.
-    At real scale inputs already span >= cores input files and this is a
-    no-op; the round-robin repartition of a small input costs one tiny
-    shuffle and unlocks every core.
-
-    The partition count is derived from the input's size (parquet-footer
-    row estimate, driver-side metadata only — no data scan), targeting
-    >= SPREAD_ROWS_PER_TASK rows per task and capped at the core count:
-    a 2k-row table gets ~4 tasks instead of 32 (32 near-empty Arrow
-    boundaries measured strictly slower), while anything core-saturating
-    behaves exactly as before. The decision reads driver-side metadata only
-    (``df.inputFiles()`` / footers): the previous
-    ``df.rdd.getNumPartitions()`` materialized the RDD lineage of the
-    DataFrame plan — a full plan translation outside Catalyst, a
-    non-trivial driver pause on wide plans (round-5 review finding)."""
-    cores = df.sparkSession.sparkContext.defaultParallelism
-    try:
-        n_files = len(df.inputFiles())
-    except Exception:
-        n_files = 0
-    if n_files >= cores:
-        return df
-    from orc_format_spark import pipeline as _pipeline
-    est = _pipeline._estimate_rows(df)
-    p = cores if est is None else \
-        max(1, min(cores, -(-est // SPREAD_ROWS_PER_TASK)))
-    return df.repartition(p)
-
-
-def _batch_shingle_hashes(texts, k: int):
+def _batch_shingle_hashes(buf: np.ndarray, starts: np.ndarray, k: int):
     """Shingle-hash every doc in ONE numpy pass over the whole batch.
 
-    Texts are concatenated into a single uint8 buffer; the k-byte rolling
-    polynomial hash is computed for every window of the buffer at once
+    ``buf``/``starts`` are the batch's UTF-8 bytes and n_docs+1 offsets
+    (see pipeline._binary_view); the k-byte rolling polynomial hash is
+    computed for every window of the buffer at once
     (k shifted multiply-adds, wrap-mod-2^64 then mod 2^61-1 — the same
     per-window arithmetic as a per-doc loop would produce); windows that
     straddle a doc boundary are masked out. Per-doc dedup is a single
@@ -121,12 +79,9 @@ def _batch_shingle_hashes(texts, k: int):
     doc's sorted unique shingle hashes, ``doc_runs`` the n_docs+1 offsets of
     each doc's run. Docs shorter than k contribute the single hash 0.
     """
-    blobs = [t.encode("utf-8") for t in texts]
-    n_docs = len(blobs)
-    lens = np.fromiter((len(b) for b in blobs), dtype=np.int64, count=n_docs)
-    starts = np.zeros(n_docs + 1, dtype=np.int64)
-    np.cumsum(lens, out=starts[1:])
-    buf = np.frombuffer(b"".join(blobs), dtype=np.uint8).astype(np.uint64)
+    n_docs = len(starts) - 1
+    lens = np.diff(starts)
+    buf = buf.astype(np.uint64)
 
     pows = _pows(k)
     n_win = len(buf) - k + 1
@@ -157,6 +112,12 @@ def _batch_shingle_hashes(texts, k: int):
     return doc_runs, h
 
 
+def _lists(offsets: np.ndarray, values: np.ndarray) -> pa.ListArray:
+    """List column whose row i is ``values[offsets[i]:offsets[i + 1]]``."""
+    return pa.ListArray.from_arrays(pa.array(offsets, pa.int32()),
+                                    pa.array(values))
+
+
 def _minhash_params(n_hashes: int, seed: int = 42):
     rng = np.random.default_rng(seed)
     a = rng.integers(1, _MERSENNE, n_hashes, dtype=np.uint64)
@@ -180,43 +141,38 @@ def minhash_signatures(df: DataFrame, text_col: str = "text",
     ``_batch_shingle_hashes``)."""
     a, b = _minhash_params(n_hashes, seed)
 
-    def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            runs, hashes = _batch_shingle_hashes(pdf[text_col], shingle_k)
-            sig = np.empty((len(pdf), n_hashes), dtype=np.int64)
-            seg = runs[:-1]
-            for i in range(n_hashes):
-                hx = (hashes * a[i] + b[i]) % np.uint64(_MERSENNE)
-                sig[:, i] = np.minimum.reduceat(hx, seg).astype(np.int64)
-            out = {id_col: pdf[id_col], "signature": list(sig)}
-            if with_shingles:
-                out["shingles"] = np.split(hashes.astype(np.int64),
-                                           runs[1:-1])
-            yield pd.DataFrame(out)
+    def compute(batch: pa.RecordBatch) -> pa.Table:
+        runs, hashes = _batch_shingle_hashes(
+            *_binary_view(batch, text_col), shingle_k)
+        sig = np.empty((batch.num_rows, n_hashes), dtype=np.int64)
+        seg = runs[:-1]
+        for i in range(n_hashes):
+            hx = (hashes * a[i] + b[i]) % np.uint64(_MERSENNE)
+            sig[:, i] = np.minimum.reduceat(hx, seg).astype(np.int64)
+        out = {id_col: batch.column(id_col), "signature": _lists(
+            np.arange(0, sig.size + 1, n_hashes), sig.ravel())}
+        if with_shingles:
+            out["shingles"] = _lists(runs, hashes.astype(np.int64))
+        return pa.table(out)
 
     schema = f"{id_col} long, signature array<long>"
     if with_shingles:
         schema += ", shingles array<long>"
-    return _spread(df.select(id_col, text_col)).mapInPandas(
-        compute, schema=schema)
+    return run_kernel(df, [id_col, text_col], compute, schema)
 
 
 def shingle_sets(df: DataFrame, text_col: str = "text",
                  id_col: str = "doc_id", shingle_k: int = 5) -> DataFrame:
     """doc -> sorted unique shingle-hash set (array<long>), computed ONCE
     per doc so verification never re-shingles per pair."""
-    def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            runs, hashes = _batch_shingle_hashes(pdf[text_col], shingle_k)
-            sets = np.split(hashes.astype(np.int64), runs[1:-1])
-            yield pd.DataFrame({id_col: pdf[id_col], "shingles": sets})
+    def compute(batch: pa.RecordBatch) -> pa.Table:
+        runs, hashes = _batch_shingle_hashes(
+            *_binary_view(batch, text_col), shingle_k)
+        return pa.table({id_col: batch.column(id_col),
+                         "shingles": _lists(runs, hashes.astype(np.int64))})
 
-    return _spread(df.select(id_col, text_col)).mapInPandas(
-        compute, schema=f"{id_col} long, shingles array<long>")
+    return run_kernel(df, [id_col, text_col], compute,
+                      f"{id_col} long, shingles array<long>")
 
 
 def _cap_buckets(banded: DataFrame, keys: list[str], bucket_cap: int) -> DataFrame:
@@ -285,7 +241,7 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
                      sigs=sigs)
     # the banded rows feed FOUR consumers (the hot-bucket count, its
     # anti-join, and both sides of the self-join); un-persisted, each one
-    # re-runs the signature mapInPandas kernel over the whole corpus —
+    # re-runs the signature kernel over the whole corpus —
     # measured 4x the shingling work per query. MEMORY_AND_DISK spills
     # instead of recomputing at scale; rows are skinny (id, band, bucket).
     from pyspark import StorageLevel
@@ -342,25 +298,22 @@ def simhash_signatures(df: DataFrame, text_col: str = "text",
                        seed: int = 42) -> DataFrame:
     """64-bit SimHash per doc (batch-vectorized: popcount-weighted bit
     voting via segmented add.reduceat over the whole batch's shingles)."""
-    def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        bit_idx = np.arange(64, dtype=np.uint64)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            runs, hashes = _batch_shingle_hashes(pdf[text_col], shingle_k)
-            h64 = _mix64(hashes)
-            seg = runs[:-1]
-            counts = np.diff(runs)                    # shingles per doc
-            sig = np.zeros(len(pdf), dtype=np.uint64)
-            for bit in bit_idx:                       # per-bit: O(M) memory,
-                ones = (h64 >> bit) & np.uint64(1)    # never M x 64
-                votes = np.add.reduceat(ones.astype(np.int64), seg)
-                sig |= (2 * votes > counts).astype(np.uint64) << bit
-            out = (sig - np.uint64(1 << 63)).view(np.int64)  # store signed
-            yield pd.DataFrame({id_col: pdf[id_col], "simhash": out})
+    def compute(batch: pa.RecordBatch) -> pa.Table:
+        runs, hashes = _batch_shingle_hashes(
+            *_binary_view(batch, text_col), shingle_k)
+        h64 = _mix64(hashes)
+        seg = runs[:-1]
+        counts = np.diff(runs)                        # shingles per doc
+        sig = np.zeros(batch.num_rows, dtype=np.uint64)
+        for bit in np.arange(64, dtype=np.uint64):    # per-bit: O(M) memory,
+            ones = (h64 >> bit) & np.uint64(1)        # never M x 64
+            votes = np.add.reduceat(ones.astype(np.int64), seg)
+            sig |= (2 * votes > counts).astype(np.uint64) << bit
+        out = (sig - np.uint64(1 << 63)).view(np.int64)  # store signed
+        return pa.table({id_col: batch.column(id_col), "simhash": out})
 
-    return _spread(df.select(id_col, text_col)).mapInPandas(
-        compute, schema=f"{id_col} long, simhash long")
+    return run_kernel(df, [id_col, text_col], compute,
+                      f"{id_col} long, simhash long")
 
 
 def embedding_cosine_dups(emb: DataFrame, id_col: str = "vec_id",
@@ -387,34 +340,26 @@ def embedding_cosine_dups(emb: DataFrame, id_col: str = "vec_id",
     explode and the pair shuffle was the r2 scale bug)."""
     shifts = np.arange(n_planes, dtype=np.uint64)
 
-    def bucketize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # planes built lazily from the first batch's vector width: they are
-        # a pure function of (seed, n_tables, n_planes, dim), so every task
-        # derives the identical family and the old driver-side dim-probe
-        # job (a full first() scan before any real work) disappears
-        planes = None
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            m = np.vstack(pdf[vec_col].to_numpy())
-            if planes is None:
-                planes = np.random.default_rng(seed).standard_normal(
-                    (n_tables, n_planes, m.shape[1]))
-            norm = np.linalg.norm(m, axis=1, keepdims=True)
-            norm[norm == 0] = 1.0
-            m = m / norm
-            frames = []
-            for t in range(n_tables):
-                signs = (m @ planes[t].T) > 0
-                bucket = (signs.astype(np.uint64) << shifts).sum(axis=1)
-                frames.append(pd.DataFrame({
-                    id_col: pdf[id_col], "table": t,
-                    "bucket": bucket.astype(np.int64)}))
-            yield pd.concat(frames, ignore_index=True)
+    def bucketize(batch: pa.RecordBatch) -> pa.Table:
+        # planes built from the batch's vector width: they are a pure
+        # function of (seed, n_tables, n_planes, dim), so every task
+        # derives the identical family and no driver-side dim-probe job
+        # (a full first() scan before any real work) is needed
+        m = _vectors(batch, vec_col)
+        planes = np.random.default_rng(seed).standard_normal(
+            (n_tables, n_planes, m.shape[1]))
+        norm = np.linalg.norm(m, axis=1, keepdims=True)
+        norm[norm == 0] = 1.0
+        m = m / norm
+        buckets = [((m @ planes[t].T > 0).astype(np.uint64) << shifts)
+                   .sum(axis=1) for t in range(n_tables)]
+        return pa.table({
+            id_col: np.tile(batch.column(id_col).to_numpy(), n_tables),
+            "table": np.repeat(np.arange(n_tables), batch.num_rows),
+            "bucket": np.concatenate(buckets).astype(np.int64)})
 
-    spread = _spread(emb.select(id_col, vec_col))
-    b = spread.mapInPandas(
-        bucketize, schema=f"{id_col} long, table int, bucket long")
+    b = run_kernel(emb, [id_col, vec_col], bucketize,
+                   f"{id_col} long, table int, bucket long")
     # same four-consumer pattern as minhash_lsh_pairs: persist the skinny
     # (id, table, bucket) rows so the hyperplane matmul kernel runs once
     from pyspark import StorageLevel

@@ -5,7 +5,7 @@ The decode/feature-extraction kernels are STUBBED (this container has no
 image/audio libraries): ``decode_image`` raises ``NotImplementedError``
 unless ``fake=True``, in which case a deterministic fake decoder parses our
 own 16-byte header. Everything Spark-side — schema, batch shapes,
-``mapInArrow`` signatures, partition-size control for large blobs — is real
+Arrow kernel signatures, partition-size control for large blobs — is real
 and tested, so swapping in a real codec later is a one-function change.
 
 All three operators are batch-vectorized over the Arrow binary buffers
@@ -26,18 +26,18 @@ Blob framing (our deterministic fake "format"):
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+
+from ..pipeline import _binary_view, run_kernel
 
 MAGIC = b"OFMM"
 HEADER = 14  # 4s magic + u8 kind + u32 w + u32 h + u8 chan
 META_SCHEMA = ("blob_id long, kind string, width int, height int, "
                "channels int, n_bytes long")
+FEATURES_SCHEMA = "blob_id long, channel_means array<double>, pixel_std double"
 _KIND_NAMES = np.array(["image", "audio", "video", "unknown"])
 
 
@@ -83,19 +83,6 @@ def decode_image(blob: bytes, fake: bool = False) -> np.ndarray:
     return payload.reshape(height, width, channels)
 
 
-def _binary_view(arr: pa.Array) -> tuple[np.ndarray, np.ndarray]:
-    """(flat uint8 buffer, int64 offsets) views over an Arrow binary array."""
-    if isinstance(arr, pa.ChunkedArray):
-        arr = arr.combine_chunks()
-    if arr.type != pa.binary():
-        arr = arr.cast(pa.binary())
-    offs = np.frombuffer(arr.buffers()[1], dtype=np.int32,
-                         count=len(arr) + arr.offset + 1)
-    offs = offs[arr.offset:].astype(np.int64)
-    buf = np.frombuffer(arr.buffers()[2], dtype=np.uint8)
-    return buf, offs
-
-
 def _parse_headers(buf: np.ndarray, offs: np.ndarray):
     """Vectorized header parse: kind/width/height/channels per blob."""
     starts = offs[:-1]
@@ -114,24 +101,15 @@ def extract_metadata(df: DataFrame, blob_col: str = "blob",
                      id_col: str = "blob_id") -> DataFrame:
     """Parse headers only (never touches payload bytes beyond the gather) —
     one numpy pass per Arrow batch."""
-    def parse(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for b in batches:
-            if b.num_rows == 0:
-                continue
-            buf, offs = _binary_view(b.column(1))
-            kind, width, height, chan = _parse_headers(buf, offs)
-            yield pa.RecordBatch.from_arrays([
-                b.column(0).cast(pa.int64()),
-                pa.array(_KIND_NAMES[np.minimum(kind, 3)]),
-                pa.array(width.astype(np.int32)),
-                pa.array(height.astype(np.int32)),
-                pa.array(chan.astype(np.int32)),
-                pa.array(np.diff(offs)),
-            ], names=["blob_id", "kind", "width", "height", "channels",
-                      "n_bytes"])
+    def parse(b: pa.RecordBatch) -> pa.Table:
+        buf, offs = _binary_view(b, blob_col)
+        kind, width, height, chan = _parse_headers(buf, offs)
+        return pa.table({"blob_id": b.column(id_col),
+                         "kind": _KIND_NAMES[np.minimum(kind, 3)],
+                         "width": width, "height": height, "channels": chan,
+                         "n_bytes": np.diff(offs)})
 
-    return df.select(F.col(id_col), F.col(blob_col)).mapInArrow(
-        parse, schema=META_SCHEMA)
+    return run_kernel(df, [id_col, blob_col], parse, META_SCHEMA)
 
 
 def image_features(df: DataFrame, blob_col: str = "blob",
@@ -149,65 +127,50 @@ def image_features(df: DataFrame, blob_col: str = "blob",
         # real-codec path (active on hosts with Pillow): decode per blob —
         # real formats decode one image at a time; the batch loop stays,
         # the arithmetic is numpy per image
-        def feats_real(batches: Iterator[pa.RecordBatch]
-                       ) -> Iterator[pa.RecordBatch]:
-            for b in batches:
-                if b.num_rows == 0:
-                    continue
-                ids = np.asarray(b.column(0).cast(pa.int64()))
-                blobs = b.column(1).to_pylist()
-                means, stds, moffs = [], [], [0]
-                for blob in blobs:
-                    img = decode_image(blob).astype(np.float64)
-                    means.extend(img.reshape(-1, img.shape[2]).mean(axis=0))
-                    stds.append(img.std())
-                    moffs.append(len(means))
-                yield pa.RecordBatch.from_arrays([
-                    pa.array(ids),
-                    pa.ListArray.from_arrays(
-                        pa.array(moffs, type=pa.int32()),
-                        pa.array(np.asarray(means))),
-                    pa.array(np.asarray(stds)),
-                ], names=["blob_id", "channel_means", "pixel_std"])
+        def feats_real(b: pa.RecordBatch) -> pa.Table:
+            means, stds, moffs = [], [], [0]
+            for blob in b.column(blob_col).to_pylist():
+                img = decode_image(blob).astype(np.float64)
+                means.extend(img.reshape(-1, img.shape[2]).mean(axis=0))
+                stds.append(img.std())
+                moffs.append(len(means))
+            return _features(b.column(id_col), moffs, means, stds)
 
-        return df.select(F.col(id_col), F.col(blob_col)).mapInArrow(
-            feats_real, schema="blob_id long, channel_means array<double>, "
-                               "pixel_std double")
+        return run_kernel(df, [id_col, blob_col], feats_real, FEATURES_SCHEMA)
 
-    def feats(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for b in batches:
-            if b.num_rows == 0:
-                continue
-            ids = np.asarray(b.column(0).cast(pa.int64()))
-            buf, offs = _binary_view(b.column(1))
-            _, width, height, chan = _parse_headers(buf, offs)
-            starts = offs[:-1] + HEADER
-            n = len(ids)
-            out_std = np.zeros(n)
-            voffs = np.zeros(n + 1, dtype=np.int64)
-            np.cumsum(chan, out=voffs[1:])
-            mean_vals = np.zeros(int(voffs[-1]))
-            shape_key = width * 1_000_000_000 + height * 1_000 + chan
-            for key in np.unique(shape_key):
-                sel = np.flatnonzero(shape_key == key)
-                w, h, c = (int(width[sel[0]]), int(height[sel[0]]),
-                           int(chan[sel[0]]))
-                size = w * h * c
-                idx = starts[sel][:, None] + np.arange(size)[None, :]
-                mat = buf[idx].astype(np.float64)
-                ch_means = mat.reshape(len(sel), w * h, c).mean(axis=1)
-                out_std[sel] = mat.std(axis=1)
-                mean_vals[voffs[sel][:, None] + np.arange(c)[None, :]] = ch_means
-            means_arr = pa.ListArray.from_arrays(
-                pa.array(voffs.astype(np.int32), type=pa.int32()),
-                pa.array(mean_vals))
-            yield pa.RecordBatch.from_arrays([
-                pa.array(ids), means_arr, pa.array(out_std),
-            ], names=["blob_id", "channel_means", "pixel_std"])
+    def feats(b: pa.RecordBatch) -> pa.Table:
+        buf, offs = _binary_view(b, blob_col)
+        _, width, height, chan = _parse_headers(buf, offs)
+        starts = offs[:-1] + HEADER
+        n = b.num_rows
+        out_std = np.zeros(n)
+        voffs = np.zeros(n + 1, dtype=np.int64)
+        np.cumsum(chan, out=voffs[1:])
+        mean_vals = np.zeros(int(voffs[-1]))
+        shape_key = width * 1_000_000_000 + height * 1_000 + chan
+        for key in np.unique(shape_key):
+            sel = np.flatnonzero(shape_key == key)
+            w, h, c = (int(width[sel[0]]), int(height[sel[0]]),
+                       int(chan[sel[0]]))
+            size = w * h * c
+            idx = starts[sel][:, None] + np.arange(size)[None, :]
+            mat = buf[idx].astype(np.float64)
+            ch_means = mat.reshape(len(sel), w * h, c).mean(axis=1)
+            out_std[sel] = mat.std(axis=1)
+            mean_vals[voffs[sel][:, None] + np.arange(c)[None, :]] = ch_means
+        return _features(b.column(id_col), voffs, mean_vals, out_std)
 
-    return df.select(F.col(id_col), F.col(blob_col)).mapInArrow(
-        feats, schema="blob_id long, channel_means array<double>, "
-                      "pixel_std double")
+    return run_kernel(df, [id_col, blob_col], feats, FEATURES_SCHEMA)
+
+
+def _features(ids, mean_offsets, means, stds) -> pa.Table:
+    """image_features rows: blob i's channel means are
+    ``means[mean_offsets[i]:mean_offsets[i + 1]]``."""
+    return pa.table({"blob_id": ids,
+                     "channel_means": pa.ListArray.from_arrays(
+                         pa.array(mean_offsets, pa.int32()),
+                         pa.array(np.asarray(means, dtype=np.float64))),
+                     "pixel_std": np.asarray(stds, dtype=np.float64)})
 
 
 def frame_sample(df: DataFrame, blob_col: str = "blob", id_col: str = "blob_id",
@@ -221,36 +184,33 @@ def frame_sample(df: DataFrame, blob_col: str = "blob", id_col: str = "blob_id",
             "real video decoding requires a media library not present in "
             "this environment; pass fake=True for the deterministic stub")
 
-    def sample(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for b in batches:
-            if b.num_rows == 0:
-                continue
-            ids = np.asarray(b.column(0).cast(pa.int64()))
-            buf, offs = _binary_view(b.column(1))
-            _, width, height, chan = _parse_headers(buf, offs)
-            starts = offs[:-1] + HEADER
-            shape_key = width * 1_000_000_000 + height * 1_000 + chan
-            for key in np.unique(shape_key):
-                sel = np.flatnonzero(shape_key == key)
-                w, h, c = (int(width[sel[0]]), int(height[sel[0]]),
-                           int(chan[sel[0]]))
-                frame_rows = np.arange(0, h, every)
-                k, nf, fsize = len(sel), len(frame_rows), w * c
-                idx = (starts[sel][:, None, None]
-                       + (frame_rows * fsize)[None, :, None]
-                       + np.arange(fsize)[None, None, :])
-                frames = np.ascontiguousarray(buf[idx]).reshape(-1)
-                f_offs = (np.arange(k * nf + 1, dtype=np.int32)
-                          * np.int32(fsize))
-                frame_arr = pa.Array.from_buffers(
-                    pa.binary(), k * nf,
-                    [None, pa.py_buffer(f_offs.tobytes()),
-                     pa.py_buffer(frames.tobytes())])
-                yield pa.RecordBatch.from_arrays([
-                    pa.array(np.repeat(ids[sel], nf)),
-                    pa.array(np.tile(frame_rows, k).astype(np.int32)),
-                    frame_arr,
-                ], names=["blob_id", "frame_idx", "frame"])
+    def sample(b: pa.RecordBatch) -> pa.Table:
+        ids = b.column(id_col).to_numpy()
+        buf, offs = _binary_view(b, blob_col)
+        _, width, height, chan = _parse_headers(buf, offs)
+        starts = offs[:-1] + HEADER
+        shape_key = width * 1_000_000_000 + height * 1_000 + chan
+        groups = []
+        for key in np.unique(shape_key):
+            sel = np.flatnonzero(shape_key == key)
+            w, h, c = (int(width[sel[0]]), int(height[sel[0]]),
+                       int(chan[sel[0]]))
+            frame_rows = np.arange(0, h, every)
+            k, nf, fsize = len(sel), len(frame_rows), w * c
+            idx = (starts[sel][:, None, None]
+                   + (frame_rows * fsize)[None, :, None]
+                   + np.arange(fsize)[None, None, :])
+            frames = np.ascontiguousarray(buf[idx]).reshape(-1)
+            f_offs = (np.arange(k * nf + 1, dtype=np.int32)
+                      * np.int32(fsize))
+            frame_arr = pa.Array.from_buffers(
+                pa.binary(), k * nf,
+                [None, pa.py_buffer(f_offs.tobytes()),
+                 pa.py_buffer(frames.tobytes())])
+            groups.append(pa.table({"blob_id": np.repeat(ids[sel], nf),
+                                    "frame_idx": np.tile(frame_rows, k),
+                                    "frame": frame_arr}))
+        return pa.concat_tables(groups)
 
-    return df.select(F.col(id_col), F.col(blob_col)).mapInArrow(
-        sample, schema="blob_id long, frame_idx int, frame binary")
+    return run_kernel(df, [id_col, blob_col], sample,
+                      "blob_id long, frame_idx int, frame binary")

@@ -9,12 +9,12 @@ scan, trading recall for a ~2^planes fan-in reduction.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..pipeline import _estimate_rows, _vectors, run_kernel
 
 
 def _cosine_expr(vec_col: str, query: list[float]):
@@ -61,23 +61,17 @@ def _bucketize(emb: DataFrame, planes: np.ndarray | None, id_col: str,
     if planes is not None:
         n_planes = len(planes)
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pl = planes
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            m = np.vstack(pdf[vec_col].to_numpy())
-            if pl is None:
-                pl = _planes(n_planes, m.shape[1], seed)
-            signs = (m @ pl.T) > 0
-            bucket = (signs.astype(np.uint64)
-                      << np.arange(n_planes, dtype=np.uint64)).sum(axis=1)
-            out = pdf[[id_col, vec_col]].copy()
-            out["bucket"] = bucket.astype(np.int64)
-            yield out
+    def kernel(b: pa.RecordBatch) -> pa.Table:
+        m = _vectors(b, vec_col)
+        pl = _planes(n_planes, m.shape[1], seed) if planes is None else planes
+        signs = (m @ pl.T) > 0
+        bucket = (signs.astype(np.uint64)
+                  << np.arange(n_planes, dtype=np.uint64)).sum(axis=1)
+        return pa.table(b).append_column("bucket",
+                                         pa.array(bucket.astype(np.int64)))
 
     schema = f"{id_col} long, {vec_col} array<float>, bucket long"
-    return emb.select(id_col, vec_col).mapInPandas(kernel, schema=schema)
+    return run_kernel(emb, [id_col, vec_col], kernel, schema)
 
 
 def _probe_buckets(query: list[float], planes: np.ndarray,
@@ -263,7 +257,7 @@ def _write_meta(spark, path: str, meta: dict) -> None:
     except (OSError, pa.ArrowInvalid, ValueError):
         # incl. unresolvable URI schemes (s3a://): Spark's own
         # writer handles them and lands next to the index
-        spark.createDataFrame(pd.DataFrame({k: [v] for k, v in meta.items()})) \
+        spark.createDataFrame([tuple(meta.values())], list(meta)) \
             .coalesce(1).write.mode("overwrite") \
             .parquet(path + "/_ann_meta")
 
@@ -392,33 +386,21 @@ def probe_ann_index_many(spark, path: str, queries: DataFrame, k: int = 10,
     planes = _planes(n_planes, dim, int(meta["seed"]))
     id_col, vec_col = meta["id_col"], meta["vec_col"]
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            m = np.vstack(pdf[query_vec_col].to_numpy()).astype(np.float64)
-            if m.shape[1] != dim:
-                raise ValueError(
-                    f"query dim {m.shape[1]} != index dim {dim}")
-            margins = m @ planes.T                       # (rows, n_planes)
-            home = ((margins > 0).astype(np.uint64)
-                    << np.arange(n_planes, dtype=np.uint64)) \
-                .sum(axis=1).astype(np.int64)
-            flips = np.argsort(np.abs(margins), axis=1)[:, :n_probes]
-            probes = np.concatenate(
-                [home[:, None], home[:, None] ^ (1 << flips.astype(np.int64))],
-                axis=1)                                  # (rows, 1+n_probes)
-            yield pd.DataFrame({
-                query_id_col:
-                    pdf[query_id_col].to_numpy().repeat(probes.shape[1]),
-                query_vec_col:
-                    pdf[query_vec_col].to_numpy().repeat(probes.shape[1]),
-                "bucket": probes.ravel()})
+    def kernel(b: pa.RecordBatch) -> pa.Table:
+        m = _query_matrix(b, query_vec_col, dim)
+        margins = m @ planes.T                           # (rows, n_planes)
+        home = ((margins > 0).astype(np.uint64)
+                << np.arange(n_planes, dtype=np.uint64)) \
+            .sum(axis=1).astype(np.int64)
+        flips = np.argsort(np.abs(margins), axis=1)[:, :n_probes]
+        probes = np.concatenate(
+            [home[:, None], home[:, None] ^ (1 << flips.astype(np.int64))],
+            axis=1)                                      # (rows, 1+n_probes)
+        return _explode(b, "bucket", probes)
 
-    exploded = queries.select(query_id_col, query_vec_col).mapInPandas(
-        kernel,
-        schema=f"{query_id_col} long, {query_vec_col} array<float>, "
-               "bucket long")
+    exploded = run_kernel(
+        queries, [query_id_col, query_vec_col], kernel,
+        f"{query_id_col} long, {query_vec_col} array<float>, bucket long")
 
     cand = _join_candidates(index, exploded, "bucket", prune_partitions)
 
@@ -430,6 +412,21 @@ def probe_ann_index_many(spark, path: str, queries: DataFrame, k: int = 10,
                 _cosine_pair_expr(query_vec_col, vec_col).alias("cosine"))
             .withColumn("__rk", F.row_number().over(w))
             .where(F.col("__rk") <= k).drop("__rk"))
+
+
+def _query_matrix(b: pa.RecordBatch, vec_col: str, dim: int) -> np.ndarray:
+    m = _vectors(b, vec_col).astype(np.float64)
+    if m.shape[1] != dim:
+        raise ValueError(f"query dim {m.shape[1]} != index dim {dim}")
+    return m
+
+
+def _explode(b: pa.RecordBatch, key: str, probes: np.ndarray) -> pa.Table:
+    """Row i of ``b`` repeated once per probe in ``probes[i]``, with the
+    probe as column ``key``."""
+    rows = np.repeat(np.arange(b.num_rows), probes.shape[1])
+    return pa.table(b).take(rows).append_column(
+        key, pa.array(probes.astype(np.int64).ravel()))
 
 
 def lsh_topk(emb: DataFrame, query: list[float], k: int = 10,
@@ -503,18 +500,13 @@ def _spherical_kmeans(sample: np.ndarray, n_lists: int, seed: int,
 def _assign_lists(emb: DataFrame, cent: np.ndarray, id_col: str,
                   vec_col: str) -> DataFrame:
     """Nearest-centroid cell per vector — one matmul per Arrow batch."""
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            v = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
-            out = pdf[[id_col, vec_col]].copy()
-            out["list_id"] = (_unit_rows(v) @ cent.T).argmax(axis=1) \
-                .astype(np.int64)
-            yield out
+    def kernel(b: pa.RecordBatch) -> pa.Table:
+        v = _vectors(b, vec_col).astype(np.float64)
+        lists = (_unit_rows(v) @ cent.T).argmax(axis=1).astype(np.int64)
+        return pa.table(b).append_column("list_id", pa.array(lists))
 
     schema = f"{id_col} long, {vec_col} array<float>, list_id long"
-    return emb.select(id_col, vec_col).mapInPandas(kernel, schema=schema)
+    return run_kernel(emb, [id_col, vec_col], kernel, schema)
 
 
 def build_ivf_index(emb: DataFrame, path: str, n_lists: int = 16,
@@ -532,8 +524,7 @@ def build_ivf_index(emb: DataFrame, path: str, n_lists: int = 16,
     # no count() job); the estimate only sizes the sampling fraction, and
     # any non-file source (createDataFrame fixtures, unions with planted
     # rows where the estimate would undercount) keeps the exact count path
-    from orc_format_spark import pipeline as _pipeline
-    n = _pipeline._estimate_rows(emb)
+    n = _estimate_rows(emb)
     if n is None:
         n = emb.count()
     frac = min(1.0, 1.2 * train_rows / max(n, 1))
@@ -602,27 +593,14 @@ def probe_ivf_index_many(spark, path: str, queries: DataFrame, k: int = 10,
     id_col, vec_col = meta["id_col"], meta["vec_col"]
     n_probes = min(n_probes, int(meta["n_lists"]))
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            m = np.vstack(pdf[query_vec_col].to_numpy()).astype(np.float64)
-            if m.shape[1] != dim:
-                raise ValueError(
-                    f"query dim {m.shape[1]} != index dim {dim}")
-            sims = _unit_rows(m) @ cent.T                # (rows, n_lists)
-            probes = np.argsort(-sims, axis=1, kind="stable")[:, :n_probes]
-            yield pd.DataFrame({
-                query_id_col:
-                    pdf[query_id_col].to_numpy().repeat(n_probes),
-                query_vec_col:
-                    pdf[query_vec_col].to_numpy().repeat(n_probes),
-                "list_id": probes.astype(np.int64).ravel()})
+    def kernel(b: pa.RecordBatch) -> pa.Table:
+        sims = _unit_rows(_query_matrix(b, query_vec_col, dim)) @ cent.T
+        probes = np.argsort(-sims, axis=1, kind="stable")[:, :n_probes]
+        return _explode(b, "list_id", probes)
 
-    exploded = queries.select(query_id_col, query_vec_col).mapInPandas(
-        kernel,
-        schema=f"{query_id_col} long, {query_vec_col} array<float>, "
-               "list_id long")
+    exploded = run_kernel(
+        queries, [query_id_col, query_vec_col], kernel,
+        f"{query_id_col} long, {query_vec_col} array<float>, list_id long")
 
     cand = _join_candidates(index, exploded, "list_id", prune_partitions)
 

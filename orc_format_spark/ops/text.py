@@ -1,19 +1,20 @@
 """Text analysis operators: quality scoring, token counting, language ID,
 document fingerprinting. Quality/token metrics are pure built-in-function
 column expressions (JVM, whole-stage codegen — SQL-oracle-checkable);
-language-ID and fingerprints are vectorized pandas UDFs with NO per-doc
-Python loops (columnar str ops / one numpy pass over the whole batch).
+language-ID and fingerprints are Arrow kernels (pipeline.run_kernel):
+columnar substring counts, and one numpy pass over the batch's UTF-8
+buffer with no per-doc Python loop.
 """
 
 from __future__ import annotations
 
-import re
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..pipeline import _binary_view, _column, run_kernel
 
 _STOPWORDS = ("the", "and", "of", "to", "a", "in", "is", "it", "that", "for")
 
@@ -61,32 +62,33 @@ def language_id(df: DataFrame, text_col: str = "text",
                 id_col: str = "doc_id") -> DataFrame:
     """n-gram-overlap language ID ('und' when nothing matches).
 
-    Columnar: per profile gram, ONE vectorized ``Series.str.count`` pass
-    over the whole batch (non-overlapping counts, same semantics as
+    Columnar: per profile gram, ONE ``pyarrow.compute.count_substring``
+    pass over the whole batch (non-overlapping counts, same semantics as
     ``str.count`` / SQL replace-count, so the DuckDB oracle can reproduce
-    the scores exactly). Ties break to the lexicographically larger lang
-    (matching ``max`` over (score, lang) tuples)."""
+    the scores exactly). Lowercasing stays Python's ``str.lower``:
+    ``utf8_lower`` differs on e.g. 'İ' and a word-final 'Σ'. Ties break to
+    the lexicographically larger lang (matching ``max`` over (score, lang)
+    tuples)."""
     langs = sorted(_LANG_PROFILES)  # ascending; later >= update == larger wins ties
 
-    def infer(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            s = " " + pdf[text_col].str.lower() + " "
-            best_score = np.full(len(pdf), -1, dtype=np.int64)
-            best_lang = np.empty(len(pdf), dtype=object)
-            for lang in langs:
-                score = np.zeros(len(pdf), dtype=np.int64)
-                for g in _LANG_PROFILES[lang]:
-                    score += s.str.count(re.escape(g)).to_numpy(dtype=np.int64)
-                upd = score >= best_score
-                best_score[upd] = score[upd]
-                best_lang[upd] = lang
-            pred = np.where(best_score > 0, best_lang, "und")
-            yield pd.DataFrame({id_col: pdf[id_col], "lang_pred": pred})
+    def infer(batch: pa.RecordBatch) -> pa.Table:
+        s = pa.array([f" {t.lower()} "
+                      for t in _column(batch, text_col).to_pylist()])
+        best_score = np.full(len(s), -1, dtype=np.int64)
+        best_lang = np.empty(len(s), dtype=object)
+        for lang in langs:
+            score = np.zeros(len(s), dtype=np.int64)
+            for g in _LANG_PROFILES[lang]:
+                score += pc.count_substring(s, g).to_numpy()
+            upd = score >= best_score
+            best_score[upd] = score[upd]
+            best_lang[upd] = lang
+        pred = np.where(best_score > 0, best_lang, "und")
+        return pa.table({id_col: batch.column(id_col),
+                         "lang_pred": pa.array(pred, pa.string())})
 
-    return df.select(id_col, text_col).mapInPandas(
-        infer, schema=f"{id_col} long, lang_pred string")
+    return run_kernel(df, [id_col, text_col], infer,
+                      f"{id_col} long, lang_pred string")
 
 
 def language_id_oracle_sql(table: str = "documents", text_col: str = "text",
@@ -115,66 +117,60 @@ def fingerprint(df: DataFrame, text_col: str = "text",
                 id_col: str = "doc_id", window: int = 16) -> DataFrame:
     """Winnowing-style document fingerprint: min rolling polynomial hash per
     window (robust to small edits), as one int64 per doc. One numpy pass
-    over the whole batch: concatenated buffer, global sliding windows,
-    boundary masking, per-doc min via segmented ``minimum.reduceat``."""
+    over the batch's UTF-8 buffer: global sliding windows, boundary
+    masking, per-doc min via segmented ``minimum.reduceat``."""
     mod = np.uint64((1 << 61) - 1)
     base = np.uint64(1_000_003)
+    pows = np.array([pow(1_000_003, window - 1 - i, int(mod))
+                     for i in range(window)], dtype=np.uint64)
 
-    def fp(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pows = np.array([pow(1_000_003, window - 1 - i, int(mod))
-                         for i in range(window)], dtype=np.uint64)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            blobs = [t.encode("utf-8") for t in pdf[text_col]]
-            lens = np.fromiter((len(b) for b in blobs), dtype=np.int64,
-                               count=len(blobs))
-            starts = np.zeros(len(blobs) + 1, dtype=np.int64)
-            np.cumsum(lens, out=starts[1:])
-            buf = np.frombuffer(b"".join(blobs), dtype=np.uint8).astype(np.uint64)
+    def fp(batch: pa.RecordBatch) -> pa.Table:
+        buf, starts = _binary_view(batch, text_col)
+        buf = buf.astype(np.uint64)
+        lens = np.diff(starts)
 
-            out = np.zeros(len(blobs), dtype=np.int64)
-            n_win = len(buf) - window + 1
-            long_docs = lens >= window
-            if n_win > 0 and long_docs.any():
-                h = np.zeros(n_win, dtype=np.uint64)
-                for j in range(window):
-                    h += buf[j:j + n_win] * pows[j]
-                h %= mod
-                widx = np.arange(n_win, dtype=np.int64)
-                doc_of = np.searchsorted(starts, widx, side="right") - 1
-                valid = ((widx + window) <= starts[doc_of + 1]) & long_docs[doc_of]
-                dv, hv = doc_of[valid], h[valid]
-                seg = np.searchsorted(dv, np.flatnonzero(long_docs))
-                mins = np.minimum.reduceat(hv, seg)
-                out[long_docs] = mins.astype(np.int64) - (1 << 62)
-            # short docs: whole-doc polynomial hash, one vectorized pass
-            # over the same concatenated buffer (gather + segmented
-            # add.reduceat). Byte-compatible with the historical per-doc
-            # formula: powers wrap mod 2^64 (plain uint64 base**pos), each
-            # term is reduced mod 2^61-1, the segment sum wraps mod 2^64,
-            # and the final value is reduced mod 2^61-1 again.
-            short = np.flatnonzero(~long_docs)
-            if len(short):
-                out[short] = -(1 << 62)
-                nonempty = short[lens[short] > 0]
-                if len(nonempty):
-                    seg_lens = lens[nonempty]
-                    bounds = np.zeros(len(nonempty), dtype=np.int64)
-                    np.cumsum(seg_lens[:-1], out=bounds[1:])
-                    total = int(seg_lens.sum())
-                    pos_in_doc = (np.arange(total, dtype=np.int64)
-                                  - np.repeat(bounds, seg_lens))
-                    byte_idx = np.repeat(starts[nonempty], seg_lens) + pos_in_doc
-                    with np.errstate(over="ignore"):
-                        pow_tab = base ** np.arange(window, dtype=np.uint64)
-                        terms = (buf[byte_idx] * pow_tab[pos_in_doc]) % mod
-                        sums = np.add.reduceat(terms, bounds)
-                    out[nonempty] = (sums % mod).astype(np.int64) - (1 << 62)
-            yield pd.DataFrame({id_col: pdf[id_col], "fingerprint": out})
+        out = np.zeros(len(lens), dtype=np.int64)
+        n_win = len(buf) - window + 1
+        long_docs = lens >= window
+        if n_win > 0 and long_docs.any():
+            h = np.zeros(n_win, dtype=np.uint64)
+            for j in range(window):
+                h += buf[j:j + n_win] * pows[j]
+            h %= mod
+            widx = np.arange(n_win, dtype=np.int64)
+            doc_of = np.searchsorted(starts, widx, side="right") - 1
+            valid = ((widx + window) <= starts[doc_of + 1]) & long_docs[doc_of]
+            dv, hv = doc_of[valid], h[valid]
+            seg = np.searchsorted(dv, np.flatnonzero(long_docs))
+            mins = np.minimum.reduceat(hv, seg)
+            out[long_docs] = mins.astype(np.int64) - (1 << 62)
+        # short docs: whole-doc polynomial hash, one vectorized pass
+        # over the same buffer (gather + segmented
+        # add.reduceat). Byte-compatible with the historical per-doc
+        # formula: powers wrap mod 2^64 (plain uint64 base**pos), each
+        # term is reduced mod 2^61-1, the segment sum wraps mod 2^64,
+        # and the final value is reduced mod 2^61-1 again.
+        short = np.flatnonzero(~long_docs)
+        if len(short):
+            out[short] = -(1 << 62)
+            nonempty = short[lens[short] > 0]
+            if len(nonempty):
+                seg_lens = lens[nonempty]
+                bounds = np.zeros(len(nonempty), dtype=np.int64)
+                np.cumsum(seg_lens[:-1], out=bounds[1:])
+                total = int(seg_lens.sum())
+                pos_in_doc = (np.arange(total, dtype=np.int64)
+                              - np.repeat(bounds, seg_lens))
+                byte_idx = np.repeat(starts[nonempty], seg_lens) + pos_in_doc
+                with np.errstate(over="ignore"):
+                    pow_tab = base ** np.arange(window, dtype=np.uint64)
+                    terms = (buf[byte_idx] * pow_tab[pos_in_doc]) % mod
+                    sums = np.add.reduceat(terms, bounds)
+                out[nonempty] = (sums % mod).astype(np.int64) - (1 << 62)
+        return pa.table({id_col: batch.column(id_col), "fingerprint": out})
 
-    return df.select(id_col, text_col).mapInPandas(
-        fp, schema=f"{id_col} long, fingerprint long")
+    return run_kernel(df, [id_col, text_col], fp,
+                      f"{id_col} long, fingerprint long")
 
 
 # BPE-ish pre-tokenization pattern (letter runs | 1-3 digit runs |

@@ -901,6 +901,8 @@ def spark_read_orc(spark, paths: list[str], columns: list[str] | None = None,
     stay exact, matching how PushedFilters compose with Spark filters)."""
     from pyspark.sql.pandas.types import from_arrow_schema
 
+    from .pipeline import _tasks
+
     plans, meta, names0, types0, _ = _plan_stripes(paths, predicate)
 
     # schema from the type tree (no data read): decode a 0-row probe
@@ -916,8 +918,7 @@ def spark_read_orc(spark, paths: list[str], columns: list[str] | None = None,
     pdf = spark.createDataFrame(
         plans, "path string, off long, ilen long, dlen long, flen long, "
                "rows long")
-    cores = spark.sparkContext.defaultParallelism
-    pdf = pdf.repartition(min(max(len(plans), 1), cores * 2))
+    pdf = pdf.repartition(_tasks(spark, len(plans)))
 
     def decode(batches):
         for b in batches:

@@ -29,7 +29,8 @@ from __future__ import annotations
 
 import uuid
 
-import pandas as pd
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -140,6 +141,14 @@ def _work_partitions(spark: SparkSession, n_groups: int) -> int:
     their stripe count needs, small inputs get exactly the cluster width."""
     cores = spark.sparkContext.defaultParallelism
     return max(cores, -(-n_groups // STRIPES_PER_PARTITION))
+
+
+def _tasks(spark: SparkSession, n: int) -> int:
+    """Task count of a Python stage over ``n`` units of work (files, ORC
+    stripes, row blocks): one task per unit, at most one wave per core —
+    every task pays the JVM↔Python Arrow boundary, so tasks beyond the
+    core count or without work only add that fixed cost."""
+    return max(1, min(spark.sparkContext.defaultParallelism, n))
 
 
 def column_kinds(df: DataFrame) -> dict[str, str]:
@@ -530,24 +539,36 @@ def _n_buckets(df: DataFrame, stripe_rows: int,
     return max((n_rows + stripe_rows - 1) // stripe_rows, 1)
 
 
-def _estimate_rows(df: DataFrame) -> int | None:
-    """Row count from parquet FOOTERS when ``df`` is file-backed — metadata
-    only, no data scan (kills the count() pre-pass the encode job used to
-    pay; at 100 TB that pre-pass is an extra full read). Exact when all
-    footers are read; with many files, samples 64 footers and extrapolates
-    by byte size (n_buckets only needs order-of-magnitude accuracy).
-    Returns None when the plan has no file sources (caller falls back)."""
+def _parquet_scan(df: DataFrame) -> list[str] | None:
+    """Paths of the parquet files ``df`` reads when its plan is that one
+    scan under projections and filters only, else None. Only then do the
+    files' footer row counts describe ``df``: ``inputFiles()`` alone also
+    lists the scans under a join, union, aggregate or decode kernel."""
     try:
+        node = df._jdf.queryExecution().optimizedPlan()
+        while node.nodeName() in ("Project", "Filter"):
+            node = node.child()
+        if node.nodeName() != "LogicalRelation":
+            return None
         files = df.inputFiles()
     except Exception:
         return None
-    paths = []
-    for f in files:
-        if ".parquet" not in f:
-            return None
-        paths.append(f[7:] if f.startswith("file://") else
-                     f[5:] if f.startswith("file:") else f)
-    if not paths:
+    if not files or any(".parquet" not in f for f in files):
+        return None
+    return [f[7:] if f.startswith("file://") else
+            f[5:] if f.startswith("file:") else f for f in files]
+
+
+def _estimate_rows(df: DataFrame) -> int | None:
+    """Row count from parquet FOOTERS when ``df`` is a plain parquet scan
+    (see _parquet_scan) — metadata only, no data scan (kills the count()
+    pre-pass the encode job used to pay; at 100 TB that pre-pass is an
+    extra full read). Exact when all footers are read; with many files,
+    samples 64 footers and extrapolates by byte size (n_buckets only needs
+    order-of-magnitude accuracy). Returns None for any other plan (caller
+    falls back)."""
+    paths = _parquet_scan(df)
+    if paths is None:
         return None
     import pyarrow.parquet as pq
     try:
@@ -564,6 +585,87 @@ def _estimate_rows(df: DataFrame) -> int | None:
         return int(srows / len(sample) * len(paths))
     except Exception:
         return None
+
+
+# rows a kernel task should carry at least when run_kernel spreads a small
+# scan: each task pays a fixed JVM<->Python Arrow boundary (~10-20 ms), so
+# below a few hundred rows the boundary dominates the numpy kernel
+KERNEL_ROWS_PER_TASK = 512
+
+
+def run_kernel(df: DataFrame, cols: list[str], fn, schema) -> DataFrame:
+    """Run ``fn(pa.RecordBatch) -> pa.RecordBatch | pa.Table`` on every
+    non-empty Arrow batch of ``df.select(*cols)`` (``mapInArrow``). The
+    output is cast to ``schema`` (Spark DDL string or StructType), so a
+    kernel's column names must match it; types are coerced.
+
+    Sizing: a plain parquet scan (see _parquet_scan) over fewer files than
+    cores arrives as one or two scan partitions, which would serialize the
+    numpy work onto one core, so it is round-robin repartitioned to
+    ``_tasks(spark, ceil(footer_rows / KERNEL_ROWS_PER_TASK))``. Any other
+    input keeps its partitioning: a derived frame (decode output, union,
+    join, cache) was already sized by the stage that made it.
+
+    What stays outside: ``_work_partitions`` remains the encode shuffle's
+    own rule because it alone has a memory floor (STRIPES_PER_PARTITION
+    stripes per task), and the probe placement of ``_partition_probes``
+    depends on its width. Kernels that carry state across batches or need
+    the whole partition call ``mapInArrow`` directly: ``encode_partition``,
+    ``decode_partition``, ``decode_files``, the ORC ``decode`` of
+    ``orc_reader.spark_read_orc`` and the task-side writers."""
+    spark = df.sparkSession
+    cores = spark.sparkContext.defaultParallelism
+    df = df.select(*cols)
+    files = _parquet_scan(df)
+    if files is not None and len(files) < cores:
+        rows = _estimate_rows(df)
+        df = df.repartition(_tasks(spark, cores if rows is None
+                                   else -(-rows // KERNEL_ROWS_PER_TASK)))
+    if isinstance(schema, str):
+        schema = T._parse_datatype_string(schema)
+    target = _arrow_schema(schema)
+
+    def kernel(batches):
+        for b in batches:
+            if b.num_rows:
+                yield from pa.table(fn(b)).cast(target).to_batches()
+
+    return df.mapInArrow(kernel, schema)
+
+
+def _column(batch, name: str):
+    """``batch[name]``; raises ValueError naming the column when it holds
+    a null (the kernels' buffer views would read a null as a value)."""
+    arr = batch.column(name)
+    if arr.null_count:
+        raise ValueError(f"column {name!r} has {arr.null_count} null "
+                         "value(s); this kernel needs a value in every row")
+    return arr
+
+
+def _binary_view(batch, name: str):
+    """(flat uint8 buffer, int64 offsets from 0) views over a string or
+    binary column: the bytes of every row, contiguous, no per-row copy.
+    Slice-safe (honours the array offset)."""
+    arr = _column(batch, name).cast(pa.binary())
+    offs = np.frombuffer(arr.buffers()[1], dtype=np.int32,
+                         count=len(arr) + arr.offset + 1)
+    offs = offs[arr.offset:].astype(np.int64)
+    data = arr.buffers()[2]
+    buf = np.frombuffer(data, dtype=np.uint8) if data is not None \
+        else np.zeros(0, dtype=np.uint8)
+    return buf[offs[0]:offs[-1]], offs - offs[0]
+
+
+def _vectors(batch, name: str):
+    """(rows, dim) numpy view of a list<float|double> column, element type
+    kept; raises ValueError on a null or ragged row."""
+    arr = _column(batch, name)
+    lens = np.diff(arr.offsets.to_numpy())
+    if len(lens) and lens.min() != lens.max():
+        raise ValueError(f"column {name!r} mixes vector lengths "
+                         f"{lens.min()} and {lens.max()}")
+    return arr.flatten().to_numpy().reshape(len(arr), -1)
 
 
 def encode_dataframe(df: DataFrame, key_col: str, order_col: str | None = None,
@@ -875,10 +977,10 @@ def decode_job_clustered(spark: SparkSession, out_dir: str,
     """
     schema, columns = infer_schema_from_manifest(spark, out_dir, columns)
     # ownership: stripe -> min(file). One cheap job over one skinny column.
-    ids = (spark.read.schema(STRIPE_SCHEMA)
-           .option("basePath", f"{out_dir}/stripes")
-           .parquet(f"{out_dir}/stripes")
-           .select("stripe_id", F.input_file_name().alias("path"))
+    scan = (spark.read.schema(STRIPE_SCHEMA)
+            .option("basePath", f"{out_dir}/stripes")
+            .parquet(f"{out_dir}/stripes"))
+    ids = (scan.select("stripe_id", F.input_file_name().alias("path"))
            .distinct())
     owners = ids.groupBy("stripe_id").agg(F.min("path").alias("path"))
     if as_of is not None or has_compactions(out_dir):
@@ -887,8 +989,11 @@ def decode_job_clustered(spark: SparkSession, out_dir: str,
             owners = owners.join(act, "stripe_id", "left_semi")
     file_keep = owners.groupBy("path").agg(
         F.collect_list("stripe_id").alias("keep"))
-    cores = spark.sparkContext.defaultParallelism
-    file_keep = file_keep.repartition(cores * 2)
+    # one stripe file per decode task, at most one wave per core (the scan
+    # already listed the files). AQE coalesces the skinny (path, keep) rows
+    # into one partition, and round-robin out of one partition fills every
+    # task.
+    file_keep = file_keep.repartition(_tasks(spark, len(scan.inputFiles())))
 
     target_schema = _arrow_schema(schema)
     want = list(columns)
@@ -1178,17 +1283,18 @@ def decode_job(spark: SparkSession, out_dir: str,
         if key_equals is not None:
             # bloom probe per manifest row — distributed (the manifest can
             # be millions of rows at 100 TB; only the SURVIVORS come back)
-            from pyspark.sql.functions import pandas_udf
+            from pyspark.sql.functions import arrow_udf
             from . import bloom as bloom_mod
             target = key_equals
 
-            @pandas_udf("boolean")
-            def probe(blooms: pd.Series) -> pd.Series:
+            @arrow_udf("boolean")
+            def probe(blooms: pa.Array) -> pa.Array:
                 # one vectorized batch probe: target hashed once, k probe
                 # BYTES gathered per blob — no per-row header parse or
                 # bitset unpack (15M manifest rows = 15M probes at 100 TB)
-                return pd.Series(bloom_mod.might_contain_many(
-                    [b if b is not None else b"" for b in blooms], target))
+                return pa.array(bloom_mod.might_contain_many(
+                    [b if b is not None else b"" for b in blooms.to_pylist()],
+                    target))
 
             manifest = manifest.filter(probe(F.col("key_bloom")))
         # Iceberg-style planning: surviving stripe ids become a LITERAL

@@ -112,7 +112,7 @@ def main() -> None:
             spark, f"{d}/ann_index", queries, k=5, n_probes=3)
         out.write("## probe_ann_index_many (batch probe — the production shape)\n\n"
                   "What to look for: the query set bucketizes in ONE\n"
-                  "`MapInPandas` (vectorized matmul, no per-row Python) and\n"
+                  "`MapInArrow` (vectorized matmul, no per-row Python) and\n"
                   "joins the index on `bucket` only; with a small query set the\n"
                   "index scan again carries `PartitionFilters: [bucket#... IN\n"
                   "(...)]` and the exploded query side is BROADCAST (no index\n"
@@ -137,7 +137,7 @@ def main() -> None:
         ivf_batch = similarity.probe_ivf_index_many(
             spark, f"{d}/ivf_index", queries, k=5, n_probes=2)
         out.write("## probe_ivf_index_many (batch IVF probe)\n\n"
-                  "What to look for: one `MapInPandas` assigns each query its\n"
+                  "What to look for: one `MapInArrow` assigns each query its\n"
                   "n_probes nearest cells (one matmul per Arrow batch against\n"
                   "the broadcast centroid matrix), ONE join on `list_id`\n"
                   "against the cell-partitioned index (PartitionFilters +\n"

@@ -3,6 +3,7 @@ multimodal plumbing — correctness on small deterministic inputs."""
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
@@ -91,12 +92,62 @@ def test_embedding_dups_multi_table_or_recall(spark, emb):
             f"trial {trial}: near-dup pair missed (cos={cos:.4f}): {found}"
 
 
+def _shingles_ref(t: str, k: int = 5) -> list[int]:
+    """One doc's sorted unique k-byte rolling hashes mod 2^61-1 (uint64
+    wraparound); a doc shorter than k hashes to the single value 0."""
+    p = (1 << 61) - 1
+    b = t.encode("utf-8")
+    if len(b) < k:
+        return [0]
+    pows = [pow(1_000_003, k - 1 - i, p) for i in range(k)]
+    return sorted({(sum(b[s + j] * pows[j] for j in range(k))
+                    % (1 << 64)) % p for s in range(len(b) - k + 1)})
+
+
+def _minhash_ref(t: str, n_hashes: int = 64) -> list[int]:
+    a, b = dedup._minhash_params(n_hashes)
+    h = np.array(_shingles_ref(t), dtype=np.uint64)
+    return [int(((h * a[i] + b[i]) % np.uint64((1 << 61) - 1)).min())
+            for i in range(n_hashes)]
+
+
+# multi-byte UTF-8, empty and shorter-than-k docs beside ordinary text
+MINHASH_TEXTS = ["hello world " * 10, "spark rle codec " * 8, "",
+                 "abcd", "ab", "héllo wörld — 日本語のテキスト 🙂 " * 3,
+                 "日本"]
+
+
 def test_minhash_signature_deterministic(spark):
+    from orc_format_spark import pipeline
     df = spark.createDataFrame(pd.DataFrame(
-        {"doc_id": [0, 1], "text": ["hello world " * 10, "spark rle codec " * 8]}))
+        {"doc_id": list(range(len(MINHASH_TEXTS))), "text": MINHASH_TEXTS}))
     s1 = dedup.minhash_signatures(df).orderBy("doc_id").toPandas()
     s2 = dedup.minhash_signatures(df).orderBy("doc_id").toPandas()
     assert [list(s) for s in s1["signature"]] == [list(s) for s in s2["signature"]]
+    assert [list(s) for s in s1["signature"]] == \
+        [_minhash_ref(t) for t in MINHASH_TEXTS]
+    # a batch over a SLICED Arrow array (non-zero offset, bytes of other
+    # rows on both sides) hashes exactly the rows of the slice
+    arr = pa.array(["pad before", *MINHASH_TEXTS, "pad after"]) \
+        .slice(1, len(MINHASH_TEXTS))
+    batch = pa.RecordBatch.from_arrays([arr], names=["text"])
+    runs, hashes = dedup._batch_shingle_hashes(
+        *pipeline._binary_view(batch, "text"), 5)
+    assert [hashes[runs[i]:runs[i + 1]].tolist()
+            for i in range(len(MINHASH_TEXTS))] == \
+        [_shingles_ref(t) for t in MINHASH_TEXTS]
+
+
+@pytest.mark.parametrize("kernel", [
+    dedup.minhash_signatures, dedup.shingle_sets, dedup.simhash_signatures,
+    text.language_id, text.fingerprint])
+def test_string_kernels_reject_null_text(spark, kernel):
+    """A null text fails loudly with a ValueError naming the column (a
+    buffer view would otherwise hash it as an empty string)."""
+    df = spark.createDataFrame([(0, "some text here"), (1, None)],
+                               "doc_id long, text string")
+    with pytest.raises(Exception, match=r"ValueError: column 'text' has 1 null"):
+        kernel(df).collect()
 
 
 def test_simhash_similar_texts_close(spark):
@@ -161,15 +212,26 @@ def test_quality_metrics_values(spark):
 
 
 def test_language_id_heuristic(spark):
+    # 'İ' and a word-final 'Σ' lowercase differently in Python and in
+    # pyarrow's utf8_lower ('i̇' vs 'i', 'ς' vs 'σ'); Python's is the rule
+    texts = ["the cat and the dog are sitting in the garden of the house",
+             "der hund und die katze sitzen in einem schönen garten",
+             "zzz qqq 12345", "İch", "ΟΔΟΣ and ΟΔΟΣ the end"]
     df = spark.createDataFrame(pd.DataFrame({
-        "doc_id": [0, 1, 2],
-        "text": ["the cat and the dog are sitting in the garden of the house",
-                 "der hund und die katze sitzen in einem schönen garten",
-                 "zzz qqq 12345"]}))
+        "doc_id": list(range(len(texts))), "text": texts}))
     out = text.language_id(df).orderBy("doc_id").toPandas()
     assert out["lang_pred"].tolist()[0] == "en"
     assert out["lang_pred"].tolist()[1] == "de"
     assert out["lang_pred"].tolist()[2] == "und"
+
+    def ref(t: str) -> str:
+        s = " " + t.lower() + " "
+        score, lang = max((sum(s.count(g) for g in grams), lang)
+                          for lang, grams in text._LANG_PROFILES.items())
+        return lang if score > 0 else "und"
+
+    assert out["lang_pred"].tolist() == [ref(t) for t in texts]
+    assert out["lang_pred"].tolist()[3] == "und"  # 'i̇ch' holds no 'ich'
 
 
 def test_fingerprint_robust_to_small_edit(spark):

@@ -77,6 +77,49 @@ def test_clustered_decode_matches_shuffle_decode(spark, df, tmp_path):
     assert pruned.count() == df.count()
 
 
+def _stripe_files(out: str) -> int:
+    import glob
+    return len(glob.glob(f"{out}/stripes/**/*.parquet", recursive=True))
+
+
+def test_clustered_decode_runs_one_task_per_file(spark, df, tmp_path):
+    """decode_job_clustered runs min(cores, n_files) decode tasks, none of
+    them empty."""
+    cores = spark.sparkContext.defaultParallelism
+    for name, stripe_rows in (("few", 300), ("many", 50)):
+        out = str(tmp_path / name)
+        pipeline.encode_job(spark, df, out, stripe_rows=stripe_rows)
+        n_files = _stripe_files(out)
+        assert (n_files < cores) == (name == "few")
+        dec = pipeline.decode_job_clustered(spark, out)
+        want = min(cores, n_files)
+        assert dec.rdd.getNumPartitions() == want
+        assert dec.select(F.spark_partition_id()).distinct().count() == want
+
+
+def test_kernels_keep_decoded_partitioning(spark, df, tmp_path):
+    """A decoded frame's inputFiles() are the stripe files: their footers
+    count stripe-column rows, not documents, so a kernel over the frame
+    must keep its partitioning instead of sizing from them (which
+    collapsed MinHash onto one task)."""
+    out = str(tmp_path / "enc")
+    pipeline.encode_job(spark, df, out, stripe_rows=300)
+    assert 1 < _stripe_files(out) < spark.sparkContext.defaultParallelism
+    from orc_format_spark.ops import dedup
+
+    def docs(dec):
+        return dec.select(F.xxhash64("conv_id", "turn_idx").alias("doc_id"),
+                          "text")
+
+    shuffled = docs(pipeline.decode_job(spark, out))
+    assert pipeline._estimate_rows(shuffled) is None
+    assert dedup.minhash_signatures(shuffled).rdd.getNumPartitions() >= \
+        spark.sparkContext.defaultParallelism
+    clustered = docs(pipeline.decode_job_clustered(spark, out))
+    assert dedup.minhash_signatures(clustered).rdd.getNumPartitions() == \
+        clustered.rdd.getNumPartitions()
+
+
 def test_resume_param_mismatch_raises(spark, df, tmp_path):
     out = str(tmp_path / "enc_params")
     pipeline.encode_job(spark, df, out, stripe_rows=300, n_buckets=6)
