@@ -136,9 +136,12 @@ def _work_partitions(spark: SparkSession, n_groups: int) -> int:
     boundary (serialize + fetch + worker dispatch), so at fixed data volume
     4x the tasks is 4x that fixed cost for no extra parallelism — measured
     on the bench encode (672k turns, 82 stripes, 32 cores): cores*4 ≈
-    4.6-7.3 s, cores*1 ≈ 3.1-3.7 s. Balance is preserved by the
-    n_groups/STRIPES_PER_PARTITION floor: big inputs get as many tasks as
-    their stripe count needs, small inputs get exactly the cluster width."""
+    4.6-7.3 s, cores*1 ≈ 3.1-3.7 s. That measurement predates the zip
+    directory cache (orc_format_spark._cache_zip_directories), which cut
+    the per-task cost by more than half (see _tasks). Balance is preserved
+    by the n_groups/STRIPES_PER_PARTITION floor: big inputs get as many
+    tasks as their stripe count needs, small inputs get exactly the cluster
+    width."""
     cores = spark.sparkContext.defaultParallelism
     return max(cores, -(-n_groups // STRIPES_PER_PARTITION))
 
@@ -147,7 +150,11 @@ def _tasks(spark: SparkSession, n: int) -> int:
     """Task count of a Python stage over ``n`` units of work (files, ORC
     stripes, row blocks): one task per unit, at most one wave per core —
     every task pays the JVM↔Python Arrow boundary, so tasks beyond the
-    core count or without work only add that fixed cost."""
+    core count or without work only add that fixed cost. On a 4-core host
+    a no-op ``mapInArrow`` task adds ~70 ms of latency over a JVM-only one;
+    before the zip directory cache (orc_format_spark._cache_zip_directories)
+    it added ~180 ms, most of it re-reading pyspark.zip and the spark-core
+    jar at every task start."""
     return max(1, min(spark.sparkContext.defaultParallelism, n))
 
 
@@ -588,8 +595,9 @@ def _estimate_rows(df: DataFrame) -> int | None:
 
 
 # rows a kernel task should carry at least when run_kernel spreads a small
-# scan: each task pays a fixed JVM<->Python Arrow boundary (~10-20 ms), so
-# below a few hundred rows the boundary dominates the numpy kernel
+# scan: each task pays a fixed JVM<->Python Arrow boundary (~70 ms, see
+# _tasks), so below a few hundred rows the boundary dominates the numpy
+# kernel
 KERNEL_ROWS_PER_TASK = 512
 
 
@@ -860,7 +868,7 @@ def decode_dataframe(stripes: DataFrame, columns: list[str] | None = None,
     byte-light but expand ~10x on decode, so a parallel task count is
     pinned. cores*1, not cores*4: same boundary-cost argument as
     _work_partitions (the decode kernel is ~15x cheaper than encode, so the
-    Arrow boundary dominates even harder here).
+    Arrow boundary, see _tasks, dominates even harder here).
     """
     if schema is None:
         schema, columns = infer_schema(stripes, columns)
@@ -1094,16 +1102,39 @@ def _lineage_from_manifest(manifest: DataFrame, run_id: str,
     )
 
 
-def completed_stripes(spark: SparkSession, out_dir: str) -> DataFrame | None:
-    """Stripe ids already committed per the lineage table (None if fresh)."""
+def _read_lineage(spark: SparkSession, out_dir: str) -> DataFrame | None:
+    """The lineage table, or None when ``out_dir`` has none: no committed
+    file under ``lineage/`` (listed through _table_fs, skipping ``_``/``.``
+    entries as Spark does, so a crash inside ``_temporary`` is still
+    fresh) or a lineage Spark cannot read. The listing spares a fresh
+    table the failed ``spark.read`` and its py4j exception conversion
+    (~65 ms of driver time per call)."""
+    from pyarrow import fs as pafs
+    filesystem, base = _table_fs(out_dir)
+    root = f"{base}/lineage/"
+    sel = pafs.FileSelector(root, allow_not_found=True, recursive=True)
+    if not any(info.type == pafs.FileType.File
+               and not any(part[:1] in ("_", ".")
+                           for part in info.path[len(root):].split("/"))
+               for info in filesystem.get_file_info(sel)):
+        return None
     try:
-        lineage = spark.read.parquet(f"{out_dir}/lineage")
+        return spark.read.parquet(f"{out_dir}/lineage")
     except Exception:
         return None
+
+
+def _ok_stripe_ids(lineage: DataFrame) -> DataFrame:
     return lineage.filter(F.col("status") == "ok").select("stripe_id").distinct()
 
 
-def _check_resume_params(spark: SparkSession, out_dir: str,
+def completed_stripes(spark: SparkSession, out_dir: str) -> DataFrame | None:
+    """Stripe ids already committed per the lineage table (None if fresh)."""
+    lineage = _read_lineage(spark, out_dir)
+    return None if lineage is None else _ok_stripe_ids(lineage)
+
+
+def _check_resume_params(lineage: DataFrame, out_dir: str,
                          params: dict) -> None:
     """Fail fast when resuming into an out_dir that was written with
     different partitioning parameters: stripe ids are a pure function of
@@ -1114,7 +1145,6 @@ def _check_resume_params(spark: SparkSession, out_dir: str,
     bytes' invariant and produce a mixed-layout table, so they're guarded
     too (older lineage without these columns skips their check)."""
     try:
-        lineage = spark.read.parquet(f"{out_dir}/lineage")
         row = lineage.select(*[c for c in (
             "p_n_buckets", "p_stripe_rows", "p_key_col", "p_index_rows",
             "p_bloom_cols", "p_sort_keys") if c in lineage.columns]).first()
@@ -1225,17 +1255,18 @@ def encode_job(spark: SparkSession, df: DataFrame, out_dir: str,
               "key_col": key_col, "order_col": order_col,
               "index_rows": index_rows, "bloom_cols": sorted(bloom_cols),
               "sort_keys": sort_keys}
-    _check_resume_params(spark, out_dir, params)
+    lineage = _read_lineage(spark, out_dir)
+    if lineage is not None:
+        _check_resume_params(lineage, out_dir, params)
 
     stripes = encode_dataframe(df, key_col, order_col, sort_keys,
                                stripe_rows, n_buckets, index_rows=index_rows,
                                bloom_cols=bloom_cols)
 
-    done = completed_stripes(spark, out_dir)
-    resumed = False
-    if done is not None:
-        stripes = stripes.join(F.broadcast(done), "stripe_id", "left_anti")
-        resumed = True
+    resumed = lineage is not None
+    if resumed:
+        stripes = stripes.join(F.broadcast(_ok_stripe_ids(lineage)),
+                               "stripe_id", "left_anti")
 
     commit(spark, stripes, out_dir, key_col, order_col, run_id, params=params)
 

@@ -108,3 +108,37 @@ def test_resume_nested_table_idempotent(spark, df, tmp_path):
     keyed_got = {(r["conv_id"], r["turn_idx"]): r.asDict(recursive=True)
                  for r in dec.select(rich.columns).collect()}
     assert keyed_got == keyed_exp
+
+
+def test_fresh_encode_job_never_reads_lineage(spark, df, tmp_path,
+                                              monkeypatch):
+    """A fresh table is recognised by listing ``lineage/`` (hidden
+    ``_``/``.`` entries, such as a crashed append's ``_temporary``, do not
+    count), so encode_job calls no Spark read on it; a resume reads it
+    once."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    out = tmp_path / "enc_fresh"
+    debris = out / "lineage" / "_temporary" / "0" / "_temporary" / "attempt_0"
+    debris.mkdir(parents=True)
+    (debris / "part-00000.parquet").write_bytes(b"torn write")
+    (out / "lineage" / ".part-00000.parquet.crc").write_bytes(b"crc")
+    reads = []
+    parquet = DataFrameReader.parquet
+
+    def counting(self, *paths, **options):
+        reads.extend(p for p in paths if str(p).endswith("/lineage"))
+        return parquet(self, *paths, **options)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", counting)
+    stats = pipeline.encode_job(spark, df, str(out), stripe_rows=200,
+                                n_buckets=8)
+    assert stats["resumed"] is False
+    assert reads == []
+
+    again = pipeline.encode_job(spark, df, str(out), stripe_rows=200,
+                                n_buckets=8)
+    assert again["resumed"] is True
+    assert reads == [f"{out}/lineage"]
+    assert (spark.read.parquet(f"{out}/lineage").count()
+            == stats["n_stripes"])
