@@ -14,7 +14,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..pipeline import _estimate_rows, _vectors, run_kernel
+from ..pipeline import _estimate_rows, _table_fs, _vectors, run_kernel
 
 
 def _cosine_expr(vec_col: str, query: list[float]):
@@ -108,7 +108,7 @@ def _write_partitioned(df: DataFrame, path: str,
     cannot resolve."""
     spark = df.sparkSession
     try:
-        filesystem, base = _resolve_fs(path)
+        filesystem, base = _table_fs(path)
     except ValueError:
         df.repartition(F.col(part_col)).write.mode("overwrite") \
             .partitionBy(part_col).parquet(path)
@@ -168,7 +168,7 @@ def _index_vec_dim(path: str, vec_col: str) -> int | None:
     import pyarrow as pa
     import pyarrow.dataset as pads
     try:
-        filesystem, base = _resolve_fs(path)
+        filesystem, base = _table_fs(path)
     except ValueError:
         return None
     try:
@@ -219,29 +219,6 @@ def build_ann_index(emb: DataFrame, path: str, n_planes: int = 8,
     return load_ann_index(spark, path)[0]
 
 
-def _resolve_fs(path: str):
-    """(filesystem, fs_path) for a URI or plain path: s3://, hdfs:// etc.
-    resolve through pyarrow.fs so a remote index never mints a bogus LOCAL
-    directory named after the URI. ONLY scheme-less strings are local
-    paths — an unresolvable scheme (s3a://, abfss://) raises rather than
-    silently writing `_ann_meta` to the driver's local disk where no other
-    node can read it."""
-    import os
-    import re
-
-    import pyarrow as pa
-    from pyarrow import fs as pafs
-    try:
-        return pafs.FileSystem.from_uri(path)
-    except pa.ArrowInvalid:
-        if re.match(r"^[a-zA-Z][a-zA-Z0-9+.-]*://", path):
-            raise ValueError(
-                f"index path {path!r} has a URI scheme pyarrow cannot "
-                "resolve — use a pyarrow-supported scheme (e.g. s3a:// "
-                "-> s3://) so the meta table lands next to the index")
-        return pafs.LocalFileSystem(), os.path.abspath(path)
-
-
 def _write_meta(spark, path: str, meta: dict) -> None:
     """One-row meta side table. pyarrow writes it driver-side (a 1-row
     Spark job costs ~2 s of commit-protocol overhead); the Spark writer is
@@ -249,7 +226,7 @@ def _write_meta(spark, path: str, meta: dict) -> None:
     import pyarrow as pa
     try:
         import pyarrow.parquet as pq
-        filesystem, base = _resolve_fs(path)
+        filesystem, base = _table_fs(path)
         filesystem.create_dir(base + "/_ann_meta", recursive=True)
         pq.write_table(pa.table({k: [v] for k, v in meta.items()}),
                        base + "/_ann_meta/meta.parquet",
@@ -266,7 +243,7 @@ def load_ann_index(spark, path: str) -> tuple[DataFrame, dict]:
     """(index DataFrame, meta dict) for an index written by build_ann_index."""
     try:
         import pyarrow.parquet as pq
-        filesystem, base = _resolve_fs(path)
+        filesystem, base = _table_fs(path)
         meta = {k: v[0] for k, v in
                 pq.read_table(base + "/_ann_meta", filesystem=filesystem)
                 .to_pydict().items()}

@@ -10,12 +10,16 @@ Execution model (SURVEY.md §3.4):
       -> repartition by (bucket, salt) + sortWithinPartitions [one shuffle]
       -> mapInArrow(encode_stripe_arrow per (bucket, salt) run)
       -> stripes rows (one per stripe-column)  [+ manifest agg, lineage rows]
-    DECODE: stripes table
-      -> optional column pruning (filter col_name — predicate pushdown to
-         the parquet scan) and stripe pruning (manifest min/max)
-      -> repartition(stripe_id) + sortWithinPartitions        [one shuffle]
-      -> mapInArrow(decode_stripe_arrow per stripe)
+    DECODE (decode_job, a persisted table): manifest
+      -> prune stripes (active set, min/max predicate, key bloom)
+      -> collect (stripe_id, path) on the driver; one file per stripe
+      -> local (file, keep-list) rows, one task per file         [no shuffle]
+      -> mapInArrow(pyarrow read with col_name/stripe_id pushed to the row
+         groups; decode_stripe_arrow per stripe)
       -> orderBy(sort keys) at comparison time only
+    DECODE (decode_dataframe, stripe rows that are not a table)
+      -> filter col_name, repartition(stripe_id) + sort          [one shuffle]
+      -> mapInArrow(decode_stripe_arrow per stripe)
     ROUNDTRIP: ENCODE then the DECODE kernel in the same stage — the encode
       output is already stripe-clustered, so no second shuffle
 
@@ -27,6 +31,7 @@ and stripe-granular parallelism falls out of row partitioning.
 
 from __future__ import annotations
 
+import contextlib
 import uuid
 
 import numpy as np
@@ -816,28 +821,40 @@ def infer_schema(stripes: DataFrame, columns: list[str] | None = None) -> tuple[
         {r["col_name"]: r["col_kind"] for r in pairs}, columns)
 
 
+_NO_PATHS = ("the manifest of {} lacks stripe file paths: the table was "
+             "written before manifests recorded them — re-encode it")
+
+
+def _open_manifest(spark: SparkSession, out_dir: str
+                   ) -> tuple[DataFrame, dict[str, str]]:
+    """(manifest, column kinds) of a persisted table from one pyarrow
+    listing on the driver: the manifest is every appended row (crash
+    replays included) read with pyarrow's schema, so Spark runs no
+    schema-inference job; the kinds come from ONE manifest row's ``kinds``
+    string (vs infer_schema's distinct over every stripe-column row).
+    Raises ValueError for a manifest without the ``path`` column."""
+    import pyarrow.dataset as pads
+    from pyspark.sql.pandas.types import from_arrow_schema
+    filesystem, base = _table_fs(out_dir)
+    dset = pads.dataset(f"{base}/manifest", filesystem=filesystem,
+                        format="parquet")
+    if "path" not in dset.schema.names:
+        raise ValueError(_NO_PATHS.format(out_dir))
+    head = dset.head(1, columns=["kinds"]).column(0).to_pylist()
+    # FIRST colon: recursive kinds ("list:array_int64") contain colons
+    # themselves; column names never do
+    kinds = dict(p.split(":", 1) for p in head[0].split(",")) if head else {}
+    manifest = (spark.read.schema(from_arrow_schema(dset.schema))
+                .parquet(f"{out_dir}/manifest"))
+    return manifest, kinds
+
+
 def infer_schema_from_manifest(spark: SparkSession, out_dir: str,
                                columns: list[str] | None = None
                                ) -> tuple[T.StructType, list[str]]:
-    """Schema from the manifest's per-stripe ``kinds`` string — a single-row
-    read, vs infer_schema's distinct over every stripe-column row (at 15M
-    stripes that distinct scans 150M metadata rows before any data decode).
-    Falls back to the stripes distinct for pre-``kinds`` manifests."""
-    try:
-        m = spark.read.parquet(f"{out_dir}/manifest")
-        if "kinds" in m.columns:
-            row = m.select("kinds").first()
-            if row is not None and row["kinds"]:
-                by_name = {}
-                for pair in row["kinds"].split(","):
-                    # FIRST colon: recursive kinds ("list:array_int64")
-                    # contain colons themselves; column names never do
-                    name, kind = pair.split(":", 1)
-                    by_name[name] = kind
-                return _schema_from_kinds(by_name, columns)
-    except Exception:
-        pass
-    return infer_schema(read_stripes(spark, out_dir), columns)
+    """Decoded schema of a persisted table, from its manifest's kinds (see
+    _open_manifest)."""
+    return _schema_from_kinds(_open_manifest(spark, out_dir)[1], columns)
 
 
 def _arrow_schema(schema: T.StructType):
@@ -862,8 +879,10 @@ def decode_dataframe(stripes: DataFrame, columns: list[str] | None = None,
     overlaps [lo, hi] (sub-stripe skipping). The caller applies the exact
     residual predicate; strides are a superset of matching rows.
 
-    The stripe rows are always re-clustered on ``stripe_id`` (one shuffle);
-    :func:`roundtrip` decodes an in-memory encode without it. Same
+    For stripe frames that are not a persisted table (decode_job reads
+    those by file, with no shuffle). The stripe rows are always
+    re-clustered on ``stripe_id`` (one shuffle); :func:`roundtrip` decodes
+    an in-memory encode without it. Same
     AQE-coalescing consideration as the encode side: stripe rows are
     byte-light but expand ~10x on decode, so a parallel task count is
     pinned. cores*1, not cores*4: same boundary-cost argument as
@@ -958,85 +977,64 @@ def _decode_clustered(stripes: DataFrame, schema: T.StructType,
     return out
 
 
-def decode_job_clustered(spark: SparkSession, out_dir: str,
-                         columns: list[str] | None = None,
-                         as_of=None) -> DataFrame:
-    """SHUFFLE-FREE decode of a persisted stripes table.
-
-    The encode tasks emit whole stripes (every column of a stripe leaves
-    one task in one batch), so each parquet file under ``stripes/`` holds
-    only complete stripes. This path reads ONE FILE PER TASK with pyarrow
-    (col_name pushdown applied at the parquet row-group level) and decodes
-    partition-locally — zero exchanges, vs decode_job's one shuffle on
-    stripe_id. The completeness invariant is asserted per stripe and a
-    clear error names this function if the table was re-written by
-    something other than commit().
-
-    Crash-window duplicates (the same COMPLETE stripe present in more than
-    one file — an orphan run dir re-encoded under a new run_id, or a
-    replayed foreachBatch append adding a second part file) are resolved by
-    a driver-free ownership pass: each stripe is decoded only from the
-    lexicographically-first file containing it. The ownership scan reads
-    ONLY the stripe_id column (parquet column pruning), and each task's
-    keep-list rides the shuffle as data — nothing is collected.
-
-    At 100 TB this removes the single largest data movement in the read
-    path: the encoded bytes never cross the network at all.
-    """
-    schema, columns = infer_schema_from_manifest(spark, out_dir, columns)
-    # ownership: stripe -> min(file). One cheap job over one skinny column.
-    scan = (spark.read.schema(STRIPE_SCHEMA)
-            .option("basePath", f"{out_dir}/stripes")
-            .parquet(f"{out_dir}/stripes"))
-    ids = (scan.select("stripe_id", F.input_file_name().alias("path"))
-           .distinct())
-    owners = ids.groupBy("stripe_id").agg(F.min("path").alias("path"))
-    if as_of is not None or has_compactions(out_dir):
-        act = active_stripe_ids(spark, out_dir, as_of)
-        if act is not None:
-            owners = owners.join(act, "stripe_id", "left_semi")
-    file_keep = owners.groupBy("path").agg(
-        F.collect_list("stripe_id").alias("keep"))
-    # one stripe file per decode task, at most one wave per core (the scan
-    # already listed the files). AQE coalesces the skinny (path, keep) rows
-    # into one partition, and round-robin out of one partition fills every
-    # task.
-    file_keep = file_keep.repartition(_tasks(spark, len(scan.inputFiles())))
-
+def _decode_files(spark: SparkSession, out_dir: str, manifest: DataFrame,
+                  schema: T.StructType, columns: list[str],
+                  stride_range: tuple | None = None) -> DataFrame:
+    """Decode the stripes ``manifest`` lists, planned on the driver: its
+    (stripe_id, path) rows are collected once and each stripe is read from
+    ONE file, min(path) — a crash replay can commit a stripe twice. One
+    ``mapInArrow`` task per file, at most one wave per core (``_tasks``),
+    over a local (file, keep-list) relation: no exchange, the stripe bytes
+    never cross the network. Each task reads its file with pyarrow through
+    _table_fs, ``col_name`` and ``stripe_id`` pushed down to the parquet
+    row groups. A file under ``stripes/`` the manifest does not name (a
+    crash orphan) is never opened."""
+    owner: dict[str, str] = {}
+    for sid, path in manifest.select("stripe_id", "path").collect():
+        if path is None:  # a row appended before manifests recorded paths
+            raise ValueError(_NO_PATHS.format(out_dir))
+        owner[sid] = min(path, owner.get(sid, path))
+    by_file: dict[str, list[str]] = {}
+    for sid, path in sorted(owner.items()):
+        by_file.setdefault(path, []).append(sid)
+    plan = pa.table({"path": list(by_file), "keep": list(by_file.values())},
+                    schema=pa.schema([("path", pa.string()),
+                                      ("keep", pa.list_(pa.string()))]))
+    # a local relation (plans under spark.sql.execution.arrow.
+    # localRelationThreshold, 48 MB by default) scans as min(rows, cores)
+    # partitions: the _tasks(spark, n_files) count, with no exchange and
+    # no Python source stage (a parallelize()d plan measured 0.35 s slower
+    # per read on a 4-core host)
+    files = spark.createDataFrame(plan)
+    filesystem, base = _table_fs(out_dir)
+    scan_cols = list(columns)
+    if stride_range is not None and stride_range[0] not in scan_cols:
+        scan_cols.append(stride_range[0])  # stats live on the predicate col
     target_schema = _arrow_schema(schema)
-    want = list(columns)
 
     def decode_files(batches):
         import pyarrow.parquet as pq
         for b in batches:
-            for p, keep in zip(b.column("path").to_pylist(),
-                               b.column("keep").to_pylist()):
-                local = p[7:] if p.startswith("file://") else p
-                local = local[5:] if local.startswith("file:") else local
-                keep_set = set(keep)
-                tbl = pq.read_table(local, filters=[
-                    ("col_name", "in", want),
-                    ("stripe_id", "in", keep)])
-                rows = tbl.to_pylist()
-                by_stripe: dict[str, list] = {}
-                for r in rows:
-                    by_stripe.setdefault(r["stripe_id"], []).append(r)
-                missing = keep_set - set(by_stripe)
-                for sid, srows in by_stripe.items():
-                    have = {r["col_name"] for r in srows}
-                    if not set(want) <= have:
+            for path, keep in zip(b.column("path").to_pylist(),
+                                  b.column("keep").to_pylist()):
+                tbl = pq.read_table(f"{base}/{path}", filesystem=filesystem,
+                                    filters=[("col_name", "in", scan_cols),
+                                             ("stripe_id", "in", keep)])
+                by_stripe: dict[str, list] = {sid: [] for sid in keep}
+                for r in tbl.to_pylist():
+                    by_stripe[r["stripe_id"]].append(r)
+                for sid, rows in by_stripe.items():
+                    lost = set(scan_cols) - {r["col_name"] for r in rows}
+                    if lost:
                         raise ValueError(
-                            f"stripe {sid} split across files (missing "
-                            f"{set(want) - have}); the stripes table was not "
-                            "written by commit() — use decode_job instead")
-                    yield stripe_mod.decode_stripe_arrow(srows, want,
-                                                         target_schema)
-                if missing:
-                    raise ValueError(
-                        f"owned stripes {sorted(missing)[:3]}... vanished "
-                        f"from {p} between planning and decode")
+                            f"stripe {sid} lacks columns {sorted(lost)} in "
+                            f"{path}, the file the manifest of {out_dir} "
+                            "names for it")
+                    yield stripe_mod.decode_stripe_arrow(
+                        rows, columns, target_schema,
+                        stride_range=stride_range)
 
-    out = file_keep.mapInArrow(decode_files, schema)
+    out = files.mapInArrow(decode_files, schema)
     if any(_STRUCT_SEP in c for c in columns):
         # nested leaves persisted flat: re-nest from the leaf names (same
         # contract as decode_dataframe's schema-free path)
@@ -1048,13 +1046,16 @@ def build_manifest(stripes: DataFrame, key_col: str | None = None,
                    order_col: str | None = None) -> DataFrame:
     """Footer-style per-stripe index (the FileMetadata/StripeInformation +
     ColumnStatistics analog, src/proto.rs:206-217,66-87): one small row per
-    stripe with sizes and per-key min/max for stripe pruning."""
+    stripe with sizes, per-key min/max for stripe pruning, and the file
+    holding the stripe (``path``: the StripeInformation offset analog,
+    which decode_job plans from)."""
     aggs = [
         F.max("bucket").alias("bucket"),
         F.max("n_rows").alias("n_rows"),
         F.sum("raw_bytes").alias("raw_bytes"),
         F.sum("enc_bytes").alias("enc_bytes"),
         F.count("*").alias("n_cols"),
+        F.min("path").alias("path"),
         F.concat_ws(",", F.sort_array(F.collect_list(
             F.concat_ws(":", "col_name", "codec")))).alias("codecs"),
         F.concat_ws(",", F.sort_array(F.collect_list(
@@ -1182,6 +1183,37 @@ def read_manifest(spark: SparkSession, out_dir: str) -> DataFrame:
             .dropDuplicates(["stripe_id"]))
 
 
+@contextlib.contextmanager
+def _write_run(spark: SparkSession, stripes: DataFrame, out_dir: str,
+               run_id: str, key_col: str | None, order_col: str | None):
+    """Append ``stripes`` under ``stripes/run=<run_id>``, derive the manifest
+    from ONLY that run's written bytes, append it, and yield it persisted
+    for the caller's lineage rows. Each manifest row's ``path`` names the
+    file holding the stripe, relative to the table root so a copied table
+    still reads (taken here, before the dropDuplicates, by
+    ``input_file_name``). The one place commit() and compact_job publish a
+    run's bytes from."""
+    run_dir = f"{out_dir}/stripes/run={run_id}"
+    stripes.write.mode("append").parquet(run_dir)
+    path = F.concat(F.lit(f"stripes/run={run_id}/"),
+                    F.substring_index(F.input_file_name(), "/", -1))
+    written = (spark.read.schema(STRIPE_SCHEMA).parquet(run_dir)
+               .withColumn("path", path)
+               .dropDuplicates(["stripe_id", "col_name"]))
+    # the manifest feeds the manifest write and the caller's lineage rows;
+    # persist so the run-dir scan + groupBy runs once per commit. Explicit
+    # unpersist: the streaming path commits per micro-batch, and leaked
+    # cache entries would accumulate for the stream's lifetime.
+    from pyspark import StorageLevel
+    manifest = build_manifest(written, key_col, order_col).persist(
+        StorageLevel.MEMORY_AND_DISK)
+    try:
+        manifest.write.mode("append").parquet(f"{out_dir}/manifest")
+        yield manifest
+    finally:
+        manifest.unpersist()
+
+
 def commit(spark: SparkSession, stripes: DataFrame, out_dir: str,
            key_col: str, order_col: str | None, run_id: str,
            params: dict | None = None) -> None:
@@ -1195,29 +1227,17 @@ def commit(spark: SparkSession, stripes: DataFrame, out_dir: str,
     byte-identical rows twice) are collapsed by the stripe-level
     dropDuplicates before stats are aggregated, so manifest raw/enc byte
     counts and checksums are invariant to replayed appends."""
-    run_dir = f"{out_dir}/stripes/run={run_id}"
-    stripes.write.mode("append").parquet(run_dir)
-    written = (spark.read.schema(STRIPE_SCHEMA).parquet(run_dir)
-               .dropDuplicates(["stripe_id", "col_name"]))
-    manifest = build_manifest(written, key_col, order_col)
-    # the manifest feeds two write actions (manifest + lineage); persist so
-    # the run-dir scan + groupBy runs once per commit, not once per write.
-    # Explicit unpersist: the streaming path commits per micro-batch, and
-    # leaked cache entries would accumulate for the stream's lifetime.
-    from pyspark import StorageLevel
-    manifest = manifest.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        manifest.write.mode("append").parquet(f"{out_dir}/manifest")
+    with _write_run(spark, stripes, out_dir, run_id, key_col,
+                    order_col) as manifest:
         (_lineage_from_manifest(manifest, run_id, params)
          .write.mode("append").parquet(f"{out_dir}/lineage"))
-    finally:
-        manifest.unpersist()
 
 
 def read_stripes(spark: SparkSession, out_dir: str) -> DataFrame:
-    """The full stripes table (all runs). The run= partition column is
-    dropped; orphan rows from a crash between the stripes append and the
-    manifest append are harmless (decode dedupes per stripe-column)."""
+    """Every stripe-column row under ``stripes/`` (all runs, crash orphans
+    and tombstoned stripes included), the run= partition column dropped.
+    decode_job never reads it: it opens only the files the manifest
+    names."""
     return (spark.read.schema(STRIPE_SCHEMA)
             .option("basePath", f"{out_dir}/stripes")
             .parquet(f"{out_dir}/stripes")
@@ -1290,10 +1310,16 @@ def decode_job(spark: SparkSession, out_dir: str,
                stripe_predicate=None,
                stride_range: tuple | None = None,
                key_equals=None, as_of=None) -> DataFrame:
-    """Read + decode a persisted stripes table; ``stripe_predicate`` is a
-    Column over the manifest (e.g. key_min/key_max bounds) used to prune
-    whole stripes before any decode work — the Spark analog of the
-    reference's (unused) stats-skipping model (src/proto.rs:66-111).
+    """Read + decode a persisted stripes table, planned from its manifest
+    (the reference's footer-first read, src/read/mod.rs:46-159): the
+    manifest is pruned, each surviving stripe's file comes from its
+    ``path``, and one task per file decodes (see _decode_files). Files the
+    manifest does not name — crash orphans — stay invisible.
+
+    ``stripe_predicate`` is a Column over the manifest (e.g. key_min/key_max
+    bounds) pruning whole stripes before any decode work — the Spark analog
+    of the reference's (unused) stats-skipping model (src/proto.rs:66-111);
+    ``key_equals`` prunes by the per-stripe key bloom filter.
     ``stride_range`` additionally skips row groups INSIDE surviving stripes
     (see decode_dataframe). Stats are strings: numeric predicates must use
     int-like key columns (stored numerically) or cast explicitly.
@@ -1301,50 +1327,39 @@ def decode_job(spark: SparkSession, out_dir: str,
     ``as_of`` (a run_id, or anything castable to timestamp) time-travels to
     that snapshot. Compacted tables always resolve stripe visibility
     through the lineage active set (status ok minus tombstoned); never-
-    compacted tables skip that join entirely — the hot path is unchanged."""
-    stripes = read_stripes(spark, out_dir)
+    compacted tables skip that join entirely — the hot path is unchanged.
+    A table whose manifest predates the ``path`` column raises ValueError."""
+    manifest, kinds = _open_manifest(spark, out_dir)
     if as_of is not None or has_compactions(out_dir):
         act = active_stripe_ids(spark, out_dir, as_of)
         if act is not None:
-            stripes = stripes.join(act, "stripe_id", "left_semi")
-    if stripe_predicate is not None or key_equals is not None:
-        manifest = read_manifest(spark, out_dir)
-        if stripe_predicate is not None:
-            manifest = manifest.filter(stripe_predicate)
-        if key_equals is not None:
-            # bloom probe per manifest row — distributed (the manifest can
-            # be millions of rows at 100 TB; only the SURVIVORS come back)
-            from pyspark.sql.functions import arrow_udf
-            from . import bloom as bloom_mod
-            target = key_equals
+            manifest = manifest.join(act, "stripe_id", "left_semi")
+    if stripe_predicate is not None:
+        manifest = manifest.filter(stripe_predicate)
+    if key_equals is not None:
+        # bloom probe per manifest row — distributed (the manifest can be
+        # millions of rows at 100 TB; only the SURVIVORS come back)
+        from pyspark.sql.functions import arrow_udf
+        from . import bloom as bloom_mod
+        target = key_equals
 
-            @arrow_udf("boolean")
-            def probe(blooms: pa.Array) -> pa.Array:
-                # one vectorized batch probe: target hashed once, k probe
-                # BYTES gathered per blob — no per-row header parse or
-                # bitset unpack (15M manifest rows = 15M probes at 100 TB)
-                return pa.array(bloom_mod.might_contain_many(
-                    [b if b is not None else b"" for b in blooms.to_pylist()],
-                    target))
+        @arrow_udf("boolean")
+        def probe(blooms: pa.Array) -> pa.Array:
+            # one vectorized batch probe: target hashed once, k probe
+            # BYTES gathered per blob — no per-row header parse or
+            # bitset unpack (15M manifest rows = 15M probes at 100 TB)
+            return pa.array(bloom_mod.might_contain_many(
+                [b if b is not None else b"" for b in blooms.to_pylist()],
+                target))
 
-            manifest = manifest.filter(probe(F.col("key_bloom")))
-        # Iceberg-style planning: surviving stripe ids become a LITERAL
-        # IN-filter so Catalyst pushes it into the parquet scan (row-group
-        # stats skip the pruned stripes' data bytes entirely). A semi-join
-        # would read every stripe's bytes first and filter after. Fall back
-        # to the semi-join only when the survivor list itself is huge.
-        ids = [r["stripe_id"] for r in
-               manifest.select("stripe_id").limit(10_001).collect()]
-        if len(ids) <= 10_000:
-            stripes = stripes.filter(F.col("stripe_id").isin(ids))
-        else:
-            keep = manifest.select("stripe_id")
-            stripes = stripes.join(F.broadcast(keep), "stripe_id", "left_semi")
-    # schema from ONE manifest row — the stripes scan below is then the
-    # FIRST scan of the stripes table in the plan (no metadata distinct)
-    schema, columns = infer_schema_from_manifest(spark, out_dir, columns)
-    return decode_dataframe(stripes, columns=columns, schema=schema,
-                            stride_range=stride_range)
+        manifest = manifest.filter(probe(F.col("key_bloom")))
+    schema, columns = _schema_from_kinds(kinds, columns)
+    return _decode_files(spark, out_dir, manifest, schema, columns,
+                         stride_range)
+
+
+# the name existing callers (perfbench/workloads.py) still use
+decode_job_clustered = decode_job
 
 
 # ---------------------------------------------------------------------------
@@ -1365,12 +1380,14 @@ _seen_compactions: set[str] = set()   # positive cache only — a table once
 
 
 def _table_fs(out_dir: str):
-    """(filesystem, base_path) via pyarrow.fs so markers work on object
-    stores too. ONLY scheme-less strings fall back to the local
-    filesystem: a URI pyarrow can't resolve (s3a://, abfss://, dbfs://)
-    raises instead — silently writing the compaction/expiry markers to a
+    """(filesystem, base_path) via pyarrow.fs for a table, index or its
+    markers, so driver- and task-side pyarrow I/O works on object stores
+    too. ONLY scheme-less strings fall back to the local filesystem: a URI
+    pyarrow can't resolve (s3a://, abfss://, dbfs://) raises instead —
+    silently writing the compaction/expiry markers or an index's meta to a
     local directory named after the URI would make other drivers see the
-    table as never-compacted and decode tombstoned stripes (duplicates)."""
+    table as never-compacted and decode tombstoned stripes (duplicates),
+    or miss the index meta."""
     import os
     import re
 
@@ -1381,9 +1398,9 @@ def _table_fs(out_dir: str):
     except pa.ArrowInvalid:
         if re.match(r"^[a-zA-Z][a-zA-Z0-9+.-]*://", out_dir):
             raise ValueError(
-                f"table path {out_dir!r} has a URI scheme pyarrow cannot "
-                "resolve — markers cannot be written safely (map the "
-                "scheme to a pyarrow-supported one, e.g. s3a:// -> s3://)")
+                f"path {out_dir!r} has a URI scheme pyarrow cannot resolve "
+                "(map the scheme to a pyarrow-supported one, e.g. s3a:// -> "
+                "s3://)")
         return pafs.LocalFileSystem(), os.path.abspath(out_dir)
 
 
@@ -1539,10 +1556,12 @@ def compact_job(spark: SparkSession, out_dir: str) -> dict:
     lineage = spark.read.parquet(f"{out_dir}/lineage")
     params = _layout_params(lineage)
     act = active_stripe_ids(spark, out_dir)
-    # the active manifest feeds the slot scan AND the tombstone rows;
-    # persist so the lineage-resolution joins behind it run once
+    manifest, kinds = _open_manifest(spark, out_dir)
+    # the active manifest feeds the slot scan, the victims' decode plan and
+    # the tombstone rows; persist so the lineage-resolution joins behind it
+    # run once
     from pyspark import StorageLevel
-    man = (read_manifest(spark, out_dir)
+    man = (manifest.dropDuplicates(["stripe_id"])
            .join(act, "stripe_id", "left_semi")
            .persist(StorageLevel.MEMORY_AND_DISK))
     slots = (man.select("stripe_id", "bucket",
@@ -1552,10 +1571,9 @@ def compact_job(spark: SparkSession, out_dir: str) -> dict:
              .agg(F.collect_list("stripe_id").alias("sids"))
              .where(F.size("sids") >= 2))
     victims = slots.select(F.explode("sids").alias("stripe_id"))
-    # victims feeds three consumers (this count, the source semi-join, the
+    # victims feeds three consumers (this count, the decode plan, the
     # tombstone rows) — persist the skinny id list so the manifest/lineage
     # scan behind it runs once
-    from pyspark import StorageLevel
     victims = victims.persist(StorageLevel.MEMORY_AND_DISK)
     n_victims = victims.count()
     if n_victims == 0:
@@ -1565,53 +1583,44 @@ def compact_job(spark: SparkSession, out_dir: str) -> dict:
     run_id = "c" + uuid.uuid4().hex[:11]
     _write_compaction_marker(out_dir, run_id)
 
-    schema, columns = infer_schema_from_manifest(spark, out_dir, None)
-    src = (read_stripes(spark, out_dir)
-           .join(victims, "stripe_id", "left_semi"))
-    df = decode_dataframe(src, columns=columns, schema=schema)
+    victim_man = man.join(victims, "stripe_id", "left_semi")
+    df = _decode_files(spark, out_dir, victim_man,
+                       *_schema_from_kinds(kinds, None))
     new_stripes = encode_dataframe(
         df, params["key_col"], params["order_col"],
         sort_keys=params.get("sort_keys"),
         stripe_rows=params["stripe_rows"], n_buckets=params["n_buckets"],
         index_rows=params["index_rows"], bloom_cols=params["bloom_cols"],
         stripe_prefix=f"{run_id}-")
-    run_dir = f"{out_dir}/stripes/run={run_id}"
-    new_stripes.write.mode("append").parquet(run_dir)
-    written = (spark.read.schema(STRIPE_SCHEMA).parquet(run_dir)
-               .dropDuplicates(["stripe_id", "col_name"]))
-    # three consumers (manifest write, the ok lineage rows, the final
-    # count) — persist so the merged run dir is scanned/aggregated once
-    new_manifest = build_manifest(written, params["key_col"],
-                                  params["order_col"]) \
-        .persist(StorageLevel.MEMORY_AND_DISK)
     try:
-        new_manifest.write.mode("append").parquet(f"{out_dir}/manifest")
-        ok_rows = _lineage_from_manifest(new_manifest, run_id, params)
-        dead_rows = (_lineage_from_manifest(
-            man.join(victims, "stripe_id", "left_semi"), run_id, params)
-            .withColumn("status", F.lit("compacted")))
-        # optimistic conflict detection (round-5 advice): a CONCURRENT
-        # compactor (another driver, or a manual run racing the stream's
-        # compact_every) may have selected the same victims and published
-        # first — its merged stripes already carry these rows, so
-        # publishing ours too would duplicate every compacted row in all
-        # subsequent decodes. Re-read lineage at the last moment and abort
-        # loudly; everything this run wrote stays invisible (never
-        # published), exactly like a crash orphan, and rerunning
-        # compact_job picks up whatever genuinely remains fragmented. The
-        # check-then-append window is not zero (object stores have no
-        # cross-writer CAS on parquet appends) but shrinks the race from
-        # the whole rewrite job to one driver round-trip; the documented
-        # deployment assumption stays one maintenance writer per table.
-        _assert_no_compaction_conflict(spark, out_dir, victims)
-        # ONE append job publishes + tombstones together (both sides share
-        # the query's current_timestamp, so an as_of cutoff can never split
-        # them)
-        ok_rows.unionByName(dead_rows).write.mode("append") \
-            .parquet(f"{out_dir}/lineage")
-        n_new = new_manifest.count()
+        with _write_run(spark, new_stripes, out_dir, run_id,
+                        params["key_col"],
+                        params["order_col"]) as new_manifest:
+            ok_rows = _lineage_from_manifest(new_manifest, run_id, params)
+            dead_rows = (_lineage_from_manifest(victim_man, run_id, params)
+                         .withColumn("status", F.lit("compacted")))
+            # optimistic conflict detection (round-5 advice): a CONCURRENT
+            # compactor (another driver, or a manual run racing the
+            # stream's compact_every) may have selected the same victims
+            # and published first — its merged stripes already carry these
+            # rows, so publishing ours too would duplicate every compacted
+            # row in all subsequent decodes. Re-read lineage at the last
+            # moment and abort loudly; everything this run wrote stays
+            # invisible (never published), exactly like a crash orphan,
+            # and rerunning compact_job picks up whatever genuinely
+            # remains fragmented. The check-then-append window is not zero
+            # (object stores have no cross-writer CAS on parquet appends)
+            # but shrinks the race from the whole rewrite job to one
+            # driver round-trip; the documented deployment assumption
+            # stays one maintenance writer per table.
+            _assert_no_compaction_conflict(spark, out_dir, victims)
+            # ONE append job publishes + tombstones together (both sides
+            # share the query's current_timestamp, so an as_of cutoff can
+            # never split them)
+            ok_rows.unionByName(dead_rows).write.mode("append") \
+                .parquet(f"{out_dir}/lineage")
+            n_new = new_manifest.count()
     finally:
-        new_manifest.unpersist()
         victims.unpersist()
         man.unpersist()
     return {"run_id": run_id, "compacted_stripes": int(n_victims),

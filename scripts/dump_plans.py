@@ -1,7 +1,7 @@
 """Dump the physical plans of the encode and (column-pruned) decode jobs to
 EXPLAIN.md — evidence that the plans are the ones we want: one pinned-width
-Exchange per direction, col_name filter pushed into the stripes parquet scan,
-broadcast semi-join for manifest pruning."""
+Exchange to encode, col_name filter pushed into the stripes parquet scan,
+no Exchange at all to decode a persisted table."""
 
 from __future__ import annotations
 
@@ -35,15 +35,17 @@ def main() -> None:
               "  exactly that partition — deterministic round-robin balance,\n"
               "  see pipeline._partition_probes), a partition-local Sort, then\n"
               "  the Arrow UDF — no other shuffles.\n"
-              "- decode FROM STORAGE: `PushedFilters` containing\n"
-              "  `In(col_name, ...)` at the parquet scan (projection pushdown\n"
-              "  into the stripes table), one Exchange on stripe_id,\n"
-              "  partition-local Sort, Arrow UDF. `pipeline.roundtrip` of an\n"
-              "  IN-MEMORY frame fuses instead: no second Exchange at all\n"
-              "  (the encode output is already stripe-clustered; the whole\n"
-              "  roundtrip is one stage).\n"
-              "- pruned decode: additional `BroadcastHashJoin ... LeftSemi` from\n"
-              "  the manifest predicate, broadcast (never shuffled).\n\n")
+              "- decode_dataframe over stripe rows: `PushedFilters`\n"
+              "  containing `In(col_name, ...)` at the parquet scan\n"
+              "  (projection pushdown into the stripes table), one Exchange\n"
+              "  on stripe_id, partition-local Sort, Arrow UDF.\n"
+              "  `pipeline.roundtrip` of an IN-MEMORY frame fuses instead: no\n"
+              "  second Exchange at all (the encode output is already\n"
+              "  stripe-clustered; the whole roundtrip is one stage).\n"
+              "- decode_job of a persisted table: the manifest is pruned and\n"
+              "  collected on the driver first, so the plan is only a\n"
+              "  `LocalTableScan` of (file, keep-list) rows under `MapInArrow`\n"
+              "  — no Exchange, plain or pruned.\n\n")
 
     import tempfile
     with tempfile.TemporaryDirectory() as d:
@@ -66,18 +68,23 @@ def main() -> None:
         loaded = spark.read.parquet(f"{d}/stripes")
         dec = pipeline.decode_dataframe(loaded, columns=["conv_id", "turn_idx", "role"])
         out.write("## decode_dataframe (column-pruned)\n\n```\n" + plan_of(dec) + "\n```\n\n")
+        plain = pipeline.decode_job(spark, d)
         pruned = pipeline.decode_job(
             spark, d, stripe_predicate=(F.col("key_min") <= "conv-0000000001"))
-        out.write("## decode_job with manifest stripe pruning\n\n```\n"
-                  + plan_of(pruned) + "\n```\n\n")
-
-        clustered = pipeline.decode_job_clustered(spark, d)
-        out.write("## decode_job_clustered (zero data shuffle)\n\n"
-                  "What to look for: the DECODE side is `MapInArrow` over the\n"
-                  "per-file keep-lists — the stripe BYTES never appear in any\n"
-                  "Exchange; the only shuffles belong to the skinny\n"
-                  "(stripe_id, path) ownership aggregation.\n\n```\n"
-                  + plan_of(clustered) + "\n```\n\n")
+        lookup = pipeline.decode_job(spark, d, key_equals="conv-0000000001")
+        out.write("## decode_job (plain, stripe_predicate, key_equals)\n\n"
+                  "What to look for: the same plan three times, a\n"
+                  "`LocalTableScan` of (path, keep) rows feeding `MapInArrow`\n"
+                  "with no Exchange. Stripe pruning (the manifest predicate,\n"
+                  "the key bloom probe) already ran on the driver's manifest\n"
+                  "collect, so it only shrinks the scanned rows; the stripe\n"
+                  "bytes are read by the decode tasks themselves, one file\n"
+                  "per task.\n\n"
+                  "### plain\n\n```\n" + plan_of(plain) + "\n```\n\n"
+                  "### stripe_predicate\n\n```\n" + plan_of(pruned)
+                  + "\n```\n\n"
+                  "### key_equals\n\n```\n" + plan_of(lookup)
+                  + "\n```\n\n")
 
         emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
         from orc_format_spark.ops import dedup

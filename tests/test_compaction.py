@@ -46,7 +46,7 @@ def test_compact_job_merges_and_roundtrips(spark, fragmented):
     after_active = pipeline.active_stripe_ids(spark, out).count()
     assert after_active < before_active
 
-    # both decode paths: exact same rows, one copy each
+    # decode_job and its alias: exact same rows, one copy each
     got = _sorted_pdf(pipeline.decode_job(spark, out), cols)
     pd.testing.assert_frame_equal(exp, got, check_dtype=False)
     gotc = _sorted_pdf(pipeline.decode_job_clustered(spark, out), cols)
@@ -263,11 +263,10 @@ def test_unresolvable_uri_scheme_raises():
     silently write markers/meta to a local dir named after the URI —
     another driver would then see the table as never-compacted and decode
     tombstoned stripes."""
-    from orc_format_spark.ops import similarity
     with pytest.raises(ValueError, match="scheme"):
         pipeline._table_fs("s3a://bucket/table")
     with pytest.raises(ValueError, match="scheme"):
-        similarity._resolve_fs("dbfs://some/path")
+        pipeline._table_fs("dbfs://some/path")
     # scheme-less strings remain local paths
     fs, base = pipeline._table_fs("/tmp/whatever")
     assert base == "/tmp/whatever"
@@ -340,3 +339,36 @@ def test_concurrent_compaction_conflict_raises(spark, tmp_path):
     dec = pipeline.decode_job(spark, out).toPandas()
     assert len(dec) == 400
     assert sorted(dec["v"].tolist()) == sorted(df.toPandas()["v"].tolist())
+
+
+def test_relocated_table_reads_the_same(spark, tmp_path):
+    """Manifest paths are relative to the table root: a committed and
+    compacted table copied elsewhere (the original then deleted) decodes
+    to the same rows, now and as of each earlier run."""
+    import shutil
+    out, copy = str(tmp_path / "tbl"), str(tmp_path / "copy")
+    df = transcripts.generate(spark, n_convs=30, seed=71)
+    params = {"n_buckets": 3, "stripe_rows": 500, "key_col": "conv_id",
+              "order_col": None, "index_rows": None, "bloom_cols": [],
+              "sort_keys": ["turn_idx"]}
+    for k in (0, 1):
+        half = df.where(F.col("turn_idx") % 2 == k)
+        stripes = pipeline.encode_dataframe(
+            half, key_col="conv_id", order_col=None, sort_keys=["turn_idx"],
+            stripe_rows=500, n_buckets=3, stripe_prefix=f"b{k:08d}-")
+        pipeline.commit(spark, stripes, out, "conv_id", None,
+                        run_id=f"batch-{k}", params=params)
+    res = pipeline.compact_job(spark, out)
+    assert res["compacted_stripes"] > 0
+    cols = df.columns
+    snaps = (None, "batch-0", "batch-1", res["run_id"])
+    exp = {s: _sorted_pdf(pipeline.decode_job(spark, out, as_of=s), cols)
+           for s in snaps}
+    pd.testing.assert_frame_equal(exp[None], _sorted_pdf(df, cols),
+                                  check_dtype=False)
+    assert 0 < len(exp["batch-0"]) < len(exp[None])
+    shutil.copytree(out, copy)
+    shutil.rmtree(out)
+    for s in snaps:
+        got = _sorted_pdf(pipeline.decode_job(spark, copy, as_of=s), cols)
+        pd.testing.assert_frame_equal(exp[s], got)

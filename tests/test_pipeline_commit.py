@@ -63,18 +63,19 @@ def test_replayed_append_does_not_double_manifest_stats(spark, df, tmp_path):
                                   check_dtype=False)
 
 
-def test_clustered_decode_matches_shuffle_decode(spark, df, tmp_path):
-    """decode_job_clustered (zero data shuffle, one file per task) returns
-    the same multiset as the shuffle decode, and prunes columns."""
-    out = str(tmp_path / "enc_clustered")
+def test_decode_job_equals_input_multiset(spark, df, tmp_path):
+    """decode_job returns exactly the input multiset, full and
+    column-pruned."""
+    out = str(tmp_path / "enc_multiset")
     pipeline.encode_job(spark, df, out, stripe_rows=300, n_buckets=6)
-    a = pipeline.decode_job(spark, out)
-    b = pipeline.decode_job_clustered(spark, out)
-    assert a.select(a.columns).exceptAll(b.select(a.columns)).count() == 0
-    assert b.select(a.columns).exceptAll(a.select(a.columns)).count() == 0
-    pruned = pipeline.decode_job_clustered(spark, out, columns=["conv_id", "turn_idx"])
+    full = pipeline.decode_job(spark, out).select(df.columns)
+    assert df.exceptAll(full).count() == 0
+    assert full.exceptAll(df).count() == 0
+    pruned = pipeline.decode_job(spark, out, columns=["conv_id", "turn_idx"])
     assert pruned.columns == ["conv_id", "turn_idx"]
-    assert pruned.count() == df.count()
+    exp = df.select("conv_id", "turn_idx")
+    assert exp.exceptAll(pruned).count() == 0
+    assert pruned.exceptAll(exp).count() == 0
 
 
 def _stripe_files(out: str) -> int:
@@ -98,9 +99,9 @@ def test_clustered_decode_runs_one_task_per_file(spark, df, tmp_path):
 
 
 def test_kernels_keep_decoded_partitioning(spark, df, tmp_path):
-    """A decoded frame's inputFiles() are the stripe files: their footers
-    count stripe-column rows, not documents, so a kernel over the frame
-    must keep its partitioning instead of sizing from them (which
+    """A kernel over a decoded frame keeps the decode's partitioning (one
+    task per stripe file) instead of sizing from parquet footers: stripe
+    files count stripe-column rows, not documents (sizing from them
     collapsed MinHash onto one task)."""
     out = str(tmp_path / "enc")
     pipeline.encode_job(spark, df, out, stripe_rows=300)
@@ -111,11 +112,8 @@ def test_kernels_keep_decoded_partitioning(spark, df, tmp_path):
         return dec.select(F.xxhash64("conv_id", "turn_idx").alias("doc_id"),
                           "text")
 
-    shuffled = docs(pipeline.decode_job(spark, out))
-    assert pipeline._estimate_rows(shuffled) is None
-    assert dedup.minhash_signatures(shuffled).rdd.getNumPartitions() >= \
-        spark.sparkContext.defaultParallelism
     clustered = docs(pipeline.decode_job_clustered(spark, out))
+    assert pipeline._estimate_rows(clustered) is None
     assert dedup.minhash_signatures(clustered).rdd.getNumPartitions() == \
         clustered.rdd.getNumPartitions()
 
@@ -175,23 +173,29 @@ def test_long_string_keys_not_pruned_by_truncated_max(spark, tmp_path):
 
 
 def test_clustered_decode_dedupes_stripes_repeated_across_files(spark, df, tmp_path):
-    """A stripe COMPLETE in two different files (orphan run dir re-encoded
-    under a new run_id after a crash-before-lineage) must decode exactly
-    once: ownership assigns each stripe to its first file."""
+    """A stripe COMPLETE in two different files must decode exactly once:
+    as an orphan run dir (no manifest rows, never read), and when a crash
+    before the lineage append made a rerun commit it again under a new
+    run_id (two manifest rows; the smaller path is read)."""
     out = str(tmp_path / "enc_dup")
     stripes = pipeline.encode_dataframe(df, "conv_id", "turn_idx",
                                         stripe_rows=300, n_buckets=6)
     # crash window: the same complete stripes land under TWO run dirs
     pipeline.commit(spark, stripes, out, "conv_id", "turn_idx", run_id="runA")
     stripes.write.mode("append").parquet(f"{out}/stripes/run=orphanB")
-    got = pipeline.decode_job_clustered(spark, out)
-    assert got.count() == df.count()
     exp = df.orderBy("conv_id", "turn_idx").toPandas()
-    got_pd = got.orderBy("conv_id", "turn_idx").toPandas()
     import pandas as pd
-    pd.testing.assert_frame_equal(exp.reset_index(drop=True),
-                                  got_pd[exp.columns.tolist()].reset_index(drop=True),
-                                  check_dtype=False)
+    for rerun in (None, "runC"):
+        if rerun:
+            pipeline.commit(spark, stripes, out, "conv_id", "turn_idx",
+                            run_id=rerun)
+        got = pipeline.decode_job_clustered(spark, out)
+        assert got.count() == df.count()
+        got_pd = got.orderBy("conv_id", "turn_idx").toPandas()
+        pd.testing.assert_frame_equal(
+            exp.reset_index(drop=True),
+            got_pd[exp.columns.tolist()].reset_index(drop=True),
+            check_dtype=False)
 
 
 def test_resume_layout_param_mismatch_raises(spark, df, tmp_path):
@@ -363,3 +367,97 @@ def test_encode_run_id_is_never_inferred_as_a_number(spark, df, tmp_path,
         "spark.sql.sources.partitionColumnTypeInference.enabled") == "true"
     run = spark.read.parquet(f"{out}/stripes").schema["run"]
     assert isinstance(run.dataType, T.StringType)
+
+
+def test_uncommitted_bytes_stay_invisible(spark, df, tmp_path):
+    """Stripe files no manifest row names (a writer that died before its
+    commit) are never read: an orphan run dir holding another frame's
+    stripes leaves decode_job returning exactly the committed rows."""
+    out = str(tmp_path / "enc_orphan")
+    pipeline.encode_job(spark, df, out, stripe_rows=300, n_buckets=6)
+    other = transcripts.generate(spark, n_convs=40, seed=99)
+    (pipeline.encode_dataframe(other, "conv_id", "turn_idx", stripe_rows=300,
+                               n_buckets=6)
+     .write.mode("append").parquet(f"{out}/stripes/run=orphan"))
+    got = pipeline.decode_job(spark, out).select(df.columns)
+    assert got.count() == df.count()
+    assert df.exceptAll(got).count() == 0
+    assert got.exceptAll(df).count() == 0
+
+
+def test_manifest_without_paths_raises(spark, df, tmp_path):
+    """A table whose manifest predates the per-stripe ``path`` column, in
+    whole or in part (a resume across the change), is refused with an
+    error naming the table, not read another way."""
+    import glob
+    import re
+
+    import pyarrow.parquet as pq
+    out = str(tmp_path / "enc_old")
+
+    def drop_paths():
+        for f in glob.glob(f"{out}/manifest/*.parquet"):
+            t = pq.read_table(f)
+            if "path" in t.column_names:
+                pq.write_table(t.drop(["path"]), f)
+                # the rewrite invalidates Hadoop's checksum sidecar
+                os.remove(os.path.join(os.path.dirname(f),
+                                       f".{os.path.basename(f)}.crc"))
+
+    stripes = pipeline.encode_dataframe(df, "conv_id", "turn_idx",
+                                        stripe_rows=300, n_buckets=6)
+    pipeline.commit(spark, stripes.filter(F.col("bucket") < 3), out,
+                    "conv_id", "turn_idx", run_id="old")
+    drop_paths()
+    pipeline.commit(spark, stripes.filter(F.col("bucket") >= 3), out,
+                    "conv_id", "turn_idx", run_id="new")
+    for _ in range(2):  # part of the manifest without paths, then all of it
+        with pytest.raises(ValueError, match=re.escape(out) + ".*re-encode"):
+            pipeline.decode_job(spark, out)
+        drop_paths()
+
+
+def _executed_plan(dec) -> str:
+    return dec._jdf.queryExecution().executedPlan().toString()
+
+
+def test_decode_job_plans_no_exchange(spark, df, tmp_path):
+    """decode_job reads one stripe file per task: no Exchange, plain or
+    manifest-pruned."""
+    out = str(tmp_path / "enc_plan")
+    pipeline.encode_job(spark, df, out, stripe_rows=300, n_buckets=6)
+    target = df.select("conv_id").first()["conv_id"]
+    pred = (F.col("key_min") <= target) & (F.col("key_max") >= target)
+    for dec in (pipeline.decode_job(spark, out),
+                pipeline.decode_job(spark, out, stripe_predicate=pred)):
+        assert "MapInArrow" in _executed_plan(dec)
+        assert "Exchange" not in _executed_plan(dec)
+
+
+def _jobs_run(spark, action) -> int:
+    """Spark jobs ``action()`` runs, counted through its job group."""
+    import uuid
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job count")
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_decode_job_job_counts(spark, df, tmp_path):
+    """Planning from the manifest costs one job (its pruned collect):
+    a projected count runs 3 (plan, then the count's two AQE stages), a
+    point lookup 2 (plan, then the decode)."""
+    out = str(tmp_path / "enc_jobs")
+    pipeline.encode_job(spark, df, out, stripe_rows=300, n_buckets=6)
+    assert _jobs_run(spark, lambda: pipeline.decode_job(
+        spark, out, columns=["conv_id", "turn_idx", "text"]).count()) <= 3
+    k = df.select("conv_id").first()["conv_id"]
+    rows = []
+    assert _jobs_run(spark, lambda: rows.extend(
+        pipeline.decode_job(spark, out, key_equals=k)
+        .filter(F.col("conv_id") == k).collect())) <= 2
+    assert len(rows) == df.filter(F.col("conv_id") == k).count() > 0
