@@ -1,5 +1,6 @@
 """Spark jobs: encode a DataFrame into the stripes table, decode it back,
-and the persistent form with manifest + lineage/checkpoint + resume.
+and the persistent form: stripe files + manifest, committed through one
+versioned lineage log (resume, snapshots, compaction, expiry).
 
 Execution model (SURVEY.md §3.4):
 
@@ -9,10 +10,20 @@ Execution model (SURVEY.md §3.4):
          several stripes; decode's global orderBy reassembles it)
       -> repartition by (bucket, salt) + sortWithinPartitions [one shuffle]
       -> mapInArrow(encode_stripe_arrow per (bucket, salt) run)
-      -> stripes rows (one per stripe-column)  [+ manifest agg, lineage rows]
+      -> stripes rows (one per stripe-column)
+    COMMIT (encode_job, streaming batches, compact_job): stripe rows
+      -> mapInArrow(skip ids the lineage holds; write the task's stripes
+         to one parquet file; one manifest row per stripe)  [same stage]
+      -> collect the manifest rows: the one job after the shuffle
+      -> driver: one manifest file, then lineage/<version>.parquet created
+         exclusively — the commit point
+    TABLE QUESTIONS (resume set, layout params, active set, as_of,
+      snapshots, compaction victims, expiry): one pyarrow read of the
+      lineage log on the driver, no Spark job
     DECODE (decode_job, a persisted table): manifest
-      -> prune stripes (active set, min/max predicate, key bloom)
-      -> collect (stripe_id, path) on the driver; one file per stripe
+      -> prune stripes (min/max predicate, key bloom)
+      -> collect (stripe_id, path) on the driver, keep the active set;
+         one file per stripe
       -> local (file, keep-list) rows, one task per file         [no shuffle]
       -> mapInArrow(pyarrow read with col_name/stripe_id pushed to the row
          groups; decode_stripe_arrow per stripe)
@@ -31,7 +42,9 @@ and stripe-granular parallelism falls out of row partitioning.
 
 from __future__ import annotations
 
-import contextlib
+import datetime
+import os
+import re
 import uuid
 
 import numpy as np
@@ -825,16 +838,12 @@ _NO_PATHS = ("the manifest of {} lacks stripe file paths: the table was "
              "written before manifests recorded them — re-encode it")
 
 
-def _open_manifest(spark: SparkSession, out_dir: str
-                   ) -> tuple[DataFrame, dict[str, str]]:
-    """(manifest, column kinds) of a persisted table from one pyarrow
-    listing on the driver: the manifest is every appended row (crash
-    replays included) read with pyarrow's schema, so Spark runs no
-    schema-inference job; the kinds come from ONE manifest row's ``kinds``
+def _manifest(out_dir: str):
+    """(pyarrow dataset, column kinds) of a table's manifest, from one
+    listing on the driver: the kinds come from ONE manifest row's ``kinds``
     string (vs infer_schema's distinct over every stripe-column row).
     Raises ValueError for a manifest without the ``path`` column."""
     import pyarrow.dataset as pads
-    from pyspark.sql.pandas.types import from_arrow_schema
     filesystem, base = _table_fs(out_dir)
     dset = pads.dataset(f"{base}/manifest", filesystem=filesystem,
                         format="parquet")
@@ -843,10 +852,19 @@ def _open_manifest(spark: SparkSession, out_dir: str
     head = dset.head(1, columns=["kinds"]).column(0).to_pylist()
     # FIRST colon: recursive kinds ("list:array_int64") contain colons
     # themselves; column names never do
-    kinds = dict(p.split(":", 1) for p in head[0].split(",")) if head else {}
-    manifest = (spark.read.schema(from_arrow_schema(dset.schema))
-                .parquet(f"{out_dir}/manifest"))
-    return manifest, kinds
+    return dset, (dict(p.split(":", 1) for p in head[0].split(","))
+                  if head else {})
+
+
+def _open_manifest(spark: SparkSession, out_dir: str
+                   ) -> tuple[DataFrame, dict[str, str]]:
+    """(manifest, column kinds) of a persisted table (see _manifest): every
+    written row, crash leftovers included, read with pyarrow's schema, so
+    Spark runs no schema-inference job."""
+    from pyspark.sql.pandas.types import from_arrow_schema
+    dset, kinds = _manifest(out_dir)
+    return (spark.read.schema(from_arrow_schema(dset.schema))
+            .parquet(f"{out_dir}/manifest"), kinds)
 
 
 def infer_schema_from_manifest(spark: SparkSession, out_dir: str,
@@ -977,23 +995,27 @@ def _decode_clustered(stripes: DataFrame, schema: T.StructType,
     return out
 
 
-def _decode_files(spark: SparkSession, out_dir: str, manifest: DataFrame,
-                  schema: T.StructType, columns: list[str],
+def _decode_files(spark: SparkSession, out_dir: str, stripes,
+                  active: dict[str, dict], schema: T.StructType,
+                  columns: list[str],
                   stride_range: tuple | None = None) -> DataFrame:
-    """Decode the stripes ``manifest`` lists, planned on the driver: its
-    (stripe_id, path) rows are collected once and each stripe is read from
-    ONE file, min(path) — a crash replay can commit a stripe twice. One
-    ``mapInArrow`` task per file, at most one wave per core (``_tasks``),
-    over a local (file, keep-list) relation: no exchange, the stripe bytes
-    never cross the network. Each task reads its file with pyarrow through
-    _table_fs, ``col_name`` and ``stripe_id`` pushed down to the parquet
-    row groups. A file under ``stripes/`` the manifest does not name (a
-    crash orphan) is never opened."""
+    """Decode the ``active`` stripes (see _active) among ``stripes``, the
+    (stripe_id, path) manifest rows pruned on the driver. A stripe is read
+    from a file of the run whose lineage row published it (a commit that
+    died before its lineage version may have written it too), the smallest
+    such path when that run wrote it twice. One ``mapInArrow`` task per
+    file, at most one wave per core (``_tasks``), over a local
+    (file, keep-list) relation: no exchange, the stripe bytes never cross
+    the network. Each task reads its file with pyarrow through _table_fs,
+    ``col_name`` and ``stripe_id`` pushed down to the parquet row
+    groups."""
     owner: dict[str, str] = {}
-    for sid, path in manifest.select("stripe_id", "path").collect():
+    for sid, path in stripes:
         if path is None:  # a row appended before manifests recorded paths
             raise ValueError(_NO_PATHS.format(out_dir))
-        owner[sid] = min(path, owner.get(sid, path))
+        if sid in active and path.startswith(
+                f"stripes/run={active[sid]['run_id']}/"):
+            owner[sid] = min(path, owner.get(sid, path))
     by_file: dict[str, list[str]] = {}
     for sid, path in sorted(owner.items()):
         by_file.setdefault(path, []).append(sid)
@@ -1042,195 +1064,345 @@ def _decode_files(spark: SparkSession, out_dir: str, manifest: DataFrame,
     return out
 
 
-def build_manifest(stripes: DataFrame, key_col: str | None = None,
-                   order_col: str | None = None) -> DataFrame:
-    """Footer-style per-stripe index (the FileMetadata/StripeInformation +
-    ColumnStatistics analog, src/proto.rs:206-217,66-87): one small row per
-    stripe with sizes, per-key min/max for stripe pruning, and the file
-    holding the stripe (``path``: the StripeInformation offset analog,
+# ---------------------------------------------------------------------------
+# the persisted table: stripes + manifest, committed through the lineage log
+# ---------------------------------------------------------------------------
+# A table is three directories. ``stripes/run=<id>/`` holds the stripe
+# files, one per encode task. ``manifest/`` holds one footer-style row per
+# stripe written (its stats and file). ``lineage/`` is the log that decides
+# what is visible: one ``<version>.parquet`` per commit, created exclusively
+# (the ordered log with exclusive commits of Delta Lake), holding an 'ok'
+# row per published stripe, a 'compacted' row per stripe a compaction
+# replaced and an 'expired' row per stripe whose run's bytes were freed.
+# Every table question (resume set, layout params, active set, snapshots)
+# is answered by reading that log on the driver with pyarrow, not by a
+# Spark job. Stripe files and manifest rows a crashed writer left behind
+# are never named by the log, so no reader sees them.
+
+_STAT_COLS = ("stripe_id", "bucket", "n_rows", "col_name", "col_kind",
+              "codec", "raw_bytes", "enc_bytes", "checksum", "min_val",
+              "max_val", "bloom")
+
+
+def _manifest_schema(key_col: str | None,
+                     order_col: str | None) -> T.StructType:
+    """Columns of a manifest row: the FileMetadata/StripeInformation +
+    ColumnStatistics analog (src/proto.rs:206-217,66-87) — sizes, per-key
+    min/max for stripe pruning, and the file holding the stripe (``path``,
+    relative to the table root: the StripeInformation offset analog,
     which decode_job plans from)."""
-    aggs = [
-        F.max("bucket").alias("bucket"),
-        F.max("n_rows").alias("n_rows"),
-        F.sum("raw_bytes").alias("raw_bytes"),
-        F.sum("enc_bytes").alias("enc_bytes"),
-        F.count("*").alias("n_cols"),
-        F.min("path").alias("path"),
-        F.concat_ws(",", F.sort_array(F.collect_list(
-            F.concat_ws(":", "col_name", "codec")))).alias("codecs"),
-        F.concat_ws(",", F.sort_array(F.collect_list(
-            F.concat_ws(":", "col_name", "col_kind")))).alias("kinds"),
-        F.sha1(F.concat_ws(",", F.sort_array(F.collect_list(
-            F.concat_ws(":", "col_name", "checksum"))))).alias("checksum"),
-    ]
+    ddl = ("stripe_id string, bucket long, n_rows long, raw_bytes long, "
+           "enc_bytes long, n_cols long, path string, codecs string, "
+           "kinds string, checksum string")
     for c, alias in ((key_col, "key"), (order_col, "order")):
         if c:
-            aggs.append(F.max(F.when(F.col("col_name") == c, F.col("min_val"))).alias(f"{alias}_min"))
-            aggs.append(F.max(F.when(F.col("col_name") == c, F.col("max_val"))).alias(f"{alias}_max"))
+            ddl += f", {alias}_min string, {alias}_max string"
+    return T._parse_datatype_string(ddl + (", key_bloom binary"
+                                           if key_col else ""))
+
+
+def _manifest_row(rows: list[dict], path: str, key_col: str | None,
+                  order_col: str | None) -> dict:
+    """The manifest row of one stripe from its stripe-column rows."""
+    import hashlib
+
+    def listing(field: str) -> str:
+        # sorted "col:value" pairs; a null value leaves the bare column
+        return ",".join(sorted(":".join(v for v in (r["col_name"], r[field])
+                                        if v is not None) for r in rows))
+
+    by_col = {r["col_name"]: r for r in rows}
+    out = {"stripe_id": rows[0]["stripe_id"],
+           "bucket": max(r["bucket"] for r in rows),
+           "n_rows": max(r["n_rows"] for r in rows),
+           "raw_bytes": sum(r["raw_bytes"] for r in rows),
+           "enc_bytes": sum(r["enc_bytes"] for r in rows),
+           "n_cols": len(rows), "path": path,
+           "codecs": listing("codec"), "kinds": listing("col_kind"),
+           "checksum": hashlib.sha1(listing("checksum").encode()).hexdigest()}
+    for c, alias in ((key_col, "key"), (order_col, "order")):
+        if c:
+            out[f"{alias}_min"] = by_col.get(c, {}).get("min_val")
+            out[f"{alias}_max"] = by_col.get(c, {}).get("max_val")
     if key_col:
-        aggs.append(F.first(F.when(F.col("col_name") == key_col, F.col("bloom")),
-                            ignorenulls=True).alias("key_bloom"))
-    return stripes.groupBy("stripe_id").agg(*aggs)
+        out["key_bloom"] = by_col.get(key_col, {}).get("bloom")
+    return out
 
 
-# ---------------------------------------------------------------------------
-# persistent job with lineage + idempotent resume
-# ---------------------------------------------------------------------------
+def _write_stripes(stripes: DataFrame, out_dir: str, run_id: str,
+                   key_col: str | None, order_col: str | None,
+                   done: set[str]) -> DataFrame:
+    """Manifest rows of ``stripes`` minus the ids in ``done``, lazily: each
+    task writes its stripes with pyarrow (through _table_fs) to ONE parquet
+    file under ``stripes/run=<run_id>/``, named for that task attempt, and
+    yields one manifest row per stripe. A stripe's rows must all reach one
+    task, as encode_dataframe emits them. A failed attempt's partial file
+    is named by no manifest row, so it is never read."""
+    filesystem, base = _table_fs(out_dir)
+    rel = f"stripes/run={run_id}"
+    file_schema = _arrow_schema(STRIPE_SCHEMA)
+    schema = _manifest_schema(key_col, order_col)
+    target = _arrow_schema(schema)
+
+    def write(batches):
+        import pyarrow.parquet as pq
+        from pyspark import TaskContext
+        name = (f"{rel}/part-{TaskContext.get().partitionId():05d}-"
+                f"{uuid.uuid4().hex}.parquet")
+        writer, by_stripe = None, {}
+        try:
+            for b in batches:
+                b = b.filter(pa.array([s not in done for s in
+                                       b.column("stripe_id").to_pylist()],
+                                      pa.bool_()))
+                if not b.num_rows:
+                    continue
+                if writer is None:
+                    filesystem.create_dir(f"{base}/{rel}", recursive=True)
+                    writer = pq.ParquetWriter(f"{base}/{name}", file_schema,
+                                              filesystem=filesystem)
+                writer.write_table(
+                    pa.Table.from_batches([b]).cast(file_schema))
+                for r in b.select(list(_STAT_COLS)).to_pylist():
+                    by_stripe.setdefault(r["stripe_id"], []).append(r)
+        finally:
+            if writer is not None:
+                writer.close()
+        if by_stripe:
+            yield pa.RecordBatch.from_pylist(
+                [_manifest_row(rows, name, key_col, order_col)
+                 for rows in by_stripe.values()], schema=target)
+
+    return stripes.mapInArrow(write, schema)
 
 
-def _lineage_from_manifest(manifest: DataFrame, run_id: str,
-                           params: dict | None = None) -> DataFrame:
-    params = params or {}
-    return manifest.select(
-        "stripe_id", "bucket", "n_rows", "raw_bytes", "enc_bytes", "n_cols",
-        "codecs", "checksum",
-        F.lit("ok").alias("status"), F.lit(run_id).alias("run_id"),
-        F.current_timestamp().alias("committed_at"),
-        F.lit(params.get("n_buckets")).cast("long").alias("p_n_buckets"),
-        F.lit(params.get("stripe_rows")).cast("long").alias("p_stripe_rows"),
-        F.lit(params.get("key_col")).cast("string").alias("p_key_col"),
-        F.lit(params.get("order_col")).cast("string").alias("p_order_col"),
-        # -1 = "no stride index" (a real layout choice, not "unspecified"):
-        # a None->value transition on resume must be caught too
-        F.lit(params.get("index_rows", -1) if params.get("index_rows")
-              is not None else -1).cast("long").alias("p_index_rows"),
-        F.lit(",".join(params["bloom_cols"])
-              if params.get("bloom_cols") is not None else None)
-         .cast("string").alias("p_bloom_cols"),
-        F.lit(",".join(params["sort_keys"])
-              if params.get("sort_keys") is not None else None)
-         .cast("string").alias("p_sort_keys"),
-    )
+LINEAGE_SCHEMA = pa.schema([
+    ("stripe_id", pa.string()), ("bucket", pa.int64()),
+    ("n_rows", pa.int64()), ("raw_bytes", pa.int64()),
+    ("enc_bytes", pa.int64()), ("n_cols", pa.int64()),
+    ("codecs", pa.string()), ("checksum", pa.string()),
+    ("status", pa.string()), ("run_id", pa.string()),
+    ("committed_at", pa.timestamp("us", tz="UTC")),
+    ("p_n_buckets", pa.int64()), ("p_stripe_rows", pa.int64()),
+    ("p_key_col", pa.string()), ("p_order_col", pa.string()),
+    ("p_index_rows", pa.int64()), ("p_bloom_cols", pa.string()),
+    ("p_sort_keys", pa.string())])
 
 
-def _read_lineage(spark: SparkSession, out_dir: str) -> DataFrame | None:
-    """The lineage table, or None when ``out_dir`` has none: no committed
-    file under ``lineage/`` (listed through _table_fs, skipping ``_``/``.``
-    entries as Spark does, so a crash inside ``_temporary`` is still
-    fresh) or a lineage Spark cannot read. The listing spares a fresh
-    table the failed ``spark.read`` and its py4j exception conversion
-    (~65 ms of driver time per call)."""
+def _log(out_dir: str) -> tuple[list[dict], int]:
+    """(rows, next version) of the table's lineage log, read on the driver
+    with pyarrow: every file directly under ``lineage/`` except hidden
+    ``_``/``.`` entries (temp files, a crashed Spark append's
+    ``_temporary``), in LINEAGE_SCHEMA's types. Files written before the log
+    was versioned (Spark ``part-*`` files) carry no version number. A fresh
+    table is ([], 1). Raises ValueError naming the table when a lineage
+    file cannot be read — an unreadable log is never taken for a fresh
+    one."""
+    import pyarrow.dataset as pads
     from pyarrow import fs as pafs
     filesystem, base = _table_fs(out_dir)
-    root = f"{base}/lineage/"
-    sel = pafs.FileSelector(root, allow_not_found=True, recursive=True)
-    if not any(info.type == pafs.FileType.File
-               and not any(part[:1] in ("_", ".")
-                           for part in info.path[len(root):].split("/"))
-               for info in filesystem.get_file_info(sel)):
-        return None
+    files = sorted(i.path for i in filesystem.get_file_info(
+        pafs.FileSelector(f"{base}/lineage", allow_not_found=True))
+        if i.type == pafs.FileType.File and i.base_name[:1] not in "_.")
+    stems = [os.path.basename(f).removesuffix(".parquet") for f in files]
     try:
-        return spark.read.parquet(f"{out_dir}/lineage")
-    except Exception:
-        return None
+        rows = pads.dataset(files, schema=LINEAGE_SCHEMA, format="parquet",
+                            filesystem=filesystem).to_table().to_pylist()
+    except (pa.ArrowException, OSError) as e:
+        raise ValueError(f"the lineage of {out_dir} is unreadable: {e}") from e
+    return rows, max((int(v) for v in stems if v.isdigit()), default=0) + 1
 
 
-def _ok_stripe_ids(lineage: DataFrame) -> DataFrame:
-    return lineage.filter(F.col("status") == "ok").select("stripe_id").distinct()
+def _local_root(out_dir: str) -> str:
+    """Local path of a table a commit writes to. A commit creates log
+    versions exclusively (os.link), which only the local filesystem
+    offers here: any other filesystem raises ValueError naming the
+    table."""
+    from pyarrow import fs as pafs
+    filesystem, base = _table_fs(out_dir)
+    if not isinstance(filesystem, pafs.LocalFileSystem):
+        raise ValueError(f"cannot commit to {out_dir}: its filesystem "
+                         f"({filesystem.type_name}) has no exclusive create, "
+                         "which the lineage log needs")
+    return base
 
 
-def completed_stripes(spark: SparkSession, out_dir: str) -> DataFrame | None:
-    """Stripe ids already committed per the lineage table (None if fresh)."""
-    lineage = _read_lineage(spark, out_dir)
-    return None if lineage is None else _ok_stripe_ids(lineage)
+def _create_version(out_dir: str, version: int, rows: list[dict]) -> None:
+    """Create ``lineage/<version>.parquet`` holding ``rows``, exclusively:
+    written in full to a hidden temp file, then hard-linked to its name,
+    so no partial version is ever visible. Raises FileExistsError when
+    another writer already took ``version``."""
+    import pyarrow.parquet as pq
+    log_dir = f"{_local_root(out_dir)}/lineage"
+    os.makedirs(log_dir, exist_ok=True)
+    tmp = f"{log_dir}/.{version:020d}.{uuid.uuid4().hex}.tmp"
+    pq.write_table(pa.Table.from_pylist(rows, schema=LINEAGE_SCHEMA), tmp)
+    try:
+        os.link(tmp, f"{log_dir}/{version:020d}.parquet")
+    finally:
+        os.unlink(tmp)
 
 
-def _check_resume_params(lineage: DataFrame, out_dir: str,
+def _publish(out_dir: str, pending: list[dict],
+             log: tuple[list[dict], int], rebase=None) -> list[dict]:
+    """Append ``pending`` lineage rows to the log as its next version and
+    return the log's rows after it. Losing the version to a concurrent
+    writer re-reads the log and retries at the next version with
+    ``rebase(rows, pending)`` when given (which drops what the winner
+    already published, or raises); nothing left to publish writes no
+    version."""
+    rows, version = log
+    while pending:
+        now = datetime.datetime.now(datetime.timezone.utc)
+        stamped = [dict(r, committed_at=now) for r in pending]
+        try:
+            _create_version(out_dir, version, stamped)
+            return rows + stamped
+        except FileExistsError:
+            rows, version = _log(out_dir)
+            pending = rebase(rows, pending) if rebase else pending
+    return rows
+
+
+_PARAMS = ("n_buckets", "stripe_rows", "key_col", "order_col", "index_rows",
+           "bloom_cols", "sort_keys")
+
+
+def _param_cols(params: dict | None) -> dict:
+    """The ``p_*`` lineage columns recording a commit's layout params."""
+    p = dict(params or {})
+    # -1 = "no stride index" (a real layout choice, not "unspecified"):
+    # a None->value transition on resume is caught too
+    p["index_rows"] = -1 if p.get("index_rows") is None else p["index_rows"]
+    return {f"p_{k}": ",".join(v) if isinstance(v, (list, tuple)) else v
+            for k in _PARAMS for v in [p.get(k)]}
+
+
+_ROW_STATS = ("stripe_id", "bucket", "n_rows", "raw_bytes", "enc_bytes",
+              "n_cols", "codecs", "checksum")
+
+
+def _lineage_rows(stats: list[dict], status: str, run_id: str,
+                  params: dict | None) -> list[dict]:
+    """Lineage rows (committed_at still unset) for stripes whose manifest
+    or lineage rows are ``stats``."""
+    cols = dict(_param_cols(params), status=status, run_id=run_id)
+    return [dict({k: s[k] for k in _ROW_STATS}, **cols) for s in stats]
+
+
+def _recorded_params(rows: list[dict]) -> dict | None:
+    """The ``p_*`` columns of the table's latest parameterized 'ok' row."""
+    return max((r for r in rows if r["status"] == "ok"
+                and r["p_n_buckets"] is not None),
+               key=lambda r: r["committed_at"], default=None)
+
+
+def _check_resume_params(rows: list[dict], out_dir: str,
                          params: dict) -> None:
     """Fail fast when resuming into an out_dir that was written with
     different partitioning parameters: stripe ids are a pure function of
-    (input, n_buckets, stripe_rows), so a silent param change would pass the
-    lineage anti-join and append a disjoint second copy of the data.
-    index_rows/bloom_cols don't move rows but DO change stripe bytes — a
-    mismatch would break the 're-encoding a stripe reproduces identical
-    bytes' invariant and produce a mixed-layout table, so they're guarded
-    too (older lineage without these columns skips their check)."""
-    try:
-        row = lineage.select(*[c for c in (
-            "p_n_buckets", "p_stripe_rows", "p_key_col", "p_index_rows",
-            "p_bloom_cols", "p_sort_keys") if c in lineage.columns]).first()
-    except Exception:
+    (input, n_buckets, stripe_rows, order_col), so a silent param change
+    would pass the resume skip and append a disjoint second copy of the
+    data.
+    index_rows/bloom_cols/sort_keys don't move rows but DO change stripe
+    bytes — a mismatch would break the 're-encoding a stripe reproduces
+    identical bytes' invariant and produce a mixed-layout table, so they're
+    guarded too. A param the lineage does not record is not checked."""
+    have = _recorded_params(rows)
+    if have is None:
         return
-    if row is None or row["p_n_buckets"] is None:
-        return  # pre-param lineage (or empty): nothing to check against
-    want_bloom = (",".join(params["bloom_cols"])
-                  if params.get("bloom_cols") is not None else None)
-    checks = [
-        (row["p_n_buckets"], params.get("n_buckets"), "n_buckets"),
-        (row["p_stripe_rows"], params.get("stripe_rows"), "stripe_rows"),
-        (row["p_key_col"], params.get("key_col"), "key_col")]
-    if "p_index_rows" in row.__fields__:
-        want_idx = params["index_rows"] if params.get("index_rows") is not None else -1
-        checks.append((row["p_index_rows"], want_idx, "index_rows"))
-        checks.append((row["p_bloom_cols"], want_bloom, "bloom_cols"))
-    if "p_sort_keys" in row.__fields__:
-        want_sort = (",".join(params["sort_keys"])
-                     if params.get("sort_keys") is not None else None)
-        checks.append((row["p_sort_keys"], want_sort, "sort_keys"))
-    for have, want, name in checks:
-        if want is not None and have is not None and have != want:
+    want = _param_cols(params)
+    for k in _PARAMS:
+        col = f"p_{k}"
+        if None not in (want[col], have[col]) and have[col] != want[col]:
             raise ValueError(
-                f"resume into {out_dir} with mismatched {name}: "
-                f"lineage has {have!r}, job has {want!r} — stripe layout "
+                f"resume into {out_dir} with mismatched {k}: lineage has "
+                f"{have[col]!r}, job has {want[col]!r} — stripe layout "
                 "would not line up and the table would be silently mixed")
 
 
-def read_manifest(spark: SparkSession, out_dir: str) -> DataFrame:
-    """The manifest with crash-window duplicates collapsed: a rerun that
-    died between the manifest append and the lineage append re-appends the
-    same manifest rows; dedupe by stripe_id so stats never double-count."""
-    return (spark.read.parquet(f"{out_dir}/manifest")
-            .dropDuplicates(["stripe_id"]))
+def _layout_params(rows: list[dict], out_dir: str) -> dict:
+    """The table's layout params from its latest parameterized commit
+    (commit() records them on every lineage row)."""
+    row = _recorded_params(rows)
+    if row is None:
+        raise ValueError(f"the lineage of {out_dir} records no layout params "
+                         "(pre-param table) — cannot compact safely")
+    p = {k: row[f"p_{k}"] for k in _PARAMS}
+    if p["index_rows"] == -1:
+        p["index_rows"] = None
+    p["bloom_cols"] = p["bloom_cols"].split(",") if p["bloom_cols"] else []
+    p["sort_keys"] = p["sort_keys"].split(",") if p["sort_keys"] else None
+    return p
 
 
-@contextlib.contextmanager
-def _write_run(spark: SparkSession, stripes: DataFrame, out_dir: str,
-               run_id: str, key_col: str | None, order_col: str | None):
-    """Append ``stripes`` under ``stripes/run=<run_id>``, derive the manifest
-    from ONLY that run's written bytes, append it, and yield it persisted
-    for the caller's lineage rows. Each manifest row's ``path`` names the
-    file holding the stripe, relative to the table root so a copied table
-    still reads (taken here, before the dropDuplicates, by
-    ``input_file_name``). The one place commit() and compact_job publish a
-    run's bytes from."""
-    run_dir = f"{out_dir}/stripes/run={run_id}"
-    stripes.write.mode("append").parquet(run_dir)
-    path = F.concat(F.lit(f"stripes/run={run_id}/"),
-                    F.substring_index(F.input_file_name(), "/", -1))
-    written = (spark.read.schema(STRIPE_SCHEMA).parquet(run_dir)
-               .withColumn("path", path)
-               .dropDuplicates(["stripe_id", "col_name"]))
-    # the manifest feeds the manifest write and the caller's lineage rows;
-    # persist so the run-dir scan + groupBy runs once per commit. Explicit
-    # unpersist: the streaming path commits per micro-batch, and leaked
-    # cache entries would accumulate for the stream's lifetime.
-    from pyspark import StorageLevel
-    manifest = build_manifest(written, key_col, order_col).persist(
-        StorageLevel.MEMORY_AND_DISK)
-    try:
-        manifest.write.mode("append").parquet(f"{out_dir}/manifest")
-        yield manifest
-    finally:
-        manifest.unpersist()
+def _commit(spark: SparkSession, stripes: DataFrame, out_dir: str,
+            key_col: str | None, order_col: str | None, run_id: str,
+            params: dict | None, log: tuple[list[dict], int] | None = None,
+            tombstones: list[dict] = ()) -> list[dict]:
+    """commit() with an already-read ``log`` and the 'compacted' rows of a
+    compaction, published in the same log version as its new stripes. The
+    only Spark job is the collect of the write kernel's manifest rows. A
+    compaction whose victims a concurrent writer tombstoned first raises
+    RuntimeError; its bytes stay invisible orphans."""
+    import pyarrow.parquet as pq
+    root = _local_root(out_dir)
+    rows, version = log if log is not None else _log(out_dir)
+    done = {r["stripe_id"] for r in rows if r["status"] == "ok"}
+    manifest = _write_stripes(stripes, out_dir, run_id, key_col, order_col,
+                              done).toArrow()
+    new = manifest.select(list(_ROW_STATS)).to_pylist()
+    if len({r["stripe_id"] for r in new}) < len(new):
+        raise ValueError(f"commit to {out_dir}: a stripe's rows reached "
+                         "several tasks; commit needs stripe-clustered rows "
+                         "as encode_dataframe emits them")
+    if new:
+        man_dir = f"{root}/manifest"
+        os.makedirs(man_dir, exist_ok=True)
+        name = f"part-{run_id}-{uuid.uuid4().hex}.parquet"
+        pq.write_table(manifest.cast(_arrow_schema(
+            _manifest_schema(key_col, order_col))), f"{man_dir}/.{name}")
+        os.replace(f"{man_dir}/.{name}", f"{man_dir}/{name}")
+    victims = {r["stripe_id"] for r in tombstones}
+
+    def rebase(rows, pending):
+        hit = sorted(victims & {r["stripe_id"] for r in rows
+                                if r["status"] == "compacted"})
+        if hit:
+            raise RuntimeError(
+                f"concurrent compaction conflict on {out_dir}: victim stripe "
+                f"{hit[0]!r} was tombstoned by another run after victim "
+                "selection; aborting without publishing (this run's bytes "
+                "remain invisible orphans) — rerun compact_job")
+        held = {r["stripe_id"] for r in rows if r["status"] == "ok"}
+        return [r for r in pending
+                if r["status"] != "ok" or r["stripe_id"] not in held]
+
+    pending = _lineage_rows(new, "ok", run_id, params) + list(tombstones)
+    return _publish(out_dir, pending, (rows, version), rebase)
 
 
 def commit(spark: SparkSession, stripes: DataFrame, out_dir: str,
            key_col: str, order_col: str | None, run_id: str,
-           params: dict | None = None) -> None:
-    """Two-phase commit of ONE batch of stripes: append the batch's rows
-    into a run-scoped partition (``stripes/run=<run_id>``), then derive +
-    append manifest and lineage from ONLY that run's written bytes.
+           params: dict | None = None) -> list[dict]:
+    """Commit ONE batch of stripes and return the table's lineage rows
+    after it. Stripe ids the lineage already holds are skipped; the rest
+    are written by the encode tasks themselves (see _write_stripes) under
+    ``stripes/run=<run_id>/``, their manifest rows are collected and
+    written as one manifest file, and the commit point is the creation of
+    the next lineage version (see _publish). A commit that adds no stripe
+    writes nothing. Cost is O(batch) plus one driver read of the log,
+    never a read of earlier stripes: the streaming path calls this per
+    micro-batch."""
+    return _commit(spark, stripes, out_dir, key_col, order_col, run_id,
+                   params)
 
-    Commit cost is O(batch), never O(table) — the streaming path calls this
-    per micro-batch, and re-reading the whole stripes table per batch would
-    grow without bound. Crash-window replays (same run_id appending
-    byte-identical rows twice) are collapsed by the stripe-level
-    dropDuplicates before stats are aggregated, so manifest raw/enc byte
-    counts and checksums are invariant to replayed appends."""
-    with _write_run(spark, stripes, out_dir, run_id, key_col,
-                    order_col) as manifest:
-        (_lineage_from_manifest(manifest, run_id, params)
-         .write.mode("append").parquet(f"{out_dir}/lineage"))
+
+def read_manifest(spark: SparkSession, out_dir: str) -> DataFrame:
+    """Every manifest row, one per stripe id. Rows of commits that never
+    reached the lineage are included: visibility is the lineage's."""
+    return (spark.read.parquet(f"{out_dir}/manifest")
+            .dropDuplicates(["stripe_id"]))
 
 
 def read_stripes(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -1258,11 +1430,11 @@ def encode_job(spark: SparkSession, df: DataFrame, out_dir: str,
 
     Idempotent resume (north_rule): stripe ids are a pure function of the
     input (bucket hash + order salt), so a rerun after a partial failure
-    anti-joins the lineage table and encodes ONLY the missing stripes;
-    re-encoding a stripe reproduces identical bytes (deterministic codecs),
-    and lineage gains exactly one 'ok' row per stripe. Resuming with
-    different n_buckets/stripe_rows/key_col raises (lineage records them).
-    """
+    commits ONLY the stripes the lineage lacks; re-encoding a stripe
+    reproduces identical bytes (deterministic codecs), and lineage gains
+    exactly one 'ok' row per stripe. Resuming with different
+    n_buckets/stripe_rows/key_col raises (lineage records them). The
+    returned stats cover the table's active stripes, from the lineage."""
     if n_buckets is None:
         n_buckets = _n_buckets(df, stripe_rows)
     # letter-led like compact_job's "c..." ids: Spark's partition inference
@@ -1275,34 +1447,17 @@ def encode_job(spark: SparkSession, df: DataFrame, out_dir: str,
               "key_col": key_col, "order_col": order_col,
               "index_rows": index_rows, "bloom_cols": sorted(bloom_cols),
               "sort_keys": sort_keys}
-    lineage = _read_lineage(spark, out_dir)
-    if lineage is not None:
-        _check_resume_params(lineage, out_dir, params)
-
+    before = _log(out_dir)[0]
+    _check_resume_params(before, out_dir, params)
     stripes = encode_dataframe(df, key_col, order_col, sort_keys,
                                stripe_rows, n_buckets, index_rows=index_rows,
                                bloom_cols=bloom_cols)
-
-    resumed = lineage is not None
-    if resumed:
-        stripes = stripes.join(F.broadcast(_ok_stripe_ids(lineage)),
-                               "stripe_id", "left_anti")
-
-    commit(spark, stripes, out_dir, key_col, order_col, run_id, params=params)
-
-    stats_man = read_manifest(spark, out_dir)
-    if has_compactions(out_dir):
-        # tombstoned stripes keep their manifest rows (old snapshots need
-        # them) — stats must count only the active set or they double
-        stats_man = stats_man.join(active_stripe_ids(spark, out_dir),
-                                   "stripe_id", "left_semi")
-    stats = (stats_man
-             .agg(F.count("*").alias("n_stripes"), F.sum("n_rows").alias("n_rows"),
-                  F.sum("raw_bytes").alias("raw_bytes"),
-                  F.sum("enc_bytes").alias("enc_bytes")).collect()[0])
-    return {"run_id": run_id, "resumed": resumed, "n_buckets": n_buckets,
-            "n_stripes": stats["n_stripes"], "n_rows": stats["n_rows"],
-            "raw_bytes": stats["raw_bytes"], "enc_bytes": stats["enc_bytes"]}
+    active = _active(commit(spark, stripes, out_dir, key_col, order_col,
+                            run_id, params=params), out_dir).values()
+    return {"run_id": run_id, "resumed": bool(before), "n_buckets": n_buckets,
+            "n_stripes": len(active),
+            **{k: sum(r[k] for r in active)
+               for k in ("n_rows", "raw_bytes", "enc_bytes")}}
 
 
 def decode_job(spark: SparkSession, out_dir: str,
@@ -1313,8 +1468,9 @@ def decode_job(spark: SparkSession, out_dir: str,
     """Read + decode a persisted stripes table, planned from its manifest
     (the reference's footer-first read, src/read/mod.rs:46-159): the
     manifest is pruned, each surviving stripe's file comes from its
-    ``path``, and one task per file decodes (see _decode_files). Files the
-    manifest does not name — crash orphans — stay invisible.
+    ``path``, and one task per file decodes (see _decode_files). Only
+    stripes the lineage shows active are read, so files and manifest rows
+    of commits that never reached the lineage stay invisible.
 
     ``stripe_predicate`` is a Column over the manifest (e.g. key_min/key_max
     bounds) pruning whole stripes before any decode work — the Spark analog
@@ -1324,16 +1480,11 @@ def decode_job(spark: SparkSession, out_dir: str,
     (see decode_dataframe). Stats are strings: numeric predicates must use
     int-like key columns (stored numerically) or cast explicitly.
 
-    ``as_of`` (a run_id, or anything castable to timestamp) time-travels to
-    that snapshot. Compacted tables always resolve stripe visibility
-    through the lineage active set (status ok minus tombstoned); never-
-    compacted tables skip that join entirely — the hot path is unchanged.
-    A table whose manifest predates the ``path`` column raises ValueError."""
+    ``as_of`` (a run_id, or a timestamp) time-travels to that snapshot
+    (see _active). A table whose manifest predates the ``path`` column
+    raises ValueError."""
+    active = _active(_log(out_dir)[0], out_dir, as_of)
     manifest, kinds = _open_manifest(spark, out_dir)
-    if as_of is not None or has_compactions(out_dir):
-        act = active_stripe_ids(spark, out_dir, as_of)
-        if act is not None:
-            manifest = manifest.join(act, "stripe_id", "left_semi")
     if stripe_predicate is not None:
         manifest = manifest.filter(stripe_predicate)
     if key_equals is not None:
@@ -1354,8 +1505,9 @@ def decode_job(spark: SparkSession, out_dir: str,
 
         manifest = manifest.filter(probe(F.col("key_bloom")))
     schema, columns = _schema_from_kinds(kinds, columns)
-    return _decode_files(spark, out_dir, manifest, schema, columns,
-                         stride_range)
+    return _decode_files(spark, out_dir,
+                         manifest.select("stripe_id", "path").collect(),
+                         active, schema, columns, stride_range)
 
 
 # the name existing callers (perfbench/workloads.py) still use
@@ -1365,32 +1517,22 @@ decode_job_clustered = decode_job
 # ---------------------------------------------------------------------------
 # snapshots, time travel, compaction (Iceberg-style table maintenance)
 # ---------------------------------------------------------------------------
-# The stripes/manifest/lineage tables are append-only; a stripe's VISIBILITY
-# is a lineage question, never a byte question. Compaction therefore never
-# deletes anything: it appends merged stripes under a fresh run and appends
-# 'compacted' tombstone rows for the replaced ids, and every decode of a
-# compacted table resolves the active set (status ok MINUS tombstoned). Old
-# snapshots stay readable forever via decode_job(as_of=...).
-
-_COMPACT_MARKER_DIR = "_compactions"
-_seen_compactions: set[str] = set()   # positive cache only — a table once
-#                                       compacted stays compacted; negatives
-#                                       are re-checked so a concurrent
-#                                       compaction is never missed
+# Stripe bytes and manifest rows are append-only; a stripe's VISIBILITY is
+# a lineage question, never a byte question. Compaction therefore deletes
+# nothing: it writes merged stripes under a fresh run and publishes them
+# in ONE log version with 'compacted' tombstone rows for the replaced ids.
+# Old snapshots stay readable via decode_job(as_of=...) until
+# expire_snapshots frees their bytes.
 
 
 def _table_fs(out_dir: str):
-    """(filesystem, base_path) via pyarrow.fs for a table, index or its
-    markers, so driver- and task-side pyarrow I/O works on object stores
-    too. ONLY scheme-less strings fall back to the local filesystem: a URI
-    pyarrow can't resolve (s3a://, abfss://, dbfs://) raises instead —
-    silently writing the compaction/expiry markers or an index's meta to a
-    local directory named after the URI would make other drivers see the
-    table as never-compacted and decode tombstoned stripes (duplicates),
-    or miss the index meta."""
-    import os
-    import re
-
+    """(filesystem, base_path) via pyarrow.fs for a table or an index, so
+    driver- and task-side pyarrow I/O works on object stores too. ONLY
+    scheme-less strings fall back to the local filesystem: a URI pyarrow
+    can't resolve (s3a://, abfss://, dbfs://) raises instead — silently
+    reading or writing a local directory named after the URI would show
+    another table (an empty lineage: a fresh table) or miss an index's
+    meta."""
     import pyarrow as pa
     from pyarrow import fs as pafs
     try:
@@ -1404,133 +1546,70 @@ def _table_fs(out_dir: str):
         return pafs.LocalFileSystem(), os.path.abspath(out_dir)
 
 
-def has_compactions(out_dir: str) -> bool:
-    """True once compact_job has ever run against this table (driver-side
-    marker listing; one RPC on object stores, cached when positive). The
-    cache key is the RESOLVED (filesystem, base) path, so ``tbl``,
-    ``./tbl`` and the absolute path share one entry instead of paying one
-    listing RPC each (round-5 review finding)."""
-    filesystem, base = _table_fs(out_dir)
-    if base in _seen_compactions:
-        return True
-    from pyarrow import fs as pafs
-    sel = pafs.FileSelector(f"{base}/{_COMPACT_MARKER_DIR}",
-                            allow_not_found=True)
-    found = bool(filesystem.get_file_info(sel))
-    if found:
-        _seen_compactions.add(base)
-    return found
+def _utc(t) -> datetime.datetime:
+    """A timestamp as an aware UTC datetime; naive ones are local time."""
+    import pandas as pd
+    return pd.Timestamp(t).to_pydatetime().astimezone(datetime.timezone.utc)
 
 
-def _write_compaction_marker(out_dir: str, run_id: str) -> None:
-    filesystem, base = _table_fs(out_dir)
-    filesystem.create_dir(f"{base}/{_COMPACT_MARKER_DIR}", recursive=True)
-    with filesystem.open_output_stream(
-            f"{base}/{_COMPACT_MARKER_DIR}/{run_id}") as f:
-        f.write(run_id.encode())
-    _seen_compactions.add(base)
+def _active(rows: list[dict], out_dir: str, as_of=None) -> dict[str, dict]:
+    """stripe id -> its 'ok' lineage row, for every stripe visible now:
+    published and not tombstoned. With ``as_of`` — a run_id (inclusive of
+    that run's commit) or a timestamp — for the table as it stood then;
+    raises ValueError when that snapshot needs a run whose bytes
+    expire_snapshots freed. A run fully tombstoned by the cutoff
+    contributes nothing, so post-compaction snapshots stay readable after
+    expiry."""
+    if as_of is not None:
+        if isinstance(as_of, str):
+            times = [r["committed_at"] for r in rows
+                     if r["run_id"] == as_of and r["status"] != "expired"]
+            if not times:
+                raise ValueError(f"as_of run {as_of!r} not in lineage "
+                                 f"of {out_dir}")
+            cut = max(times)
+        else:
+            cut = _utc(as_of)
+        expired = {r["run_id"] for r in rows if r["status"] == "expired"}
+        rows = [r for r in rows if r["committed_at"] <= cut]
+    dead = {r["stripe_id"] for r in rows if r["status"] == "compacted"}
+    live = [r for r in rows if r["status"] == "ok"
+            and r["stripe_id"] not in dead]
+    if as_of is not None:
+        hit = next((r["run_id"] for r in live if r["run_id"] in expired),
+                   None)
+        if hit is not None:
+            raise ValueError(
+                f"as_of={as_of!r} snapshot of {out_dir} needs expired run "
+                f"{hit!r} — its bytes were freed by expire_snapshots; that "
+                "window is gone")
+    return {r["stripe_id"]: r for r in live}
+
+
+def active_stripe_ids(spark: SparkSession, out_dir: str,
+                      as_of=None) -> set[str]:
+    """Ids of the stripes visible in the current snapshot, or ``as_of``
+    (see _active); read on the driver, no Spark job."""
+    return set(_active(_log(out_dir)[0], out_dir, as_of))
 
 
 def snapshots(spark: SparkSession, out_dir: str) -> DataFrame:
     """Per-run commit history (the Iceberg snapshot-list analog): one row
     per (run_id, status) with its commit time and stripe/row/byte totals,
     oldest first. 'ok' rows are publishes, 'compacted' rows are the same
-    run's tombstones."""
-    lineage = spark.read.parquet(f"{out_dir}/lineage")
-    return (lineage.groupBy("run_id", "status")
-            .agg(F.min("committed_at").alias("committed_at"),
-                 F.count("*").alias("n_stripes"),
-                 F.sum("n_rows").alias("n_rows"),
-                 F.sum("enc_bytes").alias("enc_bytes"))
-            .orderBy("committed_at", "run_id", "status"))
-
-
-def active_stripe_ids(spark: SparkSession, out_dir: str,
-                      as_of=None) -> DataFrame | None:
-    """Stripe ids visible in the current snapshot — or, with ``as_of``, in
-    the table as it stood at that point: a run_id string (inclusive of that
-    run's commit) or anything castable to timestamp. None when the table
-    has no lineage (fresh dir: nothing to resolve)."""
-    try:
-        lineage = spark.read.parquet(f"{out_dir}/lineage")
-    except Exception:
-        if as_of is not None:
-            raise ValueError(
-                f"as_of={as_of!r} on {out_dir}: no lineage table — "
-                "time travel needs commit()-written history")
-        return None
-    if as_of is not None:
-        if isinstance(as_of, str):
-            cut = (lineage.filter(F.col("run_id") == as_of)
-                   .agg(F.max("committed_at")).collect()[0][0])
-            if cut is None:
-                raise ValueError(f"as_of run {as_of!r} not in lineage "
-                                 f"of {out_dir}")
-        else:
-            cut = as_of
-        lineage = lineage.filter(F.col("committed_at") <= F.lit(cut))
-    ok = (lineage.filter(F.col("status") == "ok")
-          .select("stripe_id", "run_id").distinct())
-    dead = (lineage.filter(F.col("status") == "compacted")
-            .select("stripe_id").distinct())
-    active = ok.join(dead, "stripe_id", "left_anti")
-    if as_of is not None:
-        expired = _expired_runs(out_dir)
-        if expired:
-            # refuse only when the snapshot actually NEEDS an expired
-            # run's bytes — i.e. one of its stripes is still ACTIVE at the
-            # cutoff. A run fully tombstoned by then contributes nothing
-            # (its rows live in the compacted stripes), so post-compaction
-            # snapshots stay readable after expiry.
-            hit = (active.filter(F.col("run_id").isin(list(expired)))
-                   .select("run_id").first())
-            if hit is not None:
-                raise ValueError(
-                    f"as_of={as_of!r} snapshot of {out_dir} needs "
-                    f"expired run {hit['run_id']!r} — its bytes were "
-                    "freed by expire_snapshots; that window is gone")
-    return active.select("stripe_id").distinct()
-
-
-def _layout_params(lineage: DataFrame) -> dict:
-    """The table's layout params from its most recent parameterized commit
-    (commit() records them on every lineage row)."""
-    prow = (lineage.filter((F.col("status") == "ok")
-                           & F.col("p_n_buckets").isNotNull())
-            .orderBy(F.desc("committed_at")).first())
-    if prow is None:
-        raise ValueError("lineage records no layout params "
-                         "(pre-param table) — cannot compact safely")
-    blooms = (prow["p_bloom_cols"].split(",")
-              if prow["p_bloom_cols"] else [])
-    return {"n_buckets": int(prow["p_n_buckets"]),
-            "stripe_rows": int(prow["p_stripe_rows"]),
-            "key_col": prow["p_key_col"],
-            "order_col": prow["p_order_col"],
-            "index_rows": (None if prow["p_index_rows"] in (None, -1)
-                           else int(prow["p_index_rows"])),
-            "bloom_cols": blooms,
-            "sort_keys": (prow["p_sort_keys"].split(",")
-                          if "p_sort_keys" in prow.__fields__
-                          and prow["p_sort_keys"] else None)}
-
-
-def _assert_no_compaction_conflict(spark: SparkSession, out_dir: str,
-                                   victims: DataFrame) -> None:
-    """Raise if any victim stripe is ALREADY tombstoned in lineage — i.e. a
-    concurrent compaction published against the same victims while this one
-    was rewriting them (this run has not appended yet, so any tombstone on
-    a victim is another writer's). See the call site in compact_job."""
-    hit = (spark.read.parquet(f"{out_dir}/lineage")
-           .filter(F.col("status") == "compacted")
-           .join(victims, "stripe_id", "left_semi")
-           .select("stripe_id").first())
-    if hit is not None:
-        raise RuntimeError(
-            f"concurrent compaction conflict on {out_dir}: victim stripe "
-            f"{hit['stripe_id']!r} was tombstoned by another run after "
-            "victim selection; aborting without publishing (this run's "
-            "bytes remain invisible orphans) — rerun compact_job")
+    run's tombstones, 'expired' rows the stripes whose bytes
+    expire_snapshots freed. Built from the driver's read of the lineage
+    (a local relation: no Spark job)."""
+    import pandas as pd
+    log = pd.DataFrame(_log(out_dir)[0], columns=LINEAGE_SCHEMA.names)
+    snaps = (log.groupby(["run_id", "status"], as_index=False)
+             .agg(committed_at=("committed_at", "min"),
+                  n_stripes=("stripe_id", "size"),
+                  n_rows=("n_rows", "sum"), enc_bytes=("enc_bytes", "sum"))
+             .sort_values(["committed_at", "run_id", "status"]))
+    return spark.createDataFrame(
+        snaps, "run_id string, status string, committed_at timestamp, "
+               "n_stripes long, n_rows long, enc_bytes long")
 
 
 def compact_job(spark: SparkSession, out_dir: str) -> dict:
@@ -1543,99 +1622,50 @@ def compact_job(spark: SparkSession, out_dir: str) -> dict:
     decode, re-encode at the table's recorded layout params (same bucket
     hash, same order salt — the merged layout is exactly what a batch
     encode of the union would produce), land under a fresh ``c...`` run
-    prefix (ids can never collide with live ids), and ONE lineage append
-    publishes the new stripes and tombstones the old in the same job.
+    prefix (ids can never collide with live ids), and ONE log version
+    publishes the new stripes and tombstones the old.
 
-    Crash windows: the ``_compactions`` marker is written BEFORE any new
-    bytes, so from that point every decode resolves visibility through the
-    lineage active set — a compaction that dies after writing stripes but
-    before the lineage append leaves only invisible orphan bytes, and
-    rerunning compact_job (fresh run id) completes the work. Old snapshots
-    remain readable: decode_job(as_of=<pre-compaction run>) sees the
-    original stripes (tombstones commit later than the cutoff)."""
-    lineage = spark.read.parquet(f"{out_dir}/lineage")
-    params = _layout_params(lineage)
-    act = active_stripe_ids(spark, out_dir)
-    manifest, kinds = _open_manifest(spark, out_dir)
-    # the active manifest feeds the slot scan, the victims' decode plan and
-    # the tombstone rows; persist so the lineage-resolution joins behind it
-    # run once
-    from pyspark import StorageLevel
-    man = (manifest.dropDuplicates(["stripe_id"])
-           .join(act, "stripe_id", "left_semi")
-           .persist(StorageLevel.MEMORY_AND_DISK))
-    slots = (man.select("stripe_id", "bucket",
-                        F.regexp_extract("stripe_id", r"-(\d{6,})$", 1)
-                        .alias("salt"))
-             .groupBy("bucket", "salt")
-             .agg(F.collect_list("stripe_id").alias("sids"))
-             .where(F.size("sids") >= 2))
-    victims = slots.select(F.explode("sids").alias("stripe_id"))
-    # victims feeds three consumers (this count, the decode plan, the
-    # tombstone rows) — persist the skinny id list so the manifest/lineage
-    # scan behind it runs once
-    victims = victims.persist(StorageLevel.MEMORY_AND_DISK)
-    n_victims = victims.count()
-    if n_victims == 0:
-        victims.unpersist()
-        man.unpersist()
+    The slot scan, victims and tombstones come from the driver's read of
+    the lineage; nothing to compact runs no Spark job. A compaction that
+    dies before its log version leaves only invisible orphan bytes, and
+    rerunning compact_job (fresh run id) completes the work. One that
+    loses its log version to a concurrent compaction of the same victims
+    raises RuntimeError. Old snapshots remain readable:
+    decode_job(as_of=<pre-compaction run>) sees the original stripes
+    (tombstones commit later than the cutoff)."""
+    import pyarrow.compute as pc
+    log = _log(out_dir)
+    params = _layout_params(log[0], out_dir)
+    active = _active(log[0], out_dir)
+    slots: dict[tuple, list[str]] = {}
+    for sid, r in sorted(active.items()):
+        salt = re.search(r"-(\d{6,})$", sid)
+        slots.setdefault((r["bucket"], salt and salt.group(1)),
+                         []).append(sid)
+    victims = [sid for sids in slots.values() if len(sids) >= 2
+               for sid in sids]
+    if not victims:
         return {"run_id": None, "compacted_stripes": 0, "new_stripes": 0}
     run_id = "c" + uuid.uuid4().hex[:11]
-    _write_compaction_marker(out_dir, run_id)
-
-    victim_man = man.join(victims, "stripe_id", "left_semi")
-    df = _decode_files(spark, out_dir, victim_man,
-                       *_schema_from_kinds(kinds, None))
+    dset, kinds = _manifest(out_dir)
+    paths = dset.to_table(columns=["stripe_id", "path"],
+                          filter=pc.field("stripe_id").isin(victims))
+    df = _decode_files(spark, out_dir, zip(paths["stripe_id"].to_pylist(),
+                                           paths["path"].to_pylist()),
+                       active, *_schema_from_kinds(kinds, None))
     new_stripes = encode_dataframe(
         df, params["key_col"], params["order_col"],
-        sort_keys=params.get("sort_keys"),
+        sort_keys=params["sort_keys"],
         stripe_rows=params["stripe_rows"], n_buckets=params["n_buckets"],
         index_rows=params["index_rows"], bloom_cols=params["bloom_cols"],
         stripe_prefix=f"{run_id}-")
-    try:
-        with _write_run(spark, new_stripes, out_dir, run_id,
-                        params["key_col"],
-                        params["order_col"]) as new_manifest:
-            ok_rows = _lineage_from_manifest(new_manifest, run_id, params)
-            dead_rows = (_lineage_from_manifest(victim_man, run_id, params)
-                         .withColumn("status", F.lit("compacted")))
-            # optimistic conflict detection (round-5 advice): a CONCURRENT
-            # compactor (another driver, or a manual run racing the
-            # stream's compact_every) may have selected the same victims
-            # and published first — its merged stripes already carry these
-            # rows, so publishing ours too would duplicate every compacted
-            # row in all subsequent decodes. Re-read lineage at the last
-            # moment and abort loudly; everything this run wrote stays
-            # invisible (never published), exactly like a crash orphan,
-            # and rerunning compact_job picks up whatever genuinely
-            # remains fragmented. The check-then-append window is not zero
-            # (object stores have no cross-writer CAS on parquet appends)
-            # but shrinks the race from the whole rewrite job to one
-            # driver round-trip; the documented deployment assumption
-            # stays one maintenance writer per table.
-            _assert_no_compaction_conflict(spark, out_dir, victims)
-            # ONE append job publishes + tombstones together (both sides
-            # share the query's current_timestamp, so an as_of cutoff can
-            # never split them)
-            ok_rows.unionByName(dead_rows).write.mode("append") \
-                .parquet(f"{out_dir}/lineage")
-            n_new = new_manifest.count()
-    finally:
-        victims.unpersist()
-        man.unpersist()
-    return {"run_id": run_id, "compacted_stripes": int(n_victims),
-            "new_stripes": int(n_new)}
-
-
-_EXPIRED_MARKER_DIR = "_expired"
-
-
-def _expired_runs(out_dir: str) -> set[str]:
-    from pyarrow import fs as pafs
-    filesystem, base = _table_fs(out_dir)
-    sel = pafs.FileSelector(f"{base}/{_EXPIRED_MARKER_DIR}",
-                            allow_not_found=True)
-    return {info.base_name for info in filesystem.get_file_info(sel)}
+    after = _commit(spark, new_stripes, out_dir, params["key_col"],
+                    params["order_col"], run_id, params, log,
+                    _lineage_rows([active[s] for s in victims], "compacted",
+                                  run_id, params))
+    return {"run_id": run_id, "compacted_stripes": len(victims),
+            "new_stripes": sum(r["run_id"] == run_id and r["status"] == "ok"
+                               for r in after)}
 
 
 def expire_snapshots(spark: SparkSession, out_dir: str,
@@ -1649,43 +1679,35 @@ def expire_snapshots(spark: SparkSession, out_dir: str,
 
     Irreversible for time travel: snapshots that included an expired run
     can no longer be reconstructed, and decode_job(as_of=...) into that
-    window raises instead of silently returning partial data (the
-    ``_expired`` marker is written BEFORE any bytes are deleted, so a
-    crash mid-delete still errs on the loud side). Lineage and manifest
-    rows are never deleted — history and stats stay queryable."""
-    lineage = spark.read.parquet(f"{out_dir}/lineage")
-    ok_ids = (lineage.filter(F.col("status") == "ok")
-              .select("run_id", "stripe_id").distinct())
-    dead = (lineage.filter(F.col("status") == "compacted")
-            .select("stripe_id").distinct())
-    live_runs = {r["run_id"] for r in
-                 ok_ids.join(dead, "stripe_id", "left_anti")
-                 .select("run_id").distinct().collect()}
-    run_times = {r["run_id"]: r["t"] for r in
-                 lineage.filter(F.col("status") == "ok")
-                 .groupBy("run_id").agg(F.max("committed_at").alias("t"))
-                 .collect()}
-    already = _expired_runs(out_dir)
-    expirable = [rid for rid in run_times
-                 if rid not in live_runs and rid not in already
-                 and (older_than is None or run_times[rid] <= older_than)]
-    if not expirable:
+    window raises instead of silently returning partial data. The
+    'expired' lineage rows are committed BEFORE any bytes are deleted, so
+    a crash mid-delete still errs on the loud side. No lineage or manifest
+    row is ever deleted — history and stats stay queryable."""
+    rows, version = _log(out_dir)
+    dead = {r["stripe_id"] for r in rows if r["status"] == "compacted"}
+    ok = sorted((r for r in rows if r["status"] == "ok"),
+                key=lambda r: r["committed_at"])
+    live = {r["run_id"] for r in ok if r["stripe_id"] not in dead}
+    done = {r["run_id"] for r in rows if r["status"] == "expired"}
+    times = {r["run_id"]: r["committed_at"] for r in ok}  # latest wins
+    cut = None if older_than is None else _utc(older_than)
+    runs = sorted(rid for rid, t in times.items()
+                  if rid not in live and rid not in done
+                  and (cut is None or t <= cut))
+    if not runs:
         return {"expired_runs": [], "bytes_freed_approx": 0}
-    freed = (spark.read.parquet(f"{out_dir}/manifest")
-             .join(ok_ids.filter(F.col("run_id").isin(expirable))
-                   .select("stripe_id").distinct(), "stripe_id", "left_semi")
-             .agg(F.sum("enc_bytes")).collect()[0][0] or 0)
+    stripes = {(r["run_id"], r["stripe_id"]): r for r in ok
+               if r["run_id"] in runs}
+    freed = sum({r["stripe_id"]: r["enc_bytes"] or 0
+                 for r in stripes.values()}.values())
+    # the log version FIRST: a crash before the deletes leaves runs that
+    # time travel refuses (loud) rather than half-reads (silent)
+    _publish(out_dir, [dict(r, status="expired") for r in stripes.values()],
+             (rows, version))
     filesystem, base = _table_fs(out_dir)
-    filesystem.create_dir(f"{base}/{_EXPIRED_MARKER_DIR}", recursive=True)
-    for rid in expirable:
-        # marker FIRST: a crash between marker and delete leaves a run
-        # that time travel refuses (loud) rather than half-reads (silent)
-        with filesystem.open_output_stream(
-                f"{base}/{_EXPIRED_MARKER_DIR}/{rid}") as f:
-            f.write(rid.encode())
+    for rid in runs:
         try:
             filesystem.delete_dir(f"{base}/stripes/run={rid}")
         except FileNotFoundError:
             pass
-    return {"expired_runs": sorted(expirable),
-            "bytes_freed_approx": int(freed)}
+    return {"expired_runs": runs, "bytes_freed_approx": int(freed)}

@@ -35,6 +35,11 @@ def main() -> None:
               "  exactly that partition — deterministic round-robin balance,\n"
               "  see pipeline._partition_probes), a partition-local Sort, then\n"
               "  the Arrow UDF — no other shuffles.\n"
+              "- encode_job: the same Exchange and Sort, then TWO\n"
+              "  `MapInArrow` in one stage: the encode kernel, then the\n"
+              "  write kernel that writes each task's stripes to one file\n"
+              "  and yields their manifest rows — the one job the driver\n"
+              "  collects before it creates the next lineage version.\n"
               "- decode_dataframe over stripe rows: `PushedFilters`\n"
               "  containing `In(col_name, ...)` at the parquet scan\n"
               "  (projection pushdown into the stripes table), one Exchange\n"
@@ -63,6 +68,21 @@ def main() -> None:
                   "whole-stage-codegen Project (transform/map_keys/map_values\n"
                   "leaf expressions) BEFORE the same single Exchange — nesting\n"
                   "adds zero shuffles.\n\n```\n" + plan_of(rich) + "\n```\n\n")
+
+        # the frame encode_job's commit collects: encode_dataframe under
+        # the write kernel (nothing committed yet, so nothing skipped)
+        written = pipeline._write_stripes(
+            pipeline.encode_dataframe(df, "conv_id", "turn_idx",
+                                      stripe_rows=2000,
+                                      bloom_cols=["conv_id"]),
+            f"{d}/plan_only", "r0", "conv_id", "turn_idx", set())
+        out.write("## encode_job (encode, then the commit's write kernel)\n\n"
+                  "What to look for: `Exchange` -> `Sort` -> `MapInArrow`\n"
+                  "(encode) -> `MapInArrow` (write), all after the one\n"
+                  "Exchange: the stripe rows go from the encode kernel to\n"
+                  "the write kernel inside the stage, each task writes its\n"
+                  "own stripe file, and only the small manifest rows reach\n"
+                  "the driver.\n\n```\n" + plan_of(written) + "\n```\n\n")
 
         pipeline.encode_job(spark, df, d, stripe_rows=2000)
         loaded = spark.read.parquet(f"{d}/stripes")

@@ -5,8 +5,8 @@ Usage:
         scripts/submit_encode.py <input_parquet> <out_dir> \
         [--key conv_id] [--order turn_idx] [--stripe-rows 65536]
 
-Resumable: rerunning with the same out_dir anti-joins the lineage table and
-encodes only missing stripes.
+Resumable: rerunning with the same out_dir commits only the stripes the
+table's lineage does not hold yet.
 """
 
 from __future__ import annotations

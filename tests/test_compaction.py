@@ -3,6 +3,8 @@ its Iceberg-style fix. Everything is append-only — compaction only moves
 stripe VISIBILITY (lineage tombstones), so every earlier snapshot stays
 readable via decode_job(as_of=...)."""
 
+import os
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -33,17 +35,31 @@ def _sorted_pdf(sdf, cols):
             .reset_index(drop=True))
 
 
+def _streamed_table(spark, tmp_path, n_convs, seed, n_files, n_buckets):
+    """(input, table dir) of a stream that encoded ``n_files`` input files
+    two per micro-batch: several runs, fragmented slots."""
+    src, out, ckpt = (str(tmp_path / d) for d in ("src", "enc", "ckpt"))
+    df = transcripts.generate(spark, n_convs=n_convs, seed=seed)
+    df.cache().count()
+    df.repartition(n_files).write.parquet(src)
+    stream = streaming.read_transcripts_stream(spark, src,
+                                               max_files_per_trigger=2)
+    streaming.encode_stream(stream, out, ckpt, stripe_rows=500,
+                            n_buckets=n_buckets).awaitTermination(300)
+    return df, out
+
+
 def test_compact_job_merges_and_roundtrips(spark, fragmented):
     df, out = fragmented
     cols = df.columns
-    before_active = pipeline.active_stripe_ids(spark, out).count()
+    before_active = len(pipeline.active_stripe_ids(spark, out))
     exp = _sorted_pdf(df, cols)
 
     res = pipeline.compact_job(spark, out)
     assert res["compacted_stripes"] >= 2
     assert 0 < res["new_stripes"] < res["compacted_stripes"]
 
-    after_active = pipeline.active_stripe_ids(spark, out).count()
+    after_active = len(pipeline.active_stripe_ids(spark, out))
     assert after_active < before_active
 
     # decode_job and its alias: exact same rows, one copy each
@@ -97,36 +113,45 @@ def test_time_travel_reads_pre_compaction_snapshot(spark, fragmented):
         pipeline.decode_job(spark, out, as_of="no-such-run").count()
 
 
-def test_crashed_compaction_orphans_stay_invisible(spark, fragmented):
-    """A compaction that died after writing stripes but before the lineage
-    append leaves only invisible bytes: the marker forces every decode
-    through the lineage active set, which has no rows for the orphan run."""
-    df, out = fragmented
+def test_crashed_compaction_orphans_stay_invisible(spark, tmp_path,
+                                                  monkeypatch):
+    """A compaction that died after writing its stripes and manifest rows
+    but before its lineage version leaves only invisible bytes: decode
+    resolves visibility through the lineage, which has no rows for the
+    orphan run. Rerunning compact_job completes the work."""
+    df, out = _streamed_table(spark, tmp_path, 40, 23, 4, 4)
     cols = df.columns
-    pipeline.compact_job(spark, out)
     exp = _sorted_pdf(pipeline.decode_job(spark, out), cols)
-    # simulate the crash: stripes land under a c-run dir, no lineage rows
-    orphan_run = "cdeadbeef000"
-    act = pipeline.active_stripe_ids(spark, out)
-    some = (pipeline.read_stripes(spark, out)
-            .join(act, "stripe_id", "left_semi").limit(50)
-            .withColumn("stripe_id", F.concat(F.lit("x-"),
-                                              F.col("stripe_id"))))
-    some.write.mode("append").parquet(f"{out}/stripes/run={orphan_run}")
-    pipeline._write_compaction_marker(out, orphan_run)
-    got = _sorted_pdf(pipeline.decode_job(spark, out), cols)
-    pd.testing.assert_frame_equal(exp, got, check_dtype=False)
-    gotc = _sorted_pdf(pipeline.decode_job_clustered(spark, out), cols)
-    pd.testing.assert_frame_equal(exp, gotc, check_dtype=False)
+    snaps = pipeline.snapshots(spark, out).collect()
+
+    def crash(*args):
+        raise OSError("driver died before the lineage version")
+
+    monkeypatch.setattr(pipeline, "_create_version", crash)
+    with pytest.raises(OSError, match="driver died"):
+        pipeline.compact_job(spark, out)
+    monkeypatch.undo()
+    orphans = [d for d in os.listdir(f"{out}/stripes")
+               if d.startswith("run=c")]
+    assert len(orphans) == 1  # the crashed run's bytes are on disk
+    assert pipeline.snapshots(spark, out).collect() == snaps
+    for dec in (pipeline.decode_job(spark, out),
+                pipeline.decode_job_clustered(spark, out)):
+        pd.testing.assert_frame_equal(exp, _sorted_pdf(dec, cols),
+                                      check_dtype=False)
+    res = pipeline.compact_job(spark, out)
+    assert res["compacted_stripes"] > 0
+    pd.testing.assert_frame_equal(
+        exp, _sorted_pdf(pipeline.decode_job(spark, out), cols),
+        check_dtype=False)
 
 
 def test_stream_replay_after_compaction_is_noop(spark, fragmented):
     """Replaying the SAME source through a fresh stream checkpoint derives
-    the same b<batch>- stripe ids; the lineage anti-join (original 'ok'
-    rows survive compaction) keeps every replayed batch's DATA out of the
-    table. Replay may re-append metadata rows for already-known ids (the
-    documented crash-window behavior, collapsed by per-id dedupe) — the
-    invariants are the distinct active/ok id sets and the decoded rows."""
+    the same b<batch>- stripe ids; commit skips the ids the lineage holds
+    (original 'ok' rows survive compaction), so every replayed batch
+    publishes nothing — the invariants are the distinct active/ok id sets
+    and the decoded rows."""
     df, out = fragmented
     cols = df.columns
     pipeline.compact_job(spark, out)
@@ -135,8 +160,7 @@ def test_stream_replay_after_compaction_is_noop(spark, fragmented):
         r["stripe_id"] for r in spark.read.parquet(f"{out}/lineage")
         .filter(F.col("status") == "ok").select("stripe_id")
         .distinct().collect())
-    active_before = pipeline.active_stripe_ids(spark, out).count()
-    import os
+    active_before = len(pipeline.active_stripe_ids(spark, out))
     src = os.path.join(os.path.dirname(out), "src")
     ckpt2 = os.path.join(os.path.dirname(out), "ckpt_replay")
     stream = streaming.read_transcripts_stream(spark, src,
@@ -149,7 +173,7 @@ def test_stream_replay_after_compaction_is_noop(spark, fragmented):
         .filter(F.col("status") == "ok").select("stripe_id")
         .distinct().collect())
     assert ok_ids_after == ok_ids_before, "replay must mint no new ids"
-    assert pipeline.active_stripe_ids(spark, out).count() == active_before
+    assert len(pipeline.active_stripe_ids(spark, out)) == active_before
     got = _sorted_pdf(pipeline.decode_job(spark, out), cols)
     pd.testing.assert_frame_equal(exp, got, check_dtype=False)
 
@@ -166,13 +190,14 @@ def test_stream_auto_compaction(spark, tmp_path):
     q = streaming.encode_stream(stream, out, ckpt, stripe_rows=500,
                                 n_buckets=5, compact_every=2)
     q.awaitTermination(300)
-    assert pipeline.has_compactions(out)
+    assert [s for s in pipeline.snapshots(spark, out).collect()
+            if s["status"] == "compacted"]
     # post-stream state: at most one leftover uncompacted batch run, so
     # every slot holds <= 2 active stripes; a final compact settles to 1
     pipeline.compact_job(spark, out)
     act = pipeline.active_stripe_ids(spark, out)
-    man = pipeline.read_manifest(spark, out).join(act, "stripe_id",
-                                                  "left_semi")
+    man = pipeline.read_manifest(spark, out).filter(
+        F.col("stripe_id").isin(sorted(act)))
     slots = (man.select(F.regexp_extract("stripe_id", r"-(\d{6,})$", 1)
                         .alias("salt"), "bucket")
              .groupBy("bucket", "salt").count())
@@ -187,15 +212,7 @@ def test_expire_snapshots_frees_superseded_runs(spark, tmp_path):
     tombstoned: current decode is unchanged, disk shrinks, and time travel
     into the expired window raises loudly instead of returning partial
     rows."""
-    import os
-    src, out, ckpt = (str(tmp_path / d) for d in ("src", "enc", "ckpt"))
-    df = transcripts.generate(spark, n_convs=60, seed=41)
-    df.cache().count()
-    df.repartition(6).write.parquet(src)
-    stream = streaming.read_transcripts_stream(spark, src,
-                                               max_files_per_trigger=2)
-    streaming.encode_stream(stream, out, ckpt, stripe_rows=500,
-                            n_buckets=5).awaitTermination(300)
+    df, out = _streamed_table(spark, tmp_path, 60, 41, 6, 5)
     pipeline.compact_job(spark, out)
     exp = _sorted_pdf(pipeline.decode_job(spark, out), df.columns)
     snaps = pipeline.snapshots(spark, out).collect()
@@ -235,14 +252,7 @@ def test_post_compaction_snapshot_survives_expiry(spark, tmp_path):
     snapshots that never needed its bytes: as_of the compaction run (and
     the current snapshot) stay readable; only the pre-compaction window
     raises."""
-    src, out, ckpt = (str(tmp_path / d) for d in ("src", "enc", "ckpt"))
-    df = transcripts.generate(spark, n_convs=40, seed=51)
-    df.cache().count()
-    df.repartition(4).write.parquet(src)
-    stream = streaming.read_transcripts_stream(spark, src,
-                                               max_files_per_trigger=2)
-    streaming.encode_stream(stream, out, ckpt, stripe_rows=500,
-                            n_buckets=4).awaitTermination(300)
+    df, out = _streamed_table(spark, tmp_path, 40, 51, 4, 4)
     res = pipeline.compact_job(spark, out)
     pipeline.expire_snapshots(spark, out)
     exp = _sorted_pdf(df.selectExpr("*"), df.columns)
@@ -258,11 +268,40 @@ def test_post_compaction_snapshot_survives_expiry(spark, tmp_path):
         pipeline.decode_job(spark, out, as_of=pre).count()
 
 
+def test_as_of_into_a_window_expired_by_a_marker(spark, tmp_path):
+    """Runs expired before expiry was recorded in the lineage left an
+    ``_expired/<run>`` marker, now ignored, and no 'expired' rows. as_of
+    into such a window plans the deleted files and the decode fails on
+    the first missing one; the current snapshot reads as before. One
+    expire_snapshots call records the expiry, and as_of then refuses on
+    the driver as for any expired run."""
+    import shutil
+    df, out = _streamed_table(spark, tmp_path, 40, 53, 4, 4)
+    pipeline.compact_job(spark, out)
+    exp = _sorted_pdf(pipeline.decode_job(spark, out), df.columns)
+    first = [s["run_id"] for s in pipeline.snapshots(spark, out).collect()
+             if s["run_id"].startswith("stream-")][0]
+    # what expire_snapshots did to a run before it wrote lineage rows
+    shutil.rmtree(f"{out}/stripes/run={first}")
+    os.makedirs(f"{out}/_expired")
+    with open(f"{out}/_expired/{first}", "w") as f:
+        f.write(first)
+    pd.testing.assert_frame_equal(
+        exp, _sorted_pdf(pipeline.decode_job(spark, out), df.columns),
+        check_dtype=False)
+    missing = f"FileNotFoundError: .*run={first}/"
+    with pytest.raises(Exception, match=missing):
+        pipeline.decode_job(spark, out, as_of=first).count()
+    assert first in pipeline.expire_snapshots(spark, out)["expired_runs"]
+    with pytest.raises(ValueError, match="expired"):
+        pipeline.decode_job(spark, out, as_of=first)
+
+
 def test_unresolvable_uri_scheme_raises():
     """s3a:// / abfss:// (schemes pyarrow can't resolve) must raise, not
-    silently write markers/meta to a local dir named after the URI —
-    another driver would then see the table as never-compacted and decode
-    tombstoned stripes."""
+    silently read or write a local dir named after the URI — the table
+    would then read as fresh (an empty lineage) or an index's meta would
+    go missing."""
     with pytest.raises(ValueError, match="scheme"):
         pipeline._table_fs("s3a://bucket/table")
     with pytest.raises(ValueError, match="scheme"):
@@ -280,8 +319,8 @@ def test_compaction_records_and_replays_sort_keys(spark, tmp_path):
     pipeline.encode_job(spark, df, out, key_col="conv_id",
                         order_col="turn_idx", sort_keys=["ts"],
                         stripe_rows=500, n_buckets=3)
-    lineage = spark.read.parquet(f"{out}/lineage")
-    assert pipeline._layout_params(lineage)["sort_keys"] == ["ts"]
+    lineage = pipeline._log(out)[0]
+    assert pipeline._layout_params(lineage, out)["sort_keys"] == ["ts"]
     # resuming with different sort keys is refused (stripe bytes depend
     # on physical order — a silent change breaks re-encode idempotency)
     with pytest.raises(ValueError, match="sort_keys"):
@@ -290,16 +329,13 @@ def test_compaction_records_and_replays_sort_keys(spark, tmp_path):
                             stripe_rows=500, n_buckets=3)
 
 
-def test_concurrent_compaction_conflict_raises(spark, tmp_path):
-    """Two compactions racing on the same victims: the loser must abort
-    before publishing instead of silently duplicating every compacted row
-    (round-5 advice). The guard is exercised directly: after one
-    compaction has tombstoned a set of stripes, a second writer holding
-    those same stripes as victims must raise; victims that are still
-    active pass."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-
+def test_concurrent_compaction_conflict_raises(spark, tmp_path,
+                                              monkeypatch):
+    """Two compactions racing on the same victims: compactor A runs to the
+    end inside compactor B's write window (after B wrote its stripes,
+    before B creates its lineage version). B loses the version, sees A's
+    tombstones on its victims and must abort instead of silently
+    duplicating every compacted row."""
     out = str(tmp_path / "tbl")
     df = spark.createDataFrame(pd.DataFrame({
         "conv_id": [f"c{i % 7}" for i in range(400)],
@@ -317,25 +353,23 @@ def test_concurrent_compaction_conflict_raises(spark, tmp_path):
             stripe_prefix=f"b{k:08d}-")
         pipeline.commit(spark, s, out, "conv_id", None,
                         run_id=f"batch-{k}", params=params)
-    # compactor A wins: selects and tombstones the fragmented slots
-    lineage = spark.read.parquet(f"{out}/lineage")
-    pre_victims = (spark.read.parquet(f"{out}/lineage")
-                   .filter(F.col("status") == "ok")
-                   .select("stripe_id").distinct())
-    res = pipeline.compact_job(spark, out)
-    assert res["compacted_stripes"] > 0
+    create = pipeline._create_version
+    won = []
 
-    # compactor B held the SAME victims (selected before A published):
-    # the guard must refuse to publish
-    import pytest as _pytest
-    with _pytest.raises(RuntimeError, match="concurrent compaction"):
-        pipeline._assert_no_compaction_conflict(spark, out, pre_victims)
+    def race(*args):
+        monkeypatch.setattr(pipeline, "_create_version", create)
+        won.append(pipeline.compact_job(spark, out))  # compactor A
+        return create(*args)                          # compactor B
 
-    # victims still active (the post-compaction stripes) pass the guard
-    act = pipeline.active_stripe_ids(spark, out)
-    pipeline._assert_no_compaction_conflict(spark, out, act)
+    monkeypatch.setattr(pipeline, "_create_version", race)
+    with pytest.raises(RuntimeError, match="concurrent compaction"):
+        pipeline.compact_job(spark, out)
+    assert won[0]["compacted_stripes"] > 0
+    snaps = pipeline.snapshots(spark, out).collect()
+    assert [s["run_id"] for s in snaps if s["status"] == "compacted"] == [
+        won[0]["run_id"]]
 
-    # and the table still decodes exactly one copy of every row
+    # the table still decodes exactly one copy of every row
     dec = pipeline.decode_job(spark, out).toPandas()
     assert len(dec) == 400
     assert sorted(dec["v"].tolist()) == sorted(df.toPandas()["v"].tolist())

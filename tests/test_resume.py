@@ -84,7 +84,7 @@ def test_deterministic_stripe_bytes_across_reruns(spark, df, tmp_path):
 
 def test_resume_nested_table_idempotent(spark, df, tmp_path):
     """Partial-failure resume over a NESTED table (rich tool_calls): the
-    lineage anti-join and deterministic stripe bytes are schema-agnostic —
+    lineage skip and deterministic stripe bytes are schema-agnostic —
     resume encodes only the missing stripes and decode re-nests."""
     out = str(tmp_path / "rich")
     rich = transcripts.enrich(df)
@@ -112,10 +112,10 @@ def test_resume_nested_table_idempotent(spark, df, tmp_path):
 
 def test_fresh_encode_job_never_reads_lineage(spark, df, tmp_path,
                                               monkeypatch):
-    """A fresh table is recognised by listing ``lineage/`` (hidden
-    ``_``/``.`` entries, such as a crashed append's ``_temporary``, do not
-    count), so encode_job calls no Spark read on it; a resume reads it
-    once."""
+    """The lineage is read on the driver with pyarrow: encode_job (fresh
+    and resumed), commit, decode_job and compact_job call no Spark read on
+    ``lineage/``. Hidden ``_``/``.`` entries, such as a crashed append's
+    ``_temporary``, do not make a table non-fresh."""
     from pyspark.sql.readwriter import DataFrameReader
 
     out = tmp_path / "enc_fresh"
@@ -127,18 +127,26 @@ def test_fresh_encode_job_never_reads_lineage(spark, df, tmp_path,
     parquet = DataFrameReader.parquet
 
     def counting(self, *paths, **options):
-        reads.extend(p for p in paths if str(p).endswith("/lineage"))
+        reads.extend(p for p in paths if "/lineage" in str(p))
         return parquet(self, *paths, **options)
 
     monkeypatch.setattr(DataFrameReader, "parquet", counting)
     stats = pipeline.encode_job(spark, df, str(out), stripe_rows=200,
                                 n_buckets=8)
     assert stats["resumed"] is False
-    assert reads == []
-
     again = pipeline.encode_job(spark, df, str(out), stripe_rows=200,
                                 n_buckets=8)
     assert again["resumed"] is True
-    assert reads == [f"{out}/lineage"]
-    assert (spark.read.parquet(f"{out}/lineage").count()
+    more = transcripts.generate(spark, n_convs=20, seed=12).withColumn(
+        "conv_id", F.concat(F.lit("more-"), F.col("conv_id")))
+    pipeline.commit(spark, pipeline.encode_dataframe(
+        more, "conv_id", "turn_idx", stripe_rows=200, n_buckets=8,
+        stripe_prefix="m-"), str(out), "conv_id", "turn_idx", run_id="more")
+    assert pipeline.decode_job(spark, str(out)).count() == (
+        df.count() + more.count())
+    assert pipeline.compact_job(spark, str(out))["compacted_stripes"] > 0
+    assert reads == []
+    monkeypatch.undo()
+    assert (spark.read.parquet(f"{out}/lineage")
+            .filter(F.col("run_id") == stats["run_id"]).count()
             == stats["n_stripes"])
