@@ -7,8 +7,8 @@ dictionary encoding with sorted dictionaries, integer RLE v2
 floats, string direct encoding, plus FSST symbol-table compression,
 bit-packing and frame-of-reference — all implemented as vectorized numpy
 kernels invoked from Arrow UDFs (``mapInArrow``), with a
-per-stripe codec auto-selector, a footer-style manifest table, per-partition
-lineage/checkpoint records, and salted repartitioning for skew.
+per-stripe codec auto-selector, a versioned lineage log that records each
+stripe's file and footer-style stats, and salted repartitioning for skew.
 
 Layout:
     codecs/    pure-numpy codec kernels (no Spark imports)

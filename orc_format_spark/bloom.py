@@ -3,10 +3,10 @@ keys — the BloomFilter-stream analog (reference src/proto.rs:100-111, an
 unused model there; load-bearing here).
 
 A stripe's key column gets a small bloom over its distinct values; the
-manifest carries it, and a point lookup prunes every stripe whose bloom
-misses — min/max stats only help sorted keys, blooms prune on ANY key
-(conv_id is hash-bucketed, so every stripe spans the full lexicographic
-range and min/max never prunes it).
+stripe's lineage row carries it, and a point lookup prunes every stripe
+whose bloom misses — min/max stats only help sorted keys, blooms prune on
+ANY key (conv_id is hash-bucketed, so every stripe spans the full
+lexicographic range and min/max never prunes it).
 
 Layout: version byte 0xB1, varint k, varint n_bits, bitset bytes
 (little-endian bit order). The version byte pins the HASH SCHEME: blobs
@@ -135,9 +135,9 @@ def _hash_value(value) -> tuple[np.uint64, np.uint64]:
 
 
 def might_contain_many(blobs, value) -> np.ndarray:
-    """Vectorized :func:`might_contain` over a batch of blobs — the
-    manifest-pruning hot path probes one bloom PER MANIFEST ROW (millions
-    of rows at 100 TB), so per-row Python header parses and whole-bitset
+    """Vectorized :func:`might_contain` over a batch of blobs — a point
+    lookup probes one bloom PER ACTIVE STRIPE on the driver (millions of
+    stripes at 100 TB), so per-row Python header parses and whole-bitset
     unpacks don't fly. This hashes the target once, groups blobs by
     (k, n_bits, header_len) — in practice one group, since stripes share
     build parameters — and per group does ONE buffer concat + ONE 2-D

@@ -620,7 +620,7 @@ def _plan_stripes(paths: list[str], predicate=None):
     n_pruned). ``predicate`` = (col_name, op, value) with op in
     {'=', '<=', '>=', 'between'} prunes stripes whose Metadata-section
     ColumnStatistics prove no row can match — the file-level analog of the
-    engine manifest's min/max pruning (values stay exact because the
+    engine's stripe min/max pruning (values stay exact because the
     caller's residual filter still runs on the surviving stripes)."""
     plans = []        # (path, offset, index_len, data_len, footer_len, rows)
     meta = {}         # path -> (compression, types, col_ids, names)

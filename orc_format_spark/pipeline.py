@@ -1,6 +1,7 @@
 """Spark jobs: encode a DataFrame into the stripes table, decode it back,
-and the persistent form: stripe files + manifest, committed through one
-versioned lineage log (resume, snapshots, compaction, expiry).
+and the persistent form: stripe files committed through one versioned
+lineage log, which also records each stripe's file and stats (resume,
+snapshots, compaction, expiry).
 
 Execution model (SURVEY.md §3.4):
 
@@ -13,17 +14,17 @@ Execution model (SURVEY.md §3.4):
       -> stripes rows (one per stripe-column)
     COMMIT (encode_job, streaming batches, compact_job): stripe rows
       -> mapInArrow(skip ids the lineage holds; write the task's stripes
-         to one parquet file; one manifest row per stripe)  [same stage]
-      -> collect the manifest rows: the one job after the shuffle
-      -> driver: one manifest file, then lineage/<version>.parquet created
+         to one parquet file; one facts row per stripe: file, kinds,
+         key/order min-max, key bloom)                      [same stage]
+      -> collect the facts rows: the one job after the shuffle
+      -> driver: lineage/<version>.parquet, their 'ok' rows, created
          exclusively — the commit point
     TABLE QUESTIONS (resume set, layout params, active set, as_of,
-      snapshots, compaction victims, expiry): one pyarrow read of the
-      lineage log on the driver, no Spark job
-    DECODE (decode_job, a persisted table): manifest
-      -> prune stripes (min/max predicate, key bloom)
-      -> collect (stripe_id, path) on the driver, keep the active set;
-         one file per stripe
+      snapshots, compaction victims, expiry, stripe pruning): one pyarrow
+      read of the lineage log on the driver, no Spark job
+    DECODE (decode_job, a persisted table): the log's active 'ok' rows
+      -> prune stripes on the driver (min/max predicate over a local
+         relation, key bloom probe)
       -> local (file, keep-list) rows, one task per file         [no shuffle]
       -> mapInArrow(pyarrow read with col_name/stripe_id pushed to the row
          groups; decode_stripe_arrow per stripe)
@@ -828,51 +829,19 @@ def _schema_from_kinds(by_name: dict[str, str],
 def infer_schema(stripes: DataFrame, columns: list[str] | None = None) -> tuple[T.StructType, list[str]]:
     """Recover the decoded Spark schema from the stripes metadata (tiny job,
     but O(stripe rows) — prefer infer_schema_from_manifest on persisted
-    tables, which reads ONE manifest row)."""
+    tables, which reads the lineage on the driver)."""
     pairs = (stripes.select("col_name", "col_kind").distinct().collect())
     return _schema_from_kinds(
         {r["col_name"]: r["col_kind"] for r in pairs}, columns)
 
 
-_NO_PATHS = ("the manifest of {} lacks stripe file paths: the table was "
-             "written before manifests recorded them — re-encode it")
-
-
-def _manifest(out_dir: str):
-    """(pyarrow dataset, column kinds) of a table's manifest, from one
-    listing on the driver: the kinds come from ONE manifest row's ``kinds``
-    string (vs infer_schema's distinct over every stripe-column row).
-    Raises ValueError for a manifest without the ``path`` column."""
-    import pyarrow.dataset as pads
-    filesystem, base = _table_fs(out_dir)
-    dset = pads.dataset(f"{base}/manifest", filesystem=filesystem,
-                        format="parquet")
-    if "path" not in dset.schema.names:
-        raise ValueError(_NO_PATHS.format(out_dir))
-    head = dset.head(1, columns=["kinds"]).column(0).to_pylist()
-    # FIRST colon: recursive kinds ("list:array_int64") contain colons
-    # themselves; column names never do
-    return dset, (dict(p.split(":", 1) for p in head[0].split(","))
-                  if head else {})
-
-
-def _open_manifest(spark: SparkSession, out_dir: str
-                   ) -> tuple[DataFrame, dict[str, str]]:
-    """(manifest, column kinds) of a persisted table (see _manifest): every
-    written row, crash leftovers included, read with pyarrow's schema, so
-    Spark runs no schema-inference job."""
-    from pyspark.sql.pandas.types import from_arrow_schema
-    dset, kinds = _manifest(out_dir)
-    return (spark.read.schema(from_arrow_schema(dset.schema))
-            .parquet(f"{out_dir}/manifest"), kinds)
-
-
 def infer_schema_from_manifest(spark: SparkSession, out_dir: str,
                                columns: list[str] | None = None
                                ) -> tuple[T.StructType, list[str]]:
-    """Decoded schema of a persisted table, from its manifest's kinds (see
-    _open_manifest)."""
-    return _schema_from_kinds(_open_manifest(spark, out_dir)[1], columns)
+    """Decoded schema of a persisted table, from the ``kinds`` of its
+    lineage's latest 'ok' row (see _head): no Spark job."""
+    return _schema_from_kinds(_kinds(_head(_log(out_dir)[0], out_dir)),
+                              columns)
 
 
 def _arrow_schema(schema: T.StructType):
@@ -995,30 +964,18 @@ def _decode_clustered(stripes: DataFrame, schema: T.StructType,
     return out
 
 
-def _decode_files(spark: SparkSession, out_dir: str, stripes,
-                  active: dict[str, dict], schema: T.StructType,
-                  columns: list[str],
+def _decode_files(spark: SparkSession, out_dir: str, stripes: list[dict],
+                  schema: T.StructType, columns: list[str],
                   stride_range: tuple | None = None) -> DataFrame:
-    """Decode the ``active`` stripes (see _active) among ``stripes``, the
-    (stripe_id, path) manifest rows pruned on the driver. A stripe is read
-    from a file of the run whose lineage row published it (a commit that
-    died before its lineage version may have written it too), the smallest
-    such path when that run wrote it twice. One ``mapInArrow`` task per
-    file, at most one wave per core (``_tasks``), over a local
-    (file, keep-list) relation: no exchange, the stripe bytes never cross
-    the network. Each task reads its file with pyarrow through _table_fs,
-    ``col_name`` and ``stripe_id`` pushed down to the parquet row
-    groups."""
-    owner: dict[str, str] = {}
-    for sid, path in stripes:
-        if path is None:  # a row appended before manifests recorded paths
-            raise ValueError(_NO_PATHS.format(out_dir))
-        if sid in active and path.startswith(
-                f"stripes/run={active[sid]['run_id']}/"):
-            owner[sid] = min(path, owner.get(sid, path))
+    """Decode ``stripes``, 'ok' lineage rows, each from the file its
+    ``path`` names. One ``mapInArrow`` task per file, at most one wave per
+    core (``_tasks``), over a local (file, keep-list) relation: no
+    exchange, the stripe bytes never cross the network. Each task reads
+    its file with pyarrow through _table_fs, ``col_name`` and
+    ``stripe_id`` pushed down to the parquet row groups."""
     by_file: dict[str, list[str]] = {}
-    for sid, path in sorted(owner.items()):
-        by_file.setdefault(path, []).append(sid)
+    for r in sorted(stripes, key=lambda r: r["stripe_id"]):
+        by_file.setdefault(r["path"], []).append(r["stripe_id"])
     plan = pa.table({"path": list(by_file), "keep": list(by_file.values())},
                     schema=pa.schema([("path", pa.string()),
                                       ("keep", pa.list_(pa.string()))]))
@@ -1050,7 +1007,7 @@ def _decode_files(spark: SparkSession, out_dir: str, stripes,
                     if lost:
                         raise ValueError(
                             f"stripe {sid} lacks columns {sorted(lost)} in "
-                            f"{path}, the file the manifest of {out_dir} "
+                            f"{path}, the file the lineage of {out_dir} "
                             "names for it")
                     yield stripe_mod.decode_stripe_arrow(
                         rows, columns, target_schema,
@@ -1065,45 +1022,58 @@ def _decode_files(spark: SparkSession, out_dir: str, stripes,
 
 
 # ---------------------------------------------------------------------------
-# the persisted table: stripes + manifest, committed through the lineage log
+# the persisted table: stripe files, committed through the lineage log
 # ---------------------------------------------------------------------------
-# A table is three directories. ``stripes/run=<id>/`` holds the stripe
-# files, one per encode task. ``manifest/`` holds one footer-style row per
-# stripe written (its stats and file). ``lineage/`` is the log that decides
-# what is visible: one ``<version>.parquet`` per commit, created exclusively
-# (the ordered log with exclusive commits of Delta Lake), holding an 'ok'
-# row per published stripe, a 'compacted' row per stripe a compaction
-# replaced and an 'expired' row per stripe whose run's bytes were freed.
-# Every table question (resume set, layout params, active set, snapshots)
-# is answered by reading that log on the driver with pyarrow, not by a
-# Spark job. Stripe files and manifest rows a crashed writer left behind
-# are never named by the log, so no reader sees them.
+# A table is two directories. ``stripes/run=<id>/`` holds the stripe files,
+# one per encode task. ``lineage/`` is the log, the table of record: one
+# ``<version>.parquet`` per commit, created exclusively (the ordered log
+# with exclusive commits of Delta Lake), holding an 'ok' row per published
+# stripe, a 'compacted' row per stripe a compaction replaced and an
+# 'expired' row per stripe whose run's bytes were freed. An 'ok' row also
+# carries the stripe's facts a reader plans from — its file, column kinds,
+# key/order min-max and key bloom — as Delta's add entries carry per-file
+# stats. Every table question (resume set, layout params, active set,
+# snapshots, stripe pruning) is answered by reading that log on the driver
+# with pyarrow, not by a Spark job. Stripe files a crashed writer left
+# behind are never named by the log, so no reader sees them.
 
 _STAT_COLS = ("stripe_id", "bucket", "n_rows", "col_name", "col_kind",
               "codec", "raw_bytes", "enc_bytes", "checksum", "min_val",
               "max_val", "bloom")
 
+# a stripe's facts, its 'ok' lineage row before status, run and params:
+# the StripeInformation + ColumnStatistics analog (src/proto.rs:206-217,
+# 66-87) — sizes, the file holding the stripe (``path``, relative to the
+# table root: the StripeInformation offset analog), its column kinds,
+# key/order min-max for stripe pruning and the key bloom. A column the
+# commit had no key/order column for holds nulls.
+_STRIPE_FACTS = pa.schema([
+    ("stripe_id", pa.string()), ("bucket", pa.int64()),
+    ("n_rows", pa.int64()), ("raw_bytes", pa.int64()),
+    ("enc_bytes", pa.int64()), ("n_cols", pa.int64()),
+    ("path", pa.string()), ("codecs", pa.string()), ("kinds", pa.string()),
+    ("checksum", pa.string()),
+    ("key_min", pa.string()), ("key_max", pa.string()),
+    ("order_min", pa.string()), ("order_max", pa.string()),
+    ("key_bloom", pa.binary())])
 
-def _manifest_schema(key_col: str | None,
-                     order_col: str | None) -> T.StructType:
-    """Columns of a manifest row: the FileMetadata/StripeInformation +
-    ColumnStatistics analog (src/proto.rs:206-217,66-87) — sizes, per-key
-    min/max for stripe pruning, and the file holding the stripe (``path``,
-    relative to the table root: the StripeInformation offset analog,
-    which decode_job plans from)."""
-    ddl = ("stripe_id string, bucket long, n_rows long, raw_bytes long, "
-           "enc_bytes long, n_cols long, path string, codecs string, "
-           "kinds string, checksum string")
-    for c, alias in ((key_col, "key"), (order_col, "order")):
-        if c:
-            ddl += f", {alias}_min string, {alias}_max string"
-    return T._parse_datatype_string(ddl + (", key_bloom binary"
-                                           if key_col else ""))
+# the facts only an 'ok' row holds: tombstones ('compacted', 'expired')
+# name no file
+_OK_ONLY = ("path", "kinds", "key_min", "key_max", "order_min",
+            "order_max", "key_bloom")
+
+LINEAGE_SCHEMA = pa.schema(list(_STRIPE_FACTS) + [
+    ("status", pa.string()), ("run_id", pa.string()),
+    ("committed_at", pa.timestamp("us", tz="UTC")),
+    ("p_n_buckets", pa.int64()), ("p_stripe_rows", pa.int64()),
+    ("p_key_col", pa.string()), ("p_order_col", pa.string()),
+    ("p_index_rows", pa.int64()), ("p_bloom_cols", pa.string()),
+    ("p_sort_keys", pa.string())])
 
 
-def _manifest_row(rows: list[dict], path: str, key_col: str | None,
+def _stripe_facts(rows: list[dict], path: str, key_col: str | None,
                   order_col: str | None) -> dict:
-    """The manifest row of one stripe from its stripe-column rows."""
+    """The facts of one stripe from its stripe-column rows."""
     import hashlib
 
     def listing(field: str) -> str:
@@ -1112,37 +1082,35 @@ def _manifest_row(rows: list[dict], path: str, key_col: str | None,
                                         if v is not None) for r in rows))
 
     by_col = {r["col_name"]: r for r in rows}
-    out = {"stripe_id": rows[0]["stripe_id"],
-           "bucket": max(r["bucket"] for r in rows),
-           "n_rows": max(r["n_rows"] for r in rows),
-           "raw_bytes": sum(r["raw_bytes"] for r in rows),
-           "enc_bytes": sum(r["enc_bytes"] for r in rows),
-           "n_cols": len(rows), "path": path,
-           "codecs": listing("codec"), "kinds": listing("col_kind"),
-           "checksum": hashlib.sha1(listing("checksum").encode()).hexdigest()}
-    for c, alias in ((key_col, "key"), (order_col, "order")):
-        if c:
-            out[f"{alias}_min"] = by_col.get(c, {}).get("min_val")
-            out[f"{alias}_max"] = by_col.get(c, {}).get("max_val")
-    if key_col:
-        out["key_bloom"] = by_col.get(key_col, {}).get("bloom")
-    return out
+    key, order = by_col.get(key_col, {}), by_col.get(order_col, {})
+    return {"stripe_id": rows[0]["stripe_id"],
+            "bucket": max(r["bucket"] for r in rows),
+            "n_rows": max(r["n_rows"] for r in rows),
+            "raw_bytes": sum(r["raw_bytes"] for r in rows),
+            "enc_bytes": sum(r["enc_bytes"] for r in rows),
+            "n_cols": len(rows), "path": path,
+            "codecs": listing("codec"), "kinds": listing("col_kind"),
+            "checksum": hashlib.sha1(listing("checksum").encode()).hexdigest(),
+            "key_min": key.get("min_val"), "key_max": key.get("max_val"),
+            "order_min": order.get("min_val"),
+            "order_max": order.get("max_val"),
+            "key_bloom": key.get("bloom")}
 
 
 def _write_stripes(stripes: DataFrame, out_dir: str, run_id: str,
                    key_col: str | None, order_col: str | None,
                    done: set[str]) -> DataFrame:
-    """Manifest rows of ``stripes`` minus the ids in ``done``, lazily: each
-    task writes its stripes with pyarrow (through _table_fs) to ONE parquet
-    file under ``stripes/run=<run_id>/``, named for that task attempt, and
-    yields one manifest row per stripe. A stripe's rows must all reach one
-    task, as encode_dataframe emits them. A failed attempt's partial file
-    is named by no manifest row, so it is never read."""
+    """Facts rows (_STRIPE_FACTS) of ``stripes`` minus the ids in ``done``,
+    lazily: each task writes its stripes with pyarrow (through _table_fs)
+    to ONE parquet file under ``stripes/run=<run_id>/``, named for that
+    task attempt, and yields one facts row per stripe. A stripe's rows
+    must all reach one task, as encode_dataframe emits them. A failed
+    attempt's partial file is named by no lineage row, so it is never
+    read."""
+    from pyspark.sql.pandas.types import from_arrow_schema
     filesystem, base = _table_fs(out_dir)
     rel = f"stripes/run={run_id}"
     file_schema = _arrow_schema(STRIPE_SCHEMA)
-    schema = _manifest_schema(key_col, order_col)
-    target = _arrow_schema(schema)
 
     def write(batches):
         import pyarrow.parquet as pq
@@ -1170,23 +1138,10 @@ def _write_stripes(stripes: DataFrame, out_dir: str, run_id: str,
                 writer.close()
         if by_stripe:
             yield pa.RecordBatch.from_pylist(
-                [_manifest_row(rows, name, key_col, order_col)
-                 for rows in by_stripe.values()], schema=target)
+                [_stripe_facts(rows, name, key_col, order_col)
+                 for rows in by_stripe.values()], schema=_STRIPE_FACTS)
 
-    return stripes.mapInArrow(write, schema)
-
-
-LINEAGE_SCHEMA = pa.schema([
-    ("stripe_id", pa.string()), ("bucket", pa.int64()),
-    ("n_rows", pa.int64()), ("raw_bytes", pa.int64()),
-    ("enc_bytes", pa.int64()), ("n_cols", pa.int64()),
-    ("codecs", pa.string()), ("checksum", pa.string()),
-    ("status", pa.string()), ("run_id", pa.string()),
-    ("committed_at", pa.timestamp("us", tz="UTC")),
-    ("p_n_buckets", pa.int64()), ("p_stripe_rows", pa.int64()),
-    ("p_key_col", pa.string()), ("p_order_col", pa.string()),
-    ("p_index_rows", pa.int64()), ("p_bloom_cols", pa.string()),
-    ("p_sort_keys", pa.string())])
+    return stripes.mapInArrow(write, from_arrow_schema(_STRIPE_FACTS))
 
 
 def _log(out_dir: str) -> tuple[list[dict], int]:
@@ -1197,7 +1152,9 @@ def _log(out_dir: str) -> tuple[list[dict], int]:
     was versioned (Spark ``part-*`` files) carry no version number. A fresh
     table is ([], 1). Raises ValueError naming the table when a lineage
     file cannot be read — an unreadable log is never taken for a fresh
-    one."""
+    one — and when an 'ok' row names no file: such a table was written
+    while its stripe facts lived in a separate manifest table, which is
+    not read."""
     import pyarrow.dataset as pads
     from pyarrow import fs as pafs
     filesystem, base = _table_fs(out_dir)
@@ -1210,6 +1167,10 @@ def _log(out_dir: str) -> tuple[list[dict], int]:
                             filesystem=filesystem).to_table().to_pylist()
     except (pa.ArrowException, OSError) as e:
         raise ValueError(f"the lineage of {out_dir} is unreadable: {e}") from e
+    if any(r["status"] == "ok" and r["path"] is None for r in rows):
+        raise ValueError(f"the lineage of {out_dir} names no stripe files: "
+                         "the table was written before the lineage recorded "
+                         "them — re-encode it")
     return rows, max((int(v) for v in stems if v.isdigit()), default=0) + 1
 
 
@@ -1278,16 +1239,14 @@ def _param_cols(params: dict | None) -> dict:
             for k in _PARAMS for v in [p.get(k)]}
 
 
-_ROW_STATS = ("stripe_id", "bucket", "n_rows", "raw_bytes", "enc_bytes",
-              "n_cols", "codecs", "checksum")
-
-
-def _lineage_rows(stats: list[dict], status: str, run_id: str,
+def _lineage_rows(facts: list[dict], status: str, run_id: str,
                   params: dict | None) -> list[dict]:
-    """Lineage rows (committed_at still unset) for stripes whose manifest
-    or lineage rows are ``stats``."""
+    """Lineage rows (committed_at still unset) for the stripes whose facts
+    or lineage rows are ``facts``; a tombstone keeps no _OK_ONLY fact."""
     cols = dict(_param_cols(params), status=status, run_id=run_id)
-    return [dict({k: s[k] for k in _ROW_STATS}, **cols) for s in stats]
+    if status != "ok":
+        cols.update(dict.fromkeys(_OK_ONLY))
+    return [dict(s, **cols) for s in facts]
 
 
 def _recorded_params(rows: list[dict]) -> dict | None:
@@ -1342,27 +1301,18 @@ def _commit(spark: SparkSession, stripes: DataFrame, out_dir: str,
             tombstones: list[dict] = ()) -> list[dict]:
     """commit() with an already-read ``log`` and the 'compacted' rows of a
     compaction, published in the same log version as its new stripes. The
-    only Spark job is the collect of the write kernel's manifest rows. A
+    only Spark job is the collect of the write kernel's facts rows. A
     compaction whose victims a concurrent writer tombstoned first raises
     RuntimeError; its bytes stay invisible orphans."""
-    import pyarrow.parquet as pq
-    root = _local_root(out_dir)
+    _local_root(out_dir)  # raises for a table that cannot commit, pre-job
     rows, version = log if log is not None else _log(out_dir)
     done = {r["stripe_id"] for r in rows if r["status"] == "ok"}
-    manifest = _write_stripes(stripes, out_dir, run_id, key_col, order_col,
-                              done).toArrow()
-    new = manifest.select(list(_ROW_STATS)).to_pylist()
+    new = _write_stripes(stripes, out_dir, run_id, key_col, order_col,
+                         done).toArrow().to_pylist()
     if len({r["stripe_id"] for r in new}) < len(new):
         raise ValueError(f"commit to {out_dir}: a stripe's rows reached "
                          "several tasks; commit needs stripe-clustered rows "
                          "as encode_dataframe emits them")
-    if new:
-        man_dir = f"{root}/manifest"
-        os.makedirs(man_dir, exist_ok=True)
-        name = f"part-{run_id}-{uuid.uuid4().hex}.parquet"
-        pq.write_table(manifest.cast(_arrow_schema(
-            _manifest_schema(key_col, order_col))), f"{man_dir}/.{name}")
-        os.replace(f"{man_dir}/.{name}", f"{man_dir}/{name}")
     victims = {r["stripe_id"] for r in tombstones}
 
     def rebase(rows, pending):
@@ -1378,6 +1328,9 @@ def _commit(spark: SparkSession, stripes: DataFrame, out_dir: str,
         return [r for r in pending
                 if r["status"] != "ok" or r["stripe_id"] not in held]
 
+    # the key/order columns the facts were computed for: which stats
+    # columns the table has (see _manifest_frame)
+    params = dict(params or {}, key_col=key_col, order_col=order_col)
     pending = _lineage_rows(new, "ok", run_id, params) + list(tombstones)
     return _publish(out_dir, pending, (rows, version), rebase)
 
@@ -1388,9 +1341,9 @@ def commit(spark: SparkSession, stripes: DataFrame, out_dir: str,
     """Commit ONE batch of stripes and return the table's lineage rows
     after it. Stripe ids the lineage already holds are skipped; the rest
     are written by the encode tasks themselves (see _write_stripes) under
-    ``stripes/run=<run_id>/``, their manifest rows are collected and
-    written as one manifest file, and the commit point is the creation of
-    the next lineage version (see _publish). A commit that adds no stripe
+    ``stripes/run=<run_id>/``, their facts rows are collected, and the
+    commit point is the creation of the next lineage version holding them
+    as 'ok' rows (see _publish). A commit that adds no stripe
     writes nothing. Cost is O(batch) plus one driver read of the log,
     never a read of earlier stripes: the streaming path calls this per
     micro-batch."""
@@ -1398,17 +1351,57 @@ def commit(spark: SparkSession, stripes: DataFrame, out_dir: str,
                    params)
 
 
+def _head(rows: list[dict], out_dir: str) -> dict:
+    """The lineage's latest 'ok' row, whose ``kinds`` are the table's
+    schema. Raises ValueError naming ``out_dir`` when no table is
+    there."""
+    for r in reversed(rows):
+        if r["status"] == "ok":
+            return r
+    raise ValueError(f"no stripes table at {out_dir}: its lineage holds "
+                     "no commit")
+
+
+def _kinds(row: dict) -> dict[str, str]:
+    """column -> kind from a lineage row's ``kinds`` listing. The FIRST
+    colon splits: recursive kinds ("list:array_int64") contain colons
+    themselves; column names never do."""
+    return dict(p.split(":", 1) for p in row["kinds"].split(","))
+
+
+def _manifest_frame(spark: SparkSession, stripes: list[dict],
+                    rows: list[dict]) -> DataFrame:
+    """The stripe facts of the lineage rows ``stripes`` as a local
+    relation, which Spark filters and collects on the driver (no job).
+    The ``key_*`` / ``order_*`` columns are there only when every commit
+    in the log ``rows`` had a key / order column, so a predicate over
+    stats some stripes lack raises AnalysisException instead of pruning
+    them on nulls."""
+    lacks = {c for c in ("key", "order") for r in rows
+             if r["status"] == "ok" and r[f"p_{c}_col"] is None}
+    names = [n for n in _STRIPE_FACTS.names if n.split("_")[0] not in lacks]
+    return spark.createDataFrame(
+        pa.Table.from_pylist(stripes, schema=_STRIPE_FACTS).select(names))
+
+
 def read_manifest(spark: SparkSession, out_dir: str) -> DataFrame:
-    """Every manifest row, one per stripe id. Rows of commits that never
-    reached the lineage are included: visibility is the lineage's."""
-    return (spark.read.parquet(f"{out_dir}/manifest")
-            .dropDuplicates(["stripe_id"]))
+    """The stripe facts of every published stripe, one row per stripe id
+    (see _manifest_frame), read from the lineage: tombstoned stripes are
+    included, stripes of commits that never reached the lineage are
+    not."""
+    rows = _log(out_dir)[0]
+    first: dict[str, dict] = {}
+    for r in rows:
+        if r["status"] == "ok":
+            first.setdefault(r["stripe_id"], r)
+    _head(rows, out_dir)  # raises when no table is there
+    return _manifest_frame(spark, list(first.values()), rows)
 
 
 def read_stripes(spark: SparkSession, out_dir: str) -> DataFrame:
     """Every stripe-column row under ``stripes/`` (all runs, crash orphans
     and tombstoned stripes included), the run= partition column dropped.
-    decode_job never reads it: it opens only the files the manifest
+    decode_job never reads it: it opens only the files the lineage
     names."""
     return (spark.read.schema(STRIPE_SCHEMA)
             .option("basePath", f"{out_dir}/stripes")
@@ -1423,8 +1416,8 @@ def encode_job(spark: SparkSession, df: DataFrame, out_dir: str,
                n_buckets: int | None = None,
                index_rows: int | None = None,
                bloom_cols: list[str] | None = None) -> dict:
-    """Encode ``df`` to ``out_dir``/{stripes,manifest,lineage} parquet.
-    The key column gets a per-stripe bloom filter by default (manifest
+    """Encode ``df`` to ``out_dir``/{stripes,lineage} parquet. The key
+    column gets a per-stripe bloom filter by default (the lineage's
     ``key_bloom``), enabling point-lookup stripe pruning via decode_job's
     ``key_equals``.
 
@@ -1465,49 +1458,39 @@ def decode_job(spark: SparkSession, out_dir: str,
                stripe_predicate=None,
                stride_range: tuple | None = None,
                key_equals=None, as_of=None) -> DataFrame:
-    """Read + decode a persisted stripes table, planned from its manifest
-    (the reference's footer-first read, src/read/mod.rs:46-159): the
-    manifest is pruned, each surviving stripe's file comes from its
-    ``path``, and one task per file decodes (see _decode_files). Only
-    stripes the lineage shows active are read, so files and manifest rows
-    of commits that never reached the lineage stay invisible.
+    """Read + decode a persisted stripes table, planned from one driver
+    read of its lineage (the reference's footer-first read,
+    src/read/mod.rs:46-159): the active 'ok' rows are pruned on the
+    driver, each surviving stripe's file comes from its ``path``, and one
+    task per file decodes (see _decode_files). Planning runs no Spark job;
+    files of commits that never reached the lineage stay invisible.
 
-    ``stripe_predicate`` is a Column over the manifest (e.g. key_min/key_max
-    bounds) pruning whole stripes before any decode work — the Spark analog
-    of the reference's (unused) stats-skipping model (src/proto.rs:66-111);
-    ``key_equals`` prunes by the per-stripe key bloom filter.
-    ``stride_range`` additionally skips row groups INSIDE surviving stripes
-    (see decode_dataframe). Stats are strings: numeric predicates must use
-    int-like key columns (stored numerically) or cast explicitly.
+    ``stripe_predicate`` is a Column over the stripe facts (see
+    _manifest_frame; e.g. key_min/key_max bounds) pruning whole stripes
+    before any decode work — the Spark analog of the reference's (unused)
+    stats-skipping model (src/proto.rs:66-111); ``key_equals`` prunes by
+    the per-stripe key bloom filter. ``stride_range`` additionally skips
+    row groups INSIDE surviving stripes (see decode_dataframe). Stats are
+    strings: numeric predicates must use int-like key columns (stored
+    numerically) or cast explicitly.
 
     ``as_of`` (a run_id, or a timestamp) time-travels to that snapshot
-    (see _active). A table whose manifest predates the ``path`` column
-    raises ValueError."""
-    active = _active(_log(out_dir)[0], out_dir, as_of)
-    manifest, kinds = _open_manifest(spark, out_dir)
+    (see _active). A path holding no table raises ValueError."""
+    rows = _log(out_dir)[0]
+    head = _head(rows, out_dir)
+    stripes = list(_active(rows, out_dir, as_of).values())
     if stripe_predicate is not None:
-        manifest = manifest.filter(stripe_predicate)
+        kept = {r[0] for r in _manifest_frame(spark, stripes, rows)
+                .filter(stripe_predicate).select("stripe_id").collect()}
+        stripes = [r for r in stripes if r["stripe_id"] in kept]
     if key_equals is not None:
-        # bloom probe per manifest row — distributed (the manifest can be
-        # millions of rows at 100 TB; only the SURVIVORS come back)
-        from pyspark.sql.functions import arrow_udf
-        from . import bloom as bloom_mod
-        target = key_equals
-
-        @arrow_udf("boolean")
-        def probe(blooms: pa.Array) -> pa.Array:
-            # one vectorized batch probe: target hashed once, k probe
-            # BYTES gathered per blob — no per-row header parse or
-            # bitset unpack (15M manifest rows = 15M probes at 100 TB)
-            return pa.array(bloom_mod.might_contain_many(
-                [b if b is not None else b"" for b in blooms.to_pylist()],
-                target))
-
-        manifest = manifest.filter(probe(F.col("key_bloom")))
-    schema, columns = _schema_from_kinds(kinds, columns)
-    return _decode_files(spark, out_dir,
-                         manifest.select("stripe_id", "path").collect(),
-                         active, schema, columns, stride_range)
+        from . import bloom
+        hit = bloom.might_contain_many(
+            [r["key_bloom"] or b"" for r in stripes], key_equals)
+        stripes = [r for r, h in zip(stripes, hit) if h]
+    schema, columns = _schema_from_kinds(_kinds(head), columns)
+    return _decode_files(spark, out_dir, stripes, schema, columns,
+                         stride_range)
 
 
 # the name existing callers (perfbench/workloads.py) still use
@@ -1517,7 +1500,7 @@ decode_job_clustered = decode_job
 # ---------------------------------------------------------------------------
 # snapshots, time travel, compaction (Iceberg-style table maintenance)
 # ---------------------------------------------------------------------------
-# Stripe bytes and manifest rows are append-only; a stripe's VISIBILITY is
+# Stripe bytes and lineage rows are append-only; a stripe's VISIBILITY is
 # a lineage question, never a byte question. Compaction therefore deletes
 # nothing: it writes merged stripes under a fresh run and publishes them
 # in ONE log version with 'compacted' tombstone rows for the replaced ids.
@@ -1633,8 +1616,8 @@ def compact_job(spark: SparkSession, out_dir: str) -> dict:
     raises RuntimeError. Old snapshots remain readable:
     decode_job(as_of=<pre-compaction run>) sees the original stripes
     (tombstones commit later than the cutoff)."""
-    import pyarrow.compute as pc
     log = _log(out_dir)
+    kinds = _kinds(_head(log[0], out_dir))  # raises when no table is there
     params = _layout_params(log[0], out_dir)
     active = _active(log[0], out_dir)
     slots: dict[tuple, list[str]] = {}
@@ -1647,12 +1630,8 @@ def compact_job(spark: SparkSession, out_dir: str) -> dict:
     if not victims:
         return {"run_id": None, "compacted_stripes": 0, "new_stripes": 0}
     run_id = "c" + uuid.uuid4().hex[:11]
-    dset, kinds = _manifest(out_dir)
-    paths = dset.to_table(columns=["stripe_id", "path"],
-                          filter=pc.field("stripe_id").isin(victims))
-    df = _decode_files(spark, out_dir, zip(paths["stripe_id"].to_pylist(),
-                                           paths["path"].to_pylist()),
-                       active, *_schema_from_kinds(kinds, None))
+    df = _decode_files(spark, out_dir, [active[s] for s in victims],
+                       *_schema_from_kinds(kinds, None))
     new_stripes = encode_dataframe(
         df, params["key_col"], params["order_col"],
         sort_keys=params["sort_keys"],
@@ -1681,8 +1660,8 @@ def expire_snapshots(spark: SparkSession, out_dir: str,
     can no longer be reconstructed, and decode_job(as_of=...) into that
     window raises instead of silently returning partial data. The
     'expired' lineage rows are committed BEFORE any bytes are deleted, so
-    a crash mid-delete still errs on the loud side. No lineage or manifest
-    row is ever deleted — history and stats stay queryable."""
+    a crash mid-delete still errs on the loud side. No lineage row is
+    ever deleted — history and stats stay queryable."""
     rows, version = _log(out_dir)
     dead = {r["stripe_id"] for r in rows if r["status"] == "compacted"}
     ok = sorted((r for r in rows if r["status"] == "ok"),
@@ -1702,8 +1681,8 @@ def expire_snapshots(spark: SparkSession, out_dir: str,
                  for r in stripes.values()}.values())
     # the log version FIRST: a crash before the deletes leaves runs that
     # time travel refuses (loud) rather than half-reads (silent)
-    _publish(out_dir, [dict(r, status="expired") for r in stripes.values()],
-             (rows, version))
+    _publish(out_dir, [dict(r, status="expired", **dict.fromkeys(_OK_ONLY))
+                       for r in stripes.values()], (rows, version))
     filesystem, base = _table_fs(out_dir)
     for rid in runs:
         try:

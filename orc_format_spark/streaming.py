@@ -25,7 +25,7 @@ def encode_stream(stream_df: DataFrame, out_dir: str, checkpoint_dir: str,
                   n_buckets: int = 64, trigger_available_now: bool = True,
                   compact_every: int | None = None):
     """Start a streaming query that encodes each micro-batch into
-    ``out_dir``/{stripes,manifest,lineage}. Returns the StreamingQuery.
+    ``out_dir``/{stripes,lineage}. Returns the StreamingQuery.
 
     ``compact_every=N`` folds table maintenance into the stream: after
     every Nth batch commit, pipeline.compact_job merges the fragmented

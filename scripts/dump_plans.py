@@ -38,8 +38,9 @@ def main() -> None:
               "- encode_job: the same Exchange and Sort, then TWO\n"
               "  `MapInArrow` in one stage: the encode kernel, then the\n"
               "  write kernel that writes each task's stripes to one file\n"
-              "  and yields their manifest rows — the one job the driver\n"
-              "  collects before it creates the next lineage version.\n"
+              "  and yields their facts rows — the one job the driver\n"
+              "  collects before it creates the next lineage version\n"
+              "  holding them as 'ok' rows.\n"
               "- decode_dataframe over stripe rows: `PushedFilters`\n"
               "  containing `In(col_name, ...)` at the parquet scan\n"
               "  (projection pushdown into the stripes table), one Exchange\n"
@@ -47,8 +48,8 @@ def main() -> None:
               "  `pipeline.roundtrip` of an IN-MEMORY frame fuses instead: no\n"
               "  second Exchange at all (the encode output is already\n"
               "  stripe-clustered; the whole roundtrip is one stage).\n"
-              "- decode_job of a persisted table: the manifest is pruned and\n"
-              "  collected on the driver first, so the plan is only a\n"
+              "- decode_job of a persisted table: pruning already ran on the\n"
+              "  driver's read of the lineage, so the plan is only a\n"
               "  `LocalTableScan` of (file, keep-list) rows under `MapInArrow`\n"
               "  — no Exchange, plain or pruned.\n\n")
 
@@ -81,7 +82,7 @@ def main() -> None:
                   "(encode) -> `MapInArrow` (write), all after the one\n"
                   "Exchange: the stripe rows go from the encode kernel to\n"
                   "the write kernel inside the stage, each task writes its\n"
-                  "own stripe file, and only the small manifest rows reach\n"
+                  "own stripe file, and only the small facts rows reach\n"
                   "the driver.\n\n```\n" + plan_of(written) + "\n```\n\n")
 
         pipeline.encode_job(spark, df, d, stripe_rows=2000)
@@ -95,9 +96,9 @@ def main() -> None:
         out.write("## decode_job (plain, stripe_predicate, key_equals)\n\n"
                   "What to look for: the same plan three times, a\n"
                   "`LocalTableScan` of (path, keep) rows feeding `MapInArrow`\n"
-                  "with no Exchange. Stripe pruning (the manifest predicate,\n"
-                  "the key bloom probe) already ran on the driver's manifest\n"
-                  "collect, so it only shrinks the scanned rows; the stripe\n"
+                  "with no Exchange. Stripe pruning (the stripe predicate,\n"
+                  "the key bloom probe) already ran on the driver's read of\n"
+                  "the log, so it only shrinks the scanned rows; the stripe\n"
                   "bytes are read by the decode tasks themselves, one file\n"
                   "per task.\n\n"
                   "### plain\n\n```\n" + plan_of(plain) + "\n```\n\n"

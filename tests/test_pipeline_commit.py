@@ -1,5 +1,5 @@
 """Commit-path invariants: O(batch) commit cost, crash-window replay
-safety for manifest stats, resume parameter guard, and the footer-based
+safety for stripe stats, resume parameter guard, and the footer-based
 row estimate that replaced the count() pre-pass."""
 
 import os
@@ -177,9 +177,9 @@ def test_long_string_keys_not_pruned_by_truncated_max(spark, tmp_path):
 
 def test_clustered_decode_dedupes_stripes_repeated_across_files(spark, df, tmp_path):
     """A stripe COMPLETE in two different files must decode exactly once:
-    as an orphan run dir (no manifest rows, never read), and when a crash
-    before the lineage append made a rerun commit it again under a new
-    run_id (two manifest rows; the smaller path is read)."""
+    as an orphan run dir (named by no lineage row, never read), and after
+    a rerun commits the same stripes under a new run_id (the lineage
+    already holds them, so the rerun publishes nothing)."""
     out = str(tmp_path / "enc_dup")
     stripes = pipeline.encode_dataframe(df, "conv_id", "turn_idx",
                                         stripe_rows=300, n_buckets=6)
@@ -373,7 +373,7 @@ def test_encode_run_id_is_never_inferred_as_a_number(spark, df, tmp_path,
 
 
 def test_uncommitted_bytes_stay_invisible(spark, df, tmp_path):
-    """Stripe files no manifest row names (a writer that died before its
+    """Stripe files no lineage row names (a writer that died before its
     commit) are never read: an orphan run dir holding another frame's
     stripes leaves decode_job returning exactly the committed rows."""
     out = str(tmp_path / "enc_orphan")
@@ -389,37 +389,39 @@ def test_uncommitted_bytes_stay_invisible(spark, df, tmp_path):
 
 
 def test_manifest_without_paths_raises(spark, df, tmp_path):
-    """A table whose manifest predates the per-stripe ``path`` column, in
-    whole or in part (a resume across the change), is refused with an
-    error naming the table, not read another way."""
-    import glob
+    """A table written while the stripe facts lived in a separate
+    manifest table has 'ok' lineage rows that name no stripe file, in part
+    (a resume across the change) or in whole. encode_job, commit,
+    decode_job and compact_job each refuse it with an error naming the
+    table, and write nothing."""
     import re
 
     import pyarrow.parquet as pq
     out = str(tmp_path / "enc_old")
-
-    def drop_paths():
-        for f in glob.glob(f"{out}/manifest/*.parquet"):
-            t = pq.read_table(f)
-            if "path" in t.column_names:
-                pq.write_table(t.drop(["path"]), f)
-                # the rewrite invalidates a Hadoop checksum sidecar
-                crc = os.path.join(os.path.dirname(f),
-                                   f".{os.path.basename(f)}.crc")
-                if os.path.exists(crc):
-                    os.remove(crc)
-
-    stripes = pipeline.encode_dataframe(df, "conv_id", "turn_idx",
-                                        stripe_rows=300, n_buckets=6)
-    pipeline.commit(spark, stripes.filter(F.col("bucket") < 3), out,
-                    "conv_id", "turn_idx", run_id="old")
-    drop_paths()
-    pipeline.commit(spark, stripes.filter(F.col("bucket") >= 3), out,
-                    "conv_id", "turn_idx", run_id="new")
-    for _ in range(2):  # part of the manifest without paths, then all of it
-        with pytest.raises(ValueError, match=re.escape(out) + ".*re-encode"):
-            pipeline.decode_job(spark, out)
-        drop_paths()
+    stripes = _stripes(df)
+    for k in (0, 1):
+        pipeline.commit(spark, stripes.filter(F.col("bucket") % 2 == k), out,
+                        "conv_id", "turn_idx", run_id=f"b{k}", params=PARAMS)
+    ops = {
+        "encode_job": lambda: pipeline.encode_job(
+            spark, df, out, stripe_rows=300, n_buckets=6),
+        "commit": lambda: pipeline.commit(
+            spark, stripes, out, "conv_id", "turn_idx", run_id="again",
+            params=PARAMS),
+        "decode_job": lambda: pipeline.decode_job(spark, out),
+        "compact_job": lambda: pipeline.compact_job(spark, out),
+    }
+    versions = _files(out, "lineage/*.parquet")
+    assert len(versions) == 2
+    for f in versions:  # the first version without paths, then both
+        # the columns a lineage version lacked before it held the facts
+        pq.write_table(pq.read_table(f).drop(list(pipeline._OK_ONLY)), f)
+        before = _files(out, "**")
+        for name, op in ops.items():
+            with pytest.raises(ValueError,
+                               match=re.escape(out) + ".*re-encode"):
+                op()
+        assert _files(out, "**") == before
 
 
 def _executed_plan(dec) -> str:
@@ -428,7 +430,7 @@ def _executed_plan(dec) -> str:
 
 def test_decode_job_plans_no_exchange(spark, df, tmp_path):
     """decode_job reads one stripe file per task: no Exchange, plain or
-    manifest-pruned."""
+    stripe-pruned."""
     out = str(tmp_path / "enc_plan")
     pipeline.encode_job(spark, df, out, stripe_rows=300, n_buckets=6)
     target = df.select("conv_id").first()["conv_id"]
@@ -453,19 +455,102 @@ def _jobs_run(spark, action) -> int:
 
 
 def test_decode_job_job_counts(spark, df, tmp_path):
-    """Planning from the manifest costs one job (its pruned collect):
-    a projected count runs 3 (plan, then the count's two AQE stages), a
-    point lookup 2 (plan, then the decode)."""
+    """Planning from the lineage runs no Spark job, plain, pruned by a
+    stripe predicate or a key bloom, or as of a run: a projected count
+    runs 2 (the count's two AQE stages), a point lookup 1 (the decode)."""
     out = str(tmp_path / "enc_jobs")
-    pipeline.encode_job(spark, df, out, stripe_rows=300, n_buckets=6)
-    assert _jobs_run(spark, lambda: pipeline.decode_job(
-        spark, out, columns=["conv_id", "turn_idx", "text"]).count()) <= 3
+    run = pipeline.encode_job(spark, df, out, stripe_rows=300,
+                              n_buckets=6)["run_id"]
     k = df.select("conv_id").first()["conv_id"]
+    cols = ["conv_id", "turn_idx", "text"]
+    for kwargs in ({}, {"stripe_predicate": F.col("key_min") <= k},
+                   {"key_equals": k}, {"as_of": run}):
+        assert _jobs_run(spark, lambda: pipeline.decode_job(
+            spark, out, columns=cols, **kwargs)) == 0, kwargs
+    assert _jobs_run(spark, lambda: pipeline.decode_job(
+        spark, out, columns=cols).count()) <= 2
     rows = []
     assert _jobs_run(spark, lambda: rows.extend(
         pipeline.decode_job(spark, out, key_equals=k)
-        .filter(F.col("conv_id") == k).collect())) <= 2
+        .filter(F.col("conv_id") == k).collect())) <= 1
     assert len(rows) == df.filter(F.col("conv_id") == k).count() > 0
+
+
+def test_table_is_stripes_and_lineage_only(spark, df, tmp_path,
+                                           monkeypatch):
+    """A table is its stripe files and its lineage: encode_job writes no
+    other directory, and decode_job and compact_job plan from the
+    driver's read of the lineage, with no Spark parquet read of the
+    table."""
+    from pyspark.sql.readwriter import DataFrameReader
+    out = str(tmp_path / "enc_two")
+    pipeline.encode_job(spark, df, out, stripe_rows=300, n_buckets=6)
+    frag = _fragmented(spark, df, str(tmp_path / "enc_frag"))
+    for table in (out, frag):
+        assert sorted(os.listdir(table)) == ["lineage", "stripes"]
+    reads = []
+    parquet = DataFrameReader.parquet
+
+    def counting(self, *paths, **options):
+        reads.extend(p for p in paths if str(tmp_path) in str(p))
+        return parquet(self, *paths, **options)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", counting)
+    k = df.select("conv_id").first()["conv_id"]
+    for kwargs in ({}, {"stripe_predicate": F.col("key_max") >= k},
+                   {"key_equals": k}):
+        assert pipeline.decode_job(spark, out, **kwargs).count() > 0
+    assert pipeline.compact_job(spark, frag)["compacted_stripes"] > 0
+    assert pipeline.decode_job(spark, frag).count() == df.count()
+    assert reads == []
+    assert sorted(os.listdir(frag)) == ["lineage", "stripes"]
+
+
+def test_path_without_a_table_raises(spark, tmp_path):
+    """decode_job and compact_job on a path that holds no table raise
+    ValueError naming it, rather than a missing-file error or an empty
+    frame."""
+    import re
+    for path in (str(tmp_path / "missing"), str(tmp_path)):
+        for op in (pipeline.decode_job, pipeline.compact_job):
+            with pytest.raises(ValueError,
+                               match=f"no stripes table at {re.escape(path)}"):
+                op(spark, path)
+
+
+def test_stats_the_table_lacks_raise(spark, df, tmp_path):
+    """A table committed without an order column has no order_min /
+    order_max: a stripe predicate over them raises AnalysisException
+    instead of pruning every stripe on null stats. key_min/key_max are
+    there."""
+    from pyspark.errors import AnalysisException
+    out = str(tmp_path / "enc_no_order")
+    pipeline.commit(spark, pipeline.encode_dataframe(
+        df, "conv_id", None, sort_keys=["conv_id", "turn_idx"],
+        stripe_rows=300, n_buckets=6), out, "conv_id", None, run_id="r1")
+    with pytest.raises(AnalysisException):
+        pipeline.decode_job(spark, out,
+                            stripe_predicate=F.col("order_min") <= "3")
+    assert "order_min" not in pipeline.read_manifest(spark, out).columns
+    k = df.select("conv_id").first()["conv_id"]
+    got = pipeline.decode_job(spark, out,
+                              stripe_predicate=F.col("key_max") >= k)
+    assert got.filter(F.col("conv_id") == k).count() == \
+        df.filter(F.col("conv_id") == k).count() > 0
+
+
+def test_as_of_before_the_first_commit_is_empty(spark, df, tmp_path):
+    """as_of a time before the table's first commit reads an empty frame
+    with the table's schema."""
+    import datetime
+    out = str(tmp_path / "enc_early")
+    pipeline.encode_job(spark, df, out, stripe_rows=300, n_buckets=6)
+    first = min(r["committed_at"] for r in pipeline._log(out)[0])
+    early = pipeline.decode_job(
+        spark, out, as_of=first - datetime.timedelta(seconds=1))
+    assert early.schema == pipeline.decode_job(spark, out).schema
+    assert set(early.columns) == set(df.columns)
+    assert early.count() == 0
 
 
 PARAMS = {"n_buckets": 6, "stripe_rows": 300, "key_col": "conv_id",
@@ -479,6 +564,18 @@ def _stripes(df):
     return pipeline.encode_dataframe(df, "conv_id", "turn_idx",
                                      stripe_rows=300, n_buckets=6,
                                      bloom_cols=["conv_id"])
+
+
+def _fragmented(spark, df, out: str) -> str:
+    """``out`` holding df in two commits whose stripes share every
+    (bucket, salt) slot: a table compact_job has work in."""
+    for k in (0, 1):
+        pipeline.commit(spark, pipeline.encode_dataframe(
+            df.filter(F.col("turn_idx") % 2 == k), "conv_id", "turn_idx",
+            stripe_rows=300, n_buckets=6, bloom_cols=["conv_id"],
+            stripe_prefix=f"b{k}-"), out, "conv_id", "turn_idx",
+            run_id=f"b{k}", params=PARAMS)
+    return out
 
 
 def _ok_rows_per_stripe(out: str) -> dict:
@@ -495,8 +592,8 @@ def _files(out: str, pattern: str) -> list[str]:
 
 
 def test_table_op_job_counts(spark, df, tmp_path):
-    """After the encode shuffle, the write kernel's manifest collect is
-    the only job: a fresh encode_job and a no-op rerun run at most 2; a
+    """After the encode shuffle, the write kernel's facts collect is the
+    only job: a fresh encode_job and a no-op rerun run at most 2; a
     compact_job with nothing to compact runs none, one with victims at
     most 3."""
     out = str(tmp_path / "enc_jobs")
@@ -508,13 +605,7 @@ def test_table_op_job_counts(spark, df, tmp_path):
     assert _jobs_run(spark, encode) <= 2
     assert _jobs_run(spark, encode) <= 2
     assert _jobs_run(spark, lambda: pipeline.compact_job(spark, out)) == 0
-    frag = str(tmp_path / "enc_frag")
-    for k in (0, 1):
-        pipeline.commit(spark, pipeline.encode_dataframe(
-            df.filter(F.col("turn_idx") % 2 == k), "conv_id", "turn_idx",
-            stripe_rows=300, n_buckets=6, bloom_cols=["conv_id"],
-            stripe_prefix=f"b{k}-"), frag, "conv_id", "turn_idx",
-            run_id=f"b{k}", params=PARAMS)
+    frag = _fragmented(spark, df, str(tmp_path / "enc_frag"))
     res = []
     assert _jobs_run(spark, lambda: res.append(
         pipeline.compact_job(spark, frag))) <= 3
@@ -544,8 +635,8 @@ def test_unreadable_lineage_raises(spark, df, tmp_path):
 
 
 def test_killed_commit_changes_nothing(spark, df, tmp_path, monkeypatch):
-    """A commit killed before its lineage version (its stripe files and
-    manifest rows already written) changes nothing readers see: decode_job
+    """A commit killed before its lineage version (its stripe files
+    already written) changes nothing readers see: decode_job
     and snapshots() are as before, the rerun commits each missing stripe
     exactly once, its stats equal to a clean encode's, and the killed
     commit's files are never read."""
@@ -556,7 +647,7 @@ def test_killed_commit_changes_nothing(spark, df, tmp_path, monkeypatch):
                     params=PARAMS)
     committed = df.count() - pipeline.decode_job(spark, out).count()
     snaps = pipeline.snapshots(spark, out).collect()
-    manifest_files = _files(out, "manifest/*.parquet")
+    stripe_files = _files(out, "stripes/**/*.parquet")
 
     def killed(*args):
         raise OSError("killed before the lineage version")
@@ -565,7 +656,7 @@ def test_killed_commit_changes_nothing(spark, df, tmp_path, monkeypatch):
     with pytest.raises(OSError, match="killed"):
         pipeline.encode_job(spark, df, out, stripe_rows=300, n_buckets=6)
     monkeypatch.undo()
-    assert len(_files(out, "manifest/*.parquet")) == len(manifest_files) + 1
+    assert len(_files(out, "stripes/**/*.parquet")) > len(stripe_files)
     assert pipeline.snapshots(spark, out).collect() == snaps
     got = pipeline.decode_job(spark, out).select(df.columns)
     assert df.count() - got.count() == committed > 0
@@ -578,7 +669,7 @@ def test_killed_commit_changes_nothing(spark, df, tmp_path, monkeypatch):
     assert {k: stats[k] for k in keys} == {k: clean[k] for k in keys}
     assert set(_ok_rows_per_stripe(out).values()) == {1}
     # the killed commit's files are never read: deleting them changes
-    # nothing, though its manifest rows name the stripes the rerun wrote
+    # nothing, though they hold the stripes the rerun wrote
     import shutil
     runs = {r["run_id"] for r in pipeline._log(out)[0]}
     orphans = [d for d in os.listdir(f"{out}/stripes")
@@ -591,7 +682,7 @@ def test_killed_commit_changes_nothing(spark, df, tmp_path, monkeypatch):
 
 def test_empty_commit_writes_nothing(spark, df, tmp_path):
     """A commit that adds no stripe — every id already held, or no rows
-    at all — writes no lineage version and no manifest file."""
+    at all — writes no lineage version and no stripe file."""
     out = str(tmp_path / "enc_empty")
     pipeline.encode_job(spark, df, out, stripe_rows=300, n_buckets=6)
     before = _files(out, "**")
@@ -643,7 +734,8 @@ def test_concurrent_publishers_commit_each_stripe_once(tmp_path):
     import threading
     out = str(tmp_path / "race")
     stats = {"bucket": 0, "n_rows": 1, "raw_bytes": 1, "enc_bytes": 1,
-             "n_cols": 1, "codecs": "", "checksum": ""}
+             "n_cols": 1, "path": "stripes/run=w/part.parquet",
+             "codecs": "", "checksum": ""}
 
     def unheld(log, pending):
         held = {r["stripe_id"] for r in log if r["status"] == "ok"}

@@ -106,7 +106,7 @@ def test_long_conversation_skew_is_salted_into_substripes(spark):
 def test_stripe_pruning_via_manifest(spark, small_transcripts, tmp_path):
     out = str(tmp_path / "enc")
     pipeline.encode_job(spark, small_transcripts, out, stripe_rows=500)
-    manifest = spark.read.parquet(f"{out}/manifest")
+    manifest = pipeline.read_manifest(spark, out)
     assert manifest.filter(F.col("key_min").isNull()).count() == 0
     # prune to stripes that can contain one conversation
     target = "conv-0000000003"
