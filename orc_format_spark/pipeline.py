@@ -9,16 +9,20 @@ Execution model (SURVEY.md §3.4):
       -> bucket = pmod(xxhash64(key), n_buckets), salt = order // salt_rows
          (salting defuses long-conversation skew: one conversation can span
          several stripes; decode's global orderBy reassembles it)
-      -> repartition by (bucket, salt) + sortWithinPartitions [one shuffle]
-      -> mapInArrow(encode_stripe_arrow per (bucket, salt) run)
-      -> stripes rows (one per stripe-column)
-    COMMIT (encode_job, streaming batches, compact_job): stripe rows
-      -> mapInArrow(skip ids the lineage holds; write the task's stripes
-         to one parquet file; one facts row per stripe: file, kinds,
-         key/order min-max, key bloom)                      [same stage]
+      -> repartition by (bucket, salt)                        [one shuffle]
+      -> ONE mapInArrow kernel per task (_stripe_groups): sort the
+         partition in Arrow on (bucket, salt, sort keys), then per
+         (bucket, salt) group: encode_stripe_arrow
+      -> encode_dataframe: stripe rows (one per stripe-column)
+    COMMIT (encode_job, streaming batches, compact_job): the same kernel
+      drops each group whose stripe id the lineage holds BEFORE encoding
+      it, appends the others to the task's one parquet file and yields one
+      facts row per stripe (file, kinds, key/order min-max, key bloom)
       -> collect the facts rows: the one job after the shuffle
       -> driver: lineage/<version>.parquet, their 'ok' rows, created
          exclusively — the commit point
+    COMMIT (commit(), a frame of stripe rows): a write kernel over those
+      rows, through the same file-append + facts helper (_write_facts)
     TABLE QUESTIONS (resume set, layout params, active set, as_of,
       snapshots, compaction victims, expiry, stripe pruning): one pyarrow
       read of the lineage log on the driver, no Spark job
@@ -33,7 +37,7 @@ Execution model (SURVEY.md §3.4):
       -> filter col_name, repartition(stripe_id) + sort          [one shuffle]
       -> mapInArrow(decode_stripe_arrow per stripe)
     ROUNDTRIP: ENCODE then the DECODE kernel in the same stage — the encode
-      output is already stripe-clustered, so no second shuffle
+      output is already stripe-clustered, so no second shuffle and no sort
 
 The stripes-as-rows layout is the Spark analog of the reference's
 stripe/stream container (src/read/mod.rs:117-159): locating one column's
@@ -80,8 +84,9 @@ STRIPE_SCHEMA = T.StructType([
 ])
 
 DEFAULT_STRIPE_ROWS = 65_536
-# stripes held in memory per encode task (bounds task memory ≈ this many
-# stripes of raw input)
+# stripes per encode task: the encode kernel holds its whole partition to
+# sort it in Arrow, plus one group's copy while that group encodes, so
+# task memory ≈ this many stripes of raw input, plus one
 STRIPES_PER_PARTITION = 4
 
 
@@ -145,11 +150,13 @@ _BALANCE_MAX_GROUPS = 4096
 
 
 def _work_partitions(spark: SparkSession, n_groups: int) -> int:
-    """Task count for the CPU-bound Arrow-UDF stages. Pinned explicitly
+    """Task count of the encode shuffle, whose one kernel per task sorts,
+    encodes and (for a commit) writes its partition. Pinned explicitly
     because AQE's size-based coalescing targets ~64MB partitions and would
     serialize CPU-heavy (but byte-light) codec work onto a handful of tasks.
     Scales with both cluster parallelism and data volume
-    (≤STRIPES_PER_PARTITION stripes per task bounds memory).
+    (≤STRIPES_PER_PARTITION stripes per task bounds the memory of the
+    kernel's in-Arrow partition sort).
 
     ONE task wave per core, not four: every task pays the JVM↔Python Arrow
     boundary (serialize + fetch + worker dispatch), so at fixed data volume
@@ -637,7 +644,8 @@ def run_kernel(df: DataFrame, cols: list[str], fn, schema) -> DataFrame:
     own rule because it alone has a memory floor (STRIPES_PER_PARTITION
     stripes per task), and the probe placement of ``_partition_probes``
     depends on its width. Kernels that carry state across batches or need
-    the whole partition call ``mapInArrow`` directly: ``encode_partition``,
+    the whole partition call ``mapInArrow`` directly: the encode kernels
+    over ``_stripe_groups`` (which sort the whole partition),
     ``decode_partition``, ``decode_files``, the ORC ``decode`` of
     ``orc_reader.spark_read_orc`` and the task-side writers."""
     spark = df.sparkSession
@@ -695,6 +703,100 @@ def _vectors(batch, name: str):
     return arr.flatten().to_numpy().reshape(len(arr), -1)
 
 
+# Spark types the encode kernel's Arrow sort orders as Spark's ascending
+# sort does; a sort key of any other type (list, struct, map) is refused
+_SORTABLE = (T.NumericType, T.StringType, T.CharType, T.VarcharType,
+             T.BinaryType, T.BooleanType, T.DateType, T.TimestampType,
+             T.TimestampNTZType)
+
+
+def _keyed(df: DataFrame, key_col: str, order_col: str | None,
+           sort_keys: list[str] | None, stripe_rows: int,
+           n_buckets: int | None, n_rows: int | None = None
+           ) -> tuple[DataFrame, dict[str, str], list[str]]:
+    """(shuffled frame, column kinds, sort keys) of an encode: ``df`` with
+    struct columns flattened, its ``__bucket`` / ``__salt`` (/ ``__probe``)
+    columns added in one projection, and ONE explicit shuffle that lands
+    each (bucket, salt) group whole in one partition (see _work_partitions
+    for why the count is pinned). There is no sort: the encode kernel
+    orders each partition in Arrow (see _stripe_groups). Raises ValueError
+    naming a sort key that is not a column or that Arrow cannot order, on
+    the driver, before any job runs."""
+    flat = _flatten_struct_cols(df)
+    sort_keys = sort_keys or [k for k in (key_col, order_col) if k]
+    types = {f.name: f.dataType for f in [*df.schema, *flat.schema]}
+    for k in sort_keys:
+        if k not in types:
+            raise ValueError(f"sort key {k!r} is not a column of the frame")
+        if not isinstance(types[k], _SORTABLE):
+            raise ValueError(
+                f"sort key {k!r} is {types[k].simpleString()}, which the "
+                "encode kernel cannot order: sort on a scalar column")
+    kinds = column_kinds(flat)
+    if n_buckets is None:
+        n_buckets = _n_buckets(flat, stripe_rows, n_rows)
+    bucket = F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_buckets))
+    salt = (F.floor(F.col(order_col) / F.lit(stripe_rows)).cast("long")
+            if order_col else F.lit(0))
+    keys = [bucket.alias("__bucket"), salt.alias("__salt")]
+    p = _work_partitions(df.sparkSession, n_buckets)
+    if n_buckets > _BALANCE_MAX_GROUPS:
+        return (flat.select("*", *keys).repartition(p, "__bucket", "__salt"),
+                kinds, sort_keys)
+    # EXACT round-robin group placement: group (bucket, salt) goes to
+    # partition (bucket + salt) mod p via a probe value chosen so Spark's
+    # hash partitioner lands it there (see _partition_probes).
+    # Deterministic (same placement every run/retry), stripe contents
+    # unchanged — only which task encodes which stripe moves.
+    probes = _probe_cache.setdefault(p, _partition_probes(p))
+    probe = F.element_at(F.array(*[F.lit(m) for m in probes]),
+                         (F.pmod(bucket + salt, F.lit(p)) + 1).cast("int"))
+    return (flat.select("*", *keys, probe.cast("long").alias("__probe"))
+            .repartition(p, "__probe"), kinds, sort_keys)
+
+
+def _stripe_groups(batches, kinds: dict[str, str], sort_keys: list[str],
+                   stripe_prefix: str = "", skip=frozenset(),
+                   **encode_kwargs):
+    """The stripes of one shuffled encode partition (see _keyed), in
+    (bucket, salt) order: one RecordBatch of stripe-column rows per group.
+
+    The partition is sorted in Arrow on (__bucket, __salt, *sort_keys) in
+    Spark's ascending order — nulls first, NaN after every number (Arrow
+    alone would put NaN next to the nulls), -0.0 equal to 0.0 — and each
+    group is taken by its slice of the sort indices, so no sorted copy of
+    the whole partition is built. A group whose stripe id is in ``skip``
+    is dropped BEFORE it is encoded. ``encode_kwargs`` (force_codecs,
+    index_rows, bloom_cols) go to encode_stripe_arrow."""
+    import pyarrow.compute as pc
+    batches = [b for b in batches if b.num_rows]
+    if not batches:
+        return
+    # one chunk per column: a take from a many-chunk column concatenates
+    # the chunks again on every call
+    tbl = pa.Table.from_batches(batches).combine_chunks()
+    del batches  # a many-chunk partition was copied: free the chunks
+    keys = {"b": tbl["__bucket"], "s": tbl["__salt"]}
+    for i, k in enumerate(sort_keys):
+        if pa.types.is_floating(tbl[k].type):
+            keys[f"n{i}"] = pc.is_nan(tbl[k])  # false < true; null stays first
+        keys[f"k{i}"] = tbl[k]
+    order = pc.sort_indices(pa.table(keys),
+                            sort_keys=[(n, "ascending") for n in keys],
+                            null_placement="at_start")
+    b = tbl["__bucket"].take(order).to_numpy()
+    s = tbl["__salt"].take(order).to_numpy()
+    change = np.flatnonzero((np.diff(b) != 0) | (np.diff(s) != 0)) + 1
+    bounds = np.concatenate(([0], change, [len(b)]))
+    data = tbl.select(list(kinds))
+    for lo, hi in zip(bounds[:-1].tolist(), bounds[1:].tolist()):
+        sid = f"{stripe_prefix}{int(b[lo]):08d}-{int(s[lo]):06d}"
+        if sid in skip:
+            continue
+        yield stripe_mod.stripe_rows_to_batch(stripe_mod.encode_stripe_arrow(
+            data.take(order[lo:hi]), kinds, sid, int(b[lo]), **encode_kwargs))
+
+
 def encode_dataframe(df: DataFrame, key_col: str, order_col: str | None = None,
                      sort_keys: list[str] | None = None,
                      stripe_rows: int = DEFAULT_STRIPE_ROWS,
@@ -704,12 +806,15 @@ def encode_dataframe(df: DataFrame, key_col: str, order_col: str | None = None,
                      stripe_prefix: str = "",
                      index_rows: int | None = None,
                      bloom_cols: list[str] | None = None) -> DataFrame:
-    """Encode ``df`` into stripe-column rows (lazy; one shuffle).
+    """Encode ``df`` into stripe-column rows (lazy; one shuffle, then one
+    kernel per task, see _stripe_groups).
 
     ``key_col`` groups related rows into the same stripe (conv_id);
     ``order_col`` both orders rows within the stripe and salts oversized
     groups (turn_idx // stripe_rows) so a single huge conversation cannot
     blow past the stripe-size cap (skew handling, north_rule).
+    ``sort_keys`` (default key_col, order_col) order rows within a stripe;
+    each must be a scalar column (ValueError otherwise).
     ``index_rows`` adds a row-group index: every column is encoded in
     strides of that many rows with per-stride stats, enabling sub-stripe
     skipping at decode (see decode_dataframe's ``stride_range``).
@@ -717,64 +822,13 @@ def encode_dataframe(df: DataFrame, key_col: str, order_col: str | None = None,
     stripe pruning on hash-bucketed keys where min/max never prunes).
     Struct columns are flattened to their leaves (see _flatten_struct_cols).
     """
-    df = _flatten_struct_cols(df)
-    kinds = column_kinds(df)
-    sort_keys = sort_keys or [k for k in (key_col, order_col) if k]
-    if n_buckets is None:
-        n_buckets = _n_buckets(df, stripe_rows, n_rows)
-
-    salt = (F.floor(F.col(order_col) / F.lit(stripe_rows)).cast("long")
-            if order_col else F.lit(0))
-    keyed = df.withColumn("__bucket", F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_buckets)))
-    keyed = keyed.withColumn("__salt", salt)
-    # ONE explicit shuffle (see _work_partitions for why the count is pinned)
-    # + a JVM-side Tungsten sort; stripes are then contiguous row ranges and
-    # the Arrow UDF slices them zero-copy. No pandas anywhere: strings go
-    # Arrow buffers -> numpy codec kernels directly (mapInArrow).
-    spark = df.sparkSession
-    p = _work_partitions(spark, n_buckets)
-    if n_buckets <= _BALANCE_MAX_GROUPS:
-        # EXACT round-robin group placement: group (bucket, salt) goes to
-        # partition (bucket + salt) mod p via a probe value chosen so
-        # Spark's hash partitioner lands it there (see _partition_probes).
-        # Deterministic (same placement every run/retry), stripe contents
-        # unchanged — only which task encodes which stripe moves.
-        probes = _probe_cache.setdefault(p, _partition_probes(p))
-        probe_col = F.element_at(
-            F.array(*[F.lit(m) for m in probes]),
-            (F.pmod(F.col("__bucket") + F.col("__salt"), F.lit(p)) + 1)
-            .cast("int")).cast("long")
-        keyed = (keyed.withColumn("__probe", probe_col)
-                 .repartition(p, "__probe")
-                 .sortWithinPartitions("__bucket", "__salt", *sort_keys))
-    else:
-        keyed = (keyed.repartition(p, "__bucket", "__salt")
-                 .sortWithinPartitions("__bucket", "__salt", *sort_keys))
-    data_cols = list(kinds)
+    keyed, kinds, sort_keys = _keyed(df, key_col, order_col, sort_keys,
+                                     stripe_rows, n_buckets, n_rows)
 
     def encode_partition(batches):
-        import pyarrow as pa
-        batches = list(batches)
-        if not batches:
-            return
-        tbl = pa.Table.from_batches(batches)
-        if tbl.num_rows == 0:
-            return
-        b = tbl.column("__bucket").to_numpy()
-        s = tbl.column("__salt").to_numpy()
-        import numpy as np
-        change = np.flatnonzero((np.diff(b) != 0) | (np.diff(s) != 0)) + 1
-        bounds = np.concatenate(([0], change, [len(b)]))
-        data = tbl.select(data_cols)
-        rows = []
-        for i in range(len(bounds) - 1):
-            lo, hi = int(bounds[i]), int(bounds[i + 1])
-            sid = f"{stripe_prefix}{int(b[lo]):08d}-{int(s[lo]):06d}"
-            rows.extend(stripe_mod.encode_stripe_arrow(
-                data.slice(lo, hi - lo), kinds, sid, int(b[lo]),
-                force_codecs=force_codecs, index_rows=index_rows,
-                bloom_cols=set(bloom_cols or ())))
-        yield stripe_mod.stripe_rows_to_batch(rows)
+        return _stripe_groups(batches, kinds, sort_keys, stripe_prefix,
+                              force_codecs=force_codecs,
+                              index_rows=index_rows, bloom_cols=bloom_cols)
 
     # stripe-clustered by construction: each (bucket, salt) group lands
     # whole in one partition and its column rows are emitted contiguously
@@ -888,8 +942,8 @@ def roundtrip(df: DataFrame, key_col: str, order_col: str | None = None, *,
               columns: list[str] | None = None,
               stride_range: tuple | None = None,
               **encode_kwargs) -> DataFrame:
-    """decode(encode(df)) in memory, as ONE stage: scan -> exchange -> sort
-    -> encode kernel -> col_name filter -> decode kernel. The encode output
+    """decode(encode(df)) in memory, as ONE stage: scan -> exchange ->
+    encode kernel -> col_name filter -> decode kernel. The encode output
     is already stripe-contiguous per partition, so the encoded bytes are
     never shuffled a second time. The decoded schema is ``df.schema``
     (restricted to ``columns``); ``encode_kwargs`` go to
@@ -1097,17 +1151,21 @@ def _stripe_facts(rows: list[dict], path: str, key_col: str | None,
             "key_bloom": key.get("bloom")}
 
 
-def _write_stripes(stripes: DataFrame, out_dir: str, run_id: str,
-                   key_col: str | None, order_col: str | None,
-                   done: set[str]) -> DataFrame:
-    """Facts rows (_STRIPE_FACTS) of ``stripes`` minus the ids in ``done``,
-    lazily: each task writes its stripes with pyarrow (through _table_fs)
-    to ONE parquet file under ``stripes/run=<run_id>/``, named for that
-    task attempt, and yields one facts row per stripe. A stripe's rows
-    must all reach one task, as encode_dataframe emits them. A failed
-    attempt's partial file is named by no lineage row, so it is never
-    read."""
+def _write_facts(frame: DataFrame, out_dir: str, run_id: str,
+                 key_col: str | None, order_col: str | None,
+                 stripes_of) -> DataFrame:
+    """Facts rows (_STRIPE_FACTS) of a commit's stripes, lazily: one
+    ``mapInArrow`` over ``frame`` whose tasks each append the stripe-row
+    batches ``stripes_of(batches)`` yields to ONE parquet file under
+    ``stripes/run=<run_id>/`` (pyarrow, through _table_fs), named for the
+    task attempt, and then yield one facts row per stripe. The one
+    file-append + facts loop of every commit. A stripe's rows must all
+    reach one task, as the encode kernel emits them. A task with no rows
+    writes no file; a failed attempt's partial file is named by no lineage
+    row, so it is never read. Raises ValueError, before any job, for a
+    table that cannot commit (see _local_root)."""
     from pyspark.sql.pandas.types import from_arrow_schema
+    _local_root(out_dir)
     filesystem, base = _table_fs(out_dir)
     rel = f"stripes/run={run_id}"
     file_schema = _arrow_schema(STRIPE_SCHEMA)
@@ -1119,10 +1177,7 @@ def _write_stripes(stripes: DataFrame, out_dir: str, run_id: str,
                 f"{uuid.uuid4().hex}.parquet")
         writer, by_stripe = None, {}
         try:
-            for b in batches:
-                b = b.filter(pa.array([s not in done for s in
-                                       b.column("stripe_id").to_pylist()],
-                                      pa.bool_()))
+            for b in stripes_of(batches):
                 if not b.num_rows:
                     continue
                 if writer is None:
@@ -1141,7 +1196,28 @@ def _write_stripes(stripes: DataFrame, out_dir: str, run_id: str,
                 [_stripe_facts(rows, name, key_col, order_col)
                  for rows in by_stripe.values()], schema=_STRIPE_FACTS)
 
-    return stripes.mapInArrow(write, from_arrow_schema(_STRIPE_FACTS))
+    return frame.mapInArrow(write, from_arrow_schema(_STRIPE_FACTS))
+
+
+def _encoded_facts(df: DataFrame, out_dir: str, run_id: str, params: dict,
+                   done: set[str], stripe_prefix: str = "") -> DataFrame:
+    """Facts rows of ``df`` encoded at the layout ``params`` (see
+    _PARAMS) and written under ``stripes/run=<run_id>/``, lazily. ONE
+    kernel per task of the encode shuffle: it sorts its partition, drops
+    each group whose stripe id is in ``done`` before encoding it, encodes
+    the others and appends them to the task's one file (see
+    _stripe_groups, _write_facts)."""
+    keyed, kinds, sort_keys = _keyed(
+        df, params["key_col"], params["order_col"], params.get("sort_keys"),
+        params["stripe_rows"], params["n_buckets"])
+    index_rows, bloom_cols = params.get("index_rows"), params.get("bloom_cols")
+
+    def encode(batches):
+        return _stripe_groups(batches, kinds, sort_keys, stripe_prefix, done,
+                              index_rows=index_rows, bloom_cols=bloom_cols)
+
+    return _write_facts(keyed, out_dir, run_id, params["key_col"],
+                        params["order_col"], encode)
 
 
 def _log(out_dir: str) -> tuple[list[dict], int]:
@@ -1295,20 +1371,22 @@ def _layout_params(rows: list[dict], out_dir: str) -> dict:
     return p
 
 
-def _commit(spark: SparkSession, stripes: DataFrame, out_dir: str,
-            key_col: str | None, order_col: str | None, run_id: str,
-            params: dict | None, log: tuple[list[dict], int] | None = None,
+def _held(rows: list[dict]) -> set[str]:
+    """Ids of the stripes the log ``rows`` published: a commit skips them."""
+    return {r["stripe_id"] for r in rows if r["status"] == "ok"}
+
+
+def _commit(out_dir: str, facts: DataFrame, run_id: str, params: dict,
+            log: tuple[list[dict], int],
             tombstones: list[dict] = ()) -> list[dict]:
-    """commit() with an already-read ``log`` and the 'compacted' rows of a
-    compaction, published in the same log version as its new stripes. The
-    only Spark job is the collect of the write kernel's facts rows. A
-    compaction whose victims a concurrent writer tombstoned first raises
-    RuntimeError; its bytes stay invisible orphans."""
-    _local_root(out_dir)  # raises for a table that cannot commit, pre-job
-    rows, version = log if log is not None else _log(out_dir)
-    done = {r["stripe_id"] for r in rows if r["status"] == "ok"}
-    new = _write_stripes(stripes, out_dir, run_id, key_col, order_col,
-                         done).toArrow().to_pylist()
+    """Collect the write kernel's ``facts`` rows (the only Spark job) and
+    publish them as 'ok' rows of the next version of the already-read
+    ``log``, with the 'compacted' rows of a compaction in the same
+    version; return the log's rows after it. ``params`` are the layout
+    params to record, key_col and order_col included. A compaction whose
+    victims a concurrent writer tombstoned first raises RuntimeError; its
+    bytes stay invisible orphans."""
+    new = facts.toArrow().to_pylist()
     if len({r["stripe_id"] for r in new}) < len(new):
         raise ValueError(f"commit to {out_dir}: a stripe's rows reached "
                          "several tasks; commit needs stripe-clustered rows "
@@ -1324,31 +1402,57 @@ def _commit(spark: SparkSession, stripes: DataFrame, out_dir: str,
                 f"{hit[0]!r} was tombstoned by another run after victim "
                 "selection; aborting without publishing (this run's bytes "
                 "remain invisible orphans) — rerun compact_job")
-        held = {r["stripe_id"] for r in rows if r["status"] == "ok"}
+        held = _held(rows)
         return [r for r in pending
                 if r["status"] != "ok" or r["stripe_id"] not in held]
 
-    # the key/order columns the facts were computed for: which stats
-    # columns the table has (see _manifest_frame)
-    params = dict(params or {}, key_col=key_col, order_col=order_col)
     pending = _lineage_rows(new, "ok", run_id, params) + list(tombstones)
-    return _publish(out_dir, pending, (rows, version), rebase)
+    return _publish(out_dir, pending, log, rebase)
+
+
+def _encode_commit(df: DataFrame, out_dir: str, run_id: str, params: dict,
+                   log: tuple[list[dict], int] | None = None,
+                   stripe_prefix: str = "",
+                   tombstones: list[dict] = ()) -> list[dict]:
+    """Encode ``df`` at the layout ``params`` and commit the stripes the
+    log (read here when not given) lacks, as one log version (see
+    _encoded_facts, _commit): the path of encode_job, each streaming batch
+    and compact_job."""
+    log = log if log is not None else _log(out_dir)
+    return _commit(out_dir,
+                   _encoded_facts(df, out_dir, run_id, params,
+                                  _held(log[0]), stripe_prefix),
+                   run_id, params, log, tombstones)
 
 
 def commit(spark: SparkSession, stripes: DataFrame, out_dir: str,
            key_col: str, order_col: str | None, run_id: str,
            params: dict | None = None) -> list[dict]:
-    """Commit ONE batch of stripes and return the table's lineage rows
-    after it. Stripe ids the lineage already holds are skipped; the rest
-    are written by the encode tasks themselves (see _write_stripes) under
-    ``stripes/run=<run_id>/``, their facts rows are collected, and the
-    commit point is the creation of the next lineage version holding them
-    as 'ok' rows (see _publish). A commit that adds no stripe
-    writes nothing. Cost is O(batch) plus one driver read of the log,
-    never a read of earlier stripes: the streaming path calls this per
-    micro-batch."""
-    return _commit(spark, stripes, out_dir, key_col, order_col, run_id,
-                   params)
+    """Commit ONE batch of stripe rows (encode_dataframe's output) and
+    return the table's lineage rows after it. Stripe ids the lineage
+    already holds are skipped; the rest are written by the tasks
+    themselves (see _write_facts) under ``stripes/run=<run_id>/``, their
+    facts rows are collected, and the commit point is the creation of the
+    next lineage version holding them as 'ok' rows (see _publish). A
+    commit that adds no stripe writes nothing. Cost is O(batch) plus one
+    driver read of the log, never a read of earlier stripes. Tables built
+    from a DataFrame go through encode_job, which encodes and writes in
+    one kernel."""
+    log = _log(out_dir)
+    done = _held(log[0])
+
+    def unheld(batches):
+        for b in batches:
+            yield b.filter(pa.array([s not in done for s in
+                                     b.column("stripe_id").to_pylist()],
+                                    pa.bool_()))
+
+    # the key/order columns the facts were computed for: which stats
+    # columns the table has (see _manifest_frame)
+    params = dict(params or {}, key_col=key_col, order_col=order_col)
+    return _commit(out_dir, _write_facts(stripes, out_dir, run_id, key_col,
+                                         order_col, unheld),
+                   run_id, params, log)
 
 
 def _head(rows: list[dict], out_dir: str) -> dict:
@@ -1421,11 +1525,18 @@ def encode_job(spark: SparkSession, df: DataFrame, out_dir: str,
     ``key_bloom``), enabling point-lookup stripe pruning via decode_job's
     ``key_equals``.
 
+    One read of the log, then one kernel per encode task that sorts its
+    partition, encodes and writes its stripes (see _encoded_facts), then
+    one log version (see _commit): 2 Spark jobs, the shuffle and the
+    facts collect.
+
     Idempotent resume (north_rule): stripe ids are a pure function of the
     input (bucket hash + order salt), so a rerun after a partial failure
-    commits ONLY the stripes the lineage lacks; re-encoding a stripe
-    reproduces identical bytes (deterministic codecs), and lineage gains
-    exactly one 'ok' row per stripe. Resuming with different
+    commits ONLY the stripes the lineage lacks, and the kernel drops the
+    others before encoding them (a no-op rerun encodes nothing);
+    re-encoding a stripe reproduces identical bytes (deterministic
+    codecs), and lineage gains exactly one 'ok' row per stripe. Resuming
+    with different
     n_buckets/stripe_rows/key_col raises (lineage records them). The
     returned stats cover the table's active stripes, from the lineage."""
     if n_buckets is None:
@@ -1440,14 +1551,11 @@ def encode_job(spark: SparkSession, df: DataFrame, out_dir: str,
               "key_col": key_col, "order_col": order_col,
               "index_rows": index_rows, "bloom_cols": sorted(bloom_cols),
               "sort_keys": sort_keys}
-    before = _log(out_dir)[0]
-    _check_resume_params(before, out_dir, params)
-    stripes = encode_dataframe(df, key_col, order_col, sort_keys,
-                               stripe_rows, n_buckets, index_rows=index_rows,
-                               bloom_cols=bloom_cols)
-    active = _active(commit(spark, stripes, out_dir, key_col, order_col,
-                            run_id, params=params), out_dir).values()
-    return {"run_id": run_id, "resumed": bool(before), "n_buckets": n_buckets,
+    log = _log(out_dir)
+    _check_resume_params(log[0], out_dir, params)
+    active = _active(_encode_commit(df, out_dir, run_id, params, log),
+                     out_dir).values()
+    return {"run_id": run_id, "resumed": bool(log[0]), "n_buckets": n_buckets,
             "n_stripes": len(active),
             **{k: sum(r[k] for r in active)
                for k in ("n_rows", "raw_bytes", "enc_bytes")}}
@@ -1632,16 +1740,11 @@ def compact_job(spark: SparkSession, out_dir: str) -> dict:
     run_id = "c" + uuid.uuid4().hex[:11]
     df = _decode_files(spark, out_dir, [active[s] for s in victims],
                        *_schema_from_kinds(kinds, None))
-    new_stripes = encode_dataframe(
-        df, params["key_col"], params["order_col"],
-        sort_keys=params["sort_keys"],
-        stripe_rows=params["stripe_rows"], n_buckets=params["n_buckets"],
-        index_rows=params["index_rows"], bloom_cols=params["bloom_cols"],
-        stripe_prefix=f"{run_id}-")
-    after = _commit(spark, new_stripes, out_dir, params["key_col"],
-                    params["order_col"], run_id, params, log,
-                    _lineage_rows([active[s] for s in victims], "compacted",
-                                  run_id, params))
+    after = _encode_commit(df, out_dir, run_id, params, log,
+                           stripe_prefix=f"{run_id}-",
+                           tombstones=_lineage_rows(
+                               [active[s] for s in victims], "compacted",
+                               run_id, params))
     return {"run_id": run_id, "compacted_stripes": len(victims),
             "new_stripes": sum(r["run_id"] == run_id and r["status"] == "ok"
                                for r in after)}

@@ -25,7 +25,8 @@ def encode_stream(stream_df: DataFrame, out_dir: str, checkpoint_dir: str,
                   n_buckets: int = 64, trigger_available_now: bool = True,
                   compact_every: int | None = None):
     """Start a streaming query that encodes each micro-batch into
-    ``out_dir``/{stripes,lineage}. Returns the StreamingQuery.
+    ``out_dir``/{stripes,lineage}. Returns the StreamingQuery. Each batch
+    is one encode-and-write job plus one log version, as encode_job.
 
     ``compact_every=N`` folds table maintenance into the stream: after
     every Nth batch commit, pipeline.compact_job merges the fragmented
@@ -44,14 +45,11 @@ def encode_stream(stream_df: DataFrame, out_dir: str, checkpoint_dir: str,
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        stripes = pipeline.encode_dataframe(
-            batch_df, key_col=key_col, order_col=order_col,
-            stripe_rows=stripe_rows, n_buckets=n_buckets,
-            stripe_prefix=f"b{batch_id:08d}-")
-        # commit skips the stripe ids the lineage already holds; its cost
-        # stays O(batch) as the table grows (not O(total stripes ever))
-        pipeline.commit(spark, stripes, out_dir, key_col, order_col,
-                        run_id=f"stream-b{batch_id}", params=params)
+        # one encode kernel per task drops the stripe ids the lineage
+        # already holds before encoding them, then writes the rest; the
+        # cost stays O(batch) as the table grows (not O(total stripes ever))
+        pipeline._encode_commit(batch_df, out_dir, f"stream-b{batch_id}",
+                                params, stripe_prefix=f"b{batch_id:08d}-")
         if compact_every and (batch_id + 1) % compact_every == 0:
             pipeline.compact_job(spark, out_dir)
 

@@ -15,8 +15,8 @@ engine must be exercised against (FIXTURES.md):
   - tool: NULL ~70% of rows (Present-stream stressor)
   - ts: per-conversation seeded start + cumulative 1-300 s gaps with ~0.1%
     hour-scale outliers (delta / patched-base stressor)
-  - rows delivered shuffled, so the engine's repartition +
-    sortWithinPartitions does real work
+  - rows delivered shuffled, so the encode shuffle and the encode
+    kernel's in-Arrow partition sort do real work
 """
 
 from __future__ import annotations

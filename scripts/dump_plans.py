@@ -33,14 +33,14 @@ def main() -> None:
               "- encode: ONE `Exchange hashpartitioning(__probe, p)` (pinned\n"
               "  width; `__probe` places stripe group (bucket+salt) mod p on\n"
               "  exactly that partition — deterministic round-robin balance,\n"
-              "  see pipeline._partition_probes), a partition-local Sort, then\n"
-              "  the Arrow UDF — no other shuffles.\n"
-              "- encode_job: the same Exchange and Sort, then TWO\n"
-              "  `MapInArrow` in one stage: the encode kernel, then the\n"
-              "  write kernel that writes each task's stripes to one file\n"
-              "  and yields their facts rows — the one job the driver\n"
-              "  collects before it creates the next lineage version\n"
-              "  holding them as 'ok' rows.\n"
+              "  see pipeline._partition_probes), then the Arrow UDF — no\n"
+              "  Sort (the kernel sorts each partition in Arrow) and no\n"
+              "  other shuffles.\n"
+              "- encode_job: the same Exchange, then ONE `MapInArrow` that\n"
+              "  sorts, skips the stripes the log holds, encodes and writes\n"
+              "  each task's stripes to one file and yields their facts rows\n"
+              "  — the one job the driver collects before it creates the\n"
+              "  next lineage version holding them as 'ok' rows.\n"
               "- decode_dataframe over stripe rows: `PushedFilters`\n"
               "  containing `In(col_name, ...)` at the parquet scan\n"
               "  (projection pushdown into the stripes table), one Exchange\n"
@@ -70,20 +70,19 @@ def main() -> None:
                   "leaf expressions) BEFORE the same single Exchange — nesting\n"
                   "adds zero shuffles.\n\n```\n" + plan_of(rich) + "\n```\n\n")
 
-        # the frame encode_job's commit collects: encode_dataframe under
-        # the write kernel (nothing committed yet, so nothing skipped)
-        written = pipeline._write_stripes(
-            pipeline.encode_dataframe(df, "conv_id", "turn_idx",
-                                      stripe_rows=2000,
-                                      bloom_cols=["conv_id"]),
-            f"{d}/plan_only", "r0", "conv_id", "turn_idx", set())
-        out.write("## encode_job (encode, then the commit's write kernel)\n\n"
-                  "What to look for: `Exchange` -> `Sort` -> `MapInArrow`\n"
-                  "(encode) -> `MapInArrow` (write), all after the one\n"
-                  "Exchange: the stripe rows go from the encode kernel to\n"
-                  "the write kernel inside the stage, each task writes its\n"
-                  "own stripe file, and only the small facts rows reach\n"
-                  "the driver.\n\n```\n" + plan_of(written) + "\n```\n\n")
+        # the frame encode_job collects (nothing committed yet, so
+        # nothing skipped)
+        written = pipeline._encoded_facts(
+            df, f"{d}/plan_only", "r0",
+            {"n_buckets": None, "stripe_rows": 2000, "key_col": "conv_id",
+             "order_col": "turn_idx", "bloom_cols": ["conv_id"]}, set())
+        out.write("## encode_job (one kernel: sort, skip, encode, write)\n\n"
+                  "What to look for: `Exchange` -> `MapInArrow`, with no\n"
+                  "`Sort`: one kernel per task sorts its partition in Arrow,\n"
+                  "drops the groups the log already holds, encodes the\n"
+                  "others and writes them to the task's one stripe file;\n"
+                  "only the small facts rows reach the driver.\n\n```\n"
+                  + plan_of(written) + "\n```\n\n")
 
         pipeline.encode_job(spark, df, d, stripe_rows=2000)
         loaded = spark.read.parquet(f"{d}/stripes")
