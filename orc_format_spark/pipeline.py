@@ -33,11 +33,11 @@ Execution model (SURVEY.md §3.4):
       -> mapInArrow(pyarrow read with col_name/stripe_id pushed to the row
          groups; decode_stripe_arrow per stripe)
       -> orderBy(sort keys) at comparison time only
-    DECODE (decode_dataframe, stripe rows that are not a table)
-      -> filter col_name, repartition(stripe_id) + sort          [one shuffle]
-      -> mapInArrow(decode_stripe_arrow per stripe)
-    ROUNDTRIP: ENCODE then the DECODE kernel in the same stage — the encode
-      output is already stripe-clustered, so no second shuffle and no sort
+    ROUNDTRIP (an in-memory frame): ENCODE then the DECODE kernel in the
+      same stage — the encode output is already stripe-clustered, so no
+      second shuffle and no sort
+    Both decodes group stripe-contiguous rows through one generator
+    (_decode_runs), which calls decode_stripe_arrow per stripe.
 
 The stripes-as-rows layout is the Spark analog of the reference's
 stripe/stream container (src/read/mod.rs:117-159): locating one column's
@@ -419,15 +419,9 @@ def _leaf_fields(prefix: str, dtype, wrap: int = 0) -> list[T.StructField]:
     return [T.StructField(prefix, W(dtype))]
 
 
-def _flat_fields(prefix: str, dtype) -> list[T.StructField]:
-    return _leaf_fields(prefix, dtype, 0)
-
-
 def _flat_schema(schema: T.StructType) -> T.StructType:
-    fields = []
-    for f in schema.fields:
-        fields.extend(_flat_fields(f.name, f.dataType))
-    return T.StructType(fields)
+    return T.StructType([leaf for f in schema.fields
+                         for leaf in _leaf_fields(f.name, f.dataType)])
 
 
 def _nest_schema(flat: T.StructType) -> T.StructType:
@@ -645,8 +639,8 @@ def run_kernel(df: DataFrame, cols: list[str], fn, schema) -> DataFrame:
     stripes per task), and the probe placement of ``_partition_probes``
     depends on its width. Kernels that carry state across batches or need
     the whole partition call ``mapInArrow`` directly: the encode kernels
-    over ``_stripe_groups`` (which sort the whole partition),
-    ``decode_partition``, ``decode_files``, the ORC ``decode`` of
+    over ``_stripe_groups`` (which sort the whole partition), the decode
+    kernels over ``_decode_runs``, the ORC ``decode`` of
     ``orc_reader.spark_read_orc`` and the task-side writers."""
     spark = df.sparkSession
     cores = spark.sparkContext.defaultParallelism
@@ -736,8 +730,17 @@ def _keyed(df: DataFrame, key_col: str, order_col: str | None,
     if n_buckets is None:
         n_buckets = _n_buckets(flat, stripe_rows, n_rows)
     bucket = F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_buckets))
-    salt = (F.floor(F.col(order_col) / F.lit(stripe_rows)).cast("long")
-            if order_col else F.lit(0))
+    salt = F.lit(0)
+    if order_col:
+        order = F.col(order_col)
+        bad = order.isNull()
+        if isinstance(types.get(order_col), (T.FloatType, T.DoubleType)):
+            bad = bad | (F.abs(order) == F.lit(float("inf")))
+        # fails the projection, before any row is encoded
+        salt = F.when(bad, F.raise_error(F.lit(
+            f"order column {order_col!r} holds a null or infinite value: "
+            "every row needs a finite order value to place it in a stripe"
+        ))).otherwise(F.floor(order / F.lit(stripe_rows)).cast("long"))
     keys = [bucket.alias("__bucket"), salt.alias("__salt")]
     p = _work_partitions(df.sparkSession, n_buckets)
     if n_buckets > _BALANCE_MAX_GROUPS:
@@ -817,7 +820,7 @@ def encode_dataframe(df: DataFrame, key_col: str, order_col: str | None = None,
     each must be a scalar column (ValueError otherwise).
     ``index_rows`` adds a row-group index: every column is encoded in
     strides of that many rows with per-stride stats, enabling sub-stripe
-    skipping at decode (see decode_dataframe's ``stride_range``).
+    skipping at decode (see roundtrip's ``stride_range``).
     ``bloom_cols`` get per-stripe distinct-value bloom filters (point-lookup
     stripe pruning on hash-bucketed keys where min/max never prunes).
     Struct columns are flattened to their leaves (see _flatten_struct_cols).
@@ -880,24 +883,6 @@ def _schema_from_kinds(by_name: dict[str, str],
     return T.StructType(fields), cols
 
 
-def infer_schema(stripes: DataFrame, columns: list[str] | None = None) -> tuple[T.StructType, list[str]]:
-    """Recover the decoded Spark schema from the stripes metadata (tiny job,
-    but O(stripe rows) — prefer infer_schema_from_manifest on persisted
-    tables, which reads the lineage on the driver)."""
-    pairs = (stripes.select("col_name", "col_kind").distinct().collect())
-    return _schema_from_kinds(
-        {r["col_name"]: r["col_kind"] for r in pairs}, columns)
-
-
-def infer_schema_from_manifest(spark: SparkSession, out_dir: str,
-                               columns: list[str] | None = None
-                               ) -> tuple[T.StructType, list[str]]:
-    """Decoded schema of a persisted table, from the ``kinds`` of its
-    lineage's latest 'ok' row (see _head): no Spark job."""
-    return _schema_from_kinds(_kinds(_head(_log(out_dir)[0], out_dir)),
-                              columns)
-
-
 def _arrow_schema(schema: T.StructType):
     """Arrow schema of decoded batches; Spark timestamps map to tz=UTC
     (the decoder's int64s are UTC instants)."""
@@ -905,37 +890,57 @@ def _arrow_schema(schema: T.StructType):
     return to_arrow_schema(schema)
 
 
-def decode_dataframe(stripes: DataFrame, columns: list[str] | None = None,
-                     schema: T.StructType | None = None,
-                     stride_range: tuple | None = None) -> DataFrame:
-    """Decode stripe-column rows back to the original row layout (lazy).
+def _scan_cols(columns: list[str], stride_range: tuple | None) -> list[str]:
+    """The stripe-column rows a decode reads: ``columns``, plus the
+    ``stride_range`` column, whose row holds the stride stats."""
+    if stride_range is None or stride_range[0] in columns:
+        return list(columns)
+    return [*columns, stride_range[0]]
 
-    ``columns`` prunes decode to the named columns — the filter on
-    ``col_name`` is pushed down to the stripes scan by Catalyst, the analog
-    of the reference's read-one-column projection pushdown
-    (src/read/mod.rs:117-159).
 
-    ``stride_range`` = (col_name, lo, hi): on row-group-indexed stripes,
-    decode ONLY the strides whose per-stride [min,max] for that column
-    overlaps [lo, hi] (sub-stripe skipping). The caller applies the exact
-    residual predicate; strides are a superset of matching rows.
+def _decode_runs(tables, columns: list[str], target_schema,
+                 stride_range: tuple | None, where: str, expect=()):
+    """Decoded batches of the stripe-column rows in ``tables``, Arrow
+    tables whose rows arrive stripe-contiguous: one batch per stripe,
+    yielded as soon as its last row has arrived, so task memory is one
+    stripe's rows plus one incoming table. A stripe whose rows span a
+    table boundary is carried into the next table. A stripe lacking one of
+    its scan columns (see _scan_cols), or an id in ``expect`` whose rows
+    never arrive, raises ValueError naming ``where``. The one decode
+    kernel: roundtrip streams the encode output through it, decode_job
+    one table per stripe file."""
+    scan_cols = _scan_cols(columns, stride_range)
+    seen = set()
 
-    For stripe frames that are not a persisted table (decode_job reads
-    those by file, with no shuffle). The stripe rows are always
-    re-clustered on ``stripe_id`` (one shuffle); :func:`roundtrip` decodes
-    an in-memory encode without it. Same
-    AQE-coalescing consideration as the encode side: stripe rows are
-    byte-light but expand ~10x on decode, so a parallel task count is
-    pinned. cores*1, not cores*4: same boundary-cost argument as
-    _work_partitions (the decode kernel is ~15x cheaper than encode, so the
-    Arrow boundary, see _tasks, dominates even harder here).
-    """
-    if schema is None:
-        schema, columns = infer_schema(stripes, columns)
-    cores = stripes.sparkSession.sparkContext.defaultParallelism
-    clustered = (stripes.repartition(cores, "stripe_id")
-                 .sortWithinPartitions("stripe_id"))
-    return _decode_clustered(clustered, schema, columns, stride_range)
+    def decode(rows):
+        sid = rows[0]["stripe_id"]
+        seen.add(sid)
+        lost = set(scan_cols) - {r["col_name"] for r in rows}
+        if lost:
+            raise ValueError(f"stripe {sid} lacks columns {sorted(lost)} "
+                             f"in {where}")
+        return stripe_mod.decode_stripe_arrow(rows, columns, target_schema,
+                                              stride_range=stride_range)
+
+    pending = None  # rows of the stripe straddling the table boundary
+    for tbl in tables:
+        if not tbl.num_rows:
+            continue
+        if pending is not None:
+            tbl = pa.concat_tables([pending, tbl])
+        codes = np.asarray(tbl["stripe_id"].combine_chunks()
+                           .dictionary_encode().indices)
+        bounds = np.concatenate(
+            ([0], np.flatnonzero(np.diff(codes)) + 1, [len(codes)])).tolist()
+        for lo, hi in zip(bounds[:-2], bounds[1:-1]):
+            yield decode(tbl.slice(lo, hi - lo).to_pylist())
+        pending = tbl.slice(bounds[-2])
+    if pending is not None:
+        yield decode(pending.to_pylist())
+    missing = [sid for sid in expect if sid not in seen]
+    if missing:
+        raise ValueError(f"stripe {missing[0]} lacks columns "
+                         f"{sorted(scan_cols)} in {where}")
 
 
 def roundtrip(df: DataFrame, key_col: str, order_col: str | None = None, *,
@@ -946,76 +951,32 @@ def roundtrip(df: DataFrame, key_col: str, order_col: str | None = None, *,
     encode kernel -> col_name filter -> decode kernel. The encode output
     is already stripe-contiguous per partition, so the encoded bytes are
     never shuffled a second time. The decoded schema is ``df.schema``
-    (restricted to ``columns``); ``encode_kwargs`` go to
-    :func:`encode_dataframe`, ``stride_range`` as in
-    :func:`decode_dataframe`."""
+    (restricted to ``columns``); nested columns decode as their leaves and
+    are rebuilt from it. ``encode_kwargs`` go to :func:`encode_dataframe`.
+
+    ``stride_range`` = (col_name, lo, hi): on row-group-indexed stripes
+    (``index_rows``), decode ONLY the strides whose per-stride [min,max]
+    for that column overlaps [lo, hi] (sub-stripe skipping). The caller
+    applies the exact residual predicate; strides are a superset of
+    matching rows."""
     schema = (T.StructType([df.schema[c] for c in columns]) if columns
               else df.schema)
-    stripes = encode_dataframe(df, key_col, order_col, **encode_kwargs)
-    return _decode_clustered(stripes, schema, None, stride_range)
-
-
-def _decode_clustered(stripes: DataFrame, schema: T.StructType,
-                      columns: list[str] | None,
-                      stride_range: tuple | None) -> DataFrame:
-    """Decode stripe-column rows whose partitions each hold whole stripes
-    with every stripe's rows contiguous — no exchange of its own."""
-    nested_schema = None
-    if any(isinstance(f.dataType, (T.StructType, T.MapType))
-           or (isinstance(f.dataType, T.ArrayType)
-               and _needs_decompose(f.dataType))
-           for f in schema.fields):
-        nested_schema = schema
-        schema = _flat_schema(schema)
-        columns = [f.name for f in schema.fields]
-    elif columns is None:
-        columns = [f.name for f in schema.fields]
-    if nested_schema is None and any(_STRUCT_SEP in c for c in columns):
-        # struct leaves persisted without a caller nested schema: re-nest
-        nested_schema = _nest_schema(schema)
-    scan_cols = list(columns)
-    if stride_range is not None and stride_range[0] not in scan_cols:
-        scan_cols.append(stride_range[0])  # stats live on the predicate col
-    # the filter keeps row order, so per-stripe contiguity still holds
-    pruned = stripes.filter(F.col("col_name").isin(scan_cols))
-    target_schema = _arrow_schema(schema)
+    flat = _flat_schema(schema)
+    if flat.names == schema.names:
+        flat = schema  # nothing nested: keep the caller's fields as they are
+    target_schema = _arrow_schema(flat)
 
     def decode_partition(batches):
-        """STREAMING per-stripe decode: each stripe's rows arrive
-        contiguously, so each stripe is decoded and yielded as soon as its
-        last row has arrived — task memory is bounded by one stripe's rows
-        plus one incoming Arrow batch, not by the whole partition (the
-        encode side bounds its partitions via the STRIPES_PER_PARTITION
-        floor; this is the decode-side analog, and matters at scale where
-        one task may own thousands of stripes)."""
-        import numpy as np
-        import pyarrow as pa
-        pending = None  # rows of the stripe straddling the batch boundary
-        for b in batches:
-            if b.num_rows == 0:
-                continue
-            tbl = pa.Table.from_batches([b])
-            if pending is not None:
-                tbl = pa.concat_tables([pending, tbl])
-            ids = tbl.column("stripe_id").combine_chunks().dictionary_encode()
-            codes = np.asarray(ids.indices)
-            change = np.flatnonzero(np.diff(codes) != 0) + 1
-            bounds = np.concatenate(([0], change, [len(codes)]))
-            for i in range(len(bounds) - 2):
-                lo, hi = int(bounds[i]), int(bounds[i + 1])
-                rows = tbl.slice(lo, hi - lo).to_pylist()
-                yield stripe_mod.decode_stripe_arrow(
-                    rows, columns, target_schema, stride_range=stride_range)
-            pending = tbl.slice(int(bounds[-2]))
-        if pending is not None and pending.num_rows:
-            yield stripe_mod.decode_stripe_arrow(
-                pending.to_pylist(), columns, target_schema,
-                stride_range=stride_range)
+        return _decode_runs((pa.Table.from_batches([b]) for b in batches),
+                            flat.names, target_schema, stride_range,
+                            "the encode output")
 
-    out = pruned.mapInArrow(decode_partition, schema)
-    if nested_schema is not None:
-        out = _reassemble_structs(out, nested_schema)
-    return out
+    # the filter keeps row order, so per-stripe contiguity still holds
+    out = (encode_dataframe(df, key_col, order_col, **encode_kwargs)
+           .filter(F.col("col_name").isin(_scan_cols(flat.names,
+                                                     stride_range)))
+           .mapInArrow(decode_partition, flat))
+    return out if flat is schema else _reassemble_structs(out, schema)
 
 
 def _decode_files(spark: SparkSession, out_dir: str, stripes: list[dict],
@@ -1026,7 +987,8 @@ def _decode_files(spark: SparkSession, out_dir: str, stripes: list[dict],
     core (``_tasks``), over a local (file, keep-list) relation: no
     exchange, the stripe bytes never cross the network. Each task reads
     its file with pyarrow through _table_fs, ``col_name`` and
-    ``stripe_id`` pushed down to the parquet row groups."""
+    ``stripe_id`` pushed down to the parquet row groups, and decodes it
+    through _decode_runs."""
     by_file: dict[str, list[str]] = {}
     for r in sorted(stripes, key=lambda r: r["stripe_id"]):
         by_file.setdefault(r["path"], []).append(r["stripe_id"])
@@ -1040,9 +1002,7 @@ def _decode_files(spark: SparkSession, out_dir: str, stripes: list[dict],
     # per read on a 4-core host)
     files = spark.createDataFrame(plan)
     filesystem, base = _table_fs(out_dir)
-    scan_cols = list(columns)
-    if stride_range is not None and stride_range[0] not in scan_cols:
-        scan_cols.append(stride_range[0])  # stats live on the predicate col
+    scan_cols = _scan_cols(columns, stride_range)
     target_schema = _arrow_schema(schema)
 
     def decode_files(batches):
@@ -1053,24 +1013,14 @@ def _decode_files(spark: SparkSession, out_dir: str, stripes: list[dict],
                 tbl = pq.read_table(f"{base}/{path}", filesystem=filesystem,
                                     filters=[("col_name", "in", scan_cols),
                                              ("stripe_id", "in", keep)])
-                by_stripe: dict[str, list] = {sid: [] for sid in keep}
-                for r in tbl.to_pylist():
-                    by_stripe[r["stripe_id"]].append(r)
-                for sid, rows in by_stripe.items():
-                    lost = set(scan_cols) - {r["col_name"] for r in rows}
-                    if lost:
-                        raise ValueError(
-                            f"stripe {sid} lacks columns {sorted(lost)} in "
-                            f"{path}, the file the lineage of {out_dir} "
-                            "names for it")
-                    yield stripe_mod.decode_stripe_arrow(
-                        rows, columns, target_schema,
-                        stride_range=stride_range)
+                yield from _decode_runs(
+                    [tbl], columns, target_schema, stride_range,
+                    f"{path}, the file the lineage of {out_dir} names for "
+                    "it", expect=keep)
 
     out = files.mapInArrow(decode_files, schema)
     if any(_STRUCT_SEP in c for c in columns):
-        # nested leaves persisted flat: re-nest from the leaf names (same
-        # contract as decode_dataframe's schema-free path)
+        # nested leaves persisted flat: re-nest from the leaf names
         out = _reassemble_structs(out, _nest_schema(schema))
     return out
 
@@ -1488,31 +1438,6 @@ def _manifest_frame(spark: SparkSession, stripes: list[dict],
         pa.Table.from_pylist(stripes, schema=_STRIPE_FACTS).select(names))
 
 
-def read_manifest(spark: SparkSession, out_dir: str) -> DataFrame:
-    """The stripe facts of every published stripe, one row per stripe id
-    (see _manifest_frame), read from the lineage: tombstoned stripes are
-    included, stripes of commits that never reached the lineage are
-    not."""
-    rows = _log(out_dir)[0]
-    first: dict[str, dict] = {}
-    for r in rows:
-        if r["status"] == "ok":
-            first.setdefault(r["stripe_id"], r)
-    _head(rows, out_dir)  # raises when no table is there
-    return _manifest_frame(spark, list(first.values()), rows)
-
-
-def read_stripes(spark: SparkSession, out_dir: str) -> DataFrame:
-    """Every stripe-column row under ``stripes/`` (all runs, crash orphans
-    and tombstoned stripes included), the run= partition column dropped.
-    decode_job never reads it: it opens only the files the lineage
-    names."""
-    return (spark.read.schema(STRIPE_SCHEMA)
-            .option("basePath", f"{out_dir}/stripes")
-            .parquet(f"{out_dir}/stripes")
-            .select(*[f.name for f in STRIPE_SCHEMA.fields]))
-
-
 def encode_job(spark: SparkSession, df: DataFrame, out_dir: str,
                key_col: str = "conv_id", order_col: str | None = "turn_idx",
                sort_keys: list[str] | None = None,
@@ -1578,7 +1503,7 @@ def decode_job(spark: SparkSession, out_dir: str,
     before any decode work — the Spark analog of the reference's (unused)
     stats-skipping model (src/proto.rs:66-111); ``key_equals`` prunes by
     the per-stripe key bloom filter. ``stride_range`` additionally skips
-    row groups INSIDE surviving stripes (see decode_dataframe). Stats are
+    row groups INSIDE surviving stripes (see roundtrip). Stats are
     strings: numeric predicates must use int-like key columns (stored
     numerically) or cast explicitly.
 
@@ -1730,8 +1655,9 @@ def compact_job(spark: SparkSession, out_dir: str) -> dict:
     active = _active(log[0], out_dir)
     slots: dict[tuple, list[str]] = {}
     for sid, r in sorted(active.items()):
-        salt = re.search(r"-(\d{6,})$", sid)
-        slots.setdefault((r["bucket"], salt and salt.group(1)),
+        # the salt ends the id, sign included ("...-00000001--00001")
+        salt = re.search(r"-(-?\d+)$", sid)
+        slots.setdefault((r["bucket"], salt and int(salt.group(1))),
                          []).append(sid)
     victims = [sid for sids in slots.values() if len(sids) >= 2
                for sid in sids]

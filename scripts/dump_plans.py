@@ -1,7 +1,7 @@
 """Dump the physical plans of the encode and (column-pruned) decode jobs to
 EXPLAIN.md — evidence that the plans are the ones we want: one pinned-width
-Exchange to encode, col_name filter pushed into the stripes parquet scan,
-no Exchange at all to decode a persisted table."""
+Exchange to encode, a col_name filter before the roundtrip's decode
+kernel, no Exchange at all to decode a persisted table."""
 
 from __future__ import annotations
 
@@ -41,13 +41,10 @@ def main() -> None:
               "  each task's stripes to one file and yields their facts rows\n"
               "  — the one job the driver collects before it creates the\n"
               "  next lineage version holding them as 'ok' rows.\n"
-              "- decode_dataframe over stripe rows: `PushedFilters`\n"
-              "  containing `In(col_name, ...)` at the parquet scan\n"
-              "  (projection pushdown into the stripes table), one Exchange\n"
-              "  on stripe_id, partition-local Sort, Arrow UDF.\n"
-              "  `pipeline.roundtrip` of an IN-MEMORY frame fuses instead: no\n"
-              "  second Exchange at all (the encode output is already\n"
-              "  stripe-clustered; the whole roundtrip is one stage).\n"
+              "- roundtrip of an IN-MEMORY frame (column-pruned): the\n"
+              "  encode's one Exchange, then `Filter col_name IN (...)` and\n"
+              "  the decode `MapInArrow` in the same stage — no second\n"
+              "  Exchange (the encode output is already stripe-clustered).\n"
               "- decode_job of a persisted table: pruning already ran on the\n"
               "  driver's read of the lineage, so the plan is only a\n"
               "  `LocalTableScan` of (file, keep-list) rows under `MapInArrow`\n"
@@ -84,10 +81,16 @@ def main() -> None:
                   "only the small facts rows reach the driver.\n\n```\n"
                   + plan_of(written) + "\n```\n\n")
 
+        rt = pipeline.roundtrip(df, "conv_id", "turn_idx", stripe_rows=2000,
+                                columns=["conv_id", "turn_idx", "role"])
+        out.write("## roundtrip (column-pruned)\n\n"
+                  "What to look for: the encode plan, then `Filter` on\n"
+                  "`col_name` and the decode `MapInArrow` with no second\n"
+                  "Exchange: the decode kernel groups the stripe-contiguous\n"
+                  "encode output by stripe (pipeline._decode_runs).\n\n```\n"
+                  + plan_of(rt) + "\n```\n\n")
+
         pipeline.encode_job(spark, df, d, stripe_rows=2000)
-        loaded = spark.read.parquet(f"{d}/stripes")
-        dec = pipeline.decode_dataframe(loaded, columns=["conv_id", "turn_idx", "role"])
-        out.write("## decode_dataframe (column-pruned)\n\n```\n" + plan_of(dec) + "\n```\n\n")
         plain = pipeline.decode_job(spark, d)
         pruned = pipeline.decode_job(
             spark, d, stripe_predicate=(F.col("key_min") <= "conv-0000000001"))

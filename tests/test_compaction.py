@@ -3,7 +3,9 @@ its Iceberg-style fix. Everything is append-only — compaction only moves
 stripe VISIBILITY (lineage tombstones), so every earlier snapshot stays
 readable via decode_job(as_of=...)."""
 
+import collections
 import os
+import re
 
 import pandas as pd
 import pytest
@@ -195,16 +197,30 @@ def test_stream_auto_compaction(spark, tmp_path):
     # post-stream state: at most one leftover uncompacted batch run, so
     # every slot holds <= 2 active stripes; a final compact settles to 1
     pipeline.compact_job(spark, out)
-    act = pipeline.active_stripe_ids(spark, out)
-    man = pipeline.read_manifest(spark, out).filter(
-        F.col("stripe_id").isin(sorted(act)))
-    slots = (man.select(F.regexp_extract("stripe_id", r"-(\d{6,})$", 1)
-                        .alias("salt"), "bucket")
-             .groupBy("bucket", "salt").count())
-    assert slots.agg(F.max("count")).collect()[0][0] == 1
+    active = pipeline._active(pipeline._log(out)[0], out).values()
+    slots = collections.Counter(
+        (r["bucket"], re.search(r"-(-?\d+)$", r["stripe_id"]).group(1))
+        for r in active)
+    assert max(slots.values()) == 1
     got = _sorted_pdf(pipeline.decode_job(spark, out), df.columns)
     pd.testing.assert_frame_equal(_sorted_pdf(df.selectExpr("*"), df.columns),
                                   got, check_dtype=False)
+
+
+def test_negative_order_values_compact_to_a_fixed_point(spark, tmp_path):
+    """compact_job reads a stripe's salt from its id, sign included
+    ("...-00000001--00001"): a freshly encoded table of negative order
+    values holds one stripe per slot, so compact_job compacts nothing and
+    decode_job returns the same rows."""
+    out = str(tmp_path / "neg")
+    df = spark.createDataFrame([("a", o) for o in range(-20, 0)],
+                               "k string, o long")
+    pipeline.encode_job(spark, df, out, key_col="k", order_col="o",
+                        stripe_rows=4, n_buckets=2)
+    assert len(pipeline.active_stripe_ids(spark, out)) == 5
+    assert pipeline.compact_job(spark, out)["compacted_stripes"] == 0
+    assert (sorted(pipeline.decode_job(spark, out).select("k", "o").collect())
+            == sorted(df.collect()))
 
 
 def test_expire_snapshots_frees_superseded_runs(spark, tmp_path):

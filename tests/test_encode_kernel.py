@@ -141,6 +141,23 @@ def test_unorderable_sort_key_raises(spark, tmp_path):
     assert not out.exists()
 
 
+@pytest.mark.parametrize("kind,bad", [("bigint", None),
+                                      ("double", float("inf")),
+                                      ("double", float("-inf"))])
+def test_order_value_without_a_salt_raises(spark, kind, bad):
+    """A null or infinite order value has no salt, so no stripe: the
+    encode projection fails with an error naming the order column, before
+    anything is encoded."""
+    num = float if kind == "double" else int
+    frame = spark.createDataFrame(
+        [(f"k{i}", num(i)) for i in range(20)] + [("k3", bad)],
+        f"k string, o {kind}")
+    with pytest.raises(Exception, match="order column 'o' holds a null or "
+                                        "infinite value"):
+        pipeline.roundtrip(frame, "k", "o", stripe_rows=4,
+                           n_buckets=8).collect()
+
+
 def test_resume_encodes_only_missing_groups(spark, df, tmp_path,
                                             monkeypatch):
     """The per-group generator, called in-process with a spy on

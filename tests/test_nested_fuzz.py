@@ -123,7 +123,7 @@ def _split_fields(s: str) -> list[str]:
 
 
 @pytest.mark.parametrize("seed", [11, 23, 37, 41, 59, 73, 89, 97, 101, 113])
-def test_random_nested_schema_roundtrip(spark, seed):  # noqa: F811
+def test_random_nested_schema_roundtrip(spark, seed, tmp_path):  # noqa: F811
     r = random.Random(seed)
     n_cols = r.randint(1, 3)
     col_types = [_gen_type(r, 3, "free") for _ in range(n_cols)]
@@ -132,12 +132,14 @@ def test_random_nested_schema_roundtrip(spark, seed):  # noqa: F811
     rows = [tuple([i] + [_gen_value(r, t, null_p=0.25) for t in col_types])
             for i in range(25)]
     df = spark.createDataFrame(rows, schema=schema)
-    stripes = pipeline.encode_dataframe(df, "id", None, sort_keys=["id"],
-                                        stripe_rows=10)
     exp = {row["id"]: row.asDict(recursive=True) for row in df.collect()}
-    dec = pipeline.decode_dataframe(stripes, schema=df.schema)
+    dec = pipeline.roundtrip(df, "id", None, sort_keys=["id"], stripe_rows=10)
     got = {row["id"]: row.asDict(recursive=True) for row in dec.collect()}
     assert got == exp, f"schema-driven mismatch for {schema}"
-    dec2 = pipeline.decode_dataframe(stripes)
+    # schema-free: a persisted table re-nests from its leaf names alone
+    out = str(tmp_path / "t")
+    pipeline.encode_job(spark, df, out, key_col="id", order_col=None,
+                        sort_keys=["id"], stripe_rows=10)
+    dec2 = pipeline.decode_job(spark, out)
     got2 = {row["id"]: row.asDict(recursive=True) for row in dec2.collect()}
     assert got2 == exp, f"schema-free mismatch for {schema}"

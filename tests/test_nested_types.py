@@ -9,10 +9,18 @@ from pyspark.sql import functions as F
 from orc_format_spark import pipeline
 
 
-def _roundtrip(spark, df, key="id"):
-    stripes = pipeline.encode_dataframe(df, key, None, sort_keys=[key],
-                                        stripe_rows=64)
-    return pipeline.decode_dataframe(stripes, schema=df.schema)
+def _roundtrip(spark, df, key="id", stripe_rows=64):
+    return pipeline.roundtrip(df, key, None, sort_keys=[key],
+                              stripe_rows=stripe_rows)
+
+
+def _persisted(spark, df, tmp_path):
+    """decode_job of ``df`` encoded to a table: no caller schema, the
+    nested columns re-nest from their persisted leaf names alone."""
+    out = str(tmp_path / "t")
+    pipeline.encode_job(spark, df, out, key_col="id", order_col=None,
+                        sort_keys=["id"], stripe_rows=10)
+    return pipeline.decode_job(spark, out)
 
 
 def test_struct_roundtrip_with_null_structs(spark):
@@ -51,9 +59,8 @@ def test_strided_lists(spark):
     rows = [(i, list(range(i % 5)), [f"w{j}" for j in range(i % 3)])
             for i in range(500)]
     df = spark.createDataFrame(rows, schema="id long, li array<bigint>, ls array<string>")
-    stripes = pipeline.encode_dataframe(df, "id", None, sort_keys=["id"],
-                                        stripe_rows=500, index_rows=100)
-    got = (pipeline.decode_dataframe(stripes, schema=df.schema)
+    got = (pipeline.roundtrip(df, "id", None, sort_keys=["id"],
+                              stripe_rows=500, index_rows=100)
            .orderBy("id").collect())
     assert got == df.orderBy("id").collect()
 
@@ -128,10 +135,8 @@ def test_decimal38_roundtrip_spark(spark):
                   F.when(F.col("id") % 7 == 0, None)
                   .otherwise((-F.col("id")).cast("decimal(38,10)"))
                   .alias("neg")))
-    stripes = pipeline.encode_dataframe(df, "id", None, sort_keys=["id"],
-                                        stripe_rows=500)
-    dec = pipeline.decode_dataframe(stripes, columns=df.columns,
-                                    schema=df.schema)
+    dec = pipeline.roundtrip(df, "id", None, sort_keys=["id"],
+                             stripe_rows=500)
     a = df.exceptAll(dec.select(df.columns)).count()
     b = dec.select(df.columns).exceptAll(df).count()
     assert a == 0 and b == 0
@@ -154,21 +159,18 @@ def test_deep_struct_nesting_roundtrip(spark):
     assert got == exp
 
 
-def test_deep_struct_schema_free_decode(spark):
+def test_deep_struct_schema_free_decode(spark, tmp_path):
     """Persisted deep-struct table decodes WITHOUT a caller schema: the
-    `a·b·c` leaf names re-nest from the manifest kinds alone."""
-    from orc_format_spark import pipeline
+    `a·b·c` leaf names re-nest from the lineage kinds alone."""
     schema = "id long, a struct<x: bigint, b: struct<y: string>>"
     rows = [(1, {"x": 1, "b": {"y": "q"}}), (2, {"x": 2, "b": None})]
     df = spark.createDataFrame(rows, schema=schema)
-    stripes = pipeline.encode_dataframe(df, "id", None, sort_keys=["id"],
-                                        stripe_rows=10)
-    dec = pipeline.decode_dataframe(stripes)  # no schema, no columns
+    dec = _persisted(spark, df, tmp_path)  # no schema, no columns
     got = {r["id"]: r.asDict(recursive=True)["a"] for r in dec.collect()}
     assert got == {1: {"x": 1, "b": {"y": "q"}}, 2: {"x": 2, "b": None}}
 
 
-def test_array_of_struct_roundtrip(spark):
+def test_array_of_struct_roundtrip(spark, tmp_path):
     """array<struct<...>> — the transcripts/tool-calls shape — flattened to
     parallel leaf arrays + an element-present array<boolean> leaf; nulls at
     the list level, element level, and field level all survive."""
@@ -183,19 +185,17 @@ def test_array_of_struct_roundtrip(spark):
                     "flag": None}]),
     ]
     df = spark.createDataFrame(rows, schema=schema)
-    stripes = pipeline.encode_dataframe(df, "id", None, sort_keys=["id"],
-                                        stripe_rows=10)
     exp = {r["id"]: r.asDict(recursive=True)["msgs"] for r in df.collect()}
-    dec = pipeline.decode_dataframe(stripes, schema=df.schema)
+    dec = _roundtrip(spark, df, stripe_rows=10)
     got = {r["id"]: r.asDict(recursive=True)["msgs"] for r in dec.collect()}
     assert got == exp
     # schema-free: leaf names alone re-nest the array<struct>
-    dec2 = pipeline.decode_dataframe(stripes)
+    dec2 = _persisted(spark, df, tmp_path)
     got2 = {r["id"]: r.asDict(recursive=True)["msgs"] for r in dec2.collect()}
     assert got2 == exp
 
 
-def test_array_of_struct_with_nested_struct_roundtrip(spark):
+def test_array_of_struct_with_nested_struct_roundtrip(spark, tmp_path):
     """The OpenAI-style tool_calls shape: array<struct<id, fn:struct<name,
     args>>>. The nested struct field rides per-element present leaves at
     every level; nulls at list / element / inner-struct / field level all
@@ -211,18 +211,16 @@ def test_array_of_struct_with_nested_struct_roundtrip(spark):
         (4, None),
     ]
     df = spark.createDataFrame(rows, schema=schema)
-    stripes = pipeline.encode_dataframe(df, "id", None, sort_keys=["id"],
-                                        stripe_rows=10)
     exp = {r["id"]: r.asDict(recursive=True)["tc"] for r in df.collect()}
-    dec = pipeline.decode_dataframe(stripes, schema=df.schema)
+    dec = _roundtrip(spark, df, stripe_rows=10)
     got = {r["id"]: r.asDict(recursive=True)["tc"] for r in dec.collect()}
     assert got == exp
-    dec2 = pipeline.decode_dataframe(stripes)  # schema-free re-nest
+    dec2 = _persisted(spark, df, tmp_path)  # schema-free re-nest
     got2 = {r["id"]: r.asDict(recursive=True)["tc"] for r in dec2.collect()}
     assert got2 == exp
 
 
-def test_map_of_struct_roundtrip(spark):
+def test_map_of_struct_roundtrip(spark, tmp_path):
     """map<string, struct<...>>: the values leaf is array<struct> and rides
     that machinery (keys list + per-field parallel leaves + value-present)."""
     schema = "id long, m map<string, struct<x: bigint, s: string>>"
@@ -233,18 +231,16 @@ def test_map_of_struct_roundtrip(spark):
         (4, None),
     ]
     df = spark.createDataFrame(rows, schema=schema)
-    stripes = pipeline.encode_dataframe(df, "id", None, sort_keys=["id"],
-                                        stripe_rows=10)
     exp = {r["id"]: r.asDict(recursive=True)["m"] for r in df.collect()}
-    dec = pipeline.decode_dataframe(stripes, schema=df.schema)
+    dec = _roundtrip(spark, df, stripe_rows=10)
     got = {r["id"]: r.asDict(recursive=True)["m"] for r in dec.collect()}
     assert got == exp
-    dec2 = pipeline.decode_dataframe(stripes)
+    dec2 = _persisted(spark, df, tmp_path)
     got2 = {r["id"]: r.asDict(recursive=True)["m"] for r in dec2.collect()}
     assert got2 == exp
 
 
-def test_nested_list_columns_roundtrip(spark):
+def test_nested_list_columns_roundtrip(spark, tmp_path):
     """Recursive list: kinds — array<array<T>> at any depth, plain or as a
     field inside array<struct> elements; nulls at every level survive."""
     schema = ("id long, aa array<array<bigint>>, "
@@ -258,16 +254,14 @@ def test_nested_list_columns_roundtrip(spark):
         (3, None, None, None),
     ]
     df = spark.createDataFrame(rows, schema=schema)
-    stripes = pipeline.encode_dataframe(df, "id", None, sort_keys=["id"],
-                                        stripe_rows=10)
     exp = {r["id"]: r.asDict(recursive=True) for r in df.collect()}
-    for dec in (pipeline.decode_dataframe(stripes, schema=df.schema),
-                pipeline.decode_dataframe(stripes)):  # schema-free too
+    for dec in (_roundtrip(spark, df, stripe_rows=10),
+                _persisted(spark, df, tmp_path)):  # schema-free too
         got = {r["id"]: r.asDict(recursive=True) for r in dec.collect()}
         assert got == exp
 
 
-def test_map_inside_array_element_roundtrip(spark):
+def test_map_inside_array_element_roundtrip(spark, tmp_path):
     """The REAL tool-call args shape: array<struct<name, args:
     map<string,string>>> — the per-element map flattens to keys/values
     array<array<string>> leaves (recursive list: kinds)."""
@@ -281,16 +275,14 @@ def test_map_inside_array_element_roundtrip(spark):
         (3, None),
     ]
     df = spark.createDataFrame(rows, schema=schema)
-    stripes = pipeline.encode_dataframe(df, "id", None, sort_keys=["id"],
-                                        stripe_rows=10)
     exp = {r["id"]: r.asDict(recursive=True)["tc"] for r in df.collect()}
-    for dec in (pipeline.decode_dataframe(stripes, schema=df.schema),
-                pipeline.decode_dataframe(stripes)):
+    for dec in (_roundtrip(spark, df, stripe_rows=10),
+                _persisted(spark, df, tmp_path)):
         got = {r["id"]: r.asDict(recursive=True)["tc"] for r in dec.collect()}
         assert got == exp
 
 
-def test_array_of_struct_inside_array_element_roundtrip(spark):
+def test_array_of_struct_inside_array_element_roundtrip(spark, tmp_path):
     """array<struct<v: array<struct<...>>>> — nested tool-RESULT lists —
     flattens by transform composition (leaves are array<array<...>>
     recursive list: kinds); nulls at every level survive."""
@@ -307,16 +299,14 @@ def test_array_of_struct_inside_array_element_roundtrip(spark):
         (4, [{"tag": "t4", "v": [None, {"x": 9, "s": "z"}]}]),
     ]
     df = spark.createDataFrame(rows, schema=schema)
-    stripes = pipeline.encode_dataframe(df, "id", None, sort_keys=["id"],
-                                        stripe_rows=10)
     exp = {r["id"]: r.asDict(recursive=True)["a"] for r in df.collect()}
-    for dec in (pipeline.decode_dataframe(stripes, schema=df.schema),
-                pipeline.decode_dataframe(stripes)):  # schema-free too
+    for dec in (_roundtrip(spark, df, stripe_rows=10),
+                _persisted(spark, df, tmp_path)):  # schema-free too
         got = {r["id"]: r.asDict(recursive=True)["a"] for r in dec.collect()}
         assert got == exp
 
 
-def test_array_of_map_roundtrip(spark):
+def test_array_of_map_roundtrip(spark, tmp_path):
     """array<map<string,bigint>> — per-element keys/values leaves plus the
     __elems__ marker (disambiguates from a plain map on schema-free
     re-nest); also nested INSIDE an array<struct> element."""
@@ -329,16 +319,14 @@ def test_array_of_map_roundtrip(spark):
         (3, None, None),
     ]
     df = spark.createDataFrame(rows, schema=schema)
-    stripes = pipeline.encode_dataframe(df, "id", None, sort_keys=["id"],
-                                        stripe_rows=10)
     exp = {r["id"]: r.asDict(recursive=True) for r in df.collect()}
-    for dec in (pipeline.decode_dataframe(stripes, schema=df.schema),
-                pipeline.decode_dataframe(stripes)):
+    for dec in (_roundtrip(spark, df, stripe_rows=10),
+                _persisted(spark, df, tmp_path)):
         got = {r["id"]: r.asDict(recursive=True) for r in dec.collect()}
         assert got == exp
 
 
-def test_struct_below_consecutive_arrays_roundtrip(spark):
+def test_struct_below_consecutive_arrays_roundtrip(spark, tmp_path):
     """array<array<struct>> / array<array<map>>: the anonymous __item__
     segment names each inner array level — structs/maps under ANY number
     of consecutive array levels now encode; nulls at every level."""
@@ -352,16 +340,14 @@ def test_struct_below_consecutive_arrays_roundtrip(spark):
         (4, [[{"x": None, "s": None}]], [[{}]]),
     ]
     df = spark.createDataFrame(rows, schema=schema)
-    stripes = pipeline.encode_dataframe(df, "id", None, sort_keys=["id"],
-                                        stripe_rows=10)
     exp = {r["id"]: r.asDict(recursive=True) for r in df.collect()}
-    for dec in (pipeline.decode_dataframe(stripes, schema=df.schema),
-                pipeline.decode_dataframe(stripes)):  # schema-free too
+    for dec in (_roundtrip(spark, df, stripe_rows=10),
+                _persisted(spark, df, tmp_path)):  # schema-free too
         got = {r["id"]: r.asDict(recursive=True) for r in dec.collect()}
         assert got == exp
 
 
-def test_array_of_timestamp_and_date_roundtrip(spark):
+def test_array_of_timestamp_and_date_roundtrip(spark, tmp_path):
     """array<timestamp> / array<date> leaves: children ride the int codecs
     as epoch µs / days — including as fields INSIDE array<struct> (the
     tool-call started_at shape)."""
@@ -378,11 +364,9 @@ def test_array_of_timestamp_and_date_roundtrip(spark):
         (3, None, None, None),
     ]
     df = spark.createDataFrame(rows, schema=schema)
-    stripes = pipeline.encode_dataframe(df, "id", None, sort_keys=["id"],
-                                        stripe_rows=10)
     exp = {r["id"]: r.asDict(recursive=True) for r in df.collect()}
-    for dec in (pipeline.decode_dataframe(stripes, schema=df.schema),
-                pipeline.decode_dataframe(stripes)):  # schema-free too
+    for dec in (_roundtrip(spark, df, stripe_rows=10),
+                _persisted(spark, df, tmp_path)):  # schema-free too
         got = {r["id"]: r.asDict(recursive=True) for r in dec.collect()}
         assert got == exp
 
@@ -393,9 +377,7 @@ def test_rich_transcripts_roundtrip(spark):
     encode/decode pipeline."""
     from orc_format_spark import transcripts
     df = transcripts.enrich(transcripts.generate(spark, 40, seed=7))
-    stripes = pipeline.encode_dataframe(df, "conv_id", "turn_idx",
-                                        stripe_rows=256)
-    dec = pipeline.decode_dataframe(stripes, schema=df.schema)
+    dec = pipeline.roundtrip(df, "conv_id", "turn_idx", stripe_rows=256)
 
     def keyed(frame):
         return {(r["conv_id"], r["turn_idx"]): r.asDict(recursive=True)

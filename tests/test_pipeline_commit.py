@@ -3,6 +3,7 @@ safety for stripe stats, resume parameter guard, and the footer-based
 row estimate that replaced the count() pre-pass."""
 
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -30,8 +31,8 @@ def test_commit_reads_only_its_own_run_dir(spark, df, tmp_path):
     stripes = pipeline.encode_dataframe(df, "conv_id", "turn_idx",
                                         stripe_rows=300, n_buckets=6)
     pipeline.commit(spark, stripes, out, "conv_id", "turn_idx", run_id="batch2")
-    manifest = pipeline.read_manifest(spark, out)
-    assert manifest.count() > 0  # derived without reading run=00000000junk
+    # derived without reading run=00000000junk
+    assert pipeline.active_stripe_ids(spark, out)
 
 
 def test_replayed_append_does_not_double_manifest_stats(spark, df, tmp_path):
@@ -48,12 +49,13 @@ def test_replayed_append_does_not_double_manifest_stats(spark, df, tmp_path):
     pipeline.commit(spark, stripes, out_b, "conv_id", "turn_idx", run_id="r1")
 
     cols = ["stripe_id", "n_rows", "raw_bytes", "enc_bytes", "n_cols", "checksum"]
-    a = (pipeline.read_manifest(spark, out_a).select(cols)
-         .orderBy("stripe_id").toPandas())
-    b = (pipeline.read_manifest(spark, out_b).select(cols)
-         .orderBy("stripe_id").toPandas())
+
+    def facts(out):
+        return sorted(tuple(r[c] for c in cols)
+                      for r in pipeline._log(out)[0] if r["status"] == "ok")
+
+    assert facts(out_a) == facts(out_b)
     import pandas as pd
-    pd.testing.assert_frame_equal(a.reset_index(drop=True), b.reset_index(drop=True))
 
     # and decode still returns exactly the input rows
     got = pipeline.decode_job(spark, out_b).orderBy("conv_id", "turn_idx").toPandas()
@@ -222,12 +224,22 @@ def test_resume_layout_param_mismatch_raises(spark, df, tmp_path):
 
 
 def test_infer_schema_from_manifest_single_row(spark, df, tmp_path):
+    """decode_job takes a table's schema from ONE lineage row's kinds: it
+    equals the schema of the (col_name, col_kind) pairs of every stored
+    stripe row, read with pyarrow from the files the lineage names."""
+    import pyarrow.parquet as pq
     out = str(tmp_path / "enc_schema")
     pipeline.encode_job(spark, df, out, stripe_rows=300, n_buckets=6)
-    schema, cols = pipeline.infer_schema_from_manifest(spark, out)
-    ref_schema, ref_cols = pipeline.infer_schema(pipeline.read_stripes(spark, out))
-    assert cols == ref_cols
-    assert schema == ref_schema
+    paths = {r["path"] for r in pipeline._log(out)[0] if r["status"] == "ok"}
+    pairs = {}
+    for p in paths:
+        t = pq.read_table(f"{out}/{p}", columns=["col_name", "col_kind"])
+        pairs.update(zip(t["col_name"].to_pylist(),
+                         t["col_kind"].to_pylist()))
+    ref_schema, ref_cols = pipeline._schema_from_kinds(pairs, None)
+    dec = pipeline.decode_job(spark, out)
+    assert dec.columns == ref_cols
+    assert dec.schema == ref_schema
 
 
 def test_clustered_decode_renests_persisted_nested_table(spark, df, tmp_path):
@@ -394,8 +406,6 @@ def test_manifest_without_paths_raises(spark, df, tmp_path):
     (a resume across the change) or in whole. encode_job, commit,
     decode_job and compact_job each refuse it with an error naming the
     table, and write nothing."""
-    import re
-
     import pyarrow.parquet as pq
     out = str(tmp_path / "enc_old")
     stripes = _stripes(df)
@@ -510,12 +520,35 @@ def test_path_without_a_table_raises(spark, tmp_path):
     """decode_job and compact_job on a path that holds no table raise
     ValueError naming it, rather than a missing-file error or an empty
     frame."""
-    import re
     for path in (str(tmp_path / "missing"), str(tmp_path)):
         for op in (pipeline.decode_job, pipeline.compact_job):
             with pytest.raises(ValueError,
                                match=f"no stripes table at {re.escape(path)}"):
                 op(spark, path)
+
+
+@pytest.mark.parametrize("drop", ["one column", "the whole stripe"])
+def test_decode_job_raises_on_a_stripe_its_file_lacks(spark, df, tmp_path,
+                                                      drop):
+    """decode_job reads each stripe from the file its lineage row names;
+    when that file lacks one of the stripe's column rows, or the stripe
+    altogether, the decode raises naming the stripe and the file instead
+    of returning fewer rows."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+    out = str(tmp_path / "enc_damaged")
+    pipeline.encode_job(spark, df, out, stripe_rows=300, n_buckets=6)
+    victim = next(r for r in pipeline._log(out)[0] if r["status"] == "ok")
+    path = f"{out}/{victim['path']}"
+    tbl = pq.ParquetFile(path).read()
+    gone = pc.equal(tbl["stripe_id"], victim["stripe_id"])
+    if drop == "one column":
+        gone = pc.and_(gone, pc.equal(tbl["col_name"], "role"))
+    pq.write_table(tbl.filter(pc.invert(gone)), path)
+    with pytest.raises(Exception, match=(
+            f"stripe {re.escape(victim['stripe_id'])} lacks columns "
+            r"\[[^]]*'role'[^]]*\] in .*the file the lineage of")):
+        pipeline.decode_job(spark, out).collect()
 
 
 def test_stats_the_table_lacks_raise(spark, df, tmp_path):
@@ -531,7 +564,8 @@ def test_stats_the_table_lacks_raise(spark, df, tmp_path):
     with pytest.raises(AnalysisException):
         pipeline.decode_job(spark, out,
                             stripe_predicate=F.col("order_min") <= "3")
-    assert "order_min" not in pipeline.read_manifest(spark, out).columns
+    assert all(r["order_min"] is None and r["p_order_col"] is None
+               for r in pipeline._log(out)[0])
     k = df.select("conv_id").first()["conv_id"]
     got = pipeline.decode_job(spark, out,
                               stripe_predicate=F.col("key_max") >= k)
@@ -616,7 +650,6 @@ def test_unreadable_lineage_raises(spark, df, tmp_path):
     """A lineage that cannot be read is never taken for a fresh table:
     encode_job, decode_job and compact_job raise ValueError naming the
     table instead of writing a second copy of every stripe."""
-    import re
     out = str(tmp_path / "enc_bad")
     pipeline.encode_job(spark, df, out, stripe_rows=300, n_buckets=6)
     versions = _files(out, "lineage/*.parquet")

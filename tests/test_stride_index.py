@@ -8,7 +8,7 @@ import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
-from orc_format_spark import pipeline, stripe, transcripts
+from orc_format_spark import pipeline, stripe
 
 
 def _col(values, dtype=None):
@@ -94,17 +94,18 @@ def test_stride_stats_roundtrip():
 def test_pipeline_stride_pruned_decode(spark, tmp_path):
     """End-to-end: encode_job with index_rows, decode_job with stripe AND
     stride pruning, exact residual filter — equals the plain filter."""
-    df = transcripts.generate(spark, n_convs=80, seed=13)
-    df = df.withColumn("row_id", F.monotonically_increasing_id())
-    # use event-style table keyed by a sortable int
+    # an event-style table keyed by a sortable int
     events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    stripes = pipeline.encode_dataframe(events, "event_id", None,
-                                        sort_keys=["event_id"],
-                                        stripe_rows=2048, index_rows=256)
+    out = str(tmp_path / "events")
+    pipeline.encode_job(spark, events, out, key_col="event_id",
+                        order_col=None, sort_keys=["event_id"],
+                        stripe_rows=2048, index_rows=256)
     lo, hi = 3000, 3050
-    got = (pipeline.decode_dataframe(
-        stripes, columns=["event_id", "event_type", "value"],
-        schema=None, stride_range=("event_id", lo, hi))
+    got = (pipeline.decode_job(
+        spark, out, columns=["event_id", "event_type", "value"],
+        stripe_predicate=((F.col("key_max").cast("long") >= lo)
+                          & (F.col("key_min").cast("long") <= hi)),
+        stride_range=("event_id", lo, hi))
         .filter(F.col("event_id").between(lo, hi))
         .orderBy("event_id").toPandas())
     exp = (events.select("event_id", "event_type", "value")

@@ -42,10 +42,8 @@ def mixed_df(spark):
 
 
 def test_mixed_types_roundtrip(spark, mixed_df):
-    stripes = pipeline.encode_dataframe(mixed_df, "k", None, sort_keys=["k"],
-                                        stripe_rows=500)
-    got = (pipeline.decode_dataframe(stripes, columns=mixed_df.columns,
-                                     schema=mixed_df.schema)
+    got = (pipeline.roundtrip(mixed_df, "k", None, sort_keys=["k"],
+                              stripe_rows=500)
            .orderBy("k").toPandas())
     exp = mixed_df.orderBy("k").toPandas()
     pd.testing.assert_frame_equal(exp.reset_index(drop=True),
@@ -76,9 +74,8 @@ def test_single_exchange_in_encode_plan(spark, mixed_df):
 def test_embeddings_array_roundtrip(spark):
     """array<float> columns (embeddings) through the full Spark pipeline."""
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    stripes = pipeline.encode_dataframe(emb, "vec_id", None, sort_keys=["vec_id"],
-                                        stripe_rows=200)
-    got = (pipeline.decode_dataframe(stripes, columns=emb.columns, schema=emb.schema)
+    got = (pipeline.roundtrip(emb, "vec_id", None, sort_keys=["vec_id"],
+                              stripe_rows=200)
            .orderBy("vec_id").toPandas())
     exp = emb.orderBy("vec_id").toPandas()
     assert got["vec_id"].tolist() == exp["vec_id"].tolist()

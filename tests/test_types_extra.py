@@ -13,11 +13,8 @@ from orc_format_spark import pipeline
 
 
 def _roundtrip(spark, df):
-    stripes = pipeline.encode_dataframe(df, df.columns[0], None,
-                                        sort_keys=[df.columns[0]],
-                                        stripe_rows=64)
-    return pipeline.decode_dataframe(stripes, columns=df.columns,
-                                     schema=df.schema)
+    return pipeline.roundtrip(df, df.columns[0], None,
+                              sort_keys=[df.columns[0]], stripe_rows=64)
 
 
 def test_binary_roundtrip_with_nulls(spark):
@@ -71,13 +68,11 @@ def test_decimal_stride_skipping(spark):
     schema = T.StructType([T.StructField("id", T.LongType()),
                            T.StructField("d", T.DecimalType(12, 2))])
     df = spark.createDataFrame(pdf, schema=schema)
-    stripes = pipeline.encode_dataframe(df, "id", None, sort_keys=["id"],
-                                        stripe_rows=2000, index_rows=200)
     # predicate on the decimal column itself (mantissa-scaled bounds)
     lo, hi = 50025, 50125  # 500.25 .. 501.25 as scale-2 mantissa
-    out = pipeline.decode_dataframe(stripes, columns=["id", "d"],
-                                    schema=df.schema,
-                                    stride_range=("d", lo, hi))
+    out = pipeline.roundtrip(df, "id", None, sort_keys=["id"],
+                             stripe_rows=2000, index_rows=200,
+                             columns=["id", "d"], stride_range=("d", lo, hi))
     got = out.toPandas()
     assert len(got) <= 400  # at most two strides decoded
     assert decimal.Decimal("500.25") in set(got["d"])
