@@ -56,9 +56,10 @@ def _scratch_dir() -> str | None:
 
 def _index_dir(name: str) -> str:
     """Path for the per-query rebuilt ANN indexes: same tmpfs placement as
-    :func:`_scratch_dir` (the index is re-built from the parquet inputs
-    inside every query run — only the medium of the transient bytes moves
-    off the stalling block device). Falls back to the local warehouse dir."""
+    :func:`_scratch_dir`. Every query run rebuilds its index at this one
+    path; each build publishes as one lineage version and then frees the
+    run directory and log versions it replaced, so the bytes here stay
+    one build's worth. Falls back to the local warehouse dir."""
     import os
     base = _scratch_dir()
     if base is None:
@@ -555,9 +556,9 @@ def q_ann_lsh_topk(spark, sf_dir):
         "embedding": [query] * 10}))
     uni = emb.unionByName(planted.select(
         "vec_id", F.col("embedding").cast("array<float>").alias("embedding")))
-    # scale path: bucketize ONCE into a persisted bucket-partitioned index,
-    # then probe it — the probe scans only the probed bucket partitions
-    # (PartitionFilters), never the full corpus
+    # scale path: bucketize ONCE into a persisted index (one file per
+    # bucket), then probe it — the probe scans only the probed buckets'
+    # files, never the full corpus
     import os
     path = _index_dir(f"ann_index_{os.path.basename(sf_dir.rstrip('/'))}")
     similarity.build_ann_index(uni, path, n_planes=6, seed=42)
@@ -569,7 +570,7 @@ def q_ann_batch_probe(spark, sf_dir):
     """BATCH ANN probe — the production shape (millions of queries as a
     DataFrame, not one driver-side vector): bucketize the query set with
     the index's persisted plane family, one bucket join against the
-    bucket-partitioned index, window top-k per query. Oracle-checkable by
+    index (one file per bucket), window top-k per query. Oracle-checkable by
     the planted construction: the 100 query vectors are the first 100
     corpus vectors, each planted once more under _PLANT_OFFSET + vec_id,
     so every query's exact top-2 is {its own vec_id, its planted copy}
@@ -593,7 +594,7 @@ def q_ann_batch_probe(spark, sf_dir):
 def q_ann_ivf_topk(spark, sf_dir):
     """IVF approximate top-k — the data-adaptive scale path next to LSH:
     spherical-k-means cells trained on a bounded sample, corpus persisted
-    partitioned by cell, probe reads only the nearest cells. Same planted
+    one file per cell, probe reads only the nearest cells' files. Same planted
     construction as ``ann_lsh_topk``: 10 exact copies of the query vector
     share its nearest centroid by construction, so the IVF path MUST
     return the brute-force top-10, and the oracle is plain exact SQL.

@@ -9,12 +9,19 @@ scan, trading recall for a ~2^planes fan-in reduction.
 
 from __future__ import annotations
 
+import contextlib
+import json
+import os
+import shutil
+import uuid
+
 import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..pipeline import _estimate_rows, _table_fs, _vectors, run_kernel
+from ..pipeline import (_active, _estimate_rows, _lineage_rows, _local_root,
+                        _log, _publish, _table_fs, _vectors, run_kernel)
 
 
 def _cosine_expr(vec_col: str, query: list[float]):
@@ -87,188 +94,162 @@ def _probe_buckets(query: list[float], planes: np.ndarray,
     return [qbucket] + [qbucket ^ (1 << int(i)) for i in flip_order[:n_probes]]
 
 
-def _write_partitioned(df: DataFrame, path: str,
-                       part_col: str) -> int | None:
-    """Hive-layout partitioned parquet write (``part_col=<v>/part-N.parquet``)
-    with the files written by pyarrow INSIDE the shuffle tasks instead of
-    Spark's dynamic-partition writer.
+# --------------- persisted indexes: one lineage version per build ---------
+# An index at ``path`` is a table of the lineage log (pipeline._log), as a
+# stripes table is: the tasks of a build's one shuffle by key write one
+# parquet file per LSH bucket / IVF list under ``stripes/run=<id>/``, and
+# the driver publishes ONE version holding an 'ok' row per file (stripe id
+# ``<run>-<key>``, the key as ``bucket``, ``n_rows``, ``path``), the build's
+# meta (``index_meta`` JSON, on the first of them) and the tombstones of
+# the build it replaces. A reader plans from one read of the log and sees
+# one whole build; a probe reads only the files of the keys it probes.
 
-    Why: Spark's partitionBy write pays a per-partition-dir writer init plus
-    a driver-side commit pass over every dir — measured 1.2-1.5 s for a
-    64-bucket index of 2k rows where the identical data as a plain write
-    costs 0.4 s. The task-side pyarrow write keeps the exact same on-disk
-    layout (spark.read.parquet discovers it identically) and the same
-    one-shuffle-by-bucket plan, minus the commit machinery. Idempotency:
-    file names are keyed by the shuffle partition id, so a retried task
-    overwrites its own file with identical content (the index build is
-    deterministic given the shuffle partition's rows' bucket assignment);
-    a failed build is simply re-run (an index is a derived artifact — the
-    two-phase lineage commit discipline of the stripes tables would be
-    overkill here). Falls back to the Spark writer for filesystems pyarrow
-    cannot resolve."""
-    spark = df.sparkSession
-    try:
-        filesystem, base = _table_fs(path)
-    except ValueError:
-        df.repartition(F.col(part_col)).write.mode("overwrite") \
-            .partitionBy(part_col).parquet(path)
-        return None  # row count unknown without an extra job
-    # overwrite semantics: clear the target first (driver-side, one RPC)
-    try:
-        filesystem.delete_dir(base)
-    except FileNotFoundError:
-        pass
-    filesystem.create_dir(base, recursive=True)
+_KEYS = {"ann": "bucket", "ivf": "list_id"}  # kind -> key column
+_EMPTY = "cannot build an {} index over an empty corpus ({})"
 
-    def write_kernel(batches):
-        import pyarrow as pa
+
+def _build(frame: DataFrame, path: str, meta: dict) -> DataFrame:
+    """Write ``frame`` (the id, vector and key columns of ``meta``'s kind)
+    as one parquet file per key and publish them with ``meta`` (plus the
+    files' vector width, ``dim``) as the next version of ``path``'s log,
+    tombstoning the active build. A build that loses the version re-reads
+    the log and tombstones the winner instead: the last publish wins.
+    Only then frees what the version superseded: the replaced runs'
+    directories and the older log versions. Returns the new index.
+    Raises ValueError for a non-local path before any job, and for an
+    empty corpus or mixed vector widths before publishing."""
+    root = _local_root(path)
+    key, vec_col = _KEYS[meta["kind"]], meta["vec_col"]
+    run_id = "i" + uuid.uuid4().hex[:11]
+    rel = f"stripes/run={run_id}"
+
+    def write(batches):
+        import pyarrow.compute as pc
         import pyarrow.parquet as pq
-        from pyspark import TaskContext
-        batches = list(batches)
-        n = 0
-        if batches:
-            tbl = pa.Table.from_batches(batches)
-            n = tbl.num_rows
-            if n:
-                pid = TaskContext.get().partitionId()
-                pcol = tbl.column(part_col)
-                import numpy as np
-                vals = pcol.to_numpy()
-                order = np.argsort(vals, kind="stable")
-                tbl = tbl.take(order).drop([part_col])
-                svals = vals[order]
-                bounds = np.concatenate(
-                    ([0], np.flatnonzero(np.diff(svals) != 0) + 1, [n]))
-                for i in range(len(bounds) - 1):
-                    lo, hi = int(bounds[i]), int(bounds[i + 1])
-                    d = f"{base}/{part_col}={int(svals[lo])}"
-                    filesystem.create_dir(d, recursive=True)
-                    pq.write_table(tbl.slice(lo, hi - lo),
-                                   f"{d}/part-{pid:05d}.parquet",
-                                   filesystem=filesystem)
-        yield pa.RecordBatch.from_arrays(
-            [pa.array([n], type=pa.int64())],
-            schema=pa.schema([("n", pa.int64())]))
+        batches = [b for b in batches if b.num_rows]
+        if not batches:
+            return
+        tbl = pa.Table.from_batches(batches).sort_by(key)  # stable
+        keys = tbl.column(key).to_numpy()
+        cuts = [0, *(np.flatnonzero(np.diff(keys)) + 1), len(keys)]
+        os.makedirs(f"{root}/{rel}", exist_ok=True)
+        facts = []
+        for lo, hi in zip(cuts, cuts[1:]):
+            part, k = tbl.slice(lo, hi - lo), int(keys[lo])
+            name = f"{rel}/{key}-{k}-{uuid.uuid4().hex}.parquet"
+            pq.write_table(part, f"{root}/{name}")
+            widths = np.unique(
+                pc.list_value_length(part.column(vec_col)).to_numpy())
+            facts.append({"stripe_id": f"{run_id}-{k}", "bucket": k,
+                          "n_rows": hi - lo, "path": name,
+                          "dim": int(widths[0]) if len(widths) == 1 else -1})
+        yield pa.RecordBatch.from_pylist(facts)
 
-    total = (df.repartition(F.col(part_col)).mapInArrow(write_kernel, "n long")
-             .agg(F.sum("n")).collect()[0][0]) or 0
-    if total == 0:
-        # empty input wrote no files; leave a readable empty table (the
-        # Spark writer's old behavior) so load_ann_index can infer a schema
-        df.limit(0).write.mode("overwrite").parquet(path)
-    return total
+    facts = (frame.repartition(F.col(key))
+             .mapInArrow(write, "stripe_id string, bucket long, n_rows long, "
+                                "path string, dim long")
+             .toArrow().to_pylist())
+    if not facts:
+        raise ValueError(_EMPTY.format(meta["kind"].upper(), path))
+    dims = {f.pop("dim") for f in facts}
+    if len(dims) > 1 or -1 in dims:
+        raise ValueError(f"the corpus of index {path} mixes vector widths")
+    meta = dict(meta, dim=dims.pop())
+    ok = _lineage_rows(sorted(facts, key=lambda f: f["bucket"]), "ok",
+                       run_id, None)
+    ok[0]["index_meta"] = json.dumps(meta)
+
+    def replace(rows, _pending=None):
+        return ok + _lineage_rows(list(_active(rows, path).values()),
+                                  "compacted", run_id, None)
+
+    log = _log(path)
+    rows = _publish(path, replace(log[0]), log, replace)
+    live = {r["run_id"] for r in _active(rows, path).values()}
+    # a concurrent build's clean-up may free the same paths first
+    for rid in {r["run_id"] for r in rows if r["status"] == "ok"} - live:
+        with contextlib.suppress(FileNotFoundError):
+            shutil.rmtree(f"{root}/stripes/run={rid}")
+    # every version but the newest is superseded: each holds a whole build
+    versions = sorted(v for v in os.listdir(f"{root}/lineage")
+                      if v.removesuffix(".parquet").isdigit())
+    for v in versions[:-1]:
+        with contextlib.suppress(FileNotFoundError):
+            os.remove(f"{root}/lineage/{v}")
+    return _scan(frame.sparkSession, meta,
+                 [f"{root}/{r['path']}" for r in ok])
 
 
-def _index_vec_dim(path: str, vec_col: str) -> int | None:
-    """Vector width of a just-written index, read driver-side from ONE
-    column of its first file (pyarrow dataset head — no Spark job). Used
-    by the index builders so the plane/centroid metadata records the true
-    dim without a separate ``first()`` probe job over the corpus.
-    Returns None when the index holds no non-null vector."""
-    import pyarrow as pa
-    import pyarrow.dataset as pads
-    try:
-        filesystem, base = _table_fs(path)
-    except ValueError:
-        return None
-    try:
-        dset = pads.dataset(base, filesystem=filesystem, format="parquet",
-                            partitioning="hive",
-                            ignore_prefixes=["_", "."])
-        head = dset.head(1, columns=[vec_col])
-    except (OSError, FileNotFoundError, pa.ArrowInvalid):
-        return None
-    if head.num_rows:
-        v = head.column(0)[0].as_py()
-        if v is not None:
-            return len(v)
-    return None
+def _index(path: str, kind: str | None = None,
+           query: list[float] | None = None) -> tuple[dict, dict[int, str]]:
+    """(meta, key -> file) of the build the lineage of ``path`` publishes,
+    from one driver read of the log (no Spark job). Raises ValueError
+    naming ``path`` when it publishes no index build, when the build is
+    not of ``kind``, and when ``query`` is not of the index's width."""
+    active = _active(_log(path)[0], path).values()
+    meta = next((r["index_meta"] for r in active if r["index_meta"]), None)
+    if meta is None:
+        raise ValueError(
+            f"no index at {path}: its lineage publishes no index build "
+            "(indexes built before builds were published through the "
+            "lineage have none) — rebuild it")
+    meta = json.loads(meta)
+    if kind not in (None, meta["kind"]):
+        raise ValueError(f"{path} is not an {kind.upper()} index (meta "
+                         f"kind {meta['kind']!r})")
+    if query is not None and len(query) != meta["dim"]:
+        raise ValueError(
+            f"query dim {len(query)} != index dim {meta['dim']} ({path}): "
+            "the planes / centroids are dimension-specific, a mismatch "
+            "would probe garbage instead of failing")
+    root = _table_fs(path)[1]
+    return meta, {r["bucket"]: f"{root}/{r['path']}" for r in active}
+
+
+def _scan(spark, meta: dict, files) -> DataFrame:
+    """The index rows in ``files``, no other file listed or read; an empty
+    frame of the index's schema when there are none."""
+    schema = (f"{meta['id_col']} long, {meta['vec_col']} array<float>, "
+              f"{_KEYS[meta['kind']]} long")
+    files = list(files)
+    return (spark.read.schema(schema).parquet(*files) if files
+            else spark.createDataFrame([], schema))
 
 
 def build_ann_index(emb: DataFrame, path: str, n_planes: int = 8,
                     seed: int = 42, id_col: str = "vec_id",
                     vec_col: str = "embedding") -> DataFrame:
-    """Bucketize the corpus ONCE and persist it partitioned by bucket, so
-    every probe prunes to ~(n_probes/2^n_planes) of the data via parquet
-    partition pruning (PartitionFilters in the scan) instead of
-    re-bucketizing the whole corpus per query. The LSH parameters ride in a
-    ``_ann_meta`` side table (underscore-prefixed => invisible to parquet
-    discovery), so ``load_ann_index``/``probe_ann_index`` reconstruct the
-    exact plane family. Returns the reloaded index DataFrame."""
-    spark = emb.sparkSession
-    # planes are derived lazily inside the kernel (pure function of
-    # (seed, n_planes, dim)); the meta dim is recovered from the written
-    # files driver-side — no separate dim-probe job over the corpus
-    bucketed = _bucketize(emb, None, id_col, vec_col,
-                          n_planes=n_planes, seed=seed)
-    # shuffle by bucket before the partitioned write: one writer task per
-    # bucket => one well-sized file per partition dir instead of
-    # (tasks x buckets) shards — the layout a 100-TB probe wants
-    total = _write_partitioned(bucketed, path, "bucket")
-    dim = _index_vec_dim(path, vec_col) if total != 0 else None
-    if dim is None:  # empty corpus / opaque filesystem: probe with a job
-        row = emb.select(F.size(vec_col).alias("d")).first()
-        if row is None:
-            raise ValueError(
-                f"cannot build an ANN index over an empty corpus ({path}): "
-                "the plane family needs the vector dimension")
-        dim = int(row["d"])
-    _write_meta(spark, path, {"n_planes": int(n_planes), "seed": int(seed),
-                              "dim": int(dim), "id_col": id_col,
-                              "vec_col": vec_col})
-    return load_ann_index(spark, path)[0]
-
-
-def _write_meta(spark, path: str, meta: dict) -> None:
-    """One-row meta side table. pyarrow writes it driver-side (a 1-row
-    Spark job costs ~2 s of commit-protocol overhead); the Spark writer is
-    the fallback for filesystems pyarrow can't reach."""
-    import pyarrow as pa
-    try:
-        import pyarrow.parquet as pq
-        filesystem, base = _table_fs(path)
-        filesystem.create_dir(base + "/_ann_meta", recursive=True)
-        pq.write_table(pa.table({k: [v] for k, v in meta.items()}),
-                       base + "/_ann_meta/meta.parquet",
-                       filesystem=filesystem)
-    except (OSError, pa.ArrowInvalid, ValueError):
-        # incl. unresolvable URI schemes (s3a://): Spark's own
-        # writer handles them and lands next to the index
-        spark.createDataFrame([tuple(meta.values())], list(meta)) \
-            .coalesce(1).write.mode("overwrite") \
-            .parquet(path + "/_ann_meta")
+    """Bucketize the corpus ONCE and persist it one parquet file per
+    bucket, published with the LSH parameters as one lineage version (see
+    _build), so every probe reads only the probed buckets' files
+    (~(n_probes+1)/2^n_planes of the data) instead of re-bucketizing the
+    whole corpus per query. Replaces the index already at ``path``. The
+    planes are derived inside the kernel from the vectors' width (a pure
+    function of (seed, n_planes, dim)), so no job probes the width first.
+    Returns the index DataFrame."""
+    return _build(_bucketize(emb, None, id_col, vec_col, n_planes=n_planes,
+                             seed=seed), path,
+                  {"kind": "ann", "n_planes": int(n_planes),
+                   "seed": int(seed), "id_col": id_col, "vec_col": vec_col})
 
 
 def load_ann_index(spark, path: str) -> tuple[DataFrame, dict]:
-    """(index DataFrame, meta dict) for an index written by build_ann_index."""
-    try:
-        import pyarrow.parquet as pq
-        filesystem, base = _table_fs(path)
-        meta = {k: v[0] for k, v in
-                pq.read_table(base + "/_ann_meta", filesystem=filesystem)
-                .to_pydict().items()}
-    except (OSError, FileNotFoundError, ValueError):
-        meta = spark.read.parquet(path + "/_ann_meta").first().asDict()
-    return spark.read.parquet(path), meta
+    """(index DataFrame, meta dict) of the ANN or IVF index at ``path``,
+    planned from its lineage log (see _index)."""
+    meta, files = _index(path)
+    return _scan(spark, meta, files.values()), meta
 
 
 def probe_ann_index(spark, path: str, query: list[float], k: int = 10,
                     n_probes: int = 3) -> DataFrame:
-    """Top-k probe against a persisted index: reads ONLY the probed bucket
-    partitions (partition pruning), exact-ranks the survivors."""
-    index, meta = load_ann_index(spark, path)
-    if "n_planes" not in meta:
-        raise ValueError(
-            f"{path} is not an LSH index (meta kind {meta.get('kind')!r}) "
-            "— probe IVF indexes with probe_ivf_index")
-    if len(query) != int(meta["dim"]):
-        raise ValueError(
-            f"query dim {len(query)} != index dim {int(meta['dim'])} "
-            f"({path}): the plane family is dimension-specific, a mismatch "
-            "would bucketize into garbage instead of failing")
-    return lsh_topk(index, query, k=k, id_col=meta["id_col"],
-                    vec_col=meta["vec_col"], n_planes=int(meta["n_planes"]),
-                    n_probes=n_probes, seed=int(meta["seed"]))
+    """Top-k probe against a persisted index: reads ONLY the probed
+    buckets' files, exact-ranks the survivors."""
+    meta, files = _index(path, "ann", query)
+    planes = _planes(meta["n_planes"], meta["dim"], meta["seed"])
+    probe = _probe_buckets(query, planes, n_probes)
+    return brute_force_topk(
+        _scan(spark, meta, [files[b] for b in probe if b in files]),
+        query, k, meta["id_col"], meta["vec_col"])
 
 
 def _cosine_pair_expr(a_col: str, b_col: str):
@@ -291,38 +272,41 @@ def _cosine_pair_expr(a_col: str, b_col: str):
 BROADCAST_QUERY_ROWS = 100_000
 
 
-def _join_candidates(index: DataFrame, exploded: DataFrame, key: str,
-                     prune_partitions: bool | None):
-    """Candidate join for the batch probes, with TWO independent decisions:
-    (1) partition pruning — push the probed keys into the index scan as a
-    literal IN when their DISTINCT count is small (capped skinny job;
-    prune_partitions=True lifts the cap, False skips pruning entirely);
+def _probe_many(spark, meta: dict, files: dict[int, str],
+                exploded: DataFrame, k: int, query_id_col: str,
+                query_vec_col: str, prune_partitions: bool | None):
+    """Batch top-k: ``exploded`` (one row per query and probed key) joined
+    on the key to the index rows, exact cosine ranked per query by a
+    window top-k. Two independent decisions:
+    (1) pruning — scan only the probed keys' files when their DISTINCT
+    count is small (capped skinny job; prune_partitions=True lifts the
+    cap, False skips pruning entirely);
     (2) broadcast — broadcast the exploded query side only when it is
     actually small (capped count job), never merely because the index has
-    few partitions: with default-sized indexes (<=2^8 buckets / 16 cells)
-    every query set probes few DISTINCT keys, and keying the broadcast on
-    that would ship a multi-million-row query set to every executor.
+    few keys: with default-sized indexes (<=2^8 buckets / 16 cells) every
+    query set probes few DISTINCT keys, and keying the broadcast on that
+    would ship a multi-million-row query set to every executor.
 
     ``exploded`` is persisted before the sizing jobs: the broadcast-size
     count, the distinct-key job and the candidate join would otherwise
-    each re-run the query-side bucketize matmul kernel — at millions of
-    queries that triples the kernel work (round-5 review finding).
-    MEMORY_AND_DISK spills rather than recomputing; Spark evicts LRU, so
-    the lazily-returned join needs no unpersist hook."""
+    each re-run the query-side kernel — at millions of queries that
+    triples the kernel work. MEMORY_AND_DISK spills rather than
+    recomputing; Spark evicts LRU, so the lazily-returned join needs no
+    unpersist hook."""
     from pyspark import StorageLevel
+    key, id_col, vec_col = _KEYS[meta["kind"]], meta["id_col"], meta["vec_col"]
     exploded = exploded.persist(StorageLevel.MEMORY_AND_DISK)
-    small_queries = None
+    small_queries, scan = None, files.values()
     if prune_partitions is not False:
-        # ONE sizing job instead of two: the per-key counts give both the
-        # distinct probed keys (pruning) and, when the cap holds, the total
-        # exploded row count (broadcast decision) — the old shape ran a
-        # limit-count job AND a distinct job over the same persisted rows.
+        # ONE sizing job: the per-key counts give both the distinct probed
+        # keys (pruning) and, when the cap holds, the total exploded row
+        # count (broadcast decision)
         per_key = exploded.groupBy(key).agg(F.count("*").alias("__n"))
         cap = None if prune_partitions else 1000
         rows = per_key.collect() if cap is None \
             else per_key.limit(cap + 1).collect()
         if cap is None or len(rows) <= cap:
-            index = index.where(F.col(key).isin([r[key] for r in rows]))
+            scan = [files[r[key]] for r in rows if r[key] in files]
             small_queries = (sum(r["__n"] for r in rows)
                              <= BROADCAST_QUERY_ROWS)
     if small_queries is None:
@@ -330,8 +314,15 @@ def _join_candidates(index: DataFrame, exploded: DataFrame, key: str,
         # directly (a capped count over the persisted skinny rows)
         small_queries = (exploded.limit(BROADCAST_QUERY_ROWS + 1).count()
                          <= BROADCAST_QUERY_ROWS)
-    return index.join(
+    cand = _scan(spark, meta, scan).join(
         F.broadcast(exploded) if small_queries else exploded, key)
+    rank = F.expr(f"row_number() OVER (PARTITION BY `{query_id_col}` "
+                  f"ORDER BY cosine DESC, `{id_col}`)")
+    return (cand.select(
+                query_id_col, id_col,
+                _cosine_pair_expr(query_vec_col, vec_col).alias("cosine"))
+            .withColumn("__rk", rank)
+            .where(F.col("__rk") <= k).drop("__rk"))
 
 
 def probe_ann_index_many(spark, path: str, queries: DataFrame, k: int = 10,
@@ -341,27 +332,26 @@ def probe_ann_index_many(spark, path: str, queries: DataFrame, k: int = 10,
     """Batch top-k probe — the production shape: a 100-TB pipeline probes
     MILLIONS of queries, not one driver-side vector.
 
-    Plan: (1) the plane family is rebuilt from the persisted ``_ann_meta``
-    and closed over by a vectorized kernel that explodes each query row to
-    its probed buckets (home bucket + ``n_probes`` lowest-|margin| sign
-    flips — the same probe set the single-query path uses), one numpy
-    matmul per Arrow batch, no per-row Python; (2) ONE join on ``bucket``
-    against the bucket-partitioned index — never all-pairs, and since each
+    Plan: (1) the plane family is rebuilt from the index meta the lineage
+    publishes and closed over by a vectorized kernel that explodes each
+    query row to its probed buckets (home bucket + ``n_probes``
+    lowest-|margin| sign flips — the same probe set the single-query path
+    uses), one numpy matmul per Arrow batch, no per-row Python; (2) ONE
+    join on ``bucket`` against the index — never all-pairs, and since each
     index vector lives in exactly one bucket no post-join dedup is needed;
     (3) exact cosine ranks survivors per query via a window top-k.
 
     When the query set probes few DISTINCT buckets (<=1000, decided by one
     small distinct-limit job on the skinny bucket column — not by query
-    count, which is a proxy), the buckets are pushed into the index scan
-    as a literal IN — parquet partition pruning reads only those bucket
-    directories — and the exploded query side is broadcast. At millions of
-    queries every bucket is hit anyway, so the plain shuffle join is the
-    right plan and is used. ``prune_partitions`` forces either path.
+    count, which is a proxy), the index scan lists only those buckets'
+    files and the exploded query side is broadcast. At millions of
+    queries every bucket is hit anyway, so the plain shuffle join over
+    every file is the right plan and is used. ``prune_partitions`` forces
+    either path.
     """
-    index, meta = load_ann_index(spark, path)
-    n_planes, dim = int(meta["n_planes"]), int(meta["dim"])
-    planes = _planes(n_planes, dim, int(meta["seed"]))
-    id_col, vec_col = meta["id_col"], meta["vec_col"]
+    meta, files = _index(path, "ann")
+    n_planes, dim = meta["n_planes"], meta["dim"]
+    planes = _planes(n_planes, dim, meta["seed"])
 
     def kernel(b: pa.RecordBatch) -> pa.Table:
         m = _query_matrix(b, query_vec_col, dim)
@@ -378,17 +368,8 @@ def probe_ann_index_many(spark, path: str, queries: DataFrame, k: int = 10,
     exploded = run_kernel(
         queries, [query_id_col, query_vec_col], kernel,
         f"{query_id_col} long, {query_vec_col} array<float>, bucket long")
-
-    cand = _join_candidates(index, exploded, "bucket", prune_partitions)
-
-    from pyspark.sql.window import Window
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.desc("cosine"), F.asc(id_col))
-    return (cand.select(
-                query_id_col, id_col,
-                _cosine_pair_expr(query_vec_col, vec_col).alias("cosine"))
-            .withColumn("__rk", F.row_number().over(w))
-            .where(F.col("__rk") <= k).drop("__rk"))
+    return _probe_many(spark, meta, files, exploded, k, query_id_col,
+                       query_vec_col, prune_partitions)
 
 
 def _query_matrix(b: pa.RecordBatch, vec_col: str, dim: int) -> np.ndarray:
@@ -409,29 +390,24 @@ def _explode(b: pa.RecordBatch, key: str, probes: np.ndarray) -> pa.Table:
 def lsh_topk(emb: DataFrame, query: list[float], k: int = 10,
              id_col: str = "vec_id", vec_col: str = "embedding",
              n_planes: int = 8, n_probes: int = 3, seed: int = 42) -> DataFrame:
-    """Approximate top-k. ``emb`` is either a persisted/bucketed index (has
-    a ``bucket`` column — from :func:`build_ann_index`; the scale path:
-    probes prune partitions, nothing is re-bucketized) or a raw embedding
-    table (ad-hoc path: bucketized transiently for this one query). Probes
-    the query's bucket plus its ``n_probes`` nearest sign-flips, exact-ranks
-    the survivors; cost stays ~(probes/2^planes) of the corpus."""
+    """Approximate top-k over a raw embedding table, bucketized
+    transiently for this one query: probes the query's bucket plus its
+    ``n_probes`` nearest sign-flips, exact-ranks the survivors; cost stays
+    ~(probes/2^planes) of the corpus after the bucketize pass.
+    :func:`probe_ann_index` is the persisted path, which bucketizes once
+    and reads only the probed buckets' files."""
     planes = _planes(n_planes, len(query), seed)
     probe = _probe_buckets(query, planes, n_probes)
-    if "bucket" in emb.columns:
-        cand = emb.where(F.col("bucket").isin(probe))
-    else:
-        cand = _bucketize(emb, planes, id_col, vec_col).where(
-            F.col("bucket").isin(probe))
-    return (cand.select(id_col, _cosine_expr(vec_col, query).alias("cosine"))
-            .orderBy(F.desc("cosine"), F.asc(id_col))
-            .limit(k))
+    return brute_force_topk(
+        _bucketize(emb, planes, id_col, vec_col)
+        .where(F.col("bucket").isin(probe)), query, k, id_col, vec_col)
 
 
 # ------------------------- IVF (k-means coarse lists) -----------------------
 # The second classic ANN scale path next to LSH: partition the corpus into
 # n_lists Voronoi cells of spherical-k-means centroids (trained driver-side
-# on a bounded sample, the standard IVF recipe), persist the corpus
-# partitioned by cell, probe only the n_probes nearest cells per query.
+# on a bounded sample, the standard IVF recipe), persist the corpus one
+# file per cell, probe only the n_probes nearest cells per query.
 # Vs LSH: data-adaptive cells follow the embedding distribution (clustered
 # real-world embeddings get balanced lists where fixed hyperplanes leave
 # buckets empty), at the cost of a one-off training pass.
@@ -492,10 +468,12 @@ def build_ivf_index(emb: DataFrame, path: str, n_lists: int = 16,
                     iters: int = 10) -> DataFrame:
     """Train centroids on a seeded bounded sample (train_rows x dim doubles
     driver-side — 32 MB at 32k x 128, independent of corpus size), assign
-    every vector distributedly, persist partitioned by ``list_id`` with the
-    centroids riding in ``_ann_meta``. One writer task per list => one
-    well-sized file per cell directory. Returns the reloaded index."""
-    spark = emb.sparkSession
+    every vector distributedly, persist one parquet file per list,
+    published with the centroids as one lineage version (see _build).
+    Replaces the index already at ``path``. Returns the index DataFrame.
+    Raises ValueError, before any job, for a non-local path, and before
+    training for an empty corpus."""
+    _local_root(path)
     # corpus size for the sample fraction from parquet FOOTERS when the
     # input is file-backed (driver-side metadata, exact for <=64 files —
     # no count() job); the estimate only sizes the sampling fraction, and
@@ -508,50 +486,32 @@ def build_ivf_index(emb: DataFrame, path: str, n_lists: int = 16,
     samp = (emb.select(vec_col) if frac >= 1.0
             else emb.select(vec_col).sample(False, frac, seed)) \
         .limit(train_rows).toPandas()
+    if samp.empty:
+        raise ValueError(_EMPTY.format("IVF", path))
     m = _unit_rows(np.vstack(samp[vec_col].to_numpy()).astype(np.float64))
-    # dim from the training sample itself (the sample does not depend on
-    # dim, so this is byte-identical to the old separate first() probe job
-    # — one fewer sequential job before training)
-    dim = int(m.shape[1])
     cent = _spherical_kmeans(m, n_lists, seed, iters)
-    assigned = _assign_lists(emb, cent, id_col, vec_col)
-    _write_partitioned(assigned, path, "list_id")
-    _write_meta(spark, path, {
-        "kind": "ivf", "n_lists": int(n_lists), "dim": int(dim),
-        "seed": int(seed), "id_col": id_col, "vec_col": vec_col,
-        "centroids": cent.ravel().tolist()})
-    return load_ann_index(spark, path)[0]
+    return _build(_assign_lists(emb, cent, id_col, vec_col), path,
+                  {"kind": "ivf", "n_lists": int(n_lists), "seed": int(seed),
+                   "id_col": id_col, "vec_col": vec_col,
+                   "centroids": cent.ravel().tolist()})
 
 
-def _ivf_meta(spark, path: str) -> tuple[DataFrame, dict, np.ndarray]:
-    index, meta = load_ann_index(spark, path)
-    if meta.get("kind") != "ivf":
-        raise ValueError(f"{path} is not an IVF index (meta kind "
-                         f"{meta.get('kind')!r})")
-    n_lists, dim = int(meta["n_lists"]), int(meta["dim"])
-    cent = np.asarray(meta["centroids"], dtype=np.float64) \
-        .reshape(n_lists, dim)
-    return index, meta, cent
+def _centroids(meta: dict) -> np.ndarray:
+    return np.asarray(meta["centroids"], dtype=np.float64) \
+        .reshape(meta["n_lists"], meta["dim"])
 
 
 def probe_ivf_index(spark, path: str, query: list[float], k: int = 10,
                     n_probes: int = 2) -> DataFrame:
     """Top-k probe: rank cells by centroid similarity driver-side (n_lists
-    dots), push the n_probes nearest cell ids into the scan as a literal IN
-    (parquet partition pruning), exact-rank the survivors."""
-    index, meta, cent = _ivf_meta(spark, path)
-    if len(query) != int(meta["dim"]):
-        raise ValueError(
-            f"query dim {len(query)} != index dim {int(meta['dim'])} "
-            f"({path}): centroids are dimension-specific, a mismatch would "
-            "assign garbage cells instead of failing")
+    dots), read only the n_probes nearest cells' files, exact-rank the
+    survivors."""
+    meta, files = _index(path, "ivf", query)
     q = _unit_rows(np.asarray([query], dtype=np.float64))[0]
-    lists = np.argsort(-(cent @ q), kind="stable")[:n_probes]
-    cand = index.where(F.col("list_id").isin([int(x) for x in lists]))
-    return (cand.select(meta["id_col"],
-                        _cosine_expr(meta["vec_col"], query).alias("cosine"))
-            .orderBy(F.desc("cosine"), F.asc(meta["id_col"]))
-            .limit(k))
+    lists = np.argsort(-(_centroids(meta) @ q), kind="stable")[:n_probes]
+    return brute_force_topk(
+        _scan(spark, meta, [files[c] for c in map(int, lists) if c in files]),
+        query, k, meta["id_col"], meta["vec_col"])
 
 
 def probe_ivf_index_many(spark, path: str, queries: DataFrame, k: int = 10,
@@ -561,14 +521,13 @@ def probe_ivf_index_many(spark, path: str, queries: DataFrame, k: int = 10,
     """Batch IVF probe, same plan shape as :func:`probe_ann_index_many`:
     explode each query to its n_probes nearest cells (one matmul per Arrow
     batch against the broadcast centroid matrix), ONE join on ``list_id``
-    against the cell-partitioned index, window top-k per query. Few
-    distinct probed cells (<=1000, decided by a capped distinct job on the
-    skinny list_id column) => literal-IN partition pruning + broadcast
-    query side; a query set hitting every cell => plain shuffle join."""
-    index, meta, cent = _ivf_meta(spark, path)
-    dim = int(meta["dim"])
-    id_col, vec_col = meta["id_col"], meta["vec_col"]
-    n_probes = min(n_probes, int(meta["n_lists"]))
+    against the index, window top-k per query. Few distinct probed cells
+    (<=1000, decided by a capped distinct job on the skinny list_id
+    column) => only those cells' files are scanned + broadcast query side;
+    a query set hitting every cell => plain shuffle join."""
+    meta, files = _index(path, "ivf")
+    dim, cent = meta["dim"], _centroids(meta)
+    n_probes = min(n_probes, meta["n_lists"])
 
     def kernel(b: pa.RecordBatch) -> pa.Table:
         sims = _unit_rows(_query_matrix(b, query_vec_col, dim)) @ cent.T
@@ -578,14 +537,5 @@ def probe_ivf_index_many(spark, path: str, queries: DataFrame, k: int = 10,
     exploded = run_kernel(
         queries, [query_id_col, query_vec_col], kernel,
         f"{query_id_col} long, {query_vec_col} array<float>, list_id long")
-
-    cand = _join_candidates(index, exploded, "list_id", prune_partitions)
-
-    from pyspark.sql.window import Window
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.desc("cosine"), F.asc(id_col))
-    return (cand.select(
-                query_id_col, id_col,
-                _cosine_pair_expr(query_vec_col, vec_col).alias("cosine"))
-            .withColumn("__rk", F.row_number().over(w))
-            .where(F.col("__rk") <= k).drop("__rk"))
+    return _probe_many(spark, meta, files, exploded, k, query_id_col,
+                       query_vec_col, prune_partitions)

@@ -57,31 +57,11 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from . import stripe as stripe_mod
 
-STRIPE_SCHEMA = T.StructType([
-    T.StructField("stripe_id", T.StringType()),
-    T.StructField("bucket", T.LongType()),
-    T.StructField("n_rows", T.LongType()),
-    T.StructField("col_name", T.StringType()),
-    T.StructField("col_kind", T.StringType()),
-    T.StructField("codec", T.StringType()),
-    T.StructField("compression", T.StringType()),
-    T.StructField("present", T.BinaryType()),
-    T.StructField("data", T.BinaryType()),
-    T.StructField("length", T.BinaryType()),
-    T.StructField("dict_data", T.BinaryType()),
-    T.StructField("extra", T.BinaryType()),
-    T.StructField("n_nulls", T.LongType()),
-    T.StructField("raw_bytes", T.LongType()),
-    T.StructField("enc_bytes", T.LongType()),
-    T.StructField("min_val", T.StringType()),
-    T.StructField("max_val", T.StringType()),
-    T.StructField("ndv", T.LongType()),
-    T.StructField("checksum", T.StringType()),
-    T.StructField("bloom", T.BinaryType()),
-])
+STRIPE_SCHEMA = from_arrow_schema(stripe_mod.STRIPE_PA_SCHEMA)
 
 DEFAULT_STRIPE_ROWS = 65_536
 # stripes per encode task: the encode kernel holds its whole partition to
@@ -1064,15 +1044,18 @@ _STRIPE_FACTS = pa.schema([
 # the facts only an 'ok' row holds: tombstones ('compacted', 'expired')
 # name no file
 _OK_ONLY = ("path", "kinds", "key_min", "key_max", "order_min",
-            "order_max", "key_bloom")
+            "order_max", "key_bloom", "index_meta")
 
+# ``index_meta``: an index build's parameters (JSON), on the first 'ok'
+# row of the version that publishes its files (ops/similarity.py); null
+# on every stripe table row
 LINEAGE_SCHEMA = pa.schema(list(_STRIPE_FACTS) + [
     ("status", pa.string()), ("run_id", pa.string()),
     ("committed_at", pa.timestamp("us", tz="UTC")),
     ("p_n_buckets", pa.int64()), ("p_stripe_rows", pa.int64()),
     ("p_key_col", pa.string()), ("p_order_col", pa.string()),
     ("p_index_rows", pa.int64()), ("p_bloom_cols", pa.string()),
-    ("p_sort_keys", pa.string())])
+    ("p_sort_keys", pa.string()), ("index_meta", pa.string())])
 
 
 def _stripe_facts(rows: list[dict], path: str, key_col: str | None,
@@ -1114,11 +1097,10 @@ def _write_facts(frame: DataFrame, out_dir: str, run_id: str,
     writes no file; a failed attempt's partial file is named by no lineage
     row, so it is never read. Raises ValueError, before any job, for a
     table that cannot commit (see _local_root)."""
-    from pyspark.sql.pandas.types import from_arrow_schema
     _local_root(out_dir)
     filesystem, base = _table_fs(out_dir)
     rel = f"stripes/run={run_id}"
-    file_schema = _arrow_schema(STRIPE_SCHEMA)
+    file_schema = stripe_mod.STRIPE_PA_SCHEMA
 
     def write(batches):
         import pyarrow.parquet as pq

@@ -24,13 +24,18 @@ import pyarrow as pa
 from . import selector
 from .codecs import boolean_rle, deflate, floats, rle_v2, varint
 
-# stripe-column row fields (keep in sync with pipeline.STRIPE_SCHEMA)
-STRIPE_COLUMNS = [
-    "stripe_id", "bucket", "n_rows", "col_name", "col_kind", "codec",
-    "compression", "present", "data", "length", "dict_data", "extra",
-    "n_nulls", "raw_bytes", "enc_bytes", "min_val", "max_val", "ndv",
-    "checksum", "bloom",
-]
+# stripe-column row fields: the one definition of a stripe row, which
+# the stripe files hold and pipeline.STRIPE_SCHEMA is derived from
+STRIPE_PA_SCHEMA = pa.schema([
+    ("stripe_id", pa.string()), ("bucket", pa.int64()), ("n_rows", pa.int64()),
+    ("col_name", pa.string()), ("col_kind", pa.string()),
+    ("codec", pa.string()), ("compression", pa.string()),
+    ("present", pa.binary()), ("data", pa.binary()), ("length", pa.binary()),
+    ("dict_data", pa.binary()), ("extra", pa.binary()),
+    ("n_nulls", pa.int64()), ("raw_bytes", pa.int64()), ("enc_bytes", pa.int64()),
+    ("min_val", pa.string()), ("max_val", pa.string()), ("ndv", pa.int64()),
+    ("checksum", pa.string()), ("bloom", pa.binary()),
+])
 
 INT_KINDS = {"int8": np.int64, "int16": np.int64, "int32": np.int64, "int64": np.int64}
 
@@ -659,18 +664,6 @@ def decode_column(row: dict) -> pa.Array:
 # stripe path of pipeline's mapInArrow jobs
 # ---------------------------------------------------------------------------
 
-STRIPE_PA_SCHEMA = pa.schema([
-    ("stripe_id", pa.string()), ("bucket", pa.int64()), ("n_rows", pa.int64()),
-    ("col_name", pa.string()), ("col_kind", pa.string()),
-    ("codec", pa.string()), ("compression", pa.string()),
-    ("present", pa.binary()), ("data", pa.binary()), ("length", pa.binary()),
-    ("dict_data", pa.binary()), ("extra", pa.binary()),
-    ("n_nulls", pa.int64()), ("raw_bytes", pa.int64()), ("enc_bytes", pa.int64()),
-    ("min_val", pa.string()), ("max_val", pa.string()), ("ndv", pa.int64()),
-    ("checksum", pa.string()), ("bloom", pa.binary()),
-])
-
-
 def encode_stripe_arrow(tbl: pa.Table, kinds: dict[str, str], stripe_id: str,
                         bucket: int,
                         force_codecs: dict[str, str] | None = None,
@@ -698,8 +691,8 @@ def encode_stripe_arrow(tbl: pa.Table, kinds: dict[str, str], stripe_id: str,
 
 
 def stripe_rows_to_batch(rows: list[dict]) -> pa.RecordBatch:
-    cols = {name: [r[name] for r in rows] for name in STRIPE_COLUMNS}
-    arrays = [pa.array(cols[f.name], type=f.type) for f in STRIPE_PA_SCHEMA]
+    arrays = [pa.array([r[f.name] for r in rows], type=f.type)
+              for f in STRIPE_PA_SCHEMA]
     return pa.RecordBatch.from_arrays(arrays, schema=STRIPE_PA_SCHEMA)
 
 

@@ -127,12 +127,13 @@ def main() -> None:
              emb.orderBy("vec_id").first()["embedding"]]
         probe = similarity.probe_ann_index(spark, f"{d}/ann_index", q,
                                            k=10, n_probes=3)
-        out.write("## probe_ann_index (persisted bucket-partitioned LSH index)\n\n"
-                  "What to look for: the scan carries `PartitionFilters:\n"
-                  "[bucket#... IN (...)]` — the probe reads ONLY the probed\n"
-                  "bucket partitions of the persisted index (~(n_probes+1)/2^planes\n"
-                  "of the corpus); nothing is re-bucketized per query, and the\n"
-                  "top-k is a TakeOrderedAndProject over the pruned subset.\n\n```\n"
+        out.write("## probe_ann_index (persisted LSH index, one file per bucket)\n\n"
+                  "What to look for: the scan's `Location` lists only the\n"
+                  "files the index's lineage names for the probed buckets\n"
+                  "(~(n_probes+1)/2^planes of the corpus; no PartitionFilters,\n"
+                  "no partition discovery); nothing is re-bucketized per\n"
+                  "query, and the top-k is a TakeOrderedAndProject over\n"
+                  "those files.\n\n```\n"
                   + plan_of(probe) + "\n```\n")
 
         queries = (emb.orderBy("vec_id").limit(50)
@@ -144,9 +145,9 @@ def main() -> None:
                   "What to look for: the query set bucketizes in ONE\n"
                   "`MapInArrow` (vectorized matmul, no per-row Python) and\n"
                   "joins the index on `bucket` only; with a small query set the\n"
-                  "index scan again carries `PartitionFilters: [bucket#... IN\n"
-                  "(...)]` and the exploded query side is BROADCAST (no index\n"
-                  "shuffle); the per-query top-k is a window over (query_id)\n"
+                  "index scan lists only the probed buckets' files and the\n"
+                  "exploded query side is BROADCAST (no index shuffle); the\n"
+                  "per-query top-k is a window over (query_id)\n"
                   "— at millions of queries the same plan degrades gracefully\n"
                   "to one shuffle join on bucket, never all-pairs.\n\n```\n"
                   + plan_of(batch) + "\n```\n")
@@ -155,13 +156,12 @@ def main() -> None:
                                    seed=42, train_rows=2048)
         ivf = similarity.probe_ivf_index(spark, f"{d}/ivf_index", q,
                                          k=10, n_probes=2)
-        out.write("## probe_ivf_index (persisted cell-partitioned IVF index)\n\n"
+        out.write("## probe_ivf_index (persisted IVF index, one file per cell)\n\n"
                   "What to look for: same pruning shape as the LSH probe but\n"
-                  "with data-adaptive k-means cells — the scan carries\n"
-                  "`PartitionFilters: [list_id#... IN (...)]` (only the\n"
-                  "n_probes nearest cells are read), centroid ranking is\n"
-                  "driver-side (n_lists dot products), and the top-k is a\n"
-                  "TakeOrderedAndProject over the pruned cells.\n\n```\n"
+                  "with data-adaptive k-means cells — the scan's `Location`\n"
+                  "lists only the n_probes nearest cells' files, centroid\n"
+                  "ranking is driver-side (n_lists dot products), and the\n"
+                  "top-k is a TakeOrderedAndProject over those files.\n\n```\n"
                   + plan_of(ivf) + "\n```\n")
 
         ivf_batch = similarity.probe_ivf_index_many(
@@ -170,7 +170,7 @@ def main() -> None:
                   "What to look for: one `MapInArrow` assigns each query its\n"
                   "n_probes nearest cells (one matmul per Arrow batch against\n"
                   "the broadcast centroid matrix), ONE join on `list_id`\n"
-                  "against the cell-partitioned index (PartitionFilters +\n"
+                  "against the index (only the probed cells' files +\n"
                   "broadcast query side when few distinct cells are probed),\n"
                   "window top-k per query.\n\n```\n"
                   + plan_of(ivf_batch) + "\n```\n")

@@ -337,11 +337,26 @@ def test_fingerprint_short_docs_vectorized_pinned(spark):
     assert out["fingerprint"][0] == -(1 << 62)  # empty doc sentinel
 
 
+def _log_files(path, keys=None):
+    """The files the index lineage at ``path`` publishes, of ``keys`` (all
+    keys when None)."""
+    import os
+    from orc_format_spark import pipeline
+    rows = pipeline._active(pipeline._log(path)[0], path).values()
+    return {os.path.join(path, r["path"]) for r in rows
+            if keys is None or r["bucket"] in keys}
+
+
+def _read_files(df):
+    """The files ``df``'s scans read."""
+    from urllib.parse import urlparse
+    return {urlparse(f).path for f in df.inputFiles()}
+
+
 def test_ann_index_persisted_probe_prunes_partitions(spark, emb, tmp_path):
-    """build_ann_index persists bucket-partitioned parquet; lsh_topk over
-    the loaded index must (a) match the transient-path results, (b) carry a
-    bucket PartitionFilter in the scan — i.e. the probe reads only probed
-    bucket partitions, not the full corpus."""
+    """build_ann_index persists one file per bucket; the probe must (a)
+    match the transient-path results, (b) read exactly the probed
+    buckets' files the lineage names, not the full corpus."""
     path = str(tmp_path / "ann_index")
     index = similarity.build_ann_index(emb, path, n_planes=6, seed=42)
     assert "bucket" in index.columns
@@ -353,20 +368,15 @@ def test_ann_index_persisted_probe_prunes_partitions(spark, emb, tmp_path):
     assert (got.toPandas()["vec_id"].tolist()
             == transient.toPandas()["vec_id"].tolist())
 
-    # partition pruning is visible in the physical plan of the probe's scan
-    index2, meta = similarity.load_ann_index(spark, path)
+    # the probe's scan reads exactly the log's files of the probed buckets
+    _, meta = similarity.load_ann_index(spark, path)
     planes = similarity._planes(int(meta["n_planes"]), int(meta["dim"]),
                                 int(meta["seed"]))
     probe = similarity._probe_buckets(q, planes, 4)
-    cand = index2.where(F.col("bucket").isin(probe))
-    plan = cand._sc._jvm.PythonSQLUtils.explainString(
-        cand._jdf.queryExecution(), "formatted")
-    assert "PartitionFilters" in plan and "bucket" in plan.split(
-        "PartitionFilters", 1)[1][:400], plan
-    # and the pruned scan touches fewer partition directories than exist
-    import os
-    n_parts = len([d for d in os.listdir(path) if d.startswith("bucket=")])
-    assert n_parts > len(probe), "corpus too concentrated to prove pruning"
+    assert _read_files(got) == _log_files(path, probe)
+    # and fewer files than the index has
+    assert len(_log_files(path, probe)) < len(_log_files(path)), \
+        "corpus too concentrated to prove pruning"
 
     # wrong-dimension probes fail loudly instead of bucketizing garbage
     import pytest as _pytest
@@ -434,15 +444,17 @@ def test_probe_ann_index_many_batch_matches_single(spark, emb, tmp_path):
                              ascending=[False, True])["vec_id"].tolist())
         assert have == want, qid
 
-    # small query sets prune: the index scan carries a bucket
-    # PartitionFilter (literal IN over the probed buckets)
+    # small query sets prune: the index scan lists exactly the log's
+    # files of the probed buckets, fewer than the index has
     plan_df = similarity.probe_ann_index_many(
         spark, path, queries.limit(5), k=5, n_probes=2,
         prune_partitions=True)
-    plan = plan_df._sc._jvm.PythonSQLUtils.explainString(
-        plan_df._jdf.queryExecution(), "formatted")
-    seg = plan.split("PartitionFilters", 2)
-    assert len(seg) >= 2 and "bucket" in seg[1][:400], plan
+    _, meta = similarity.load_ann_index(spark, path)
+    planes = similarity._planes(meta["n_planes"], meta["dim"], meta["seed"])
+    probed = {b for v in src["embedding"][:5] for b in
+              similarity._probe_buckets([float(x) for x in v], planes, 2)}
+    assert _read_files(plan_df) == _log_files(path, probed)
+    assert len(_log_files(path, probed)) < len(_log_files(path))
 
 
 def _brute_ngram_jaccard(texts, k, t):
@@ -533,15 +545,13 @@ def test_token_counts_values(spark):
 
 def test_ivf_index_build_probe_and_prune(spark, emb, tmp_path):
     """IVF (spherical-k-means cells): full-probe equals brute force
-    exactly, partial probe finds the query itself, the probe's scan
-    carries a list_id PartitionFilter, and dim mismatches fail loudly."""
+    exactly, partial probe finds the query itself, the probe reads only
+    the probed cells' files, and dim mismatches fail loudly."""
     path = str(tmp_path / "ivf_index")
     index = similarity.build_ivf_index(emb, path, n_lists=8, seed=42,
                                        train_rows=4096)
     assert "list_id" in index.columns
-    import os
-    n_parts = len([d for d in os.listdir(path) if d.startswith("list_id=")])
-    assert n_parts > 2, "k-means collapsed to too few cells"
+    assert len(_log_files(path)) > 2, "k-means collapsed to too few cells"
 
     pdf = emb.orderBy("vec_id").limit(1).toPandas()
     q = [float(x) for x in pdf["embedding"][0]]
@@ -556,16 +566,13 @@ def test_ivf_index_build_probe_and_prune(spark, emb, tmp_path):
     assert pdf["vec_id"][0] in part, "query vector itself must be found"
     assert len(set(exact) & part) / 10 >= 0.3
 
-    # the partial probe reads only probed cell partitions
-    _, meta, cent = similarity._ivf_meta(spark, path)
+    # the partial probe reads exactly the log's files of the probed cells
+    _, meta = similarity.load_ann_index(spark, path)
     qn = similarity._unit_rows(np.asarray([q]))[0]
-    lists = np.argsort(-(cent @ qn), kind="stable")[:2]
-    index2, _ = similarity.load_ann_index(spark, path)
-    cand = index2.where(F.col("list_id").isin([int(x) for x in lists]))
-    plan = cand._sc._jvm.PythonSQLUtils.explainString(
-        cand._jdf.queryExecution(), "formatted")
-    assert "PartitionFilters" in plan and "list_id" in plan.split(
-        "PartitionFilters", 1)[1][:400], plan
+    lists = np.argsort(-(similarity._centroids(meta) @ qn), kind="stable")[:2]
+    probed = similarity.probe_ivf_index(spark, path, q, k=10, n_probes=2)
+    assert _read_files(probed) == _log_files(path, set(map(int, lists)))
+    assert len(_log_files(path, set(map(int, lists)))) < len(_log_files(path))
 
     import pytest as _pytest
     with _pytest.raises(ValueError, match="dim"):
@@ -599,3 +606,161 @@ def test_probe_ivf_index_many_batch_matches_single(spark, emb, tmp_path):
                 .sort_values(["cosine", "vec_id"],
                              ascending=[False, True])["vec_id"].tolist()
             assert got == single, f"query {qid} ({prune=})"
+
+
+# ---- index builds commit through the lineage log: one version per build ----
+
+@pytest.fixture(scope="module")
+def small_emb(spark):
+    vecs = np.random.default_rng(7).standard_normal((200, 8))
+    return spark.createDataFrame(
+        pd.DataFrame({"vec_id": np.arange(200),
+                      "embedding": [v.tolist() for v in vecs]}),
+        "vec_id long, embedding array<float>")
+
+
+def _first_vector(emb):
+    return [float(x) for x in emb.orderBy("vec_id").first()["embedding"]]
+
+
+_BUILDS = {
+    "ann": (lambda df, p, seed=42: similarity.build_ann_index(
+        df, p, n_planes=4, seed=seed), similarity.probe_ann_index),
+    "ivf": (lambda df, p, seed=42: similarity.build_ivf_index(
+        df, p, n_lists=4, seed=seed), similarity.probe_ivf_index)}
+
+
+@pytest.mark.parametrize("kind", sorted(_BUILDS))
+def test_index_build_over_an_empty_corpus_keeps_the_old_index(
+        spark, small_emb, tmp_path, kind):
+    """Rebuilding over an empty corpus raises before publishing anything:
+    the index already at the path still returns the same top-k."""
+    build, probe = _BUILDS[kind]
+    path = str(tmp_path / kind)
+    build(small_emb, path)
+    q = _first_vector(small_emb)
+    before = probe(spark, path, q, k=5).toPandas()
+    empty = spark.createDataFrame([], "vec_id long, embedding array<float>")
+    with pytest.raises(ValueError, match=f"cannot build an {kind.upper()} "
+                                         "index over an empty corpus"):
+        build(empty, path)
+    pd.testing.assert_frame_equal(probe(spark, path, q, k=5).toPandas(),
+                                  before)
+
+
+@pytest.mark.parametrize("kind", sorted(_BUILDS))
+def test_index_build_killed_before_its_version_changes_nothing(
+        spark, small_emb, tmp_path, monkeypatch, kind):
+    """A build killed at its lineage version (its files already written)
+    leaves the old index probing identically, and no log row names the
+    new run's files."""
+    import os
+    from orc_format_spark import pipeline
+    build, probe = _BUILDS[kind]
+    path = str(tmp_path / kind)
+    build(small_emb, path, seed=1)
+    q = _first_vector(small_emb)
+    before = probe(spark, path, q, k=5).toPandas()
+    log = pipeline._log(path)
+
+    def killed(*args):
+        raise RuntimeError("killed at the commit point")
+
+    monkeypatch.setattr(pipeline, "_create_version", killed)
+    with pytest.raises(RuntimeError, match="killed"):
+        build(small_emb, path, seed=2)
+    monkeypatch.undo()
+    assert pipeline._log(path) == log
+    pd.testing.assert_frame_equal(probe(spark, path, q, k=5).toPandas(),
+                                  before)
+    runs = {r["run_id"] for r in log[0]}
+    orphans = [d for d in os.listdir(f"{path}/stripes")
+               if d.removeprefix("run=") not in runs]
+    assert len(orphans) == 1 and os.listdir(f"{path}/stripes/{orphans[0]}")
+    assert not any(r["path"].startswith(f"stripes/{orphans[0]}/")
+                   for r in log[0] if r["path"])
+
+
+def test_index_builds_racing_for_a_version_publish_one_whole_build(
+        spark, small_emb, tmp_path, monkeypatch):
+    """A build whose lineage version another build took first re-reads
+    the log and replaces the winner: the last publish wins, and a probe
+    plans from that one run's files only."""
+    import os
+    from orc_format_spark import pipeline
+    path = str(tmp_path / "ann")
+    create = pipeline._create_version
+
+    def race(*args):
+        monkeypatch.setattr(pipeline, "_create_version", create)
+        similarity.build_ann_index(small_emb, path, n_planes=4, seed=1)
+        return create(*args)
+
+    monkeypatch.setattr(pipeline, "_create_version", race)
+    similarity.build_ann_index(small_emb, path, n_planes=4, seed=2)
+    active = pipeline._active(pipeline._log(path)[0], path).values()
+    (run,) = {r["run_id"] for r in active}
+    assert os.listdir(f"{path}/stripes") == [f"run={run}"]
+    assert similarity.load_ann_index(spark, path)[1]["seed"] == 2
+    q = _first_vector(small_emb)
+    got = similarity.probe_ann_index(spark, path, q, k=5, n_probes=1)
+    assert {os.path.dirname(f) for f in _read_files(got)} == {
+        f"{path}/stripes/run={run}"}
+    want = similarity.lsh_topk(small_emb, q, k=5, n_planes=4, n_probes=1,
+                               seed=2)
+    assert (got.toPandas()["vec_id"].tolist()
+            == want.toPandas()["vec_id"].tolist())
+
+
+def test_index_rebuilds_free_what_they_supersede(spark, small_emb, tmp_path):
+    """Rebuilding at one path keeps disk use and the log flat: one run
+    directory and at most 2 lineage files after three builds. A probe
+    whose buckets hold no vector reads no file and returns no row."""
+    import os
+    path = str(tmp_path / "ann")
+    for seed in (1, 2, 3):
+        similarity.build_ann_index(small_emb, path, n_planes=4, seed=seed)
+    assert len(os.listdir(f"{path}/stripes")) == 1
+    assert len(os.listdir(f"{path}/lineage")) <= 2
+    # a query whose home bucket is empty in an index of one bucket
+    one = small_emb.limit(1)
+    sparse = str(tmp_path / "sparse")
+    similarity.build_ann_index(one, sparse, n_planes=4, seed=3)
+    q = [-x for x in _first_vector(one)]  # every sign flips
+    got = similarity.probe_ann_index(spark, sparse, q, k=5, n_probes=0)
+    assert _read_files(got) == set() and got.count() == 0
+    assert got.columns == ["vec_id", "cosine"]
+
+
+def test_index_paths_without_an_index_or_off_the_local_fs_raise(
+        spark, small_emb, tmp_path):
+    """load_ann_index on a path with no index, or with an index built
+    before builds were published through the lineage, raises ValueError
+    naming it; a build to a non-local path raises before any job."""
+    import os
+    import re
+    missing = str(tmp_path / "nothing")
+    with pytest.raises(ValueError, match=re.escape(missing)):
+        similarity.load_ann_index(spark, missing)
+    legacy = str(tmp_path / "legacy")
+    os.makedirs(f"{legacy}/_ann_meta")
+    os.makedirs(f"{legacy}/bucket=0")
+    with pytest.raises(ValueError, match="rebuild it"):
+        similarity.probe_ann_index(spark, legacy, [1.0] * 8)
+    for build in (similarity.build_ann_index, similarity.build_ivf_index):
+        with pytest.raises(ValueError, match="s3a://b/idx"):
+            build(small_emb, "s3a://b/idx")
+
+
+def test_ann_index_over_mixed_vector_widths_raises(spark, small_emb,
+                                                   tmp_path):
+    """Batches of different vector widths bucketize with different plane
+    families, so the build refuses to publish them."""
+    import os
+    wide = small_emb.select((F.col("vec_id") + 1000).alias("vec_id"),
+                            F.concat("embedding", F.array(F.lit(1.0)))
+                            .cast("array<float>").alias("embedding"))
+    path = str(tmp_path / "mixed")
+    with pytest.raises(ValueError, match="mixes vector widths"):
+        similarity.build_ann_index(small_emb.union(wide), path, n_planes=4)
+    assert not os.path.exists(f"{path}/lineage")
