@@ -643,12 +643,8 @@ def q_compaction_roundtrip(spark, sf_dir):
               "sort_keys": ["event_id"]}
     for k, half in enumerate((df.where(F.col("event_id") % 2 == 0),
                               df.where(F.col("event_id") % 2 == 1))):
-        stripes = pipeline.encode_dataframe(
-            half, key_col="user_id", order_col=None,
-            sort_keys=["event_id"], stripe_rows=2048, n_buckets=4,
-            stripe_prefix=f"b{k:08d}-")
-        pipeline.commit(spark, stripes, out, "user_id", None,
-                        run_id=f"batch-{k}", params=params)
+        pipeline.commit(half, out, f"batch-{k}", params,
+                        stripe_prefix=f"b{k:08d}-")
     pipeline.compact_job(spark, out)
     return pipeline.decode_job(spark, out).select(*df.columns)
 

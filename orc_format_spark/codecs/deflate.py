@@ -53,22 +53,27 @@ def compress(raw: bytes, block_size: int = DEFAULT_BLOCK_SIZE) -> bytes:
     return frame(raw, _deflate_block, block_size)
 
 
-def decompress(buf: bytes) -> bytes:
-    """Inverse of :func:`compress` (walks chunk headers to exhaustion)."""
+def unframe(buf: bytes, inner) -> bytes:
+    """Inverse of :func:`frame`: walks the chunk headers to exhaustion,
+    keeping original chunks and passing the others to ``inner``."""
     out = bytearray()
-    pos = 0
-    n = len(buf)
+    pos, n = 0, len(buf)
     while pos < n:
         header = int.from_bytes(buf[pos:pos + 3], "little")
         pos += 3
-        is_original = header & 1
         length = header >> 1
         chunk = buf[pos:pos + length]
         if len(chunk) != length:
             raise ValueError("truncated compression chunk")
         pos += length
-        if is_original:
-            out += chunk
-        else:
-            out += zlib.decompress(chunk, -15)
+        out += chunk if header & 1 else inner(chunk)
     return bytes(out)
+
+
+def _inflate_block(chunk: bytes) -> bytes:
+    return zlib.decompress(chunk, -15)
+
+
+def decompress(buf: bytes) -> bytes:
+    """Inverse of :func:`compress`."""
+    return unframe(buf, _inflate_block)

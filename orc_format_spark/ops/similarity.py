@@ -117,7 +117,8 @@ def _build(frame: DataFrame, path: str, meta: dict) -> DataFrame:
     Only then frees what the version superseded: the replaced runs'
     directories and the older log versions. Returns the new index.
     Raises ValueError for a non-local path before any job, and for an
-    empty corpus or mixed vector widths before publishing."""
+    empty corpus or mixed vector widths before publishing. A build that
+    fails before its version is published frees the files it wrote."""
     root = _local_root(path)
     key, vec_col = _KEYS[meta["kind"]], meta["vec_col"]
     run_id = "i" + uuid.uuid4().hex[:11]
@@ -149,22 +150,30 @@ def _build(frame: DataFrame, path: str, meta: dict) -> DataFrame:
              .mapInArrow(write, "stripe_id string, bucket long, n_rows long, "
                                 "path string, dim long")
              .toArrow().to_pylist())
-    if not facts:
-        raise ValueError(_EMPTY.format(meta["kind"].upper(), path))
-    dims = {f.pop("dim") for f in facts}
-    if len(dims) > 1 or -1 in dims:
-        raise ValueError(f"the corpus of index {path} mixes vector widths")
-    meta = dict(meta, dim=dims.pop())
-    ok = _lineage_rows(sorted(facts, key=lambda f: f["bucket"]), "ok",
-                       run_id, None)
-    ok[0]["index_meta"] = json.dumps(meta)
+    try:
+        if not facts:
+            raise ValueError(_EMPTY.format(meta["kind"].upper(), path))
+        dims = {f.pop("dim") for f in facts}
+        if len(dims) > 1 or -1 in dims:
+            raise ValueError(f"the corpus of index {path} mixes vector "
+                             "widths")
+        meta = dict(meta, dim=dims.pop())
+        ok = _lineage_rows(sorted(facts, key=lambda f: f["bucket"]), "ok",
+                           run_id, None)
+        ok[0]["index_meta"] = json.dumps(meta)
 
-    def replace(rows, _pending=None):
-        return ok + _lineage_rows(list(_active(rows, path).values()),
-                                  "compacted", run_id, None)
+        def replace(rows, _pending=None):
+            return ok + _lineage_rows(list(_active(rows, path).values()),
+                                      "compacted", run_id, None)
 
-    log = _log(path)
-    rows = _publish(path, replace(log[0]), log, replace)
+        log = _log(path)
+        rows = _publish(path, replace(log[0]), log, replace)
+    except BaseException:
+        # free this build's files unless a version names them (one that
+        # published before the failure must stay whole)
+        if not any(r["run_id"] == run_id for r in _log(path)[0]):
+            shutil.rmtree(f"{root}/{rel}", ignore_errors=True)
+        raise
     live = {r["run_id"] for r in _active(rows, path).values()}
     # a concurrent build's clean-up may free the same paths first
     for rid in {r["run_id"] for r in rows if r["status"] == "ok"} - live:

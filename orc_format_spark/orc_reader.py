@@ -247,23 +247,6 @@ def _parse_stripe_footer(buf: bytes) -> dict:
     return sf
 
 
-def _framed(buf: bytes, inner) -> bytes:
-    """The 3-byte LE is-original chunk framing (decompress/mod.rs:9-17)
-    around any block codec."""
-    out = bytearray()
-    pos, n = 0, len(buf)
-    while pos < n:
-        header = int.from_bytes(buf[pos:pos + 3], "little")
-        pos += 3
-        length = header >> 1
-        chunk = buf[pos:pos + length]
-        if len(chunk) != length:
-            raise ValueError("truncated compression chunk")
-        pos += length
-        out += chunk if header & 1 else inner(chunk)
-    return bytes(out)
-
-
 def _zstd_decompress(chunk: bytes) -> bytes:
     """One raw ZSTD frame via pyarrow's bundled codec (streaming read — the
     frame header does not always carry the content size)."""
@@ -284,15 +267,15 @@ def _decompress(buf: bytes, compression: int) -> bytes:
         return deflate.decompress(bytes(buf))
     if compression == 2:
         from .codecs import lz77
-        return _framed(bytes(buf), lz77.snappy_decompress)
+        return deflate.unframe(bytes(buf), lz77.snappy_decompress)
     if compression == 3:
         from .codecs import lz77
-        return _framed(bytes(buf), lz77.lzo1x_decompress)
+        return deflate.unframe(bytes(buf), lz77.lzo1x_decompress)
     if compression == 4:
         from .codecs import lz77
-        return _framed(bytes(buf), lz77.lz4_decompress)
+        return deflate.unframe(bytes(buf), lz77.lz4_decompress)
     if compression == 5:
-        return _framed(bytes(buf), _zstd_decompress)
+        return deflate.unframe(bytes(buf), _zstd_decompress)
     raise NotImplementedError(
         f"ORC compression kind {compression} is not one of "
         "NONE/ZLIB/SNAPPY/LZO/LZ4/ZSTD")

@@ -14,15 +14,14 @@ Execution model (SURVEY.md §3.4):
          partition in Arrow on (bucket, salt, sort keys), then per
          (bucket, salt) group: encode_stripe_arrow
       -> encode_dataframe: stripe rows (one per stripe-column)
-    COMMIT (encode_job, streaming batches, compact_job): the same kernel
-      drops each group whose stripe id the lineage holds BEFORE encoding
-      it, appends the others to the task's one parquet file and yields one
-      facts row per stripe (file, kinds, key/order min-max, key bloom)
+    COMMIT (commit: encode_job, streaming batches, compact_job): the same
+      kernel drops each group whose stripe id the lineage holds BEFORE
+      encoding it, appends the others to the task's one parquet file and
+      yields one facts row per stripe (file, key/order min-max, key bloom)
       -> collect the facts rows: the one job after the shuffle
-      -> driver: lineage/<version>.parquet, their 'ok' rows, created
-         exclusively — the commit point
-    COMMIT (commit(), a frame of stripe rows): a write kernel over those
-      rows, through the same file-append + facts helper (_write_facts)
+      -> driver: lineage/<version>.parquet, their 'ok' rows with the
+         layout params and the frame's schema, created exclusively — the
+         commit point
     TABLE QUESTIONS (resume set, layout params, active set, as_of,
       snapshots, compaction victims, expiry, stripe pruning): one pyarrow
       read of the lineage log on the driver, no Spark job
@@ -32,12 +31,14 @@ Execution model (SURVEY.md §3.4):
       -> local (file, keep-list) rows, one task per file         [no shuffle]
       -> mapInArrow(pyarrow read with col_name/stripe_id pushed to the row
          groups; decode_stripe_arrow per stripe)
+      -> the recorded schema's nested columns rebuilt from their leaves
       -> orderBy(sort keys) at comparison time only
     ROUNDTRIP (an in-memory frame): ENCODE then the DECODE kernel in the
       same stage — the encode output is already stripe-clustered, so no
-      second shuffle and no sort
-    Both decodes group stripe-contiguous rows through one generator
-    (_decode_runs), which calls decode_stripe_arrow per stripe.
+      second shuffle and no sort — to df.schema
+    Both decodes go through one step (_decode_to): one generator
+    (_decode_runs) calls decode_stripe_arrow per stripe into the schema's
+    flat leaves, and nested columns are rebuilt from them.
 
 The stripes-as-rows layout is the Spark analog of the reference's
 stripe/stream container (src/read/mod.rs:117-159): locating one column's
@@ -48,6 +49,7 @@ and stripe-granular parallelism falls out of row partitioning.
 from __future__ import annotations
 
 import datetime
+import json
 import os
 import re
 import uuid
@@ -236,9 +238,8 @@ def _leaf_exprs(rel: str, get, dtype) -> list:
       leaf ARRAY per element leaf, each getter wrapped in F.transform —
       composition makes array<struct<v: array<struct<...>>>> work at any
       depth (leaves come out as array<array<...>> — recursive list: kinds).
-    - array<map>: an ``__elems__`` marker leaf (disambiguates the
-      schema-free re-nest from a plain map) + per-element keys/values
-      leaves.
+    - array<map>: an ``__elems__`` element-present leaf + per-element
+      keys/values leaves.
     Only a struct/map under two CONSECUTIVE array levels raises."""
     if isinstance(dtype, T.StructType):
         out = [(f"{rel}{_STRUCT_SEP}__present__", _present_getter(get))]
@@ -307,7 +308,7 @@ _RESERVED_SEGMENTS = frozenset(
 def _check_field_names(prefix: str, dtype) -> None:
     """Loudly reject nested field names that would collide with the
     flatten's reserved segments or its ``·`` separator — a collision
-    would silently corrupt the leaf mapping / schema-free re-nest."""
+    would silently corrupt the leaf mapping."""
     def bad(name: str) -> bool:
         return name in _RESERVED_SEGMENTS or _STRUCT_SEP in name
     if isinstance(dtype, T.StructType):
@@ -325,6 +326,12 @@ def _check_field_names(prefix: str, dtype) -> None:
         _check_field_names(prefix, dtype.elementType)
 
 
+def _nested(dtype) -> bool:
+    """True when a column of ``dtype`` is stored as several leaves."""
+    return (isinstance(dtype, (T.StructType, T.MapType))
+            or (isinstance(dtype, T.ArrayType) and _needs_decompose(dtype)))
+
+
 def _flatten_struct_cols(df: DataFrame) -> DataFrame:
     """Struct/map columns -> leaf columns, the ORC model: structs own no
     data streams, only their leaves do (the reference's Kind::Struct,
@@ -333,15 +340,11 @@ def _flatten_struct_cols(df: DataFrame) -> DataFrame:
     ORC's map layout. Arbitrary struct nesting depth; leaf columns
     round-trip through the codecs like any other column and decode
     reassembles from the schema."""
-    def needs_flatten(dt) -> bool:
-        return (isinstance(dt, (T.StructType, T.MapType))
-                or (isinstance(dt, T.ArrayType) and _needs_decompose(dt)))
-
-    if not any(needs_flatten(f.dataType) for f in df.schema.fields):
+    if not any(_nested(f.dataType) for f in df.schema.fields):
         return df
     cols = []
     for f in df.schema.fields:
-        if needs_flatten(f.dataType):
+        if _nested(f.dataType):
             _check_field_names(f.name, f.dataType)
         for name, expr in _flatten_exprs(f.name, F.col(f.name), f.dataType):
             cols.append(expr.alias(name))
@@ -400,63 +403,10 @@ def _leaf_fields(prefix: str, dtype, wrap: int = 0) -> list[T.StructField]:
 
 
 def _flat_schema(schema: T.StructType) -> T.StructType:
-    return T.StructType([leaf for f in schema.fields
-                         for leaf in _leaf_fields(f.name, f.dataType)])
-
-
-def _nest_schema(flat: T.StructType) -> T.StructType:
-    """Inverse of _flat_schema: rebuild nested fields from ``a·b·c`` names
-    (used when decoding a persisted nested encode without a caller schema).
-    Field order inside each struct follows the flat column order."""
-    def build(items: list[tuple[list[str], T.DataType]],
-              depth: int = 0) -> T.DataType:
-        # items: (remaining name segments, leaf type), order-preserving;
-        # depth = number of enclosing array levels — every leaf type is
-        # wrapped in that many ArrayTypes (unwrap at the leaf). An
-        # ``__elems__`` head marks one more array level (array<struct> or
-        # array<map>).
-        if len(items) == 1 and not items[0][0]:
-            t = items[0][1]  # plain leaf
-            for _ in range(depth):
-                t = t.elementType
-            return t
-        heads = [seg[0] for seg, _ in items]
-        has_elems = _ELEMS in heads
-        d = depth + (1 if has_elems else 0)
-        if _MAP_KEYS in heads:
-            ks = [(seg[1:], t) for seg, t in items if seg[0] == _MAP_KEYS]
-            vs = [(seg[1:], t) for seg, t in items if seg[0] == _MAP_VALS]
-            mt = T.MapType(build(ks, d).elementType,
-                           build(vs, d).elementType)
-            return T.ArrayType(mt) if has_elems else mt
-        # struct (array<struct> when an element-present leaf is here):
-        # group children by head segment, skipping the present leaves
-        order, groups = [], {}
-        for seg, t in items:
-            h = seg[0]
-            if h in ("__present__", _ELEMS):
-                continue
-            if h not in groups:
-                order.append(h)
-                groups[h] = []
-            groups[h].append((seg[1:], t))
-        if has_elems and order == [_ITEM]:
-            # anonymous inner array level (array<array<...>> with
-            # structs/maps below)
-            return T.ArrayType(build(groups[_ITEM], d))
-        st = T.StructType([T.StructField(h, build(groups[h], d))
-                           for h in order])
-        return T.ArrayType(st) if has_elems else st
-
-    order, groups = [], {}
-    for f in flat.fields:
-        segs = f.name.split(_STRUCT_SEP)
-        h = segs[0]
-        if h not in groups:
-            order.append(h)
-            groups[h] = []
-        groups[h].append((segs[1:], f.dataType))
-    return T.StructType([T.StructField(h, build(groups[h])) for h in order])
+    """The columns the decode kernels emit for ``schema``: the leaves of
+    each nested column (see _leaf_fields), each plain column as it is."""
+    return T.StructType([leaf for f in schema.fields for leaf in (
+        _leaf_fields(f.name, f.dataType) if _nested(f.dataType) else [f])])
 
 
 def _mk_value(acc, rel: str, dtype):
@@ -534,13 +484,11 @@ def _reassemble_structs(df: DataFrame, schema: T.StructType) -> DataFrame:
                       for f in schema.fields])
 
 
-def _n_buckets(df: DataFrame, stripe_rows: int,
-               n_rows: int | None = None) -> int:
+def _n_buckets(df: DataFrame, stripe_rows: int) -> int:
     """One hash bucket per ``stripe_rows`` input rows; the row count comes
     from parquet footers when ``df`` is file-backed, else from one count
     job."""
-    if n_rows is None:
-        n_rows = _estimate_rows(df)
+    n_rows = _estimate_rows(df)
     if n_rows is None:
         n_rows = df.count()
     return max((n_rows + stripe_rows - 1) // stripe_rows, 1)
@@ -686,7 +634,7 @@ _SORTABLE = (T.NumericType, T.StringType, T.CharType, T.VarcharType,
 
 def _keyed(df: DataFrame, key_col: str, order_col: str | None,
            sort_keys: list[str] | None, stripe_rows: int,
-           n_buckets: int | None, n_rows: int | None = None
+           n_buckets: int | None
            ) -> tuple[DataFrame, dict[str, str], list[str]]:
     """(shuffled frame, column kinds, sort keys) of an encode: ``df`` with
     struct columns flattened, its ``__bucket`` / ``__salt`` (/ ``__probe``)
@@ -708,7 +656,7 @@ def _keyed(df: DataFrame, key_col: str, order_col: str | None,
                 "encode kernel cannot order: sort on a scalar column")
     kinds = column_kinds(flat)
     if n_buckets is None:
-        n_buckets = _n_buckets(flat, stripe_rows, n_rows)
+        n_buckets = _n_buckets(flat, stripe_rows)
     bucket = F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_buckets))
     salt = F.lit(0)
     if order_col:
@@ -784,9 +732,7 @@ def encode_dataframe(df: DataFrame, key_col: str, order_col: str | None = None,
                      sort_keys: list[str] | None = None,
                      stripe_rows: int = DEFAULT_STRIPE_ROWS,
                      n_buckets: int | None = None,
-                     n_rows: int | None = None,
                      force_codecs: dict[str, str] | None = None,
-                     stripe_prefix: str = "",
                      index_rows: int | None = None,
                      bloom_cols: list[str] | None = None) -> DataFrame:
     """Encode ``df`` into stripe-column rows (lazy; one shuffle, then one
@@ -806,10 +752,10 @@ def encode_dataframe(df: DataFrame, key_col: str, order_col: str | None = None,
     Struct columns are flattened to their leaves (see _flatten_struct_cols).
     """
     keyed, kinds, sort_keys = _keyed(df, key_col, order_col, sort_keys,
-                                     stripe_rows, n_buckets, n_rows)
+                                     stripe_rows, n_buckets)
 
     def encode_partition(batches):
-        return _stripe_groups(batches, kinds, sort_keys, stripe_prefix,
+        return _stripe_groups(batches, kinds, sort_keys,
                               force_codecs=force_codecs,
                               index_rows=index_rows, bloom_cols=bloom_cols)
 
@@ -817,50 +763,6 @@ def encode_dataframe(df: DataFrame, key_col: str, order_col: str | None = None,
     # whole in one partition and its column rows are emitted contiguously
     # (what lets roundtrip decode it without a second shuffle)
     return keyed.mapInArrow(encode_partition, STRIPE_SCHEMA)
-
-
-def _schema_from_kinds(by_name: dict[str, str],
-                       columns: list[str] | None) -> tuple[T.StructType, list[str]]:
-    kind_to_spark = {
-        "int8": T.ByteType(), "int16": T.ShortType(), "int32": T.IntegerType(),
-        "int64": T.LongType(), "float32": T.FloatType(), "float64": T.DoubleType(),
-        "bool": T.BooleanType(), "string": T.StringType(),
-        "timestamp": T.TimestampType(), "date": T.DateType(),
-        "binary": T.BinaryType(),
-        "array_float32": T.ArrayType(T.FloatType()),
-        "array_float64": T.ArrayType(T.DoubleType()),
-        "array_int64": T.ArrayType(T.LongType()),
-        "array_string": T.ArrayType(T.StringType()),
-        "array_bool": T.ArrayType(T.BooleanType()),
-        "array_ts": T.ArrayType(T.TimestampType()),
-        "array_date": T.ArrayType(T.DateType()),
-    }
-
-    def to_spark(kind: str) -> T.DataType:
-        if kind in kind_to_spark:
-            return kind_to_spark[kind]
-        if kind.startswith("decimal_"):
-            _, p, s = kind.split("_")
-            return T.DecimalType(int(p), int(s))
-        if kind.startswith("list:"):
-            return T.ArrayType(to_spark(kind[5:]))
-        raise ValueError(kind)
-
-    cols = []
-    for c in (columns or sorted(by_name)):
-        if c in by_name:
-            cols.append(c)
-            continue
-        # a nested column requested by its TOP-LEVEL name ("tc") expands to
-        # its persisted leaves ("tc·__elems__", "tc·fn·name", ...) so column
-        # pruning composes with the flattened layout
-        pre = c + _STRUCT_SEP
-        leaves = [n for n in sorted(by_name) if n.startswith(pre)]
-        if not leaves:
-            raise KeyError(f"column {c!r} not in persisted kinds")
-        cols.extend(leaves)
-    fields = [T.StructField(c, to_spark(by_name[c])) for c in cols]
-    return T.StructType(fields), cols
 
 
 def _arrow_schema(schema: T.StructType):
@@ -923,6 +825,32 @@ def _decode_runs(tables, columns: list[str], target_schema,
                          f"{sorted(scan_cols)} in {where}")
 
 
+def _decode_to(schema: T.StructType, columns: list[str] | None,
+               stride_range: tuple | None, frame, runs) -> DataFrame:
+    """``schema`` (restricted to the top-level ``columns``) decoded by ONE
+    ``mapInArrow`` over ``frame(scan_cols)``, the stripe-column rows of
+    the scan columns (see _scan_cols): ``runs(batches, scan_cols)`` yields
+    a task's (Arrow tables, where, expected stripe ids), which
+    _decode_runs decodes into the flat leaves of ``schema`` (see
+    _flat_schema); nested columns are then rebuilt from them (see
+    _reassemble_structs). The one decode step of roundtrip and
+    decode_job."""
+    if columns:
+        schema = T.StructType([schema[c] for c in columns])
+    flat = _flat_schema(schema)
+    scan_cols = _scan_cols(flat.names, stride_range)
+    target_schema = _arrow_schema(flat)
+
+    def decode(batches):
+        for tables, where, expect in runs(batches, scan_cols):
+            yield from _decode_runs(tables, flat.names, target_schema,
+                                    stride_range, where, expect)
+
+    out = frame(scan_cols).mapInArrow(decode, flat)
+    return (out if flat.names == schema.names
+            else _reassemble_structs(out, schema))
+
+
 def roundtrip(df: DataFrame, key_col: str, order_col: str | None = None, *,
               columns: list[str] | None = None,
               stride_range: tuple | None = None,
@@ -931,44 +859,37 @@ def roundtrip(df: DataFrame, key_col: str, order_col: str | None = None, *,
     encode kernel -> col_name filter -> decode kernel. The encode output
     is already stripe-contiguous per partition, so the encoded bytes are
     never shuffled a second time. The decoded schema is ``df.schema``
-    (restricted to ``columns``); nested columns decode as their leaves and
-    are rebuilt from it. ``encode_kwargs`` go to :func:`encode_dataframe`.
+    (restricted to ``columns``), rebuilt as decode_job rebuilds a table's
+    recorded schema (see _decode_to). ``encode_kwargs`` go to
+    :func:`encode_dataframe`.
 
     ``stride_range`` = (col_name, lo, hi): on row-group-indexed stripes
     (``index_rows``), decode ONLY the strides whose per-stride [min,max]
     for that column overlaps [lo, hi] (sub-stripe skipping). The caller
     applies the exact residual predicate; strides are a superset of
     matching rows."""
-    schema = (T.StructType([df.schema[c] for c in columns]) if columns
-              else df.schema)
-    flat = _flat_schema(schema)
-    if flat.names == schema.names:
-        flat = schema  # nothing nested: keep the caller's fields as they are
-    target_schema = _arrow_schema(flat)
+    def frame(scan_cols):
+        # the filter keeps row order, so per-stripe contiguity still holds
+        return (encode_dataframe(df, key_col, order_col, **encode_kwargs)
+                .filter(F.col("col_name").isin(scan_cols)))
 
-    def decode_partition(batches):
-        return _decode_runs((pa.Table.from_batches([b]) for b in batches),
-                            flat.names, target_schema, stride_range,
-                            "the encode output")
+    def runs(batches, scan_cols):
+        yield ((pa.Table.from_batches([b]) for b in batches),
+               "the encode output", ())
 
-    # the filter keeps row order, so per-stripe contiguity still holds
-    out = (encode_dataframe(df, key_col, order_col, **encode_kwargs)
-           .filter(F.col("col_name").isin(_scan_cols(flat.names,
-                                                     stride_range)))
-           .mapInArrow(decode_partition, flat))
-    return out if flat is schema else _reassemble_structs(out, schema)
+    return _decode_to(df.schema, columns, stride_range, frame, runs)
 
 
 def _decode_files(spark: SparkSession, out_dir: str, stripes: list[dict],
-                  schema: T.StructType, columns: list[str],
+                  schema: T.StructType, columns: list[str] | None = None,
                   stride_range: tuple | None = None) -> DataFrame:
     """Decode ``stripes``, 'ok' lineage rows, each from the file its
-    ``path`` names. One ``mapInArrow`` task per file, at most one wave per
-    core (``_tasks``), over a local (file, keep-list) relation: no
-    exchange, the stripe bytes never cross the network. Each task reads
-    its file with pyarrow through _table_fs, ``col_name`` and
-    ``stripe_id`` pushed down to the parquet row groups, and decodes it
-    through _decode_runs."""
+    ``path`` names, to ``schema`` (see _decode_to). One ``mapInArrow``
+    task per file, at most one wave per core (``_tasks``), over a local
+    (file, keep-list) relation: no exchange, the stripe bytes never cross
+    the network. Each task reads its file with pyarrow through _table_fs,
+    ``col_name`` and ``stripe_id`` pushed down to the parquet row
+    groups."""
     by_file: dict[str, list[str]] = {}
     for r in sorted(stripes, key=lambda r: r["stripe_id"]):
         by_file.setdefault(r["path"], []).append(r["stripe_id"])
@@ -982,10 +903,8 @@ def _decode_files(spark: SparkSession, out_dir: str, stripes: list[dict],
     # per read on a 4-core host)
     files = spark.createDataFrame(plan)
     filesystem, base = _table_fs(out_dir)
-    scan_cols = _scan_cols(columns, stride_range)
-    target_schema = _arrow_schema(schema)
 
-    def decode_files(batches):
+    def runs(batches, scan_cols):
         import pyarrow.parquet as pq
         for b in batches:
             for path, keep in zip(b.column("path").to_pylist(),
@@ -993,16 +912,10 @@ def _decode_files(spark: SparkSession, out_dir: str, stripes: list[dict],
                 tbl = pq.read_table(f"{base}/{path}", filesystem=filesystem,
                                     filters=[("col_name", "in", scan_cols),
                                              ("stripe_id", "in", keep)])
-                yield from _decode_runs(
-                    [tbl], columns, target_schema, stride_range,
-                    f"{path}, the file the lineage of {out_dir} names for "
-                    "it", expect=keep)
+                yield ([tbl], f"{path}, the file the lineage of {out_dir} "
+                       "names for it", keep)
 
-    out = files.mapInArrow(decode_files, schema)
-    if any(_STRUCT_SEP in c for c in columns):
-        # nested leaves persisted flat: re-nest from the leaf names
-        out = _reassemble_structs(out, _nest_schema(schema))
-    return out
+    return _decode_to(schema, columns, stride_range, lambda _: files, runs)
 
 
 # ---------------------------------------------------------------------------
@@ -1014,28 +927,27 @@ def _decode_files(spark: SparkSession, out_dir: str, stripes: list[dict],
 # with exclusive commits of Delta Lake), holding an 'ok' row per published
 # stripe, a 'compacted' row per stripe a compaction replaced and an
 # 'expired' row per stripe whose run's bytes were freed. An 'ok' row also
-# carries the stripe's facts a reader plans from — its file, column kinds,
-# key/order min-max and key bloom — as Delta's add entries carry per-file
-# stats. Every table question (resume set, layout params, active set,
+# carries the stripe's facts a reader plans from — its file, key/order
+# min-max and key bloom — as Delta's add entries carry per-file stats, and
+# the commit's layout params, the table's Spark schema among them (Delta's
+# schemaString; the ORC footer's types tree). Every table question (resume set, layout params, active set,
 # snapshots, stripe pruning) is answered by reading that log on the driver
 # with pyarrow, not by a Spark job. Stripe files a crashed writer left
 # behind are never named by the log, so no reader sees them.
 
-_STAT_COLS = ("stripe_id", "bucket", "n_rows", "col_name", "col_kind",
-              "codec", "raw_bytes", "enc_bytes", "checksum", "min_val",
+_STAT_COLS = ("stripe_id", "bucket", "n_rows", "col_name", "codec", "raw_bytes", "enc_bytes", "checksum", "min_val",
               "max_val", "bloom")
 
 # a stripe's facts, its 'ok' lineage row before status, run and params:
 # the StripeInformation + ColumnStatistics analog (src/proto.rs:206-217,
 # 66-87) — sizes, the file holding the stripe (``path``, relative to the
-# table root: the StripeInformation offset analog), its column kinds,
-# key/order min-max for stripe pruning and the key bloom. A column the
+# table root: the StripeInformation offset analog), key/order min-max for stripe pruning and the key bloom. A column the
 # commit had no key/order column for holds nulls.
 _STRIPE_FACTS = pa.schema([
     ("stripe_id", pa.string()), ("bucket", pa.int64()),
     ("n_rows", pa.int64()), ("raw_bytes", pa.int64()),
     ("enc_bytes", pa.int64()), ("n_cols", pa.int64()),
-    ("path", pa.string()), ("codecs", pa.string()), ("kinds", pa.string()),
+    ("path", pa.string()), ("codecs", pa.string()),
     ("checksum", pa.string()),
     ("key_min", pa.string()), ("key_max", pa.string()),
     ("order_min", pa.string()), ("order_max", pa.string()),
@@ -1043,19 +955,21 @@ _STRIPE_FACTS = pa.schema([
 
 # the facts only an 'ok' row holds: tombstones ('compacted', 'expired')
 # name no file
-_OK_ONLY = ("path", "kinds", "key_min", "key_max", "order_min",
+_OK_ONLY = ("path", "key_min", "key_max", "order_min",
             "order_max", "key_bloom", "index_meta")
 
 # ``index_meta``: an index build's parameters (JSON), on the first 'ok'
 # row of the version that publishes its files (ops/similarity.py); null
-# on every stripe table row
+# on every stripe table row. ``p_schema``: the encoded frame's Spark schema
+# (JSON), the schema every decode of the table returns
 LINEAGE_SCHEMA = pa.schema(list(_STRIPE_FACTS) + [
     ("status", pa.string()), ("run_id", pa.string()),
     ("committed_at", pa.timestamp("us", tz="UTC")),
     ("p_n_buckets", pa.int64()), ("p_stripe_rows", pa.int64()),
     ("p_key_col", pa.string()), ("p_order_col", pa.string()),
     ("p_index_rows", pa.int64()), ("p_bloom_cols", pa.string()),
-    ("p_sort_keys", pa.string()), ("index_meta", pa.string())])
+    ("p_sort_keys", pa.string()), ("p_schema", pa.string()),
+    ("index_meta", pa.string())])
 
 
 def _stripe_facts(rows: list[dict], path: str, key_col: str | None,
@@ -1076,7 +990,7 @@ def _stripe_facts(rows: list[dict], path: str, key_col: str | None,
             "raw_bytes": sum(r["raw_bytes"] for r in rows),
             "enc_bytes": sum(r["enc_bytes"] for r in rows),
             "n_cols": len(rows), "path": path,
-            "codecs": listing("codec"), "kinds": listing("col_kind"),
+            "codecs": listing("codec"),
             "checksum": hashlib.sha1(listing("checksum").encode()).hexdigest(),
             "key_min": key.get("min_val"), "key_max": key.get("max_val"),
             "order_min": order.get("min_val"),
@@ -1084,20 +998,24 @@ def _stripe_facts(rows: list[dict], path: str, key_col: str | None,
             "key_bloom": key.get("bloom")}
 
 
-def _write_facts(frame: DataFrame, out_dir: str, run_id: str,
-                 key_col: str | None, order_col: str | None,
-                 stripes_of) -> DataFrame:
-    """Facts rows (_STRIPE_FACTS) of a commit's stripes, lazily: one
-    ``mapInArrow`` over ``frame`` whose tasks each append the stripe-row
-    batches ``stripes_of(batches)`` yields to ONE parquet file under
-    ``stripes/run=<run_id>/`` (pyarrow, through _table_fs), named for the
-    task attempt, and then yield one facts row per stripe. The one
-    file-append + facts loop of every commit. A stripe's rows must all
-    reach one task, as the encode kernel emits them. A task with no rows
-    writes no file; a failed attempt's partial file is named by no lineage
-    row, so it is never read. Raises ValueError, before any job, for a
-    table that cannot commit (see _local_root)."""
+def _encoded_facts(df: DataFrame, out_dir: str, run_id: str, params: dict,
+                   done: set[str], stripe_prefix: str = "") -> DataFrame:
+    """Facts rows (_STRIPE_FACTS) of ``df`` encoded at the layout
+    ``params`` (see _PARAMS) and written under ``stripes/run=<run_id>/``,
+    lazily. ONE kernel per task of the encode shuffle: it sorts its
+    partition, drops each group whose stripe id is in ``done`` before
+    encoding it, encodes the others (see _stripe_groups), appends them to
+    ONE parquet file (pyarrow, through _table_fs) named for the task
+    attempt, and then yields one facts row per stripe. A task with no
+    stripes writes no file; a failed attempt's partial file is named by
+    no lineage row, so it is never read. Raises ValueError, before any
+    job, for a table that cannot commit (see _local_root)."""
     _local_root(out_dir)
+    key_col, order_col = params["key_col"], params["order_col"]
+    keyed, kinds, sort_keys = _keyed(
+        df, key_col, order_col, params.get("sort_keys"),
+        params["stripe_rows"], params["n_buckets"])
+    index_rows, bloom_cols = params.get("index_rows"), params.get("bloom_cols")
     filesystem, base = _table_fs(out_dir)
     rel = f"stripes/run={run_id}"
     file_schema = stripe_mod.STRIPE_PA_SCHEMA
@@ -1109,9 +1027,9 @@ def _write_facts(frame: DataFrame, out_dir: str, run_id: str,
                 f"{uuid.uuid4().hex}.parquet")
         writer, by_stripe = None, {}
         try:
-            for b in stripes_of(batches):
-                if not b.num_rows:
-                    continue
+            for b in _stripe_groups(batches, kinds, sort_keys, stripe_prefix,
+                                    done, index_rows=index_rows,
+                                    bloom_cols=bloom_cols):
                 if writer is None:
                     filesystem.create_dir(f"{base}/{rel}", recursive=True)
                     writer = pq.ParquetWriter(f"{base}/{name}", file_schema,
@@ -1128,28 +1046,7 @@ def _write_facts(frame: DataFrame, out_dir: str, run_id: str,
                 [_stripe_facts(rows, name, key_col, order_col)
                  for rows in by_stripe.values()], schema=_STRIPE_FACTS)
 
-    return frame.mapInArrow(write, from_arrow_schema(_STRIPE_FACTS))
-
-
-def _encoded_facts(df: DataFrame, out_dir: str, run_id: str, params: dict,
-                   done: set[str], stripe_prefix: str = "") -> DataFrame:
-    """Facts rows of ``df`` encoded at the layout ``params`` (see
-    _PARAMS) and written under ``stripes/run=<run_id>/``, lazily. ONE
-    kernel per task of the encode shuffle: it sorts its partition, drops
-    each group whose stripe id is in ``done`` before encoding it, encodes
-    the others and appends them to the task's one file (see
-    _stripe_groups, _write_facts)."""
-    keyed, kinds, sort_keys = _keyed(
-        df, params["key_col"], params["order_col"], params.get("sort_keys"),
-        params["stripe_rows"], params["n_buckets"])
-    index_rows, bloom_cols = params.get("index_rows"), params.get("bloom_cols")
-
-    def encode(batches):
-        return _stripe_groups(batches, kinds, sort_keys, stripe_prefix, done,
-                              index_rows=index_rows, bloom_cols=bloom_cols)
-
-    return _write_facts(keyed, out_dir, run_id, params["key_col"],
-                        params["order_col"], encode)
+    return keyed.mapInArrow(write, from_arrow_schema(_STRIPE_FACTS))
 
 
 def _log(out_dir: str) -> tuple[list[dict], int]:
@@ -1234,7 +1131,7 @@ def _publish(out_dir: str, pending: list[dict],
 
 
 _PARAMS = ("n_buckets", "stripe_rows", "key_col", "order_col", "index_rows",
-           "bloom_cols", "sort_keys")
+           "bloom_cols", "sort_keys", "schema")
 
 
 def _param_cols(params: dict | None) -> dict:
@@ -1274,7 +1171,8 @@ def _check_resume_params(rows: list[dict], out_dir: str,
     index_rows/bloom_cols/sort_keys don't move rows but DO change stripe
     bytes — a mismatch would break the 're-encoding a stripe reproduces
     identical bytes' invariant and produce a mixed-layout table, so they're
-    guarded too. A param the lineage does not record is not checked."""
+    guarded too, and so is the schema every decode of the table returns.
+    A param the lineage does not record is not checked."""
     have = _recorded_params(rows)
     if have is None:
         return
@@ -1290,7 +1188,7 @@ def _check_resume_params(rows: list[dict], out_dir: str,
 
 def _layout_params(rows: list[dict], out_dir: str) -> dict:
     """The table's layout params from its latest parameterized commit
-    (commit() records them on every lineage row)."""
+    (commit records them on every lineage row), its schema among them."""
     row = _recorded_params(rows)
     if row is None:
         raise ValueError(f"the lineage of {out_dir} records no layout params "
@@ -1308,21 +1206,35 @@ def _held(rows: list[dict]) -> set[str]:
     return {r["stripe_id"] for r in rows if r["status"] == "ok"}
 
 
-def _commit(out_dir: str, facts: DataFrame, run_id: str, params: dict,
-            log: tuple[list[dict], int],
-            tombstones: list[dict] = ()) -> list[dict]:
-    """Collect the write kernel's ``facts`` rows (the only Spark job) and
-    publish them as 'ok' rows of the next version of the already-read
-    ``log``, with the 'compacted' rows of a compaction in the same
-    version; return the log's rows after it. ``params`` are the layout
-    params to record, key_col and order_col included. A compaction whose
+def commit(df: DataFrame, out_dir: str, run_id: str, params: dict, *,
+           stripe_prefix: str = "", log: tuple[list[dict], int] | None = None,
+           tombstones: list[dict] = ()) -> list[dict]:
+    """Encode ``df`` at the layout ``params`` (see _PARAMS; key_col and
+    order_col included) and commit the stripes the lineage lacks; return
+    the table's lineage rows after it. The params are recorded on every
+    new lineage row, with ``df``'s schema as the table's schema unless
+    ``params`` carry the recorded one (a compaction). ``stripe_prefix``
+    starts every stripe id (a streaming batch's, a compaction run's).
+
+    ONE kernel per encode task sorts its partition, drops the stripes the
+    log holds before encoding them, and writes the others (see
+    _encoded_facts); the driver collects their facts rows (the only Spark
+    job after the shuffle) and the commit point is the creation of the
+    next lineage version holding them as 'ok' rows (see _publish), with
+    a compaction's ``tombstones`` in the same version. A commit that adds
+    no stripe writes nothing. Cost is O(batch) plus one driver read of
+    the log (``log``, when the caller already read it), never a read of
+    earlier stripes.
+
+    Raises ValueError when the lineage records different params or a
+    different schema (see _check_resume_params). A compaction whose
     victims a concurrent writer tombstoned first raises RuntimeError; its
     bytes stay invisible orphans."""
-    new = facts.toArrow().to_pylist()
-    if len({r["stripe_id"] for r in new}) < len(new):
-        raise ValueError(f"commit to {out_dir}: a stripe's rows reached "
-                         "several tasks; commit needs stripe-clustered rows "
-                         "as encode_dataframe emits them")
+    params = {"schema": df.schema.json(), **params}
+    log = log if log is not None else _log(out_dir)
+    _check_resume_params(log[0], out_dir, params)
+    new = _encoded_facts(df, out_dir, run_id, params, _held(log[0]),
+                         stripe_prefix).toArrow().to_pylist()
     victims = {r["stripe_id"] for r in tombstones}
 
     def rebase(rows, pending):
@@ -1342,67 +1254,20 @@ def _commit(out_dir: str, facts: DataFrame, run_id: str, params: dict,
     return _publish(out_dir, pending, log, rebase)
 
 
-def _encode_commit(df: DataFrame, out_dir: str, run_id: str, params: dict,
-                   log: tuple[list[dict], int] | None = None,
-                   stripe_prefix: str = "",
-                   tombstones: list[dict] = ()) -> list[dict]:
-    """Encode ``df`` at the layout ``params`` and commit the stripes the
-    log (read here when not given) lacks, as one log version (see
-    _encoded_facts, _commit): the path of encode_job, each streaming batch
-    and compact_job."""
-    log = log if log is not None else _log(out_dir)
-    return _commit(out_dir,
-                   _encoded_facts(df, out_dir, run_id, params,
-                                  _held(log[0]), stripe_prefix),
-                   run_id, params, log, tombstones)
-
-
-def commit(spark: SparkSession, stripes: DataFrame, out_dir: str,
-           key_col: str, order_col: str | None, run_id: str,
-           params: dict | None = None) -> list[dict]:
-    """Commit ONE batch of stripe rows (encode_dataframe's output) and
-    return the table's lineage rows after it. Stripe ids the lineage
-    already holds are skipped; the rest are written by the tasks
-    themselves (see _write_facts) under ``stripes/run=<run_id>/``, their
-    facts rows are collected, and the commit point is the creation of the
-    next lineage version holding them as 'ok' rows (see _publish). A
-    commit that adds no stripe writes nothing. Cost is O(batch) plus one
-    driver read of the log, never a read of earlier stripes. Tables built
-    from a DataFrame go through encode_job, which encodes and writes in
-    one kernel."""
-    log = _log(out_dir)
-    done = _held(log[0])
-
-    def unheld(batches):
-        for b in batches:
-            yield b.filter(pa.array([s not in done for s in
-                                     b.column("stripe_id").to_pylist()],
-                                    pa.bool_()))
-
-    # the key/order columns the facts were computed for: which stats
-    # columns the table has (see _manifest_frame)
-    params = dict(params or {}, key_col=key_col, order_col=order_col)
-    return _commit(out_dir, _write_facts(stripes, out_dir, run_id, key_col,
-                                         order_col, unheld),
-                   run_id, params, log)
-
-
-def _head(rows: list[dict], out_dir: str) -> dict:
-    """The lineage's latest 'ok' row, whose ``kinds`` are the table's
-    schema. Raises ValueError naming ``out_dir`` when no table is
-    there."""
-    for r in reversed(rows):
-        if r["status"] == "ok":
-            return r
-    raise ValueError(f"no stripes table at {out_dir}: its lineage holds "
-                     "no commit")
-
-
-def _kinds(row: dict) -> dict[str, str]:
-    """column -> kind from a lineage row's ``kinds`` listing. The FIRST
-    colon splits: recursive kinds ("list:array_int64") contain colons
-    themselves; column names never do."""
-    return dict(p.split(":", 1) for p in row["kinds"].split(","))
+def _schema(rows: list[dict], out_dir: str) -> T.StructType:
+    """The table's schema, as its latest commit recorded it (see commit),
+    read on the driver with no Spark job. Raises ValueError naming
+    ``out_dir`` when no table is there, and when the lineage records no
+    schema (a table written before it did)."""
+    if not any(r["status"] == "ok" for r in rows):
+        raise ValueError(f"no stripes table at {out_dir}: its lineage holds "
+                         "no commit")
+    row = _recorded_params(rows)
+    if row is None or row["p_schema"] is None:
+        raise ValueError(f"the lineage of {out_dir} records no schema: the "
+                         "table was written before the lineage recorded "
+                         "one — re-encode it")
+    return T.StructType.fromJson(json.loads(row["p_schema"]))
 
 
 def _manifest_frame(spark: SparkSession, stripes: list[dict],
@@ -1433,9 +1298,8 @@ def encode_job(spark: SparkSession, df: DataFrame, out_dir: str,
     ``key_equals``.
 
     One read of the log, then one kernel per encode task that sorts its
-    partition, encodes and writes its stripes (see _encoded_facts), then
-    one log version (see _commit): 2 Spark jobs, the shuffle and the
-    facts collect.
+    partition, encodes and writes its stripes, then one log version (see
+    commit): 2 Spark jobs, the shuffle and the facts collect.
 
     Idempotent resume (north_rule): stripe ids are a pure function of the
     input (bucket hash + order salt), so a rerun after a partial failure
@@ -1443,9 +1307,9 @@ def encode_job(spark: SparkSession, df: DataFrame, out_dir: str,
     others before encoding them (a no-op rerun encodes nothing);
     re-encoding a stripe reproduces identical bytes (deterministic
     codecs), and lineage gains exactly one 'ok' row per stripe. Resuming
-    with different
-    n_buckets/stripe_rows/key_col raises (lineage records them). The
-    returned stats cover the table's active stripes, from the lineage."""
+    with different n_buckets/stripe_rows/key_col, or a frame of another
+    schema, raises (lineage records them). The returned stats cover the
+    table's active stripes, from the lineage."""
     if n_buckets is None:
         n_buckets = _n_buckets(df, stripe_rows)
     # letter-led like compact_job's "c..." ids: Spark's partition inference
@@ -1459,8 +1323,7 @@ def encode_job(spark: SparkSession, df: DataFrame, out_dir: str,
               "index_rows": index_rows, "bloom_cols": sorted(bloom_cols),
               "sort_keys": sort_keys}
     log = _log(out_dir)
-    _check_resume_params(log[0], out_dir, params)
-    active = _active(_encode_commit(df, out_dir, run_id, params, log),
+    active = _active(commit(df, out_dir, run_id, params, log=log),
                      out_dir).values()
     return {"run_id": run_id, "resumed": bool(log[0]), "n_buckets": n_buckets,
             "n_stripes": len(active),
@@ -1489,10 +1352,14 @@ def decode_job(spark: SparkSession, out_dir: str,
     strings: numeric predicates must use int-like key columns (stored
     numerically) or cast explicitly.
 
+    The frame has the schema the table recorded (see commit), in its
+    column order; ``columns`` selects top-level columns of it, in their
+    order, nested ones whole.
+
     ``as_of`` (a run_id, or a timestamp) time-travels to that snapshot
     (see _active). A path holding no table raises ValueError."""
     rows = _log(out_dir)[0]
-    head = _head(rows, out_dir)
+    schema = _schema(rows, out_dir)
     stripes = list(_active(rows, out_dir, as_of).values())
     if stripe_predicate is not None:
         kept = {r[0] for r in _manifest_frame(spark, stripes, rows)
@@ -1503,7 +1370,6 @@ def decode_job(spark: SparkSession, out_dir: str,
         hit = bloom.might_contain_many(
             [r["key_bloom"] or b"" for r in stripes], key_equals)
         stripes = [r for r, h in zip(stripes, hit) if h]
-    schema, columns = _schema_from_kinds(_kinds(head), columns)
     return _decode_files(spark, out_dir, stripes, schema, columns,
                          stride_range)
 
@@ -1632,7 +1498,7 @@ def compact_job(spark: SparkSession, out_dir: str) -> dict:
     decode_job(as_of=<pre-compaction run>) sees the original stripes
     (tombstones commit later than the cutoff)."""
     log = _log(out_dir)
-    kinds = _kinds(_head(log[0], out_dir))  # raises when no table is there
+    schema = _schema(log[0], out_dir)  # raises when no table is there
     params = _layout_params(log[0], out_dir)
     active = _active(log[0], out_dir)
     slots: dict[tuple, list[str]] = {}
@@ -1646,13 +1512,13 @@ def compact_job(spark: SparkSession, out_dir: str) -> dict:
     if not victims:
         return {"run_id": None, "compacted_stripes": 0, "new_stripes": 0}
     run_id = "c" + uuid.uuid4().hex[:11]
-    df = _decode_files(spark, out_dir, [active[s] for s in victims],
-                       *_schema_from_kinds(kinds, None))
-    after = _encode_commit(df, out_dir, run_id, params, log,
-                           stripe_prefix=f"{run_id}-",
-                           tombstones=_lineage_rows(
-                               [active[s] for s in victims], "compacted",
-                               run_id, params))
+    # the decoded frame's nested fields may be looser than the recorded
+    # schema's (see _decode_to): params keep the recorded one
+    df = _decode_files(spark, out_dir, [active[s] for s in victims], schema)
+    after = commit(df, out_dir, run_id, params, log=log,
+                   stripe_prefix=f"{run_id}-",
+                   tombstones=_lineage_rows([active[s] for s in victims],
+                                            "compacted", run_id, params))
     return {"run_id": run_id, "compacted_stripes": len(victims),
             "new_stripes": sum(r["run_id"] == run_id and r["status"] == "ok"
                                for r in after)}

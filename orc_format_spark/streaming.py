@@ -48,8 +48,8 @@ def encode_stream(stream_df: DataFrame, out_dir: str, checkpoint_dir: str,
         # one encode kernel per task drops the stripe ids the lineage
         # already holds before encoding them, then writes the rest; the
         # cost stays O(batch) as the table grows (not O(total stripes ever))
-        pipeline._encode_commit(batch_df, out_dir, f"stream-b{batch_id}",
-                                params, stripe_prefix=f"b{batch_id:08d}-")
+        pipeline.commit(batch_df, out_dir, f"stream-b{batch_id}", params,
+                        stripe_prefix=f"b{batch_id:08d}-")
         if compact_every and (batch_id + 1) % compact_every == 0:
             pipeline.compact_job(spark, out_dir)
 

@@ -9,8 +9,10 @@ the reference's Present stream (boolean RLE over the validity bitmap; Data
 holds only non-null values — tests/it/deserialize.rs:13-25).
 
 There is one encoder (:func:`encode_column`, Arrow in) and one decoder
-(:func:`_decode_column_parts` + :func:`_to_arrow_array`, Arrow out) per
-column, with zero per-row Python: strings stay Arrow buffers end to end.
+(:func:`_decode_arrow`: :func:`_decode_column_parts` +
+:func:`_to_arrow_array` per row, or per kept stride of a strided row,
+Arrow out) per column, with zero per-row Python: strings stay Arrow buffers end
+to end.
 """
 
 from __future__ import annotations
@@ -429,7 +431,7 @@ _CODEC_IDS = ["rle_v2", "for", "for_scale", "float_raw", "bool_rle",
               "bool_list", "nullable:bool_list",
               "alp:rle_v2", "alp:for", "alp:for_scale", "float_shuf"] + [
               f"{p}alp_list:{c}" for p in ("", "nullable:")
-              for c in ("rle_v2", "for", "for_scale")]
+              for c in ("rle_v2", "for", "for_scale")] + ["list"]
 _STREAMS = ("present", "data", "length", "dict_data", "extra")
 
 
@@ -489,11 +491,6 @@ def encode_column_strided(arr: pa.Array | pa.ChunkedArray, kind: str,
     """Encode one column as concatenated per-stride sub-encodings with a
     stride index in ``extra`` (codec='strided'). Each stride is decodable
     in isolation, so a predicate can skip every non-matching stride's bytes."""
-    if kind.startswith("list:"):
-        # nested lists carry no range predicates; skip the stride layout
-        # and keep the recursive child packing whole-stripe
-        return encode_column(arr, kind, force_codec=force_codec,
-                             with_bloom=with_bloom)
     if isinstance(arr, pa.ChunkedArray):
         arr = arr.combine_chunks()
     n = len(arr)
@@ -558,76 +555,36 @@ def _strides_overlapping(row: dict, lo, hi) -> list[int]:
     return keep
 
 
-def _decode_strided_parts(row: dict, keep: list[int] | None = None):
-    """Decode selected strides of a strided column row; returns
-    (values, valid) like :func:`_decode_column_parts`, concatenated in
-    stride order. ``keep=None`` decodes every stride — only the chosen
-    strides' bytes are ever touched."""
+def _decode_arrow(row: dict, target_type: pa.DataType,
+                  keep: list[int] | None = None) -> pa.Array:
+    """One stripe-column row as an Arrow array of ``target_type``. A
+    strided row decodes stride by stride, joined in stride order: only
+    the strides in ``keep`` (all when None), and only their bytes are
+    ever touched."""
     kind = row["col_kind"]
-    extra_blob = bytes(row["extra"])
-    index, idx_len = _parse_stride_index(extra_blob)
+    if row["codec"] != "strided":
+        return _to_arrow_array(_decode_column_parts(row), kind, target_type)
+    bufs = {s: bytes(row[s]) for s in _STREAMS}
+    index, idx_len = _parse_stride_index(bufs["extra"])
     # per-stream running offsets; the concatenated per-stride extra stream
     # sits AFTER the serialized index inside the row's extra field
-    offs = {s: 0 for s in _STREAMS}
+    offs = dict.fromkeys(_STREAMS, 0)
     offs["extra"] = idx_len
-    slices = []
-    for meta in index:
-        sl = {s: bytes(row[s])[offs[s]:offs[s] + meta["lens"][s]]
-              for s in _STREAMS if s != "extra"}
-        sl["extra"] = extra_blob[offs["extra"]:offs["extra"] + meta["lens"]["extra"]]
+    chosen = range(len(index)) if keep is None else set(keep)
+    parts = []
+    for i, meta in enumerate(index):
+        sl = {s: bufs[s][offs[s]:offs[s] + meta["lens"][s]] for s in _STREAMS}
         for s in _STREAMS:
             offs[s] += meta["lens"][s]
-        slices.append(sl)
-
-    chosen = range(len(index)) if keep is None else keep
-    vals_parts, valid_parts = [], []
-    for i in chosen:
-        meta, sl = index[i], slices[i]
-        sub = {"n_rows": meta["n_rows"], "n_nulls": meta["n_nulls"],
-               "col_kind": kind, "codec": meta["codec"],
-               "compression": meta["compression"], "ndv": meta["ndv"], **sl}
-        v, m = _decode_column_parts(sub)
-        vals_parts.append(v)
-        valid_parts.append(m)
-    return _concat_decoded(vals_parts, valid_parts, kind)
-
-
-def _concat_decoded(vals_parts: list, valid_parts: list, kind: str):
-    valid = (np.concatenate(valid_parts) if valid_parts
-             else np.zeros(0, dtype=bool))
-    if kind in ("string", "binary"):
-        arrs = [v if isinstance(v, pa.Array) else v.combine_chunks()
-                for v in vals_parts]
-        empty_t = pa.large_binary() if kind == "binary" else pa.large_utf8()
-        return (pa.concat_arrays(arrs) if arrs
-                else pa.array([], type=empty_t)), valid
-    if kind.startswith("array_"):
-        flats = [v[0] for v in vals_parts]
-        lens = [v[1] for v in vals_parts]
-        if kind == "array_string":
-            flat = (pa.concat_arrays([f.combine_chunks() if isinstance(f, pa.ChunkedArray) else f
-                                      for f in flats]) if flats
-                    else pa.array([], type=pa.large_utf8()))
-        else:
-            fdt = {"array_float32": np.float32, "array_float64": np.float64,
-                   "array_int64": np.int64, "array_bool": bool,
-                   "array_ts": np.int64, "array_date": np.int64}[kind]
-            flat = np.concatenate(flats) if flats else np.zeros(0, fdt)
-        cvs = [v[2] for v in vals_parts]
-        if any(cv is not None for cv in cvs):
-            child_valid = np.concatenate([
-                cv if cv is not None
-                else np.ones(int(np.asarray(v[1]).sum()), dtype=bool)
-                for cv, v in zip(cvs, vals_parts)])
-        else:
-            child_valid = None
-        return (flat,
-                (np.concatenate(lens) if lens else np.zeros(0, np.uint64)),
-                child_valid), valid
-    dt = {"float32": np.float32, "float64": np.float64,
-          "bool": bool}.get(kind, np.int64)
-    return (np.concatenate(vals_parts) if vals_parts
-            else np.zeros(0, dt)), valid
+        if i in chosen:
+            sub = {"n_rows": meta["n_rows"], "n_nulls": meta["n_nulls"],
+                   "col_kind": kind, "codec": meta["codec"],
+                   "compression": meta["compression"], "ndv": meta["ndv"],
+                   **sl}
+            parts.append(_to_arrow_array(_decode_column_parts(sub), kind,
+                                         target_type))
+    return (pa.concat_arrays(parts) if parts
+            else pa.array([], type=target_type))
 
 
 def _default_arrow_type(kind: str) -> pa.DataType:
@@ -655,9 +612,7 @@ def _default_arrow_type(kind: str) -> pa.DataType:
 def decode_column(row: dict) -> pa.Array:
     """Decode one stripe-column row back to a full-length Arrow array with
     nulls, typed by the column kind's default Arrow type."""
-    kind = row["col_kind"]
-    return _to_arrow_array(_decode_column_parts(row), kind,
-                           _default_arrow_type(kind))
+    return _decode_arrow(row, _default_arrow_type(row["col_kind"]))
 
 
 # ---------------------------------------------------------------------------
@@ -714,23 +669,15 @@ def decode_stripe_arrow(rows: list[dict], columns: list[str],
         pred_row = by_col[pred_col]
         if pred_row["codec"] == "strided":
             keep = _strides_overlapping(pred_row, lo, hi)
-    arrays = []
-    for c, field in zip(columns, target_schema):
-        row = by_col[c]
-        kind = row["col_kind"]
-        if keep is not None and row["codec"] == "strided":
-            dec = _decode_strided_parts(row, keep)
-        else:
-            dec = _decode_column_parts(row)
-        arrays.append(_to_arrow_array(dec, kind, field.type))
+    arrays = [_decode_arrow(by_col[c], field.type, keep)
+              for c, field in zip(columns, target_schema)]
     return pa.RecordBatch.from_arrays(arrays, schema=target_schema)
 
 
 def _decode_column_parts(row: dict):
-    """Decode one stripe-column row to (non-null values, validity);
-    :func:`_to_arrow_array` scatters that into a full-length array."""
-    if row["codec"] == "strided":
-        return _decode_strided_parts(row)
+    """Decode one (unstrided) stripe-column row to (non-null values,
+    validity); :func:`_to_arrow_array` scatters that into a full-length
+    array."""
     n = int(row["n_rows"])
     n_nulls = int(row["n_nulls"])
     kind = row["col_kind"]

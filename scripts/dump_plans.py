@@ -48,7 +48,9 @@ def main() -> None:
               "- decode_job of a persisted table: pruning already ran on the\n"
               "  driver's read of the lineage, so the plan is only a\n"
               "  `LocalTableScan` of (file, keep-list) rows under `MapInArrow`\n"
-              "  — no Exchange, plain or pruned.\n\n")
+              "  — no Exchange, plain or pruned. A nested column is decoded\n"
+              "  as its leaves and rebuilt to the schema the table recorded\n"
+              "  in one `Project` above that `MapInArrow`.\n\n")
 
     import tempfile
     with tempfile.TemporaryDirectory() as d:
@@ -67,8 +69,8 @@ def main() -> None:
                   "leaf expressions) BEFORE the same single Exchange — nesting\n"
                   "adds zero shuffles.\n\n```\n" + plan_of(rich) + "\n```\n\n")
 
-        # the frame encode_job collects (nothing committed yet, so
-        # nothing skipped)
+        # the frame commit (so encode_job) collects: nothing committed
+        # yet, so nothing skipped
         written = pipeline._encoded_facts(
             df, f"{d}/plan_only", "r0",
             {"n_buckets": None, "stripe_rows": 2000, "key_col": "conv_id",
@@ -108,6 +110,19 @@ def main() -> None:
                   + "\n```\n\n"
                   "### key_equals\n\n```\n" + plan_of(lookup)
                   + "\n```\n\n")
+
+        pipeline.encode_job(spark, transcripts.enrich(df), f"{d}/rich",
+                            stripe_rows=2000)
+        nested = pipeline.decode_job(spark, f"{d}/rich")
+        out.write("## decode_job (nested tool_calls, re-nested to the recorded "
+                  "schema)\n\n"
+                  "What to look for: the same `LocalTableScan` ->\n"
+                  "`MapInArrow` decoding the flat leaves (`tool_calls·...`),\n"
+                  "then ONE `Project` rebuilding `tool_calls` from them\n"
+                  "(`transform(arrays_zip(...))`) to the schema the lineage\n"
+                  "recorded at encode, as roundtrip rebuilds df.schema: no\n"
+                  "Exchange, no second Python stage.\n\n```\n"
+                  + plan_of(nested) + "\n```\n\n")
 
         emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
         from orc_format_spark.ops import dedup

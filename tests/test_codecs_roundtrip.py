@@ -256,8 +256,7 @@ def test_alp_list_float64_children():
                                  "array_float64", arr.type)
     assert [canon(x) for x in dec.to_pylist()] == exp
     srow = stripe.encode_column_strided(arr, "array_float64", index_rows=512)
-    sdec = stripe._to_arrow_array(stripe._decode_strided_parts(srow),
-                                  "array_float64", arr.type)
+    sdec = stripe._decode_arrow(srow, arr.type)
     assert [canon(x) for x in sdec.to_pylist()] == exp
 
     rnd = pa.array([list(rng.uniform(0, 1, 4)) for _ in range(500)],

@@ -363,12 +363,8 @@ def test_concurrent_compaction_conflict_raises(spark, tmp_path,
               "sort_keys": ["turn_idx"]}
     for k, half in enumerate((df.where(F.col("turn_idx") % 2 == 0),
                               df.where(F.col("turn_idx") % 2 == 1))):
-        s = pipeline.encode_dataframe(
-            half, key_col="conv_id", order_col=None,
-            sort_keys=["turn_idx"], stripe_rows=100, n_buckets=2,
-            stripe_prefix=f"b{k:08d}-")
-        pipeline.commit(spark, s, out, "conv_id", None,
-                        run_id=f"batch-{k}", params=params)
+        pipeline.commit(half, out, f"batch-{k}", params,
+                        stripe_prefix=f"b{k:08d}-")
     create = pipeline._create_version
     won = []
 
@@ -403,11 +399,8 @@ def test_relocated_table_reads_the_same(spark, tmp_path):
               "sort_keys": ["turn_idx"]}
     for k in (0, 1):
         half = df.where(F.col("turn_idx") % 2 == k)
-        stripes = pipeline.encode_dataframe(
-            half, key_col="conv_id", order_col=None, sort_keys=["turn_idx"],
-            stripe_rows=500, n_buckets=3, stripe_prefix=f"b{k:08d}-")
-        pipeline.commit(spark, stripes, out, "conv_id", None,
-                        run_id=f"batch-{k}", params=params)
+        pipeline.commit(half, out, f"batch-{k}", params,
+                        stripe_prefix=f"b{k:08d}-")
     res = pipeline.compact_job(spark, out)
     assert res["compacted_stripes"] > 0
     cols = df.columns

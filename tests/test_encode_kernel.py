@@ -188,11 +188,12 @@ def test_resume_encodes_only_missing_groups(spark, df, tmp_path,
     every = run(set())
     assert len(every) == len(set(every)) > 2
 
-    stripes = pipeline.encode_dataframe(df, "conv_id", "turn_idx",
-                                        stripe_rows=stripe_rows,
-                                        n_buckets=n_buckets)
-    pipeline.commit(spark, stripes.filter(F.col("bucket") % 2 == 0), out,
-                    "conv_id", "turn_idx", run_id="half")
+    params = {"n_buckets": n_buckets, "stripe_rows": stripe_rows,
+              "key_col": "conv_id", "order_col": "turn_idx",
+              "index_rows": None, "bloom_cols": ["conv_id"],
+              "sort_keys": None}
+    even = F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)) % 2 == 0
+    pipeline.commit(df.filter(even), out, "half", params)
     held = pipeline._held(pipeline._log(out)[0])
     missing = [s for s in every if s not in held]
     assert held and missing

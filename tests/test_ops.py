@@ -652,8 +652,8 @@ def test_index_build_over_an_empty_corpus_keeps_the_old_index(
 def test_index_build_killed_before_its_version_changes_nothing(
         spark, small_emb, tmp_path, monkeypatch, kind):
     """A build killed at its lineage version (its files already written)
-    leaves the old index probing identically, and no log row names the
-    new run's files."""
+    leaves the old index probing identically and frees the files it
+    wrote: no run directory is left that no log row names."""
     import os
     from orc_format_spark import pipeline
     build, probe = _BUILDS[kind]
@@ -674,11 +674,8 @@ def test_index_build_killed_before_its_version_changes_nothing(
     pd.testing.assert_frame_equal(probe(spark, path, q, k=5).toPandas(),
                                   before)
     runs = {r["run_id"] for r in log[0]}
-    orphans = [d for d in os.listdir(f"{path}/stripes")
-               if d.removeprefix("run=") not in runs]
-    assert len(orphans) == 1 and os.listdir(f"{path}/stripes/{orphans[0]}")
-    assert not any(r["path"].startswith(f"stripes/{orphans[0]}/")
-                   for r in log[0] if r["path"])
+    assert [d for d in os.listdir(f"{path}/stripes")
+            if d.removeprefix("run=") not in runs] == []
 
 
 def test_index_builds_racing_for_a_version_publish_one_whole_build(
@@ -755,7 +752,8 @@ def test_index_paths_without_an_index_or_off_the_local_fs_raise(
 def test_ann_index_over_mixed_vector_widths_raises(spark, small_emb,
                                                    tmp_path):
     """Batches of different vector widths bucketize with different plane
-    families, so the build refuses to publish them."""
+    families, so the build refuses to publish them and frees their
+    files."""
     import os
     wide = small_emb.select((F.col("vec_id") + 1000).alias("vec_id"),
                             F.concat("embedding", F.array(F.lit(1.0)))
@@ -764,3 +762,4 @@ def test_ann_index_over_mixed_vector_widths_raises(spark, small_emb,
     with pytest.raises(ValueError, match="mixes vector widths"):
         similarity.build_ann_index(small_emb.union(wide), path, n_planes=4)
     assert not os.path.exists(f"{path}/lineage")
+    assert os.listdir(f"{path}/stripes") == []  # its files were freed

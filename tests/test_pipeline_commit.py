@@ -28,9 +28,7 @@ def test_commit_reads_only_its_own_run_dir(spark, df, tmp_path):
     junk.mkdir(parents=True)
     (junk / "part-00000-junk.parquet").write_bytes(b"\x00not-a-parquet-file")
 
-    stripes = pipeline.encode_dataframe(df, "conv_id", "turn_idx",
-                                        stripe_rows=300, n_buckets=6)
-    pipeline.commit(spark, stripes, out, "conv_id", "turn_idx", run_id="batch2")
+    pipeline.commit(df, out, "batch2", PARAMS)
     # derived without reading run=00000000junk
     assert pipeline.active_stripe_ids(spark, out)
 
@@ -41,12 +39,10 @@ def test_replayed_append_does_not_double_manifest_stats(spark, df, tmp_path):
     the manifest checksum."""
     out_a = str(tmp_path / "clean")
     out_b = str(tmp_path / "replayed")
-    stripes = pipeline.encode_dataframe(df, "conv_id", "turn_idx",
-                                        stripe_rows=300, n_buckets=6)
-    pipeline.commit(spark, stripes, out_a, "conv_id", "turn_idx", run_id="r1")
+    pipeline.commit(df, out_a, "r1", PARAMS)
     # replay: same batch committed twice under the same run_id
-    pipeline.commit(spark, stripes, out_b, "conv_id", "turn_idx", run_id="r1")
-    pipeline.commit(spark, stripes, out_b, "conv_id", "turn_idx", run_id="r1")
+    pipeline.commit(df, out_b, "r1", PARAMS)
+    pipeline.commit(df, out_b, "r1", PARAMS)
 
     cols = ["stripe_id", "n_rows", "raw_bytes", "enc_bytes", "n_cols", "checksum"]
 
@@ -183,17 +179,14 @@ def test_clustered_decode_dedupes_stripes_repeated_across_files(spark, df, tmp_p
     a rerun commits the same stripes under a new run_id (the lineage
     already holds them, so the rerun publishes nothing)."""
     out = str(tmp_path / "enc_dup")
-    stripes = pipeline.encode_dataframe(df, "conv_id", "turn_idx",
-                                        stripe_rows=300, n_buckets=6)
     # crash window: the same complete stripes land under TWO run dirs
-    pipeline.commit(spark, stripes, out, "conv_id", "turn_idx", run_id="runA")
-    stripes.write.mode("append").parquet(f"{out}/stripes/run=orphanB")
+    pipeline.commit(df, out, "runA", PARAMS)
+    _stripes(df).write.mode("append").parquet(f"{out}/stripes/run=orphanB")
     exp = df.orderBy("conv_id", "turn_idx").toPandas()
     import pandas as pd
     for rerun in (None, "runC"):
         if rerun:
-            pipeline.commit(spark, stripes, out, "conv_id", "turn_idx",
-                            run_id=rerun)
+            pipeline.commit(df, out, rerun, PARAMS)
         got = pipeline.decode_job_clustered(spark, out)
         assert got.count() == df.count()
         got_pd = got.orderBy("conv_id", "turn_idx").toPandas()
@@ -223,23 +216,57 @@ def test_resume_layout_param_mismatch_raises(spark, df, tmp_path):
     assert stats["resumed"] is True
 
 
-def test_infer_schema_from_manifest_single_row(spark, df, tmp_path):
-    """decode_job takes a table's schema from ONE lineage row's kinds: it
-    equals the schema of the (col_name, col_kind) pairs of every stored
-    stripe row, read with pyarrow from the files the lineage names."""
-    import pyarrow.parquet as pq
+def test_decode_job_returns_the_encoded_schema(spark, tmp_path):
+    """decode_job returns the schema the table recorded at encode, as
+    roundtrip returns df.schema: the encoded column order, int and
+    smallint lists, int map values and timestamp_ntz unwidened, nested
+    field order kept; ``columns`` selects top-level columns in its own
+    order."""
+    import datetime
+    frame = spark.createDataFrame(
+        [(1, [1, 2], [3], datetime.datetime(2020, 1, 1), (1, "a"), {"a": 1}),
+         (2, None, [None], None, None, None)],
+        "k bigint, ai array<int>, as_ array<smallint>, ntz timestamp_ntz, "
+        "st struct<x:int,y:string>, m map<string,int>")
     out = str(tmp_path / "enc_schema")
-    pipeline.encode_job(spark, df, out, stripe_rows=300, n_buckets=6)
-    paths = {r["path"] for r in pipeline._log(out)[0] if r["status"] == "ok"}
-    pairs = {}
-    for p in paths:
-        t = pq.read_table(f"{out}/{p}", columns=["col_name", "col_kind"])
-        pairs.update(zip(t["col_name"].to_pylist(),
-                         t["col_kind"].to_pylist()))
-    ref_schema, ref_cols = pipeline._schema_from_kinds(pairs, None)
+    pipeline.encode_job(spark, frame, out, key_col="k", order_col=None,
+                        stripe_rows=10)
     dec = pipeline.decode_job(spark, out)
-    assert dec.columns == ref_cols
-    assert dec.schema == ref_schema
+    assert dec.schema == frame.schema
+    assert sorted(dec.collect()) == sorted(frame.collect())
+    for cols in (["m", "k"], ["st", "ntz", "ai"]):
+        assert (pipeline.decode_job(spark, out, columns=cols).schema
+                == frame.select(cols).schema)
+
+
+def test_resume_with_a_changed_schema_raises(spark, df, tmp_path):
+    """A resume whose frame has another schema (a column's type changed)
+    raises naming ``schema`` and writes nothing."""
+    out = str(tmp_path / "enc_retyped")
+    pipeline.encode_job(spark, df, out, stripe_rows=300, n_buckets=6)
+    before = _files(out, "**")
+    retyped = df.withColumn("turn_idx", F.col("turn_idx").cast("long"))
+    with pytest.raises(ValueError, match="mismatched schema"):
+        pipeline.encode_job(spark, retyped, out, stripe_rows=300,
+                            n_buckets=6)
+    assert _files(out, "**") == before
+
+
+def test_lineage_without_a_schema_raises(spark, df, tmp_path):
+    """A table whose lineage records no schema (written before it did)
+    is refused by decode_job and compact_job with an error naming it."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    out = _fragmented(spark, df, str(tmp_path / "enc_no_schema"))
+    for f in _files(out, "lineage/*.parquet"):
+        t = pq.read_table(f)
+        i = t.schema.get_field_index("p_schema")
+        pq.write_table(t.set_column(i, "p_schema",
+                                    pa.nulls(len(t), pa.string())), f)
+    for op in (pipeline.decode_job, pipeline.compact_job):
+        with pytest.raises(ValueError,
+                           match=re.escape(out) + ".*re-encode it"):
+            op(spark, out)
 
 
 def test_clustered_decode_renests_persisted_nested_table(spark, df, tmp_path):
@@ -248,18 +275,14 @@ def test_clustered_decode_renests_persisted_nested_table(spark, df, tmp_path):
     re-nested — and a top-level nested name prunes to its leaves."""
     out = str(tmp_path / "rich")
     rich = transcripts.enrich(df)
-    stripes = pipeline.encode_dataframe(rich, "conv_id", "turn_idx",
-                                        stripe_rows=300, n_buckets=6)
-    pipeline.commit(spark, stripes, out, "conv_id", "turn_idx", run_id="n1")
+    pipeline.commit(rich, out, "n1", PARAMS)
 
     dec = pipeline.decode_job_clustered(spark, out)
-    # schema-free re-nest: struct fields come back in sorted-leaf order;
-    # the SHAPE must be array<struct<...>> with all three fields
-    dt = dec.schema["tool_calls"].dataType.simpleString()
-    assert dt.startswith("array<struct<")
-    for frag in ("call_id:string", "at:timestamp",
-                 "fn:struct<args:map<string,string>,name:string>"):
-        assert frag in dt, dt
+    # re-nested to the recorded schema: the encoded types, column and
+    # field order (nested nullability may be looser, as in roundtrip)
+    assert dec.columns == rich.columns
+    assert (dec.schema["tool_calls"].dataType.simpleString()
+            == rich.schema["tool_calls"].dataType.simpleString())
 
     def keyed(frame):
         return {(r["conv_id"], r["turn_idx"]): r.asDict(recursive=True)
@@ -272,7 +295,7 @@ def test_clustered_decode_renests_persisted_nested_table(spark, df, tmp_path):
     # column pruning by the nested TOP-LEVEL name
     pruned = pipeline.decode_job_clustered(
         spark, out, columns=["conv_id", "turn_idx", "tool_calls"])
-    assert set(pruned.columns) == {"conv_id", "turn_idx", "tool_calls"}
+    assert pruned.columns == ["conv_id", "turn_idx", "tool_calls"]
     got_p = {(r["conv_id"], r["turn_idx"]):
              r.asDict(recursive=True)["tool_calls"]
              for r in pruned.collect()}
@@ -408,16 +431,12 @@ def test_manifest_without_paths_raises(spark, df, tmp_path):
     table, and write nothing."""
     import pyarrow.parquet as pq
     out = str(tmp_path / "enc_old")
-    stripes = _stripes(df)
     for k in (0, 1):
-        pipeline.commit(spark, stripes.filter(F.col("bucket") % 2 == k), out,
-                        "conv_id", "turn_idx", run_id=f"b{k}", params=PARAMS)
+        pipeline.commit(df.filter(_bucket_parity(k)), out, f"b{k}", PARAMS)
     ops = {
         "encode_job": lambda: pipeline.encode_job(
             spark, df, out, stripe_rows=300, n_buckets=6),
-        "commit": lambda: pipeline.commit(
-            spark, stripes, out, "conv_id", "turn_idx", run_id="again",
-            params=PARAMS),
+        "commit": lambda: pipeline.commit(df, out, "again", PARAMS),
         "decode_job": lambda: pipeline.decode_job(spark, out),
         "compact_job": lambda: pipeline.compact_job(spark, out),
     }
@@ -558,9 +577,8 @@ def test_stats_the_table_lacks_raise(spark, df, tmp_path):
     there."""
     from pyspark.errors import AnalysisException
     out = str(tmp_path / "enc_no_order")
-    pipeline.commit(spark, pipeline.encode_dataframe(
-        df, "conv_id", None, sort_keys=["conv_id", "turn_idx"],
-        stripe_rows=300, n_buckets=6), out, "conv_id", None, run_id="r1")
+    pipeline.commit(df, out, "r1", dict(PARAMS, order_col=None,
+                                        sort_keys=["conv_id", "turn_idx"]))
     with pytest.raises(AnalysisException):
         pipeline.decode_job(spark, out,
                             stripe_predicate=F.col("order_min") <= "3")
@@ -600,15 +618,18 @@ def _stripes(df):
                                      bloom_cols=["conv_id"])
 
 
+def _bucket_parity(k: int):
+    """Rows of the even (k=0) or odd (k=1) hash buckets of the PARAMS
+    encode: each subset holds whole stripes of it."""
+    return F.pmod(F.xxhash64("conv_id"), F.lit(PARAMS["n_buckets"])) % 2 == k
+
+
 def _fragmented(spark, df, out: str) -> str:
     """``out`` holding df in two commits whose stripes share every
     (bucket, salt) slot: a table compact_job has work in."""
     for k in (0, 1):
-        pipeline.commit(spark, pipeline.encode_dataframe(
-            df.filter(F.col("turn_idx") % 2 == k), "conv_id", "turn_idx",
-            stripe_rows=300, n_buckets=6, bloom_cols=["conv_id"],
-            stripe_prefix=f"b{k}-"), out, "conv_id", "turn_idx",
-            run_id=f"b{k}", params=PARAMS)
+        pipeline.commit(df.filter(F.col("turn_idx") % 2 == k), out, f"b{k}",
+                        PARAMS, stripe_prefix=f"b{k}-")
     return out
 
 
@@ -674,10 +695,7 @@ def test_killed_commit_changes_nothing(spark, df, tmp_path, monkeypatch):
     exactly once, its stats equal to a clean encode's, and the killed
     commit's files are never read."""
     out = str(tmp_path / "enc_kill")
-    stripes = _stripes(df)
-    even = stripes.filter(F.col("bucket") % 2 == 0)
-    pipeline.commit(spark, even, out, "conv_id", "turn_idx", run_id="even",
-                    params=PARAMS)
+    pipeline.commit(df.filter(_bucket_parity(0)), out, "even", PARAMS)
     committed = df.count() - pipeline.decode_job(spark, out).count()
     snaps = pipeline.snapshots(spark, out).collect()
     stripe_files = _files(out, "stripes/**/*.parquet")
@@ -719,14 +737,11 @@ def test_empty_commit_writes_nothing(spark, df, tmp_path):
     out = str(tmp_path / "enc_empty")
     pipeline.encode_job(spark, df, out, stripe_rows=300, n_buckets=6)
     before = _files(out, "**")
-    pipeline.commit(spark, _stripes(df), out, "conv_id", "turn_idx",
-                    run_id="again", params=PARAMS)
-    pipeline.commit(spark, _stripes(df).limit(0), out, "conv_id",
-                    "turn_idx", run_id="none", params=PARAMS)
+    pipeline.commit(df, out, "again", PARAMS)
+    pipeline.commit(df.limit(0), out, "none", PARAMS)
     assert _files(out, "**") == before
     fresh = str(tmp_path / "enc_none")
-    pipeline.commit(spark, _stripes(df).limit(0), fresh, "conv_id",
-                    "turn_idx", run_id="none", params=PARAMS)
+    pipeline.commit(df.limit(0), fresh, "none", PARAMS)
     assert not os.path.exists(f"{fresh}/lineage")
 
 
@@ -736,19 +751,15 @@ def test_commit_losing_a_race_retries_without_the_winners_stripes(
     the log and publishes at the next version, minus the stripes the
     winner committed: every stripe ends up published exactly once."""
     out = str(tmp_path / "enc_race")
-    stripes = _stripes(df)
     create = pipeline._create_version
 
     def race(*args):
         monkeypatch.setattr(pipeline, "_create_version", create)
-        pipeline.commit(spark, stripes.filter(F.col("bucket") % 2 == 0),
-                        out, "conv_id", "turn_idx", run_id="winner",
-                        params=PARAMS)
+        pipeline.commit(df.filter(_bucket_parity(0)), out, "winner", PARAMS)
         return create(*args)
 
     monkeypatch.setattr(pipeline, "_create_version", race)
-    pipeline.commit(spark, stripes, out, "conv_id", "turn_idx",
-                    run_id="loser", params=PARAMS)
+    pipeline.commit(df, out, "loser", PARAMS)
     assert [os.path.basename(f) for f in _files(out, "lineage/*")] == [
         f"{v:020d}.parquet" for v in (1, 2)]
     assert set(_ok_rows_per_stripe(out).values()) == {1}
@@ -812,5 +823,4 @@ def test_commit_needs_exclusive_create(spark, df):
     cannot hold the lineage log: commit raises ValueError naming the
     table before any job runs."""
     with pytest.raises(ValueError, match="mock:///tbl.*exclusive create"):
-        pipeline.commit(spark, _stripes(df), "mock:///tbl", "conv_id",
-                        "turn_idx", run_id="r", params=PARAMS)
+        pipeline.commit(df, "mock:///tbl", "r", PARAMS)

@@ -8,6 +8,20 @@ from pyspark.sql import functions as F
 from orc_format_spark import pipeline, transcripts
 
 
+def _params(n_buckets: int) -> dict:
+    """The layout encode_job(stripe_rows=200, n_buckets=n_buckets)
+    commits at."""
+    return {"n_buckets": n_buckets, "stripe_rows": 200, "key_col": "conv_id",
+            "order_col": "turn_idx", "index_rows": None,
+            "bloom_cols": ["conv_id"], "sort_keys": None}
+
+
+def _even_buckets(frame, n_buckets: int):
+    """The rows of ``frame`` in the even hash buckets of the encode."""
+    return frame.filter(
+        F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)) % 2 == 0)
+
+
 @pytest.fixture(scope="module")
 def df(spark):
     d = transcripts.generate(spark, n_convs=120, seed=11)
@@ -19,11 +33,9 @@ def test_resume_after_partial_failure(spark, df, tmp_path):
     out = str(tmp_path / "enc")
     n_rows = df.count()
     n_buckets = 12
-    stripes = pipeline.encode_dataframe(df, "conv_id", "turn_idx",
-                                        stripe_rows=200, n_buckets=n_buckets)
     # simulate a run that died after committing only the even buckets
-    partial = stripes.filter(F.col("bucket") % 2 == 0)
-    pipeline.commit(spark, partial, out, "conv_id", "turn_idx", run_id="run-partial")
+    pipeline.commit(_even_buckets(df, n_buckets), out, "run-partial",
+                    _params(n_buckets))
     n_partial = spark.read.parquet(f"{out}/lineage").count()
     assert 0 < n_partial
 
@@ -89,11 +101,8 @@ def test_resume_nested_table_idempotent(spark, df, tmp_path):
     out = str(tmp_path / "rich")
     rich = transcripts.enrich(df)
     n_buckets = 8
-    stripes = pipeline.encode_dataframe(rich, "conv_id", "turn_idx",
-                                        stripe_rows=200, n_buckets=n_buckets)
-    partial = stripes.filter(F.col("bucket") % 2 == 0)
-    pipeline.commit(spark, partial, out, "conv_id", "turn_idx",
-                    run_id="run-partial")
+    pipeline.commit(_even_buckets(rich, n_buckets), out, "run-partial",
+                    _params(n_buckets))
 
     stats = pipeline.encode_job(spark, rich, out, stripe_rows=200,
                                 n_buckets=n_buckets)
@@ -139,9 +148,7 @@ def test_fresh_encode_job_never_reads_lineage(spark, df, tmp_path,
     assert again["resumed"] is True
     more = transcripts.generate(spark, n_convs=20, seed=12).withColumn(
         "conv_id", F.concat(F.lit("more-"), F.col("conv_id")))
-    pipeline.commit(spark, pipeline.encode_dataframe(
-        more, "conv_id", "turn_idx", stripe_rows=200, n_buckets=8,
-        stripe_prefix="m-"), str(out), "conv_id", "turn_idx", run_id="more")
+    pipeline.commit(more, str(out), "more", _params(8), stripe_prefix="m-")
     assert pipeline.decode_job(spark, str(out)).count() == (
         df.count() + more.count())
     assert pipeline.compact_job(spark, str(out))["compacted_stripes"] > 0

@@ -5,6 +5,7 @@ reference src/proto.rs:88-99)."""
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 import pytest
 from pyspark.sql import functions as F
 
@@ -31,13 +32,8 @@ def test_strided_roundtrip_matches_plain_all_kinds():
     for kind, arr in cases:
         plain = stripe.encode_column(arr, kind)
         strided = stripe.encode_column_strided(arr, kind, index_rows=128)
-        dv, dm = stripe._decode_column_parts(strided)
-        pv, pm = stripe._decode_column_parts(plain)
-        assert (dm == pm).all()
-        if kind == "string":
-            assert dv.to_pylist() == pv.to_pylist()
-        else:
-            assert np.array_equal(np.asarray(dv), np.asarray(pv)), kind
+        assert stripe.decode_column(strided).equals(
+            stripe.decode_column(plain)), kind
 
 
 def test_strided_roundtrip_with_nulls_and_dict_fsst():
@@ -71,14 +67,56 @@ def test_stride_skip_decodes_under_10_percent():
     lo, hi = 1000, 1100  # spans at most 2 strides of 256
     keep = stripe._strides_overlapping(krow, lo, hi)
     assert 1 <= len(keep) <= 2
-    kv, km = stripe._decode_strided_parts(krow, keep)
-    tv, tm = stripe._decode_strided_parts(trow, keep)
+    kv = stripe._decode_arrow(krow, pa.int64(), keep)
+    tv = stripe._decode_arrow(trow, pa.string(), keep)
     assert len(kv) <= 512 < n * 0.10
     got = np.asarray(kv)
     assert got.min() <= lo and got.max() >= hi  # superset of the range
     mask = (got >= lo) & (got <= hi)
     assert mask.sum() == hi - lo + 1
     assert tv.to_pylist()[int(np.flatnonzero(mask)[0])] == f"row-{lo}"
+
+
+def test_stride_skip_prunes_list_columns_too():
+    """A ``list:`` column (array<tinyint>) is strided like every other
+    kind: a stride_range decode returns the same kept strides of it as of
+    the int key beside it, a superset of the input's matching rows."""
+    n = 1000
+    tbl = pa.table({
+        "k": pa.array(np.arange(n, dtype=np.int64)),
+        "l": pa.array([[i % 100, None][: i % 3] if i % 5 else None
+                       for i in range(n)], type=pa.list_(pa.int8())),
+    })
+    kinds = {"k": "int64", "l": stripe.spark_kind("array<tinyint>")}
+    assert kinds["l"].startswith("list:")
+    rows = stripe.encode_stripe_arrow(tbl, kinds, "s0", 0, index_rows=100)
+    assert {r["codec"] for r in rows} == {"strided"}
+    lo, hi = 250, 420
+    got = pa.Table.from_batches([stripe.decode_stripe_arrow(
+        rows, ["k", "l"], tbl.schema, stride_range=("k", lo, hi))])
+    assert got.equals(tbl.slice(200, 300))  # strides 2, 3 and 4
+    between = (pc.greater_equal(got["k"], lo), pc.less_equal(got["k"], hi))
+    assert got.filter(pc.and_(*between)).equals(tbl.slice(lo, hi - lo + 1))
+
+
+def test_stride_pruned_roundtrip_of_a_nested_table(spark):
+    """roundtrip with a stride_range over a table with list columns (the
+    map keys of rich tool_calls are array<array<string>>) returns every
+    row of the input inside the range."""
+    from orc_format_spark import transcripts
+    rich = transcripts.enrich(transcripts.generate(spark, 40, seed=5))
+    lo, hi = "conv-0000000003", "conv-0000000006"
+    got = pipeline.roundtrip(rich, "conv_id", "turn_idx", stripe_rows=300,
+                             n_buckets=4, index_rows=50,
+                             stride_range=("conv_id", lo, hi))
+    between = F.col("conv_id").between(lo, hi)
+
+    def keyed(frame):
+        return {(r["conv_id"], r["turn_idx"]): r.asDict(recursive=True)
+                for r in frame.filter(between).collect()}
+
+    exp = keyed(rich)
+    assert exp and keyed(got) == exp
 
 
 def test_stride_stats_roundtrip():
