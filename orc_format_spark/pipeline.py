@@ -11,8 +11,9 @@ Execution model (SURVEY.md §3.4):
          several stripes; decode's global orderBy reassembles it)
       -> repartition by (bucket, salt)                        [one shuffle]
       -> ONE mapInArrow kernel per task (_stripe_groups): sort the
-         partition in Arrow on (bucket, salt, sort keys), then per
-         (bucket, salt) group: encode_stripe_arrow
+         partition in Arrow on (bucket, salt, sort keys), flatten nested
+         columns to their leaves (_leaves), then per (bucket, salt)
+         group: encode_stripe_arrow
       -> encode_dataframe: stripe rows (one per stripe-column)
     COMMIT (commit: encode_job, streaming batches, compact_job): the same
       kernel drops each group whose stripe id the lineage holds BEFORE
@@ -30,15 +31,15 @@ Execution model (SURVEY.md §3.4):
          relation, key bloom probe)
       -> local (file, keep-list) rows, one task per file         [no shuffle]
       -> mapInArrow(pyarrow read with col_name/stripe_id pushed to the row
-         groups; decode_stripe_arrow per stripe)
-      -> the recorded schema's nested columns rebuilt from their leaves
+         groups; decode_stripe_arrow per stripe; nested columns rebuilt
+         from their leaves in Arrow) emitting the recorded schema
       -> orderBy(sort keys) at comparison time only
     ROUNDTRIP (an in-memory frame): ENCODE then the DECODE kernel in the
       same stage — the encode output is already stripe-clustered, so no
       second shuffle and no sort — to df.schema
     Both decodes go through one step (_decode_to): one generator
     (_decode_runs) calls decode_stripe_arrow per stripe into the schema's
-    flat leaves, and nested columns are rebuilt from them.
+    leaves, and the same kernel rebuilds nested columns from them (_renest).
 
 The stripes-as-rows layout is the Spark analog of the reference's
 stripe/stream container (src/read/mod.rs:117-159): locating one column's
@@ -56,6 +57,7 @@ import uuid
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -166,143 +168,21 @@ def _tasks(spark: SparkSession, n: int) -> int:
     return max(1, min(spark.sparkContext.defaultParallelism, n))
 
 
-def column_kinds(df: DataFrame) -> dict[str, str]:
-    """Column -> engine kind from the Spark schema."""
-    return {f.name: stripe_mod.spark_kind(f.dataType.simpleString())
-            for f in df.schema.fields}
-
-
-# struct-leaf name separator: a middle dot, NOT ".", because pyspark's
-# mapInArrow resolves columns via df[name] and a "." would re-parse as
-# struct field access on the already-flattened frame
+# struct-leaf name separator: a middle dot, NOT ".", so a leaf name (a
+# stripe row's col_name) never reads as Spark struct field access
 _STRUCT_SEP = "\u00b7"
 
 
+_PRESENT = "__present__"  # a struct's present leaf
 _MAP_KEYS = "__map_keys__"
 _MAP_VALS = "__map_vals__"
-_ELEMS = "__elems__"  # per-element present leaf of an array<struct> column
+_ELEMS = "__elems__"  # element-present leaf of an array of struct/map
 _ITEM = "__item__"    # anonymous segment for an array level directly
                       # inside another array (array<array<struct>> etc.)
 
 
-def _compose_getter(get, name: str):
-    """element-lambda composition for F.transform; NOT default-arg lambdas:
-    any 2-param lambda (defaults included) is taken as transform's
-    (value, index) form."""
-    return lambda x: get(x).getField(name)
-
-
-def _present_getter(get):
-    return lambda x: get(x).isNotNull()
-
-
-def _fn_getter(get, fn):
-    return lambda x: fn(get(x))
-
-
-def _transform_getter(get, inner):
-    """x -> transform(get(x), inner): wraps an element-level getter one
-    array level up (parallel leaf arrays, the ORC list-of-struct model)."""
-    return lambda x: F.transform(get(x), inner)
-
-
-def _ident(x):
-    return x
-
-
-def _nonnull(x):
-    return x.isNotNull()
-
-
-def _needs_decompose(dtype) -> bool:
-    """True when an array's ELEMENT type contains a struct/map anywhere —
-    such arrays flatten to parallel leaves; pure scalar chains stay one
-    leaf (recursive ``list:`` kinds, cheaper)."""
-    if isinstance(dtype, (T.StructType, T.MapType)):
-        return True
-    if isinstance(dtype, T.ArrayType):
-        return _needs_decompose(dtype.elementType)
-    return False
-
-
-def _leaf_exprs(rel: str, get, dtype) -> list:
-    """(leaf name, Column->Column getter) pairs for a value of ``dtype``
-    reached by ``get`` — UNIFORM recursion over struct / map /
-    array<struct> / array<map> at ANY nesting depth:
-
-    - struct: one hidden ``__present__`` boolean leaf per level (ORC gives
-      struct columns exactly one stream — Present) + one leaf per field.
-    - map: parallel keys/values list leaves (ORC's map layout), recursing
-      so map<k, struct<...>> rides the array<struct> machinery.
-    - array<struct>: an element-present ``__elems__`` leaf + one parallel
-      leaf ARRAY per element leaf, each getter wrapped in F.transform —
-      composition makes array<struct<v: array<struct<...>>>> work at any
-      depth (leaves come out as array<array<...>> — recursive list: kinds).
-    - array<map>: an ``__elems__`` element-present leaf + per-element
-      keys/values leaves.
-    Only a struct/map under two CONSECUTIVE array levels raises."""
-    if isinstance(dtype, T.StructType):
-        out = [(f"{rel}{_STRUCT_SEP}__present__", _present_getter(get))]
-        for sub in dtype.fields:
-            out.extend(_leaf_exprs(f"{rel}{_STRUCT_SEP}{sub.name}",
-                                   _compose_getter(get, sub.name),
-                                   sub.dataType))
-        return out
-    if isinstance(dtype, T.MapType):
-        return (_leaf_exprs(f"{rel}{_STRUCT_SEP}{_MAP_KEYS}",
-                            _fn_getter(get, F.map_keys),
-                            T.ArrayType(dtype.keyType, False))
-                + _leaf_exprs(f"{rel}{_STRUCT_SEP}{_MAP_VALS}",
-                              _fn_getter(get, F.map_values),
-                              T.ArrayType(dtype.valueType,
-                                          dtype.valueContainsNull)))
-    if isinstance(dtype, T.ArrayType):
-        et = dtype.elementType
-        if isinstance(et, T.StructType):
-            out = [(f"{rel}{_STRUCT_SEP}{_ELEMS}",
-                    _transform_getter(get, _nonnull))]
-            for sub in et.fields:
-                for nm, fn in _leaf_exprs(f"{rel}{_STRUCT_SEP}{sub.name}",
-                                          _compose_getter(_ident, sub.name),
-                                          sub.dataType):
-                    out.append((nm, _transform_getter(get, fn)))
-            return out
-        if isinstance(et, T.MapType):
-            # element-context recursion (same shape as array<struct>): the
-            # per-element keys/values arrays are fields of the ELEMENT,
-            # each leaf wrapped once more by the enclosing transform
-            out = [(f"{rel}{_STRUCT_SEP}{_ELEMS}",
-                    _transform_getter(get, _nonnull))]
-            for nm, fn in (_leaf_exprs(f"{rel}{_STRUCT_SEP}{_MAP_KEYS}",
-                                       _fn_getter(_ident, F.map_keys),
-                                       T.ArrayType(et.keyType, False))
-                           + _leaf_exprs(f"{rel}{_STRUCT_SEP}{_MAP_VALS}",
-                                         _fn_getter(_ident, F.map_values),
-                                         T.ArrayType(et.valueType,
-                                                     et.valueContainsNull))):
-                out.append((nm, _transform_getter(get, fn)))
-            return out
-        if isinstance(et, T.ArrayType) and _needs_decompose(et):
-            # array directly inside an array, with structs/maps below:
-            # an anonymous __item__ segment names the inner level, the
-            # __elems__ leaf preserves null inner arrays
-            out = [(f"{rel}{_STRUCT_SEP}{_ELEMS}",
-                    _transform_getter(get, _nonnull))]
-            for nm, fn in _leaf_exprs(f"{rel}{_STRUCT_SEP}{_ITEM}",
-                                      _ident, et):
-                out.append((nm, _transform_getter(get, fn)))
-            return out
-    return [(rel, get)]
-
-
-def _flatten_exprs(prefix: str, col, dtype) -> list:
-    """(name, Column) leaf pairs for one top-level field."""
-    return [(name, fn(col)) for name, fn in _leaf_exprs(prefix, _ident,
-                                                        dtype)]
-
-
 _RESERVED_SEGMENTS = frozenset(
-    {"__present__", _ELEMS, _ITEM, _MAP_KEYS, _MAP_VALS})
+    {_PRESENT, _ELEMS, _ITEM, _MAP_KEYS, _MAP_VALS})
 
 
 def _check_field_names(prefix: str, dtype) -> None:
@@ -327,161 +207,123 @@ def _check_field_names(prefix: str, dtype) -> None:
 
 
 def _nested(dtype) -> bool:
-    """True when a column of ``dtype`` is stored as several leaves."""
-    return (isinstance(dtype, (T.StructType, T.MapType))
-            or (isinstance(dtype, T.ArrayType) and _needs_decompose(dtype)))
-
-
-def _flatten_struct_cols(df: DataFrame) -> DataFrame:
-    """Struct/map columns -> leaf columns, the ORC model: structs own no
-    data streams, only their leaves do (the reference's Kind::Struct,
-    src/proto.rs:195, is subtype plumbing); maps (Kind::Map,
-    src/proto.rs:193) become parallel keys/values list leaves, exactly
-    ORC's map layout. Arbitrary struct nesting depth; leaf columns
-    round-trip through the codecs like any other column and decode
-    reassembles from the schema."""
-    if not any(_nested(f.dataType) for f in df.schema.fields):
-        return df
-    cols = []
-    for f in df.schema.fields:
-        if _nested(f.dataType):
-            _check_field_names(f.name, f.dataType)
-        for name, expr in _flatten_exprs(f.name, F.col(f.name), f.dataType):
-            cols.append(expr.alias(name))
-    return df.select(cols)
-
-
-def _leaf_fields(prefix: str, dtype, wrap: int = 0) -> list[T.StructField]:
-    """Flat-leaf StructFields mirroring :func:`_leaf_exprs`: ``wrap`` is
-    the number of enclosing array levels — every leaf type comes out
-    wrapped in that many ArrayTypes (the parallel leaf-array model)."""
-    def W(t):
-        for _ in range(wrap):
-            t = T.ArrayType(t)
-        return t
-
-    if isinstance(dtype, T.StructType):
-        out = [T.StructField(f"{prefix}{_STRUCT_SEP}__present__",
-                             W(T.BooleanType()))]
-        for sub in dtype.fields:
-            out.extend(_leaf_fields(f"{prefix}{_STRUCT_SEP}{sub.name}",
-                                    sub.dataType, wrap))
-        return out
-    if isinstance(dtype, T.MapType):
-        return (_leaf_fields(f"{prefix}{_STRUCT_SEP}{_MAP_KEYS}",
-                             T.ArrayType(dtype.keyType, False), wrap)
-                + _leaf_fields(f"{prefix}{_STRUCT_SEP}{_MAP_VALS}",
-                               T.ArrayType(dtype.valueType,
-                                           dtype.valueContainsNull), wrap))
+    """True when a column of ``dtype`` is stored as several leaves: a
+    struct, a map, or an array holding one at any depth. A chain of arrays
+    of a scalar stays one leaf (the recursive ``list:`` kinds)."""
     if isinstance(dtype, T.ArrayType):
-        et = dtype.elementType
-        if isinstance(et, T.StructType):
-            out = [T.StructField(f"{prefix}{_STRUCT_SEP}{_ELEMS}",
-                                 W(T.ArrayType(T.BooleanType())))]
-            for sub in et.fields:
-                out.extend(_leaf_fields(f"{prefix}{_STRUCT_SEP}{sub.name}",
-                                        sub.dataType, wrap + 1))
-            return out
-        if isinstance(et, T.MapType):
-            out = [T.StructField(f"{prefix}{_STRUCT_SEP}{_ELEMS}",
-                                 W(T.ArrayType(T.BooleanType())))]
-            out.extend(_leaf_fields(
-                f"{prefix}{_STRUCT_SEP}{_MAP_KEYS}",
-                T.ArrayType(et.keyType, False), wrap + 1))
-            out.extend(_leaf_fields(
-                f"{prefix}{_STRUCT_SEP}{_MAP_VALS}",
-                T.ArrayType(et.valueType,
-                            et.valueContainsNull), wrap + 1))
-            return out
-        if isinstance(et, T.ArrayType) and _needs_decompose(et):
-            out = [T.StructField(f"{prefix}{_STRUCT_SEP}{_ELEMS}",
-                                 W(T.ArrayType(T.BooleanType())))]
-            out.extend(_leaf_fields(f"{prefix}{_STRUCT_SEP}{_ITEM}",
-                                    et, wrap + 1))
-            return out
-    return [T.StructField(prefix, W(dtype))]
+        return _nested(dtype.elementType)
+    return isinstance(dtype, (T.StructType, T.MapType))
 
 
-def _flat_schema(schema: T.StructType) -> T.StructType:
-    """The columns the decode kernels emit for ``schema``: the leaves of
-    each nested column (see _leaf_fields), each plain column as it is."""
-    return T.StructType([leaf for f in schema.fields for leaf in (
-        _leaf_fields(f.name, f.dataType) if _nested(f.dataType) else [f])])
+def _wrapped(name: str, dtype, arr: pa.Array, wrap: tuple):
+    """(StructField, array) of a leaf whose values at its own level are
+    ``arr``, wrapped in the enclosing list levels ``wrap``."""
+    for offsets, nulls in reversed(wrap):
+        dtype = T.ArrayType(dtype)
+        arr = pa.ListArray.from_arrays(offsets, arr, mask=nulls)
+    return T.StructField(name, dtype), arr
 
 
-def _mk_value(acc, rel: str, dtype):
-    """Rebuild the value of ``dtype`` at leaf-path ``rel`` from flat leaf
-    columns, via ``acc``: leaf name -> Column AT THE CURRENT NESTING LEVEL
-    (F.col at the top; the arrays_zip element inside each transform).
-    Exact inverse of :func:`_leaf_exprs`, same uniform recursion."""
+def _leaves(name: str, dtype, arr: pa.Array, wrap: tuple = (),
+            present: str = _PRESENT):
+    """(StructField, Arrow array) of each stripe column of the nested
+    column ``name``, of Spark type ``dtype`` and values ``arr``: the ORC
+    model, where a struct owns only a Present stream and its children
+    follow it (the reference's Kind::Struct, src/proto.rs:195). ONE
+    recursion at any depth:
+
+    - struct: a boolean ``__present__`` leaf, then each field's leaves,
+      null where the struct is (``flatten`` merges the parent validity);
+    - map: parallel keys / values list leaves, null where the map is
+      (ORC's map layout, Kind::Map, src/proto.rs:193);
+    - array whose element holds a struct or map: an element-present
+      ``__elems__`` leaf, then the element's leaves (an inner array under
+      an anonymous ``__item__`` segment) one list level down.
+
+    ``wrap`` holds the enclosing list levels, outermost first, as
+    (offsets, null mask) pairs; every leaf comes out wrapped in them (a
+    leaf type ``array<...>`` per level, the recursive ``list:`` kinds).
+    Offsets index the unsliced child arrays, so a sliced ``arr`` works.
+    ``present`` names a struct's present leaf: an array's struct element
+    has ``__elems__`` for it. Any other type is one leaf."""
+    sep = name + _STRUCT_SEP
     if isinstance(dtype, T.StructType):
-        parts = [_mk_value(acc, f"{rel}{_STRUCT_SEP}{s.name}", s.dataType)
-                 .alias(s.name) for s in dtype.fields]
-        return F.when(acc(f"{rel}{_STRUCT_SEP}__present__"),
-                      F.struct(*parts))
+        yield _wrapped(sep + present, T.BooleanType(), arr.is_valid(), wrap)
+        for sub, child in zip(dtype.fields, arr.flatten()):
+            yield from _leaves(sep + sub.name, sub.dataType, child, wrap)
+    elif isinstance(dtype, T.MapType):
+        for seg, t, values in (
+                (_MAP_KEYS, T.ArrayType(dtype.keyType, False), arr.keys),
+                (_MAP_VALS, T.ArrayType(dtype.valueType,
+                                        dtype.valueContainsNull), arr.items)):
+            yield from _leaves(sep + seg, t, pa.ListArray.from_arrays(
+                arr.offsets, values, mask=arr.is_null()), wrap)
+    elif _nested(dtype):  # an array holding a struct or map
+        et, wrap = dtype.elementType, (*wrap, (arr.offsets, arr.is_null()))
+        # a struct element's own present leaf is the __elems__ leaf
+        if not isinstance(et, T.StructType):
+            yield _wrapped(sep + _ELEMS, T.BooleanType(),
+                           arr.values.is_valid(), wrap)
+        yield from _leaves(sep + _ITEM if isinstance(et, T.ArrayType)
+                           else name, et, arr.values, wrap, _ELEMS)
+    else:
+        yield _wrapped(name, dtype, arr, wrap)
+
+
+def _leaf_columns(schema: T.StructType, tbl: pa.Table | None = None) -> list:
+    """(StructField, Arrow column) of every stripe column of ``tbl``'s
+    ``schema`` columns: each nested column's leaves (see _leaves), each
+    plain column as it is. Without ``tbl``, of an empty table: the leaf
+    layout alone."""
+    if tbl is None:
+        tbl = _arrow_schema(schema).empty_table()
+    return [leaf for f in schema.fields for leaf in (
+        _leaves(f.name, f.dataType, tbl[f.name].combine_chunks())
+        if _nested(f.dataType) else [(f, tbl[f.name])])]
+
+
+def _kinds(leaves: list) -> dict[str, str]:
+    """Stripe column -> engine kind, for _leaf_columns' (field, column)
+    pairs; raises ValueError on a type the engine cannot encode."""
+    return {f.name: stripe_mod.spark_kind(f.dataType.simpleString())
+            for f, _ in leaves}
+
+
+def _renest(name: str, dtype, atype: pa.DataType, leaf,
+            present: str = _PRESENT) -> pa.Array:
+    """The nested column ``name`` of Spark type ``dtype`` as an Arrow array
+    of type ``atype``, rebuilt from its decoded leaves: the inverse of
+    _leaves. ``leaf(name)`` is a leaf's array at the current list level.
+    Decoded lists are compact (a null slot spans no values, offsets start
+    at 0), so every leaf under a list level shares its offsets and the
+    level's values are each leaf's ``.values``."""
+    sep = name + _STRUCT_SEP
+    if isinstance(dtype, T.StructType):
+        return pa.StructArray.from_arrays(
+            [_renest(sep + s.name, s.dataType, f.type, leaf)
+             for s, f in zip(dtype.fields, atype)],
+            fields=list(atype), mask=pc.invert(leaf(sep + present)))
     if isinstance(dtype, T.MapType):
-        return F.map_from_arrays(
-            _mk_value(acc, f"{rel}{_STRUCT_SEP}{_MAP_KEYS}",
-                      T.ArrayType(dtype.keyType, False)),
-            _mk_value(acc, f"{rel}{_STRUCT_SEP}{_MAP_VALS}",
-                      T.ArrayType(dtype.valueType,
-                                  dtype.valueContainsNull)))
-    if isinstance(dtype, T.ArrayType):
-        et = dtype.elementType
-        elems_name = f"{rel}{_STRUCT_SEP}{_ELEMS}"
-        if isinstance(et, T.StructType):
-            names = [f.name for sub in et.fields
-                     for f in _leaf_fields(f"{rel}{_STRUCT_SEP}{sub.name}",
-                                           sub.dataType, 0)]
-            zipped = F.arrays_zip(
-                acc(elems_name).alias(elems_name),
-                *[acc(nm).alias(nm) for nm in names])
-
-            def rebuild_elem(e):
-                parts = [_mk_value(lambda nm: e[nm],
-                                   f"{rel}{_STRUCT_SEP}{s.name}", s.dataType)
-                         .alias(s.name) for s in et.fields]
-                return F.when(e[elems_name], F.struct(*parts))
-
-            return F.transform(zipped, rebuild_elem)
-        if isinstance(et, T.MapType):
-            # element-context: zip ALL leaves under the keys/vals subtrees
-            # (they decompose further when key/value types contain
-            # structs/maps) and rebuild each per-element map inside
-            kname = f"{rel}{_STRUCT_SEP}{_MAP_KEYS}"
-            vname = f"{rel}{_STRUCT_SEP}{_MAP_VALS}"
-            kt = T.ArrayType(et.keyType, False)
-            vt = T.ArrayType(et.valueType, et.valueContainsNull)
-            names = [f.name for f in (_leaf_fields(kname, kt, 0)
-                                      + _leaf_fields(vname, vt, 0))]
-            zipped = F.arrays_zip(
-                acc(elems_name).alias(elems_name),
-                *[acc(nm).alias(nm) for nm in names])
-            return F.transform(
-                zipped, lambda e: F.when(
-                    e[elems_name], F.map_from_arrays(
-                        _mk_value(lambda nm: e[nm], kname, kt),
-                        _mk_value(lambda nm: e[nm], vname, vt))))
-        if isinstance(et, T.ArrayType) and _needs_decompose(et):
-            iname = f"{rel}{_STRUCT_SEP}{_ITEM}"
-            names = [f.name for f in _leaf_fields(iname, et, 0)]
-            zipped = F.arrays_zip(
-                acc(elems_name).alias(elems_name),
-                *[acc(nm).alias(nm) for nm in names])
-            return F.transform(
-                zipped, lambda e: F.when(
-                    e[elems_name],
-                    _mk_value(lambda nm: e[nm], iname, et)))
-    return acc(rel)
-
-
-def _rebuild_expr(prefix: str, dtype):
-    return _mk_value(lambda nm: F.col(f"`{nm}`"), prefix, dtype)
-
-
-def _reassemble_structs(df: DataFrame, schema: T.StructType) -> DataFrame:
-    return df.select([_rebuild_expr(f.name, f.dataType).alias(f.name)
-                      for f in schema.fields])
+        keys, items = (
+            _renest(sep + seg, t, pa.list_(f), leaf) for seg, t, f in (
+                (_MAP_KEYS, T.ArrayType(dtype.keyType, False),
+                 atype.key_field),
+                (_MAP_VALS, T.ArrayType(dtype.valueType,
+                                        dtype.valueContainsNull),
+                 atype.item_field)))
+        # a null offset marks a null map: MapArray.from_arrays takes no mask
+        offsets = pa.array(keys.offsets.to_numpy(), mask=np.append(
+            keys.is_null().to_numpy(zero_copy_only=False), False))
+        return pa.MapArray.from_arrays(offsets, keys.values, items.values,
+                                       type=atype)
+    if _nested(dtype):  # an array holding a struct or map
+        et, elems = dtype.elementType, leaf(sep + _ELEMS)
+        values = _renest(sep + _ITEM if isinstance(et, T.ArrayType) else name,
+                         et, atype.value_type, lambda nm: leaf(nm).values,
+                         _ELEMS)
+        return pa.ListArray.from_arrays(elems.offsets, values, type=atype,
+                                        mask=elems.is_null())
+    return leaf(name)
 
 
 def _n_buckets(df: DataFrame, stripe_rows: int) -> int:
@@ -635,18 +477,19 @@ _SORTABLE = (T.NumericType, T.StringType, T.CharType, T.VarcharType,
 def _keyed(df: DataFrame, key_col: str, order_col: str | None,
            sort_keys: list[str] | None, stripe_rows: int,
            n_buckets: int | None
-           ) -> tuple[DataFrame, dict[str, str], list[str]]:
-    """(shuffled frame, column kinds, sort keys) of an encode: ``df`` with
-    struct columns flattened, its ``__bucket`` / ``__salt`` (/ ``__probe``)
+           ) -> tuple[DataFrame, T.StructType, list[str]]:
+    """(shuffled frame, schema of its data columns, sort keys) of an
+    encode: ``df`` with its ``__bucket`` / ``__salt`` (/ ``__probe``)
     columns added in one projection, and ONE explicit shuffle that lands
     each (bucket, salt) group whole in one partition (see _work_partitions
     for why the count is pinned). There is no sort: the encode kernel
-    orders each partition in Arrow (see _stripe_groups). Raises ValueError
-    naming a sort key that is not a column or that Arrow cannot order, on
-    the driver, before any job runs."""
-    flat = _flatten_struct_cols(df)
+    orders each partition in Arrow and flattens nested columns to their
+    leaves (see _stripe_groups). Raises ValueError on the driver, before
+    any job runs, naming a sort key that is not a column or that Arrow
+    cannot order, a nested field name that collides with a leaf name
+    segment, or a type the engine cannot encode."""
     sort_keys = sort_keys or [k for k in (key_col, order_col) if k]
-    types = {f.name: f.dataType for f in [*df.schema, *flat.schema]}
+    types = {f.name: f.dataType for f in df.schema}
     for k in sort_keys:
         if k not in types:
             raise ValueError(f"sort key {k!r} is not a column of the frame")
@@ -654,9 +497,12 @@ def _keyed(df: DataFrame, key_col: str, order_col: str | None,
             raise ValueError(
                 f"sort key {k!r} is {types[k].simpleString()}, which the "
                 "encode kernel cannot order: sort on a scalar column")
-    kinds = column_kinds(flat)
+    for f in df.schema.fields:
+        if _nested(f.dataType):
+            _check_field_names(f.name, f.dataType)
+    _kinds(_leaf_columns(df.schema))
     if n_buckets is None:
-        n_buckets = _n_buckets(flat, stripe_rows)
+        n_buckets = _n_buckets(df, stripe_rows)
     bucket = F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_buckets))
     salt = F.lit(0)
     if order_col:
@@ -672,8 +518,8 @@ def _keyed(df: DataFrame, key_col: str, order_col: str | None,
     keys = [bucket.alias("__bucket"), salt.alias("__salt")]
     p = _work_partitions(df.sparkSession, n_buckets)
     if n_buckets > _BALANCE_MAX_GROUPS:
-        return (flat.select("*", *keys).repartition(p, "__bucket", "__salt"),
-                kinds, sort_keys)
+        return (df.select("*", *keys).repartition(p, "__bucket", "__salt"),
+                df.schema, sort_keys)
     # EXACT round-robin group placement: group (bucket, salt) goes to
     # partition (bucket + salt) mod p via a probe value chosen so Spark's
     # hash partitioner lands it there (see _partition_probes).
@@ -682,11 +528,11 @@ def _keyed(df: DataFrame, key_col: str, order_col: str | None,
     probes = _probe_cache.setdefault(p, _partition_probes(p))
     probe = F.element_at(F.array(*[F.lit(m) for m in probes]),
                          (F.pmod(bucket + salt, F.lit(p)) + 1).cast("int"))
-    return (flat.select("*", *keys, probe.cast("long").alias("__probe"))
-            .repartition(p, "__probe"), kinds, sort_keys)
+    return (df.select("*", *keys, probe.cast("long").alias("__probe"))
+            .repartition(p, "__probe"), df.schema, sort_keys)
 
 
-def _stripe_groups(batches, kinds: dict[str, str], sort_keys: list[str],
+def _stripe_groups(batches, schema: T.StructType, sort_keys: list[str],
                    stripe_prefix: str = "", skip=frozenset(),
                    **encode_kwargs):
     """The stripes of one shuffled encode partition (see _keyed), in
@@ -696,10 +542,11 @@ def _stripe_groups(batches, kinds: dict[str, str], sort_keys: list[str],
     Spark's ascending order — nulls first, NaN after every number (Arrow
     alone would put NaN next to the nulls), -0.0 equal to 0.0 — and each
     group is taken by its slice of the sort indices, so no sorted copy of
-    the whole partition is built. A group whose stripe id is in ``skip``
-    is dropped BEFORE it is encoded. ``encode_kwargs`` (force_codecs,
-    index_rows, bloom_cols) go to encode_stripe_arrow."""
-    import pyarrow.compute as pc
+    the whole partition is built. The ``schema`` columns are encoded, each
+    nested one as its leaves (see _leaf_columns), derived once for the
+    whole partition. A group whose stripe id is in ``skip`` is dropped
+    BEFORE it is encoded. ``encode_kwargs`` (force_codecs, index_rows,
+    bloom_cols) go to encode_stripe_arrow."""
     batches = [b for b in batches if b.num_rows]
     if not batches:
         return
@@ -719,7 +566,9 @@ def _stripe_groups(batches, kinds: dict[str, str], sort_keys: list[str],
     s = tbl["__salt"].take(order).to_numpy()
     change = np.flatnonzero((np.diff(b) != 0) | (np.diff(s) != 0)) + 1
     bounds = np.concatenate(([0], change, [len(b)]))
-    data = tbl.select(list(kinds))
+    leaves = _leaf_columns(schema, tbl)
+    kinds = _kinds(leaves)
+    data = pa.table([col for _, col in leaves], names=list(kinds))
     for lo, hi in zip(bounds[:-1].tolist(), bounds[1:].tolist()):
         sid = f"{stripe_prefix}{int(b[lo]):08d}-{int(s[lo]):06d}"
         if sid in skip:
@@ -749,13 +598,13 @@ def encode_dataframe(df: DataFrame, key_col: str, order_col: str | None = None,
     skipping at decode (see roundtrip's ``stride_range``).
     ``bloom_cols`` get per-stripe distinct-value bloom filters (point-lookup
     stripe pruning on hash-bucketed keys where min/max never prunes).
-    Struct columns are flattened to their leaves (see _flatten_struct_cols).
+    Nested columns are encoded as their leaves (see _leaves).
     """
-    keyed, kinds, sort_keys = _keyed(df, key_col, order_col, sort_keys,
-                                     stripe_rows, n_buckets)
+    keyed, schema, sort_keys = _keyed(df, key_col, order_col, sort_keys,
+                                      stripe_rows, n_buckets)
 
     def encode_partition(batches):
-        return _stripe_groups(batches, kinds, sort_keys,
+        return _stripe_groups(batches, schema, sort_keys,
                               force_codecs=force_codecs,
                               index_rows=index_rows, bloom_cols=bloom_cols)
 
@@ -831,24 +680,34 @@ def _decode_to(schema: T.StructType, columns: list[str] | None,
     ``mapInArrow`` over ``frame(scan_cols)``, the stripe-column rows of
     the scan columns (see _scan_cols): ``runs(batches, scan_cols)`` yields
     a task's (Arrow tables, where, expected stripe ids), which
-    _decode_runs decodes into the flat leaves of ``schema`` (see
-    _flat_schema); nested columns are then rebuilt from them (see
-    _reassemble_structs). The one decode step of roundtrip and
-    decode_job."""
+    _decode_runs decodes into the stripe columns of ``schema`` (see
+    _leaf_columns). The same kernel rebuilds each nested column from its
+    leaves (see _renest), so it emits ``schema``'s Arrow types exactly,
+    nested nullability included, and no projection follows it. The one
+    decode step of roundtrip and decode_job."""
     if columns:
         schema = T.StructType([schema[c] for c in columns])
-    flat = _flat_schema(schema)
-    scan_cols = _scan_cols(flat.names, stride_range)
-    target_schema = _arrow_schema(flat)
+    target = _arrow_schema(schema)
+    leaves = _leaf_columns(schema)
+    names = [f.name for f, _ in leaves]
+    flat = names == schema.names
+    leaf_schema = target if flat else pa.schema(
+        [(f.name, col.type) for f, col in leaves])
+    scan_cols = _scan_cols(names, stride_range)
+
+    def renest(b):
+        return pa.RecordBatch.from_arrays(
+            [_renest(f.name, f.dataType, t.type, b.column)
+             if _nested(f.dataType) else b.column(f.name)
+             for f, t in zip(schema.fields, target)], schema=target)
 
     def decode(batches):
         for tables, where, expect in runs(batches, scan_cols):
-            yield from _decode_runs(tables, flat.names, target_schema,
-                                    stride_range, where, expect)
+            for b in _decode_runs(tables, names, leaf_schema, stride_range,
+                                  where, expect):
+                yield b if flat else renest(b)
 
-    out = frame(scan_cols).mapInArrow(decode, flat)
-    return (out if flat.names == schema.names
-            else _reassemble_structs(out, schema))
+    return frame(scan_cols).mapInArrow(decode, schema)
 
 
 def roundtrip(df: DataFrame, key_col: str, order_col: str | None = None, *,
@@ -1012,7 +871,7 @@ def _encoded_facts(df: DataFrame, out_dir: str, run_id: str, params: dict,
     job, for a table that cannot commit (see _local_root)."""
     _local_root(out_dir)
     key_col, order_col = params["key_col"], params["order_col"]
-    keyed, kinds, sort_keys = _keyed(
+    keyed, schema, sort_keys = _keyed(
         df, key_col, order_col, params.get("sort_keys"),
         params["stripe_rows"], params["n_buckets"])
     index_rows, bloom_cols = params.get("index_rows"), params.get("bloom_cols")
@@ -1027,7 +886,7 @@ def _encoded_facts(df: DataFrame, out_dir: str, run_id: str, params: dict,
                 f"{uuid.uuid4().hex}.parquet")
         writer, by_stripe = None, {}
         try:
-            for b in _stripe_groups(batches, kinds, sort_keys, stripe_prefix,
+            for b in _stripe_groups(batches, schema, sort_keys, stripe_prefix,
                                     done, index_rows=index_rows,
                                     bloom_cols=bloom_cols):
                 if writer is None:
@@ -1212,9 +1071,9 @@ def commit(df: DataFrame, out_dir: str, run_id: str, params: dict, *,
     """Encode ``df`` at the layout ``params`` (see _PARAMS; key_col and
     order_col included) and commit the stripes the lineage lacks; return
     the table's lineage rows after it. The params are recorded on every
-    new lineage row, with ``df``'s schema as the table's schema unless
-    ``params`` carry the recorded one (a compaction). ``stripe_prefix``
-    starts every stripe id (a streaming batch's, a compaction run's).
+    new lineage row, with ``df``'s schema as the table's schema.
+    ``stripe_prefix`` starts every stripe id (a streaming batch's, a
+    compaction run's).
 
     ONE kernel per encode task sorts its partition, drops the stripes the
     log holds before encoding them, and writes the others (see
@@ -1230,7 +1089,7 @@ def commit(df: DataFrame, out_dir: str, run_id: str, params: dict, *,
     different schema (see _check_resume_params). A compaction whose
     victims a concurrent writer tombstoned first raises RuntimeError; its
     bytes stay invisible orphans."""
-    params = {"schema": df.schema.json(), **params}
+    params = {**params, "schema": df.schema.json()}
     log = log if log is not None else _log(out_dir)
     _check_resume_params(log[0], out_dir, params)
     new = _encoded_facts(df, out_dir, run_id, params, _held(log[0]),
@@ -1512,8 +1371,6 @@ def compact_job(spark: SparkSession, out_dir: str) -> dict:
     if not victims:
         return {"run_id": None, "compacted_stripes": 0, "new_stripes": 0}
     run_id = "c" + uuid.uuid4().hex[:11]
-    # the decoded frame's nested fields may be looser than the recorded
-    # schema's (see _decode_to): params keep the recorded one
     df = _decode_files(spark, out_dir, [active[s] for s in victims], schema)
     after = commit(df, out_dir, run_id, params, log=log,
                    stripe_prefix=f"{run_id}-",

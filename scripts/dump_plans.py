@@ -50,7 +50,7 @@ def main() -> None:
               "  `LocalTableScan` of (file, keep-list) rows under `MapInArrow`\n"
               "  — no Exchange, plain or pruned. A nested column is decoded\n"
               "  as its leaves and rebuilt to the schema the table recorded\n"
-              "  in one `Project` above that `MapInArrow`.\n\n")
+              "  inside that `MapInArrow`: no `Project` above it.\n\n")
 
     import tempfile
     with tempfile.TemporaryDirectory() as d:
@@ -64,9 +64,10 @@ def main() -> None:
                                          "conv_id", "turn_idx",
                                          stripe_rows=2000)
         out.write("## encode_dataframe (rich nested tool_calls)\n\n"
-                  "What to look for: the recursive nested flatten is a single\n"
-                  "whole-stage-codegen Project (transform/map_keys/map_values\n"
-                  "leaf expressions) BEFORE the same single Exchange — nesting\n"
+                  "What to look for: the same plan as the flat encode — the\n"
+                  "nested `tool_calls` column crosses the one Exchange whole\n"
+                  "and the encode `MapInArrow` flattens it to its leaves in\n"
+                  "Arrow (pipeline._leaves): no flatten `Project`, and nesting\n"
                   "adds zero shuffles.\n\n```\n" + plan_of(rich) + "\n```\n\n")
 
         # the frame commit (so encode_job) collects: nothing committed
@@ -117,11 +118,11 @@ def main() -> None:
         out.write("## decode_job (nested tool_calls, re-nested to the recorded "
                   "schema)\n\n"
                   "What to look for: the same `LocalTableScan` ->\n"
-                  "`MapInArrow` decoding the flat leaves (`tool_calls·...`),\n"
-                  "then ONE `Project` rebuilding `tool_calls` from them\n"
-                  "(`transform(arrays_zip(...))`) to the schema the lineage\n"
-                  "recorded at encode, as roundtrip rebuilds df.schema: no\n"
-                  "Exchange, no second Python stage.\n\n```\n"
+                  "`MapInArrow` as a flat table, and nothing above it: the\n"
+                  "kernel decodes the leaves (`tool_calls·...`) and rebuilds\n"
+                  "`tool_calls` from them in Arrow (pipeline._renest), emitting\n"
+                  "the schema the lineage recorded at encode exactly, as\n"
+                  "roundtrip emits df.schema: no Exchange, no `Project`.\n\n```\n"
                   + plan_of(nested) + "\n```\n\n")
 
         emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")

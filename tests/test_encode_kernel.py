@@ -165,7 +165,7 @@ def test_resume_encodes_only_missing_groups(spark, df, tmp_path,
     missing groups of a half-committed one, and none of a complete one."""
     out = str(tmp_path / "t")
     n_buckets, stripe_rows = 8, 200
-    keyed, kinds, sort_keys = pipeline._keyed(
+    keyed, schema, sort_keys = pipeline._keyed(
         df, "conv_id", "turn_idx", None, stripe_rows, n_buckets)
     batches = keyed.toArrow().to_batches()
     encoded = []
@@ -180,7 +180,7 @@ def test_resume_encodes_only_missing_groups(spark, df, tmp_path,
     def run(skip):
         encoded.clear()
         ids = [b.column("stripe_id")[0].as_py()
-               for b in pipeline._stripe_groups(batches, kinds, sort_keys,
+               for b in pipeline._stripe_groups(batches, schema, sort_keys,
                                                 skip=skip)]
         assert ids == encoded
         return ids

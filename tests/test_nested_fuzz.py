@@ -4,7 +4,9 @@ Generates random type trees covering every nested composition the engine
 supports (struct/map/array at any depth, struct+map inside array<struct>
 elements, recursive array<array<...>> leaves, temporal/decimal children),
 random data with nulls at EVERY level, and asserts encode→decode equality
-— both schema-driven and schema-free (re-nesting from leaf names alone).
+of rows and schema (nested nullability included) — both in memory
+(roundtrip) and from a persisted table (decode_job, re-nested to the
+schema its lineage recorded).
 
 Deterministic seeds rather than hypothesis: each example spins Spark jobs,
 so shrinking/deadline machinery would dominate runtime; distinct seeds give
@@ -134,12 +136,14 @@ def test_random_nested_schema_roundtrip(spark, seed, tmp_path):  # noqa: F811
     df = spark.createDataFrame(rows, schema=schema)
     exp = {row["id"]: row.asDict(recursive=True) for row in df.collect()}
     dec = pipeline.roundtrip(df, "id", None, sort_keys=["id"], stripe_rows=10)
+    assert dec.schema == df.schema, f"roundtrip schema for {schema}"
     got = {row["id"]: row.asDict(recursive=True) for row in dec.collect()}
-    assert got == exp, f"schema-driven mismatch for {schema}"
-    # schema-free: a persisted table re-nests from its leaf names alone
+    assert got == exp, f"roundtrip mismatch for {schema}"
+    # persisted: decode_job re-nests to the schema the lineage recorded
     out = str(tmp_path / "t")
     pipeline.encode_job(spark, df, out, key_col="id", order_col=None,
                         sort_keys=["id"], stripe_rows=10)
     dec2 = pipeline.decode_job(spark, out)
+    assert dec2.schema == df.schema, f"decode_job schema for {schema}"
     got2 = {row["id"]: row.asDict(recursive=True) for row in dec2.collect()}
-    assert got2 == exp, f"schema-free mismatch for {schema}"
+    assert got2 == exp, f"decode_job mismatch for {schema}"

@@ -16,7 +16,7 @@ def _roundtrip(spark, df, key="id", stripe_rows=64):
 
 def _persisted(spark, df, tmp_path):
     """decode_job of ``df`` encoded to a table: no caller schema, the
-    nested columns re-nest from their persisted leaf names alone."""
+    nested columns re-nest to the schema the lineage recorded."""
     out = str(tmp_path / "t")
     pipeline.encode_job(spark, df, out, key_col="id", order_col=None,
                         sort_keys=["id"], stripe_rows=10)
@@ -159,7 +159,7 @@ def test_deep_struct_nesting_roundtrip(spark):
 
 def test_deep_struct_schema_free_decode(spark, tmp_path):
     """Persisted deep-struct table decodes WITHOUT a caller schema: the
-    `a·b·c` leaf names re-nest from the lineage kinds alone."""
+    `a·b·c` leaves re-nest to the schema the lineage recorded."""
     schema = "id long, a struct<x: bigint, b: struct<y: string>>"
     rows = [(1, {"x": 1, "b": {"y": "q"}}), (2, {"x": 2, "b": None})]
     df = spark.createDataFrame(rows, schema=schema)
@@ -187,7 +187,7 @@ def test_array_of_struct_roundtrip(spark, tmp_path):
     dec = _roundtrip(spark, df, stripe_rows=10)
     got = {r["id"]: r.asDict(recursive=True)["msgs"] for r in dec.collect()}
     assert got == exp
-    # schema-free: leaf names alone re-nest the array<struct>
+    # persisted: re-nested to the recorded schema
     dec2 = _persisted(spark, df, tmp_path)
     got2 = {r["id"]: r.asDict(recursive=True)["msgs"] for r in dec2.collect()}
     assert got2 == exp
@@ -213,7 +213,7 @@ def test_array_of_struct_with_nested_struct_roundtrip(spark, tmp_path):
     dec = _roundtrip(spark, df, stripe_rows=10)
     got = {r["id"]: r.asDict(recursive=True)["tc"] for r in dec.collect()}
     assert got == exp
-    dec2 = _persisted(spark, df, tmp_path)  # schema-free re-nest
+    dec2 = _persisted(spark, df, tmp_path)  # recorded-schema re-nest
     got2 = {r["id"]: r.asDict(recursive=True)["tc"] for r in dec2.collect()}
     assert got2 == exp
 
@@ -254,7 +254,7 @@ def test_nested_list_columns_roundtrip(spark, tmp_path):
     df = spark.createDataFrame(rows, schema=schema)
     exp = {r["id"]: r.asDict(recursive=True) for r in df.collect()}
     for dec in (_roundtrip(spark, df, stripe_rows=10),
-                _persisted(spark, df, tmp_path)):  # schema-free too
+                _persisted(spark, df, tmp_path)):  # persisted too
         got = {r["id"]: r.asDict(recursive=True) for r in dec.collect()}
         assert got == exp
 
@@ -299,15 +299,15 @@ def test_array_of_struct_inside_array_element_roundtrip(spark, tmp_path):
     df = spark.createDataFrame(rows, schema=schema)
     exp = {r["id"]: r.asDict(recursive=True)["a"] for r in df.collect()}
     for dec in (_roundtrip(spark, df, stripe_rows=10),
-                _persisted(spark, df, tmp_path)):  # schema-free too
+                _persisted(spark, df, tmp_path)):  # persisted too
         got = {r["id"]: r.asDict(recursive=True)["a"] for r in dec.collect()}
         assert got == exp
 
 
 def test_array_of_map_roundtrip(spark, tmp_path):
     """array<map<string,bigint>> — per-element keys/values leaves plus the
-    __elems__ marker (disambiguates from a plain map on schema-free
-    re-nest); also nested INSIDE an array<struct> element."""
+    __elems__ element-present leaf (a null map element stays distinct
+    from an empty one); also nested INSIDE an array<struct> element."""
     schema = ("id long, am array<map<string, bigint>>, "
               "tc array<struct<name: string, ms: array<map<string, "
               "string>>>>")
@@ -340,7 +340,7 @@ def test_struct_below_consecutive_arrays_roundtrip(spark, tmp_path):
     df = spark.createDataFrame(rows, schema=schema)
     exp = {r["id"]: r.asDict(recursive=True) for r in df.collect()}
     for dec in (_roundtrip(spark, df, stripe_rows=10),
-                _persisted(spark, df, tmp_path)):  # schema-free too
+                _persisted(spark, df, tmp_path)):  # persisted too
         got = {r["id"]: r.asDict(recursive=True) for r in dec.collect()}
         assert got == exp
 
@@ -364,7 +364,7 @@ def test_array_of_timestamp_and_date_roundtrip(spark, tmp_path):
     df = spark.createDataFrame(rows, schema=schema)
     exp = {r["id"]: r.asDict(recursive=True) for r in df.collect()}
     for dec in (_roundtrip(spark, df, stripe_rows=10),
-                _persisted(spark, df, tmp_path)):  # schema-free too
+                _persisted(spark, df, tmp_path)):  # persisted too
         got = {r["id"]: r.asDict(recursive=True) for r in dec.collect()}
         assert got == exp
 
@@ -376,6 +376,7 @@ def test_rich_transcripts_roundtrip(spark):
     from orc_format_spark import transcripts
     df = transcripts.enrich(transcripts.generate(spark, 40, seed=7))
     dec = pipeline.roundtrip(df, "conv_id", "turn_idx", stripe_rows=256)
+    assert dec.schema == df.schema
 
     def keyed(frame):
         return {(r["conv_id"], r["turn_idx"]): r.asDict(recursive=True)

@@ -279,10 +279,9 @@ def test_clustered_decode_renests_persisted_nested_table(spark, df, tmp_path):
 
     dec = pipeline.decode_job_clustered(spark, out)
     # re-nested to the recorded schema: the encoded types, column and
-    # field order (nested nullability may be looser, as in roundtrip)
+    # field order, nested nullability included
     assert dec.columns == rich.columns
-    assert (dec.schema["tool_calls"].dataType.simpleString()
-            == rich.schema["tool_calls"].dataType.simpleString())
+    assert dec.schema["tool_calls"] == rich.schema["tool_calls"]
 
     def keyed(frame):
         return {(r["conv_id"], r["turn_idx"]): r.asDict(recursive=True)
@@ -300,6 +299,28 @@ def test_clustered_decode_renests_persisted_nested_table(spark, df, tmp_path):
              r.asDict(recursive=True)["tool_calls"]
              for r in pruned.collect()}
     assert got_p == {k: v["tool_calls"] for k, v in exp.items()}
+
+
+def test_reencoding_a_decoded_nested_table_resumes(spark, tmp_path):
+    """A decoded nested table carries the schema its lineage recorded,
+    nested nullability included, so encoding it into the table it came
+    from resumes as a no-op, and the original frame resumes into a table
+    first written from the decoded one."""
+    rich = transcripts.enrich(transcripts.generate(spark, 40, seed=5))
+    t, t2 = str(tmp_path / "t"), str(tmp_path / "t2")
+    pipeline.encode_job(spark, rich, t, stripe_rows=256)
+    before = pipeline._log(t)[0]
+    dec = pipeline.decode_job(spark, t)
+    assert dec.schema == rich.schema
+    again = pipeline.encode_job(spark, dec, t, stripe_rows=256)
+    assert again["resumed"] and pipeline._log(t)[0] == before
+
+    pipeline.encode_job(spark, dec, t2, stripe_rows=256)
+    first = pipeline._log(t2)[0]
+    pipeline.encode_job(spark, rich, t2, stripe_rows=256)
+    assert pipeline._log(t2)[0] == first
+    assert ({r["stripe_id"]: r["checksum"] for r in first}
+            == {r["stripe_id"]: r["checksum"] for r in before})
 
 
 def test_balanced_encode_placement(spark):
