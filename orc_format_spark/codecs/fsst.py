@@ -16,10 +16,23 @@ table, count frequencies of emitted symbols and of adjacent-symbol
 concatenations (≤8 bytes), score gain = freq * len, keep the top 254
 candidates (tie-broken by symbol bytes for determinism).
 
-Vectorization: longest-match lengths/codes are computed for ALL positions
-with numpy (per symbol length L: sliding-window L-gram keys + searchsorted
-against the ≤255 sorted symbol keys). Only the final greedy cursor walk is a
-Python loop, and it advances one *symbol* (avg several bytes) per step.
+Greedy encoding takes the longest symbol at a cursor, emits its code (or
+an escape), and moves the cursor past it. It has two paths, split at
+``_WALK_MIN`` bytes (256 KB, the measured crossover):
+- small inputs (``build_table``'s samples, the selector's 32 KB trial):
+  ``SymbolTable.match_all`` finds the longest match at EVERY position with
+  numpy (per symbol length: a prefix prescreen, then one hashed lookup),
+  and ``_token_starts`` walks the cursor in a Python loop;
+- large inputs: ``_block_walk`` looks symbols up only where tokens start,
+  as the paper's encoder does. One walker per block (about 40 tokens)
+  starts at the block start; all of them advance together, one numpy step
+  per token (``SymbolTable.match_at``). The true path enters each block
+  where the previous block's path leaves it, and greedy paths that share
+  a position coincide from there on, so a block whose walkers did not
+  visit its entry is re-walked from the entry only until it joins a
+  recorded path. Periodic data whose walkers never join falls back to
+  the dense path, window by window.
+Both paths emit the same bytes (pinned by tests).
 """
 
 from __future__ import annotations
@@ -31,23 +44,51 @@ MAX_SYMBOLS = 255  # codes 0..254
 MAX_LEN = 8
 _ITERATIONS = 5
 _SAMPLE = 1 << 15
-# multiply-shift hash multipliers (odd 64-bit constants from the public
-# splitmix64/xxhash/murmur finalizers) tried in order until injective over
-# a length's symbol keys — single-probe exact lookup in match_all
-_HASH_MULTS = (0x9E3779B97F4A7C15, 0xC2B2AE3D27D4EB4F, 0xFF51AFD7ED558CCD,
-               0x2545F4914F6CDD1D, 0xD6E8FEB86659FD93, 0xA24BAED4963EE407,
-               0x9FB21C651E98DF25, 0xB492B66FBE98F273)
+# _greedy_encode walks blocks above this many bytes: below it, the
+# per-step numpy calls of the walk cost more than the dense match + loop
+_WALK_MIN = 1 << 18
+# walk blocks hold about this many tokens: fewer make fewer lockstep steps
+# (one per token of the longest block), more make fewer false starts (each
+# walker's tokens before the true path joins it). The block size follows
+# from the mean match length at _SIZE_PROBES positions, clipped to
+# _BLOCK_RANGE bytes (measured on text, UTF-8, runs and random bytes)
+_BLOCK_TOKENS = 40
+_SIZE_PROBES = 1024
+_BLOCK_RANGE = (64, 512)
+# fix-up rounds before a cascade that is still moving is followed block by
+# block over the recorded paths (text settles in 2-4 rounds; periodic data
+# whose walkers stay out of phase moves one block per round); where no
+# path is recorded, the dense path takes the next _DENSE_WINDOW bytes
+_MAX_ROUNDS = 4
+_DENSE_WINDOW = 1 << 15
+_M64 = (1 << 64) - 1
+_U48 = np.uint64(48)
+_U32 = np.uint64(32)
+_U16 = np.uint64(0xFFFF)
+# per candidate bitmask (bit L-1 for length L): its longest length, the
+# mask with that length's bit cleared, and the lengths that fit in k bytes
+_TOP = np.array([b.bit_length() for b in range(256)], dtype=np.intp)
+_CLEAR = np.array([0xFF] + [0xFF ^ (1 << (L - 1)) for L in range(1, 9)],
+                  dtype=np.uint8)
+_FITS = np.array([(1 << k) - 1 for k in range(MAX_LEN + 1)], dtype=np.uint8)
+# bit shift that turns an 8-byte key into the key of its first L bytes
+_SHIFT = np.array([0] + [8 * (MAX_LEN - L) for L in range(1, 9)],
+                  dtype=np.uint64)
 
-_POW256 = (np.uint64(256) ** np.arange(7, -1, -1, dtype=np.uint64))
 
-
-def _gram_keys(data: np.ndarray, L: int) -> np.ndarray:
-    """u64 big-endian keys of all L-grams of ``data`` (len n-L+1)."""
-    n = len(data)
-    if n < L:
-        return np.zeros(0, dtype=np.uint64)
-    sw = np.lib.stride_tricks.sliding_window_view(data, L).astype(np.uint64)
-    return sw @ _POW256[-L:]
+def _multipliers():
+    """Multiply-shift hash multipliers, tried in turn until one gives a
+    length's symbol keys distinct slots: 2**48 first (the identity on keys
+    below 2**16, so on every 1- and 2-byte key), then a splitmix64 stream
+    (odd). With <=255 keys in 65,536 slots a random multiplier works more
+    often than not."""
+    yield 1 << 48
+    x = 0
+    while True:
+        x = (x + 0x9E3779B97F4A7C15) & _M64
+        z = ((x ^ (x >> 30)) * 0xBF58476D1CE4E5B9) & _M64
+        z = ((z ^ (z >> 27)) * 0x94D049BB133111EB) & _M64
+        yield (z ^ (z >> 31)) | 1
 
 
 class _GramKeys:
@@ -66,95 +107,53 @@ class _GramKeys:
         self._key8 = np.lib.stride_tricks.as_strided(
             base, shape=(n,), strides=(1,))
 
-    def keys(self, L: int) -> np.ndarray:
-        """Keys of all n-L+1 L-grams (positions where the gram fits)."""
-        m = max(self.n - L + 1, 0)
-        return (self._key8[:m].astype(np.uint64)
-                >> np.uint64((8 - L) * 8))
-
-
-def _sym_key(sym: bytes) -> int:
-    k = 0
-    for b in sym:
-        k = (k << 8) | b
-    return k
-
 
 class SymbolTable:
-    """Up to 255 symbols of 1..8 bytes, with match tables per length."""
+    """Up to 255 symbols of 1..8 bytes, with one exact lookup per length.
+
+    Row L-1 of ``_slot_codes`` is a 65,536-slot table of the length-L
+    symbols at slot ``(key * _mult[L]) >> 48``, the multiplier chosen so
+    that this length's keys get distinct slots. A slot holds code + 1
+    (0 = empty); a gram hits if ``_code_keys[code + 1]`` is its key.
+
+    Two prescreens hold bit L-1 for length L: ``_first2`` over a
+    position's 2 leading bytes (bit 0 over every second byte of a 1-byte
+    symbol) and ``_mid2`` over its bytes 2-3 (lengths >= 4 only; the bits
+    of lengths 1-3 are always set). A true length-L match passes both, so
+    they filter only."""
 
     def __init__(self, symbols: list[bytes]):
         assert len(symbols) <= MAX_SYMBOLS
         self.symbols = symbols
-        # per length: sorted key array + code array (for searchsorted)
-        self._by_len: dict[int, tuple[np.ndarray, np.ndarray]] = {}
-        self._lookup: dict[int, tuple] = {}
-        for L in range(1, MAX_LEN + 1):
-            pairs = [(_sym_key(s), c) for c, s in enumerate(symbols) if len(s) == L]
-            if pairs:
-                pairs.sort()
-                keys = np.array([p[0] for p in pairs], dtype=np.uint64)
-                codes = np.array([p[1] for p in pairs], dtype=np.int64)
-                # prefix pre-screen before searchsorted: 2-byte LUT for
-                # L>=2 (<=255 symbols -> <=255 hot entries of 65536, so the
-                # candidate set shrinks ~100x vs a first-byte screen on
-                # text), 1-byte LUT for L=1. Filtering only — the match set
-                # and therefore the encoded bytes are unchanged.
-                if L >= 2:
-                    lut = np.zeros(65536, dtype=bool)
-                    lut[(keys >> np.uint64((L - 2) * 8)).astype(np.int64)] = True
-                else:
-                    lut = np.zeros(256, dtype=bool)
-                    lut[keys.astype(np.int64)] = True
-                self._by_len[L] = (keys, codes, lut)
-                # exact O(1) lookup replacing searchsorted in match_all —
-                # the match SET is unchanged, only the mechanism:
-                # L<=2: dense table over the gram space; L>=3: single-probe
-                # hash (multiply-shift, multiplier retried until injective
-                # over this length's keys; empty slots carry code -1, so a
-                # gram colliding with the zero-filled key array still
-                # misses). Falls back to searchsorted if no multiplier
-                # works (probability ~1e-7 at 255 keys).
-                if L <= 2:
-                    dlut = np.full(1 << (8 * L), -1, dtype=np.int16)
-                    dlut[keys.astype(np.int64)] = codes.astype(np.int16)
-                    self._lookup[L] = ("direct", dlut)
-                else:
-                    for mult in _HASH_MULTS:
-                        with np.errstate(over="ignore"):
-                            slots = ((keys * np.uint64(mult))
-                                     >> np.uint64(48)).astype(np.int64)
-                        if len(np.unique(slots)) == len(keys):
-                            hkeys = np.zeros(65536, dtype=np.uint64)
-                            hcodes = np.full(65536, -1, dtype=np.int16)
-                            hkeys[slots] = keys
-                            hcodes[slots] = codes.astype(np.int16)
-                            self._lookup[L] = ("hash", hkeys, hcodes,
-                                               np.uint64(mult))
-                            break
-                    else:
-                        self._lookup[L] = ("sorted",)
-        # combined prescreen: ONE uint8 bitmask LUT over 2-byte prefixes,
-        # bit (L-2) set iff some length-L symbol starts with those 2 bytes —
-        # match_all then pays a single O(n) gather instead of one per length
-        self._lut2 = np.zeros(65536, dtype=np.uint8)
-        for L, (keys, _, _) in self._by_len.items():
-            if L >= 2:
-                pref = (keys >> np.uint64((L - 2) * 8)).astype(np.int64)
-                self._lut2[pref] |= np.uint8(1 << (L - 2))
-        # second-stage prescreen for L>=4: bit (L-4) over symbol BYTES 2-3.
-        # On text the first-2-bytes screen is weak for long symbols (common
-        # bigrams start many length-8 symbols — measured 1.25M of 1.3M
-        # positions passing), so requiring bytes 2-3 to also start some
-        # symbol tail shrinks the candidate gather ~10x. Filtering only:
-        # a true length-L match at i necessarily has bytes i+2..i+3 equal
-        # to the symbol's bytes 2-3, so no match is ever screened out.
-        self._lut2b = np.zeros(65536, dtype=np.uint8)
-        for L, (keys, _, _) in self._by_len.items():
+        keys = [int.from_bytes(s, "big") for s in symbols]  # big-endian
+        self._code_keys = np.array([0] + keys, dtype=np.uint64)
+        self._slot_codes = np.zeros((MAX_LEN, 1 << 16), dtype=np.uint8)
+        self._mult = np.zeros(MAX_LEN + 1, dtype=np.uint64)
+        self._first2 = np.zeros(1 << 16, dtype=np.uint8)
+        self._mid2 = np.full(1 << 16, 0b111, dtype=np.uint8)
+        by_len: dict[int, dict[int, int]] = {}
+        for c, (s, k) in enumerate(zip(symbols, keys)):
+            by_len.setdefault(len(s), {}).setdefault(k, c)  # repeats: first
+        for L, key_codes in by_len.items():
+            keys = np.array(list(key_codes), dtype=np.uint64)
+            for mult in _multipliers():
+                with np.errstate(over="ignore"):
+                    slots = ((keys * np.uint64(mult)) >> _U48).astype(np.intp)
+                if len(np.unique(slots)) == len(keys):
+                    break
+            self._mult[L] = mult
+            self._slot_codes[L - 1, slots] = [c + 1
+                                              for c in key_codes.values()]
+            bit = np.uint8(1 << (L - 1))
+            if L == 1:
+                self._first2.reshape(256, 256)[keys.astype(np.intp)] |= bit
+            else:
+                self._first2[(keys >> np.uint64(8 * (L - 2)))
+                             .astype(np.intp)] |= bit
             if L >= 4:
-                mid = ((keys >> np.uint64((L - 4) * 8))
-                       & np.uint64(0xFFFF)).astype(np.int64)
-                self._lut2b[mid] |= np.uint8(1 << (L - 4))
+                self._mid2[((keys >> np.uint64(8 * (L - 4))) & _U16)
+                           .astype(np.intp)] |= bit
+        self._lens = sorted(by_len, reverse=True)
 
     def serialize(self) -> bytes:
         out = bytearray([len(self.symbols)])
@@ -175,169 +174,284 @@ class SymbolTable:
             pos += ln
         return cls(symbols), pos
 
+    def _lookup(self, L, grams: np.ndarray) -> np.ndarray:
+        """Code + 1 of each of ``grams`` (keys of length ``L``, a scalar or
+        one per gram); 0 where no symbol matches."""
+        if np.ndim(L) == 0 and L <= 2:  # the identity slot: no key check
+            return self._slot_codes[L - 1, grams.astype(np.intp)]
+        with np.errstate(over="ignore"):
+            slot = ((grams * self._mult[L]) >> _U48).astype(np.intp)
+        slot += (L - 1) << 16
+        code = self._slot_codes.reshape(-1)[slot]
+        code[self._code_keys[code] != grams] = 0  # empty slots stay 0
+        return code
+
     def match_all(self, data: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
         """Longest-match (length, code) at every position; len 0 = no match.
 
-        Bandwidth-lean: one rolling key build, then ONE reused buffer shifted
-        in place per length (descending), int8/uint8 result arrays — the
-        kernels stay ALU-bound so they scale across many workers."""
+        Dense: one prescreen gather over every position, then per length
+        (longest first) a lookup at the positions that pass and no longer
+        match claimed."""
         n = len(data)
         best_len = np.zeros(n, dtype=np.int8)
         best_code = np.zeros(n, dtype=np.uint8)
-        if not self._by_len:
+        if not self._lens:
             return best_len, best_code
-        g = _GramKeys(data)._key8  # unshifted; shifted per-candidate below
-        lens_desc = sorted(self._by_len, reverse=True)
-        masks = masks_b = None
-        if any(L >= 2 for L in lens_desc):
-            # 2-byte keys of every position (big-endian), built once, then
-            # ONE bitmask gather covering every length's prescreen
-            d16 = data.astype(np.uint16)
-            data2 = np.empty(max(n - 1, 0), dtype=np.intp)
-            if n > 1:
-                np.left_shift(d16[:-1], 8, out=data2[:], casting="unsafe")
-                data2 |= d16[1:]
-            masks = self._lut2[data2]
-            if any(L >= 4 for L in lens_desc) and n > 3:
-                # bytes 2-3 screen: the same 2-byte key array shifted by 2
-                masks_b = self._lut2b[data2[2:]]
-        for L in lens_desc:  # longest first
-            keys, codes, lut = self._by_len[L]
+        keys = _GramKeys(data)
+        pad = keys._pad
+        # 2-byte big-endian key of every position, over the zero pad
+        two = pad[:n + 2].astype(np.intp)
+        two <<= 8
+        two |= pad[1:n + 3]
+        cand = self._first2[two[:n]] & self._mid2[two[2:]]
+        for L in self._lens:  # longest first
             m = n - L + 1
-            # pre-screen: position can only match if its leading bytes start
-            # some length-L symbol AND no longer match claimed it
-            if L >= 2:
-                cand = (masks[:m] & np.uint8(1 << (L - 2))).astype(bool)
-                if L >= 4 and masks_b is not None:
-                    cand &= (masks_b[:m]
-                             & np.uint8(1 << (L - 4))).astype(bool)
-            else:
-                cand = lut[data[:m]]
-            if L < 8:
-                cand &= best_len[:m] == 0
-            pos = np.flatnonzero(cand)
+            if m <= 0:
+                continue
+            c = (cand[:m] & np.uint8(1 << (L - 1))).astype(bool)
+            if L < MAX_LEN:
+                c &= best_len[:m] == 0
+            pos = np.flatnonzero(c)
             if len(pos) == 0:
                 continue
             # gather-then-convert: only candidate positions pay the
             # unaligned BE load + byteswap
-            grams = g[pos].astype(np.uint64) >> np.uint64((8 - L) * 8)
-            lk = self._lookup[L]
-            if lk[0] == "direct":
-                c = lk[1][grams.astype(np.int64)]
-                hit = c >= 0
-                hit_codes = c[hit]
-            elif lk[0] == "hash":
-                hkeys, hcodes, mult = lk[1], lk[2], lk[3]
-                with np.errstate(over="ignore"):
-                    slot = ((grams * mult) >> np.uint64(48)).astype(np.int64)
-                c = hcodes[slot]
-                hit = (hkeys[slot] == grams) & (c >= 0)
-                hit_codes = c[hit]
-            else:
-                idx = np.searchsorted(keys, grams)
-                np.minimum(idx, len(keys) - 1, out=idx)
-                hit = keys[idx] == grams
-                hit_codes = codes[idx[hit]]
+            code = self._lookup(L, keys._key8[pos].astype(np.uint64)
+                                >> _SHIFT[L])
+            hit = code != 0
             hp = pos[hit]
             best_len[hp] = L
-            best_code[hp] = hit_codes.astype(np.uint8)
+            best_code[hp] = code[hit] - 1
+        return best_len, best_code
+
+    def match_at(self, keys: _GramKeys, pos: np.ndarray
+                 ) -> tuple[np.ndarray, np.ndarray]:
+        """Longest-match (length, code) at the ascending, non-empty
+        positions ``pos`` of the data ``keys`` covers; len 0 = no match.
+
+        Each position looks up its longest prescreened length first; only
+        the positions it misses try their next one, so a position usually
+        pays one lookup."""
+        n = keys.n
+        k8 = keys._key8[pos].astype(np.uint64)
+        cand = (self._first2[(k8 >> _U48).astype(np.intp)]
+                & self._mid2[((k8 >> _U32) & _U16).astype(np.intp)])
+        if pos[-1] > n - MAX_LEN:  # near the end: only lengths that fit
+            cand &= _FITS[np.minimum(n - pos, MAX_LEN)]
+        best_len = np.zeros(len(pos), dtype=np.int8)
+        best_code = np.zeros(len(pos), dtype=np.uint8)
+        idx = np.flatnonzero(cand)
+        k8, cand = k8[idx], cand[idx]
+        while len(idx):
+            L = _TOP[cand]
+            code = self._lookup(L, k8 >> _SHIFT[L])
+            hit = code != 0
+            best_len[idx[hit]] = L[hit]
+            best_code[idx[hit]] = code[hit] - 1
+            cand &= _CLEAR[L]
+            left = np.flatnonzero(~hit & (cand != 0))
+            idx, k8, cand = idx[left], k8[left], cand[left]
         return best_len, best_code
 
 
 def _token_starts(best_len: np.ndarray) -> np.ndarray:
-    """Greedy left-to-right token starts, block-parallelized.
-
-    The scan is sequential in principle (each token's start depends on the
-    previous token's length), but steps are <=8 bytes while blocks are 4096,
-    so a walk always ENTERS the next block (never skips one). That allows a
-    two-phase vectorized scheme, ~5x faster than the one-append-per-token
-    Python loop (90 ms -> ~18 ms on a 1.3 MB stripe blob):
-
-      1. walk all 8 possible entry offsets of every block CONCURRENTLY
-         (one numpy gather per step over a (n_blocks x 8) frontier) to
-         tabulate exit[block, offset] -> entry offset into the next block;
-      2. chain the true entries through the exit table (n_blocks scalar
-         steps), then re-walk every block from its single true entry, all
-         blocks in parallel, marking visited positions in a bool mask.
-
-    flatnonzero of the mask returns the starts in order. Exactness is
-    pinned by tests against the reference loop."""
+    """Greedy left-to-right token starts from every position's longest
+    match: the cursor loop of the dense path (see _dense_tokens).
+    It advances one token (avg several bytes) per step, ~160 ns each."""
     n = len(best_len)
-    if n == 0:
-        return np.zeros(0, dtype=np.int64)
     if not best_len.any():
         # no symbol matches anywhere (e.g. the empty table of build_table's
         # first iteration): every byte is its own token
         return np.arange(n, dtype=np.int64)
-    steps = np.maximum(best_len, 1).astype(np.int64)
-    BLOCK = 4096
-    # the block-parallel walk amortizes only on large inputs: per phase
-    # iteration it pays ~10 numpy ops over the whole frontier, and the
-    # iteration count is the worst block's token count — below ~256 KB the
-    # plain loop's ~160 ns/token wins (measured crossover)
-    if n <= (1 << 18):
-        out = []
-        append = out.append
-        st = steps.tolist()
-        i = 0
-        while i < n:
-            append(i)
-            i += st[i]
-        return np.array(out, dtype=np.int64)
-    # f[i] = next token start after a token at i (clamped into the pad)
-    f = np.arange(n, dtype=np.int64) + steps
-    n_blocks = -(-n // BLOCK)
-    bounds = np.minimum(np.arange(1, n_blocks + 1) * BLOCK, n)
-    # phase 1: from every (block, offset<8) candidate entry, walk to the
-    # block's exit. All walkers advance together; finished ones freeze.
-    cand = (np.arange(n_blocks)[:, None] * BLOCK
-            + np.arange(8)[None, :]).ravel()
-    np.minimum(cand, n - 1, out=cand)
-    cur = cand.copy()
-    bnd = np.repeat(bounds, 8)
-    active = cur < bnd
-    while active.any():
-        nxt = f[cur[active]]
-        cur[active] = nxt
-        active = cur < bnd
-    exits = cur  # (n_blocks*8,) first position >= block bound
-    # phase 2a: chain true entries sequentially (n_blocks scalar steps)
-    entries = np.empty(n_blocks, dtype=np.int64)
-    e = 0
-    ex = exits.reshape(n_blocks, 8)
-    for b in range(n_blocks):
-        entries[b] = e
-        off = e - b * BLOCK
-        e = int(ex[b, off]) if off < 8 else None
-        if off >= 8:  # cannot happen: steps <= 8 < BLOCK
-            raise AssertionError("token step exceeded block overlap")
-    # phase 2b: re-walk every block from its true entry, marking visits
-    is_start = np.zeros(n, dtype=bool)
-    cur = entries.copy()
-    active = cur < bounds
-    while active.any():
-        pos = cur[active]
-        is_start[pos] = True
-        cur[active] = f[pos]
-        active = cur < bounds
-    return np.flatnonzero(is_start).astype(np.int64)
+    out = []
+    append = out.append
+    st = np.maximum(best_len, 1).tolist()
+    i = 0
+    while i < n:
+        append(i)
+        i += st[i]
+    return np.array(out, dtype=np.int64)
+
+
+def _block_walk(data: np.ndarray, table: SymbolTable,
+                block: int | None = None
+                ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Greedy tokens (starts, lengths, codes; length 0 = escape) of
+    ``data``, looking symbols up only at the positions a walk visits.
+
+    1. Walk: one walker per ``block``-byte block starts at the block start
+       and steps token by token until it leaves the block; all walkers
+       advance together, one ``match_at`` per step. Each recorded path is
+       a fact: from any position on it, the greedy path leaves the block
+       where that path left it.
+    2. Fix-up: the true path enters block b where it left block b-1 (block
+       0 at 0). An entry on a recorded path of block b leaves where that
+       path left. Otherwise b is re-walked from its entry until it lands on
+       a recorded path (greedy paths that share a position coincide from
+       there on) or leaves the block, where it may enter block b+1
+       elsewhere: b+1 is fixed up again in the next round. Rounds run
+       vectorized over the blocks whose entry moved. A cascade still
+       moving after ``_MAX_ROUNDS`` (periodic data whose walkers stay out
+       of phase) is followed block by block over the recorded paths, and
+       the dense path takes over where none is recorded.
+    3. The starts are walker b's positions from where the true path joins
+       it, and the true path's positions before that, traced from each
+       block's entry over the recorded matches."""
+    n = len(data)
+    keys = _GramKeys(data)
+    if block is None:
+        ln, _ = table.match_at(keys, np.arange(0, n, -(-n // _SIZE_PROBES)))
+        block = int(np.clip(_BLOCK_TOKENS * np.maximum(ln, 1).mean(),
+                            *_BLOCK_RANGE))
+    n_blocks = -(-n // block)
+    first = np.arange(n_blocks, dtype=np.int64) * block
+    bound = np.minimum(first + block, n)
+    tok_len = np.zeros(n, dtype=np.int8)  # match at every visited position
+    tok_code = np.zeros(n, dtype=np.uint8)
+    # the recorded paths: walker b's positions, and each re-walk's id at
+    # its positions; where each path leaves its block
+    walked = np.zeros(n + MAX_LEN, dtype=bool)
+    path = np.full(n + MAX_LEN, -1, dtype=np.int32)
+    path_exit = np.empty(n_blocks * _MAX_ROUNDS, dtype=np.int64)
+    n_paths = 0
+
+    def leaves(pos):
+        """Where the recorded path through each of ``pos`` leaves its
+        block; -1 where no path is recorded."""
+        on = path[pos]
+        return np.where(walked[pos], walker_exit[pos // block],
+                        np.where(on >= 0, path_exit[on], -1))
+
+    def walk(cur, blk, rewalk):
+        """Walk from ``cur`` (in blocks ``blk``) in lockstep, each walker
+        until it leaves its block or, re-walking, lands on a recorded
+        path. Returns where each one's path leaves its block."""
+        nonlocal n_paths
+        left_at = np.empty(len(cur), dtype=np.int64)
+        idx = np.arange(len(cur))
+        end = bound[blk]
+        while len(cur):
+            ln, code = table.match_at(keys, cur)
+            tok_len[cur] = ln
+            tok_code[cur] = code
+            if rewalk:
+                path[cur] = n_paths + idx
+            else:
+                walked[cur] = True
+            cur = cur + np.maximum(ln, 1)
+            stop = cur >= end
+            if rewalk:
+                joined = ~stop & (walked[cur] | (path[cur] >= 0))
+                stop |= joined
+            if stop.any():
+                at = cur[stop]
+                if rewalk:
+                    j = joined[stop]
+                    at[j] = leaves(at[j])
+                left_at[idx[stop]] = at
+                go = ~stop
+                cur, end, idx = cur[go], end[go], idx[go]
+        if rewalk:
+            path_exit[n_paths:n_paths + len(blk)] = left_at
+            n_paths += len(blk)
+        return left_at
+
+    walker_exit = walk(first, np.arange(n_blocks), False)
+    entry = np.concatenate(([0], walker_exit[:-1]))
+    exit_ = walker_exit.copy()
+    todo = np.arange(1, n_blocks)
+    for _ in range(_MAX_ROUNDS):
+        if not len(todo):
+            break
+        e = entry[todo]
+        new_exit = leaves(e)
+        unknown = new_exit < 0
+        new_exit[unknown] = e[unknown]  # an entry past the end leaves there
+        w = np.flatnonzero(unknown & (e < bound[todo]))
+        if len(w):
+            new_exit[w] = walk(e[w], todo[w], True)
+        moved = new_exit != exit_[todo]
+        exit_[todo] = new_exit
+        todo = todo[moved] + 1
+        todo = todo[todo < n_blocks]
+        entry[todo] = exit_[todo - 1]
+    dense = [first[:0]]
+    if len(todo):
+        b, e = int(todo[0]), int(entry[todo[0]])
+        while b < n_blocks:
+            entry[b] = e
+            if walked[e]:
+                e = int(walker_exit[e // block])
+            elif path[e] >= 0:
+                e = int(path_exit[path[e]])
+            elif e < bound[b]:
+                # nothing recorded here: the dense path over the next
+                # _DENSE_WINDOW bytes (its traces are empty: entry = bound)
+                upto = min(b + max(_DENSE_WINDOW // block, 1), n_blocks)
+                stop = int(bound[upto - 1])
+                s, ln, code = _dense_tokens(data[e:stop + MAX_LEN - 1],
+                                            table)
+                keep = s < stop - e
+                s = s[keep] + e
+                tok_len[s], tok_code[s] = ln[keep], code[keep]
+                dense.append(s)
+                entry[b:upto] = bound[b:upto]
+                e = int(s[-1]) + max(int(tok_len[s[-1]]), 1)
+                b = upto
+                continue
+            b += 1
+    # trace each block's true path from its entry until it joins walker b
+    # or leaves the block; walker b's positions before the join are false
+    blk = np.arange(n_blocks)
+    cur, join_at = entry, bound.copy()
+    traced = dense
+    while len(cur):
+        inside = cur < bound[blk]
+        own = inside & walked[cur]
+        join_at[blk[own]] = cur[own]
+        go = inside & ~own
+        cur, blk = cur[go], blk[go]
+        traced.append(cur)
+        cur = cur + np.maximum(tok_len[cur], 1)
+    lens = join_at - first
+    off = np.cumsum(lens) - lens
+    walked[np.repeat(first - off, lens) + np.arange(int(lens.sum()))] = False
+    walked[np.concatenate(traced)] = True
+    starts = np.flatnonzero(walked[:n])
+    return starts, tok_len[starts], tok_code[starts]
+
+
+def _dense_tokens(data: np.ndarray, table: SymbolTable
+                  ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Greedy tokens (starts, lengths, codes; length 0 = escape) of
+    ``data`` from the longest match at every position and the cursor
+    loop."""
+    best_len, best_code = table.match_all(data)
+    starts = _token_starts(best_len)
+    return starts, best_len[starts], best_code[starts]
+
+
+def _greedy_tokens(data: np.ndarray, table: SymbolTable
+                   ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Greedy tokens of ``data`` under ``table``: dense up to
+    ``_WALK_MIN`` bytes, the block walk above it."""
+    if len(data) > _WALK_MIN:
+        return _block_walk(data, table)
+    return _dense_tokens(data, table)
 
 
 def _greedy_encode(data: np.ndarray, table: SymbolTable) -> np.ndarray:
-    """Emit code stream (escapes expanded) for ``data`` under ``table``.
-    Token resolution: minimal sequential scan; byte emission: vectorized."""
-    n = len(data)
-    if n == 0:
+    """Emit code stream (escapes expanded) for ``data`` under ``table``:
+    tokens from _greedy_tokens, bytes written in one vectorized pass."""
+    if len(data) == 0:
         return np.zeros(0, dtype=np.uint8)
-    best_len, best_code = table.match_all(data)
-    starts = _token_starts(best_len)
-    tok_len = best_len[starts]
+    starts, tok_len, tok_code = _greedy_tokens(data, table)
     is_esc = tok_len == 0
     out_sizes = np.where(is_esc, 2, 1)
     offsets = np.zeros(len(starts), dtype=np.int64)
     np.cumsum(out_sizes[:-1], out=offsets[1:])
     out = np.empty(int(out_sizes.sum()), dtype=np.uint8)
-    out[offsets] = np.where(is_esc, ESCAPE, best_code[starts]).astype(np.uint8)
+    out[offsets] = np.where(is_esc, ESCAPE, tok_code)
     esc_off = offsets[is_esc]
     out[esc_off + 1] = data[starts[is_esc]]
     return out
@@ -345,10 +459,8 @@ def _greedy_encode(data: np.ndarray, table: SymbolTable) -> np.ndarray:
 
 def _emitted_tokens(data: np.ndarray, table: SymbolTable) -> tuple[np.ndarray, np.ndarray]:
     """(starts, lengths) of emitted tokens (symbol match or escape)."""
-    best_len, _ = table.match_all(data)
-    starts = _token_starts(best_len)
-    lens = np.maximum(best_len[starts], 1)
-    return starts, lens
+    starts, tok_len, _ = _greedy_tokens(data, table)
+    return starts, np.maximum(tok_len, 1)
 
 
 def build_table(data: np.ndarray, sample: int = _SAMPLE) -> SymbolTable:

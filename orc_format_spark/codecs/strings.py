@@ -63,8 +63,11 @@ def decode_direct(blob: bytes, lengths: np.ndarray,
     )
 
 
-def encode_dict(values) -> tuple[bytes, np.ndarray, np.ndarray, int]:
-    """Non-null strings -> (sorted dict blob, dict lengths, codes, ndv)."""
+def encode_dict(values, max_ndv: float | None = None
+                ) -> tuple[bytes, np.ndarray, np.ndarray, int]:
+    """Non-null strings -> (sorted dict blob, dict lengths, codes, ndv).
+    Values of more than ``max_ndv`` distinct strings skip the sort and the
+    code remap: (None, None, None, ndv)."""
     arr = _to_arrow(values)
     if arr.null_count:
         arr = arr.drop_null()
@@ -72,6 +75,8 @@ def encode_dict(values) -> tuple[bytes, np.ndarray, np.ndarray, int]:
         return b"", np.zeros(0, dtype=np.uint64), np.zeros(0, dtype=np.uint64), 0
     denc = arr.dictionary_encode()
     dictionary = denc.dictionary
+    if max_ndv is not None and len(dictionary) > max_ndv:
+        return None, None, None, len(dictionary)
     codes = denc.indices.to_numpy(zero_copy_only=False).astype(np.int64)
     # sort the dictionary (UTF-8 byte order == codepoint order)
     perm = pc.sort_indices(dictionary).to_numpy().astype(np.int64)

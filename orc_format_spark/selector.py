@@ -203,9 +203,12 @@ def encode_strings(values, force_codec: str | None = None) -> dict:
     dict_parts = None
     dict_size = float("inf")
     if n and force_codec != "str_direct" and force_codec != "str_fsst":
-        dblob, dlens, codes, ndv = strings.encode_dict(values)
+        # the NDV decides first: a column past DICT_THRESHOLD is not sorted
+        dblob, dlens, codes, ndv = strings.encode_dict(
+            values, None if force_codec == "str_dict"
+            else max(n * DICT_THRESHOLD, 1))
         out["ndv"] = ndv
-        if force_codec == "str_dict" or ndv <= max(n * DICT_THRESHOLD, 1):
+        if dblob is not None:
             dlen_stream = rle_v2.encode(dlens, signed=False)
             code_stream = rle_v2.encode(codes, signed=False)
             dict_parts = (dblob, dlen_stream, code_stream)

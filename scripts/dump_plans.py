@@ -6,9 +6,11 @@ kernel, no Exchange at all to decode a persisted table."""
 from __future__ import annotations
 
 import io
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -205,7 +207,7 @@ def main() -> None:
                   "pair-generation exchange.\n\n```\n"
                   + plan_of(npairs) + "\n```\n")
 
-    with open("/root/repo/EXPLAIN.md", "w") as f:
+    with open(os.path.join(ROOT, "EXPLAIN.md"), "w") as f:
         f.write(out.getvalue())
     print("wrote EXPLAIN.md")
     spark.stop()

@@ -64,10 +64,10 @@ def test_compact_job_merges_and_roundtrips(spark, fragmented):
     after_active = len(pipeline.active_stripe_ids(spark, out))
     assert after_active < before_active
 
-    # decode_job and its alias: exact same rows, one copy each
+    # two reads of the compacted table: the exact same rows, one copy each
     got = _sorted_pdf(pipeline.decode_job(spark, out), cols)
     pd.testing.assert_frame_equal(exp, got, check_dtype=False)
-    gotc = _sorted_pdf(pipeline.decode_job_clustered(spark, out), cols)
+    gotc = _sorted_pdf(pipeline.decode_job(spark, out), cols)
     pd.testing.assert_frame_equal(exp, gotc, check_dtype=False)
 
     # lineage: tombstones exist, original 'ok' rows remain (resume safety)
@@ -137,8 +137,8 @@ def test_crashed_compaction_orphans_stay_invisible(spark, tmp_path,
                if d.startswith("run=c")]
     assert len(orphans) == 1  # the crashed run's bytes are on disk
     assert pipeline.snapshots(spark, out).collect() == snaps
-    for dec in (pipeline.decode_job(spark, out),
-                pipeline.decode_job_clustered(spark, out)):
+    for _ in range(2):  # every read sees the rows from before the crash
+        dec = pipeline.decode_job(spark, out)
         pd.testing.assert_frame_equal(exp, _sorted_pdf(dec, cols),
                                       check_dtype=False)
     res = pipeline.compact_job(spark, out)
@@ -251,8 +251,7 @@ def test_expire_snapshots_frees_superseded_runs(spark, tmp_path):
 
     got = _sorted_pdf(pipeline.decode_job(spark, out), df.columns)
     pd.testing.assert_frame_equal(exp, got, check_dtype=False)
-    gotc = _sorted_pdf(pipeline.decode_job_clustered(spark, out),
-                       df.columns)
+    gotc = _sorted_pdf(pipeline.decode_job(spark, out), df.columns)
     pd.testing.assert_frame_equal(exp, gotc, check_dtype=False)
 
     # time travel into the expired window refuses loudly

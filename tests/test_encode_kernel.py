@@ -9,6 +9,7 @@ from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from orc_format_spark import pipeline, transcripts
 from orc_format_spark import stripe as stripe_mod
@@ -156,6 +157,46 @@ def test_order_value_without_a_salt_raises(spark, kind, bad):
                                         "infinite value"):
         pipeline.roundtrip(frame, "k", "o", stripe_rows=4,
                            n_buckets=8).collect()
+
+
+def _column_api_keys(df, key, order, stripe_rows, n_buckets, p):
+    """The key columns as _keyed built them with Column calls, over
+    backtick-quoted names: the reference its SQL text must reproduce."""
+    k, o = (F.col("`" + c.replace("`", "``") + "`") for c in (key, order))
+    bucket = F.pmod(F.xxhash64(k), F.lit(n_buckets))
+    salt = F.floor(o / F.lit(stripe_rows)).cast("long")
+    probes = pipeline._partition_probes(p)
+    probe = F.element_at(F.array(*[F.lit(m) for m in probes]),
+                         (F.pmod(bucket + salt, F.lit(p)) + 1).cast("int"))
+    return df.select(bucket.alias("__bucket"), salt.alias("__salt"),
+                     probe.cast("long").alias("__probe"))
+
+
+@pytest.mark.parametrize("kind", ["bigint", "double"])
+def test_keyed_quotes_odd_column_names(spark, kind):
+    """Key and order names holding a space, a dot and a backtick: _keyed's
+    SQL text gives the key columns the Column-call values, and a null or
+    infinite order value still fails naming the column."""
+    key, order = "conv id.`k`", "turn. idx`"
+    num = float if kind == "double" else int
+    rows = [(f"c{i % 7}", num(i * 3 - 20)) for i in range(60)]
+    schema = T.StructType([
+        T.StructField(key, T.StringType()),
+        T.StructField(order, T.DoubleType() if kind == "double"
+                      else T.LongType())])
+    frame = spark.createDataFrame(rows, schema)
+    keyed, _, _ = pipeline._keyed(frame, key, order, None, 8, 16)
+    p = pipeline._work_partitions(spark, 16)
+    got = keyed.select("__bucket", "__salt", "__probe")
+    want = _column_api_keys(frame, key, order, 8, 16, p)
+    assert got.schema == want.schema
+    assert sorted(got.collect()) == sorted(want.collect())
+    bads = [None] + ([float("inf"), float("-inf")] if kind == "double" else [])
+    for bad in bads:
+        bad_frame = spark.createDataFrame(rows + [("c1", bad)], schema)
+        with pytest.raises(Exception, match=(
+                "order column 'turn. idx`' holds a null or infinite value")):
+            pipeline._keyed(bad_frame, key, order, None, 8, 16)[0].collect()
 
 
 def test_resume_encodes_only_missing_groups(spark, df, tmp_path,

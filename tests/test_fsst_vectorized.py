@@ -1,9 +1,11 @@
-"""Byte-exactness pins for the round-6 FSST kernel vectorizations.
+"""Byte-exactness pins for the vectorized FSST kernels.
 
 ``build_table`` replaced a per-token Python dict-of-slices gains pass with a
-(key, len) numpy grouping, and ``_token_starts`` replaced the one-append-per-
-token greedy walk with a block-parallel two-phase walk. Both must reproduce
-the reference (loop) implementations EXACTLY — the table defines the encoded
+(key, len) numpy grouping; ``match_all`` finds every position's longest
+match with prescreens and hashed lookups; and inputs above ``_WALK_MIN``
+bytes are tokenized by ``_block_walk``, which looks symbols up only where
+its walkers step. All must reproduce the reference (brute-force / loop)
+implementations EXACTLY — the table and the tokens define the encoded
 bytes, and re-encoding a stripe must keep producing identical bytes for the
 lineage checksum/resume contract.
 """
@@ -103,7 +105,8 @@ def test_token_starts_matches_reference(idx):
 
 
 def test_token_starts_synthetic_step_patterns():
-    """Walks crossing many 4096-byte block boundaries at every offset."""
+    """Random step patterns of 12-24 KB: the cursor loop against the
+    reference."""
     rng = np.random.default_rng(11)
     for trial in range(6):
         n = int(rng.integers(3 * 4096, 6 * 4096))
@@ -191,3 +194,119 @@ def test_build_table_fuzz_nul_heavy_tie_breaks():
         got = fsst.build_table(data)
         want = _reference_build_table(data)
         assert got.symbols == want.symbols, f"trial {trial}"
+
+
+def _reference_tokens(data: np.ndarray, table: fsst.SymbolTable):
+    """Greedy tokens from the dense match and the reference cursor loop."""
+    best_len, best_code = table.match_all(data)
+    starts = _reference_token_starts(best_len)
+    return starts, best_len[starts], best_code[starts]
+
+
+def _assert_walk_exact(data, table, block=None):
+    got = fsst._block_walk(data, table, block)
+    want = _reference_tokens(data, table)
+    for g, w, what in zip(got, want, ("starts", "lengths", "codes")):
+        np.testing.assert_array_equal(g, w, err_msg=what)
+
+
+def _tiled(blob: bytes, size: int = fsst._WALK_MIN + 4099) -> np.ndarray:
+    return np.frombuffer((blob * (size // len(blob) + 1))[:size],
+                         dtype=np.uint8)
+
+
+@pytest.mark.parametrize("idx", range(1, 8))
+def test_block_walk_matches_reference_on_tiled_corpora(idx):
+    """Every non-empty corpus tiled above the walk crossover: the walk
+    and _greedy_encode (which takes it there) against the dense path."""
+    data = _tiled(_corpora()[idx])
+    table = fsst.build_table(data)
+    _assert_walk_exact(data, table)
+    want = bytearray()
+    for s, ln, c in zip(*(a.tolist() for a in _reference_tokens(data, table))):
+        want += bytes([c]) if ln else bytes([fsst.ESCAPE, data[s]])
+    assert fsst._greedy_encode(data, table).tobytes() == bytes(want)
+
+
+def test_block_walk_matches_reference_on_transcript_text():
+    """Bench-shaped text: the transcripts generator's turns, concatenated
+    as a stripe's text column blob."""
+    from orc_format_spark import transcripts
+    texts = transcripts.expected_pandas(40, seed=104)["text"]
+    data = _tiled("".join(texts).encode(), fsst._WALK_MIN + 70001)
+    table = fsst.build_table(data)
+    _assert_walk_exact(data, table)
+    for block in (8, 24, 64):
+        _assert_walk_exact(data[:60000], table, block)
+
+
+def _random_table(rng, alpha, n_sym):
+    syms, seen = [], set()
+    for _ in range(n_sym):
+        s = bytes(alpha[rng.integers(0, len(alpha), int(rng.integers(1, 9)))])
+        if s not in seen:
+            seen.add(s)
+            syms.append(s)
+    return fsst.SymbolTable(syms[:fsst.MAX_SYMBOLS])
+
+
+def test_block_walk_random_tables_tiny_alphabets():
+    """Random tables over tiny alphabets that include 0x00 and 0xFF (zero
+    pad bytes, escape-valued literals, symbols that prefix one another),
+    at tiny block sizes that force re-walks, merges and cascades through
+    many blocks, and at the sized default."""
+    rng = np.random.default_rng(23)
+    alphabets = [np.array([0, 255], dtype=np.uint8),
+                 np.array([0, 1, 255], dtype=np.uint8),
+                 np.array([0, 97, 98, 255], dtype=np.uint8)]
+    for trial in range(24):
+        alpha = alphabets[trial % len(alphabets)]
+        table = _random_table(rng, alpha, int(rng.integers(1, 120)))
+        data = alpha[rng.integers(0, len(alpha), int(rng.integers(1, 5000)))]
+        for block in (8, 9, 16, 40):
+            _assert_walk_exact(data, table, block)
+        _assert_walk_exact(data, table)
+
+
+def test_block_walk_escape_only_and_all_8_byte_matches():
+    rng = np.random.default_rng(31)
+    # no symbol occurs in the data: every byte is an escape
+    data = rng.integers(128, 256, fsst._WALK_MIN + 513).astype(np.uint8)
+    table = fsst.SymbolTable([b"a", b"bc", b"xyz12345"])
+    _assert_walk_exact(data, table)
+    starts, lens, _ = fsst._block_walk(data, table)
+    assert len(starts) == len(data) and not lens.any()
+    # every token is the one 8-byte symbol, the tail a 3-byte remainder
+    sym = b"\x00ab\xffcd\x00e"
+    data = np.frombuffer(sym * 40000 + sym[:3], dtype=np.uint8)
+    table = fsst.SymbolTable([sym, sym[:3], b"\x00"])
+    _assert_walk_exact(data, table)
+    for block in (8, 12, 100):
+        _assert_walk_exact(data[:20003], table, block)
+    _, lens, codes = fsst._block_walk(data, table)
+    assert (lens[:-1] == 8).all() and (codes[:-1] == 0).all()
+    assert lens[-1] == 3 and codes[-1] == 1
+
+
+def test_block_walk_cascades_through_out_of_phase_blocks():
+    """A run of one byte under a 2-byte symbol: a walker that starts one
+    byte out of phase never joins the true path, so each block's exit
+    moves the next block's entry and the fix-up cascades block to block."""
+    data = np.frombuffer(b"x" + b"a" * 6000, dtype=np.uint8)
+    table = fsst.SymbolTable([b"aa", b"x"])
+    for block in (8, 9, 10, 64):
+        _assert_walk_exact(data, table, block)
+
+
+def test_match_at_matches_match_all():
+    rng = np.random.default_rng(41)
+    for trial in range(6):
+        alpha = np.array([0, 1, 2, 255], dtype=np.uint8)
+        table = _random_table(rng, alpha, int(rng.integers(1, 200)))
+        data = alpha[rng.integers(0, len(alpha), 3000)]
+        pos = np.sort(rng.choice(len(data), 700, replace=False))
+        pos[-1] = len(data) - 1  # the tail, where only short lengths fit
+        got = table.match_at(fsst._GramKeys(data), pos)
+        want_len, want_code = table.match_all(data)
+        np.testing.assert_array_equal(got[0], want_len[pos])
+        np.testing.assert_array_equal(got[1], want_code[pos])

@@ -82,7 +82,7 @@ def _stripe_files(out: str) -> int:
 
 
 def test_clustered_decode_runs_one_task_per_file(spark, df, tmp_path):
-    """decode_job_clustered runs min(cores, n_files) decode tasks, none of
+    """decode_job runs min(cores, n_files) decode tasks, none of
     them empty."""
     cores = spark.sparkContext.defaultParallelism
     for name, stripe_rows in (("few", 300), ("many", 50)):
@@ -90,7 +90,7 @@ def test_clustered_decode_runs_one_task_per_file(spark, df, tmp_path):
         pipeline.encode_job(spark, df, out, stripe_rows=stripe_rows)
         n_files = _stripe_files(out)
         assert (n_files < cores) == (name == "few")
-        dec = pipeline.decode_job_clustered(spark, out)
+        dec = pipeline.decode_job(spark, out)
         want = min(cores, n_files)
         assert dec.rdd.getNumPartitions() == want
         assert dec.select(F.spark_partition_id()).distinct().count() == want
@@ -110,7 +110,7 @@ def test_kernels_keep_decoded_partitioning(spark, df, tmp_path):
         return dec.select(F.xxhash64("conv_id", "turn_idx").alias("doc_id"),
                           "text")
 
-    clustered = docs(pipeline.decode_job_clustered(spark, out))
+    clustered = docs(pipeline.decode_job(spark, out))
     assert pipeline._estimate_rows(clustered) is None
     assert dedup.minhash_signatures(clustered).rdd.getNumPartitions() == \
         clustered.rdd.getNumPartitions()
@@ -187,7 +187,7 @@ def test_clustered_decode_dedupes_stripes_repeated_across_files(spark, df, tmp_p
     for rerun in (None, "runC"):
         if rerun:
             pipeline.commit(df, out, rerun, PARAMS)
-        got = pipeline.decode_job_clustered(spark, out)
+        got = pipeline.decode_job(spark, out)
         assert got.count() == df.count()
         got_pd = got.orderBy("conv_id", "turn_idx").toPandas()
         pd.testing.assert_frame_equal(
@@ -277,7 +277,7 @@ def test_clustered_decode_renests_persisted_nested_table(spark, df, tmp_path):
     rich = transcripts.enrich(df)
     pipeline.commit(rich, out, "n1", PARAMS)
 
-    dec = pipeline.decode_job_clustered(spark, out)
+    dec = pipeline.decode_job(spark, out)
     # re-nested to the recorded schema: the encoded types, column and
     # field order, nested nullability included
     assert dec.columns == rich.columns
@@ -292,7 +292,7 @@ def test_clustered_decode_renests_persisted_nested_table(spark, df, tmp_path):
     assert got == exp
 
     # column pruning by the nested TOP-LEVEL name
-    pruned = pipeline.decode_job_clustered(
+    pruned = pipeline.decode_job(
         spark, out, columns=["conv_id", "turn_idx", "tool_calls"])
     assert pruned.columns == ["conv_id", "turn_idx", "tool_calls"]
     got_p = {(r["conv_id"], r["turn_idx"]):
