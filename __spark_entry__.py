@@ -113,8 +113,9 @@ def q_roundtrip_customer(spark, sf_dir):
 
 
 def q_roundtrip_embeddings(spark, sf_dir):
-    """array<float> embeddings through the codec engine (float_list codec:
-    Length stream + flat float Data stream), returned as an
+    """array<float> embeddings through the codec engine (a ``list:float32``
+    column: Length stream + a float32 child column whose codec the selector
+    picks like any flat column's), returned as an
     oracle-comparable (vec_id, pos, val) projection — posexplode makes every
     element's value AND position checkable against DuckDB's unnest.
     float->double casts are exact, so hash equality is bit equality."""
@@ -156,14 +157,15 @@ def q_roundtrip_decimal(spark, sf_dir):
 
 def q_roundtrip_nested(spark, sf_dir):
     """Nested kinds: struct (flattened to leaves + hidden Present, the ORC
-    struct model) and array<string>/array<bigint> (Length + child streams)
+    struct model) and array<string>/array<bigint> (``list:`` columns: a
+    Length stream + an ordinary child column with its own Present stream)
     through the codec engine, projected back to oracle-comparable flats."""
     _pin(spark)
     df = (_read(spark, sf_dir, "documents")
           .select("doc_id",
                   F.struct(F.col("lang"), F.col("source")).alias("meta"),
                   # null ELEMENTS inside the array (every 'the' -> NULL):
-                  # exercises the child Present stream of the list codec
+                  # exercises the list child column's Present stream
                   F.transform(F.split("text", " "),
                               lambda t: F.when(t == "the", None).otherwise(t))
                   .alias("tokens"),

@@ -108,6 +108,20 @@ class _GramKeys:
             base, shape=(n,), strides=(1,))
 
 
+def _parse_header(buf, pos: int = 0) -> tuple[list[bytes], int]:
+    """The symbols of a serialized table at ``pos`` and the offset just
+    past it, with no lookup tables built (all decode needs)."""
+    n = buf[pos]
+    pos += 1
+    lens = list(buf[pos:pos + n])
+    pos += n
+    symbols = []
+    for ln in lens:
+        symbols.append(bytes(buf[pos:pos + ln]))
+        pos += ln
+    return symbols, pos
+
+
 class SymbolTable:
     """Up to 255 symbols of 1..8 bytes, with one exact lookup per length.
 
@@ -164,14 +178,7 @@ class SymbolTable:
 
     @classmethod
     def deserialize(cls, buf, pos: int = 0) -> tuple["SymbolTable", int]:
-        n = buf[pos]
-        pos += 1
-        lens = list(buf[pos:pos + n])
-        pos += n
-        symbols = []
-        for ln in lens:
-            symbols.append(bytes(buf[pos:pos + ln]))
-            pos += ln
+        symbols, pos = _parse_header(buf, pos)
         return cls(symbols), pos
 
     def _lookup(self, L, grams: np.ndarray) -> np.ndarray:
@@ -525,14 +532,14 @@ def encode(blob: bytes) -> bytes:
 
 def decode(buf, out_size: int) -> bytes:
     """Decompress to exactly ``out_size`` bytes (fully vectorized)."""
-    table, pos = SymbolTable.deserialize(buf, 0)
+    symbols, pos = _parse_header(buf, 0)
     codes = np.frombuffer(buf, dtype=np.uint8, offset=pos)
     if out_size == 0:
         return b""
     # build (256, 8) symbol matrix + length vector
     mat = np.zeros((256, MAX_LEN), dtype=np.uint8)
     lens = np.zeros(256, dtype=np.int64)
-    for c, s in enumerate(table.symbols):
+    for c, s in enumerate(symbols):
         mat[c, :len(s)] = np.frombuffer(s, dtype=np.uint8)
         lens[c] = len(s)
     # escapes: code 255 followed by a literal byte. A literal byte may itself

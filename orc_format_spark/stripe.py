@@ -69,11 +69,6 @@ def spark_kind(dtype_str: str) -> str:
         "float": "float32", "double": "float64", "boolean": "bool",
         "string": "string", "timestamp": "timestamp", "timestamp_ntz": "timestamp",
         "date": "date", "binary": "binary",
-        "array<float>": "array_float32", "array<double>": "array_float64",
-        "array<bigint>": "array_int64", "array<int>": "array_int64",
-        "array<string>": "array_string", "array<boolean>": "array_bool",
-        "array<timestamp>": "array_ts", "array<timestamp_ntz>": "array_ts",
-        "array<date>": "array_date",
     }
     if dtype_str in m:
         return m[dtype_str]
@@ -81,8 +76,6 @@ def spark_kind(dtype_str: str) -> str:
     # src/proto.rs:199-201 — length caps are schema metadata, not storage)
     if dtype_str.startswith(("char(", "varchar(")):
         return "string"
-    # decimal(p,s), p<=18: scaled-int64 mantissa through the int codecs
-    # (the ORC decimal64 path; Kind::Decimal, src/proto.rs:197)
     # decimal(p,s): p<=18 rides a scaled-int64 mantissa through the int
     # codecs (the ORC decimal64 path; Kind::Decimal, src/proto.rs:197);
     # p>18 splits the int128 mantissa into (lo64, hi64) word streams, each
@@ -92,11 +85,11 @@ def spark_kind(dtype_str: str) -> str:
     if mdec:
         p, s = int(mdec.group(1)), int(mdec.group(2))
         return f"decimal_{p}_{s}"
-    # generic nested list: array<X> for any already-supported X (including
-    # another array) becomes a recursive ``list:<child kind>`` column — the
-    # child column is encoded as its own full stripe-column (present/data/
-    # length/... streams chosen by the selector) and packed into the
-    # parent's Data stream; arbitrary nesting depth
+    # array<X> for any supported X (another array included) is the one
+    # list kind, ``list:<kind of X>``: the ORC compound model, a Length
+    # stream plus a child that is an ordinary column (src/proto.rs:190),
+    # encoded as its own full stripe-column (streams chosen by the
+    # selector) and packed into the parent's Data stream
     marr = re.match(r"array<(.+)>$", dtype_str)
     if marr:
         return f"list:{spark_kind(marr.group(1))}"
@@ -115,18 +108,9 @@ def _checksum(vals, valid: np.ndarray, kind: str) -> str:
         blob, lengths = _s.encode_direct(vals, binary=(kind == "binary"))
         crc = zlib.crc32(blob, crc)
         crc = zlib.crc32(lengths.astype("<u8").tobytes(), crc)
-    elif isinstance(vals, tuple):  # list: (flat values, lengths, child_valid)
-        flat = vals[0]
-        if isinstance(flat, (pa.Array, pa.ChunkedArray)):
-            from .codecs import strings as _s
-            blob, slens = _s.encode_direct(flat)
-            crc = zlib.crc32(blob, crc)
-            crc = zlib.crc32(slens.astype("<u8").tobytes(), crc)
-        else:
-            crc = zlib.crc32(np.ascontiguousarray(flat).tobytes(), crc)
+    elif isinstance(vals, tuple):  # list: (child checksum bytes, lengths)
+        crc = zlib.crc32(vals[0], crc)
         crc = zlib.crc32(vals[1].astype("<u8").tobytes(), crc)
-        if len(vals) > 2 and vals[2] is not None:
-            crc = zlib.crc32(np.packbits(vals[2]).tobytes(), crc)
     else:
         crc = zlib.crc32(np.ascontiguousarray(vals).tobytes(), crc)
     return f"{crc:08x}"
@@ -178,31 +162,6 @@ def _values_and_mask(arr: pa.Array, kind: str):
         if isinstance(flat, pa.ChunkedArray):
             flat = flat.combine_chunks()
         vals = (flat, lengths)
-    elif kind.startswith("array_"):
-        # list columns: (flat non-null child values, per-row SLOT lengths,
-        # child validity or None) — the ORC List layout (Length stream +
-        # child Present stream + child Data stream)
-        import pyarrow.compute as pc
-        lengths = pc.list_value_length(nn).to_numpy(zero_copy_only=False).astype(np.uint64)
-        flat = nn.flatten()
-        if isinstance(flat, pa.ChunkedArray):
-            flat = flat.combine_chunks()
-        if flat.null_count:
-            child_valid = np.asarray(flat.is_valid())
-            flat = flat.drop_null()
-        else:
-            child_valid = None
-        if kind != "array_string":
-            if kind == "array_ts":  # epoch µs through the int codecs
-                flat = flat.cast(pa.int64())
-            elif kind == "array_date":  # epoch days
-                flat = flat.cast(pa.int32())
-            flat = flat.to_numpy(zero_copy_only=False)
-            if kind in ("array_int64", "array_ts", "array_date"):
-                flat = flat.astype(np.int64, copy=False)
-            elif kind == "array_bool":
-                flat = flat.astype(bool, copy=False)
-        vals = (flat, lengths, child_valid)
     else:
         raise ValueError(kind)
     return vals, valid
@@ -332,33 +291,6 @@ def encode_column(arr: pa.Array | pa.ChunkedArray, kind: str,
         row.update(codec="bin_direct", data=blob,
                    length=rle_v2.encode(lengths, signed=False))
         raw = len(blob) + 8 * len(lengths)
-    elif kind.startswith("array_float"):
-        flat, lengths, child_valid = vals
-        fdtype = "float32" if kind.endswith("32") else "float64"
-        enc = (selector.encode_floats(flat) if fdtype == "float64"
-               and force_codec is None else None)
-        if enc is not None:
-            # decimal-like double children ride the ALP mantissa path
-            # (dict_data is otherwise unused for float lists)
-            row.update(codec="alp_list:" + enc["codec"].split(":", 1)[1],
-                       data=enc["data"], dict_data=enc["dict_data"],
-                       extra=enc["extra"],
-                       length=rle_v2.encode(lengths, signed=False))
-        else:
-            row.update(codec="float_list", data=floats.encode(flat, fdtype),
-                       length=rle_v2.encode(lengths, signed=False))
-        raw = int(flat.nbytes) + 8 * len(lengths)
-    elif kind in ("array_int64", "array_ts", "array_date"):
-        flat, lengths, child_valid = vals
-        codec, data, extra = selector.encode_ints(flat)
-        row.update(codec=f"int_list:{codec}", data=data, extra=extra,
-                   length=rle_v2.encode(lengths, signed=False))
-        raw = int(flat.nbytes) + 8 * len(lengths)
-    elif kind == "array_bool":
-        flat, lengths, child_valid = vals
-        row.update(codec="bool_list", data=boolean_rle.encode_bools(flat),
-                   length=rle_v2.encode(lengths, signed=False))
-        raw = len(flat) + 8 * len(lengths)
     elif kind.startswith("list:"):
         # recursive list: slot lengths in Length, the child column encoded
         # as its own full stripe-column row packed into Data (arbitrary
@@ -369,27 +301,9 @@ def encode_column(arr: pa.Array | pa.ChunkedArray, kind: str,
                    length=rle_v2.encode(lengths, signed=False))
         raw = int(crow["raw_bytes"]) + 8 * len(lengths)
         # checksum input: child integrity rides the child row's checksum
-        vals = (np.frombuffer(crow["checksum"].encode(), dtype=np.uint8),
-                lengths, None)
-    elif kind == "array_string":
-        # List<string>: list-lengths in Length, child blob in Data, child
-        # byte-lengths in DictData (an otherwise-unused stream for lists)
-        from .codecs import strings as _s
-        flat, lengths, child_valid = vals
-        blob, slens = _s.encode_direct(flat)
-        row.update(codec="str_list", data=blob,
-                   dict_data=rle_v2.encode(slens, signed=False),
-                   length=rle_v2.encode(lengths, signed=False))
-        raw = len(blob) + 8 * len(slens) + 8 * len(lengths)
+        vals = (crow["checksum"].encode(), lengths)
     else:
         raise ValueError(kind)
-    if kind.startswith("array_") and vals[2] is not None:
-        # null elements INSIDE arrays: a child Present stream (one more
-        # boolean-RLE leaf, the ORC child-column PRESENT analog), varint-
-        # framed ahead of any codec-specific extra bytes
-        cp = boolean_rle.encode_bools(vals[2])
-        row["extra"] = (varint.encode_unsigned(len(cp)) + cp + row["extra"])
-        row["codec"] = "nullable:" + row["codec"]
     # generic block-compression layer on the big streams (is-original escape
     # framing, reference decompress/mod.rs:9-17); selector keeps it only if
     # it shrinks
@@ -418,11 +332,15 @@ def encode_column(arr: pa.Array | pa.ChunkedArray, kind: str,
 # predicate reads ONLY the matching strides' bytes.
 # ---------------------------------------------------------------------------
 
+# A stride index stores each stride's codec as its position in this list,
+# so the list only ever grows. The list codecs of the retired per-type
+# array kinds are never written any more, but they keep their slots as
+# placeholders: dropping them would renumber ``alp:*``, ``float_shuf`` and
+# ``list`` in every strided table already on disk.
 _CODEC_IDS = ["rle_v2", "for", "for_scale", "float_raw", "bool_rle",
               "str_direct", "str_dict", "str_fsst", "float_list", "bin_direct",
               "int_list:rle_v2", "int_list:for", "int_list:for_scale",
               "str_list",
-              # appended (ids are persisted in stride indexes — never reorder)
               "nullable:float_list", "nullable:int_list:rle_v2",
               "nullable:int_list:for", "nullable:int_list:for_scale",
               "nullable:str_list"] + [
@@ -555,13 +473,19 @@ def _strides_overlapping(row: dict, lo, hi) -> list[int]:
     return keep
 
 
-def _decode_arrow(row: dict, target_type: pa.DataType,
+def _decode_arrow(row: dict, target_type: pa.DataType | None = None,
                   keep: list[int] | None = None) -> pa.Array:
-    """One stripe-column row as an Arrow array of ``target_type``. A
-    strided row decodes stride by stride, joined in stride order: only
-    the strides in ``keep`` (all when None), and only their bytes are
-    ever touched."""
+    """One stripe-column row as an Arrow array of ``target_type`` (the
+    kind's default type when None). A strided row decodes stride by
+    stride, joined in stride order: only the strides in ``keep`` (all
+    when None), and only their bytes are ever touched."""
     kind = row["col_kind"]
+    if re.match(r"(list:)*array_", kind):
+        raise ValueError(
+            f"stripe {row.get('stripe_id')}: column kind {kind!r} was "
+            "written by an older engine — re-encode the table")
+    if target_type is None:
+        target_type = _default_arrow_type(kind)
     if row["codec"] != "strided":
         return _to_arrow_array(_decode_column_parts(row), kind, target_type)
     bufs = {s: bytes(row[s]) for s in _STREAMS}
@@ -592,13 +516,7 @@ def _default_arrow_type(kind: str) -> pa.DataType:
          "int64": pa.int64(), "float32": pa.float32(), "float64": pa.float64(),
          "bool": pa.bool_(), "string": pa.string(),
          "timestamp": pa.timestamp("us"), "date": pa.date32(),
-         "array_float32": pa.list_(pa.float32()),
-         "array_float64": pa.list_(pa.float64()),
-         "array_int64": pa.list_(pa.int64()),
-         "array_string": pa.list_(pa.string()),
-         "array_bool": pa.list_(pa.bool_()),
-         "array_ts": pa.list_(pa.timestamp("us")),
-         "array_date": pa.list_(pa.date32()), "binary": pa.binary()}
+         "binary": pa.binary()}
     if kind in m:
         return m[kind]
     if kind.startswith("list:"):
@@ -612,7 +530,7 @@ def _default_arrow_type(kind: str) -> pa.DataType:
 def decode_column(row: dict) -> pa.Array:
     """Decode one stripe-column row back to a full-length Arrow array with
     nulls, typed by the column kind's default Arrow type."""
-    return _decode_arrow(row, _default_arrow_type(row["col_kind"]))
+    return _decode_arrow(row)
 
 
 # ---------------------------------------------------------------------------
@@ -702,39 +620,6 @@ def _decode_column_parts(row: dict):
         crow = _unpack_child_row(bytes(data), kind[5:])
         child_dec = _decode_column_parts(crow)
         return (child_dec, lengths), valid
-    if kind.startswith("array_"):
-        lengths = rle_v2.decode(row["length"], n_valid, signed=False)
-        total = int(lengths.sum())
-        extra = bytes(row["extra"])
-        child_valid = None
-        n_child = total
-        if codec.startswith("nullable:"):
-            codec = codec[len("nullable:"):]
-            cp_len, pos = varint.decode_unsigned(extra, 0)
-            child_valid = boolean_rle.decode_bools(extra[pos:pos + cp_len],
-                                                   total)
-            extra = extra[pos + cp_len:]
-            n_child = int(child_valid.sum())
-        if kind.startswith("array_float"):
-            if codec.startswith("alp_list:"):
-                flat = selector.decode_floats_alp(
-                    "alp:" + codec.split(":", 1)[1],
-                    data, dict_data, extra, n_child)
-            else:
-                fdtype = "float32" if kind.endswith("32") else "float64"
-                flat = floats.decode(data, n_child, fdtype)
-        elif kind == "array_bool":
-            flat = boolean_rle.decode_bools(data, n_child)
-        elif kind in ("array_int64", "array_ts", "array_date"):
-            child_codec = codec.split(":", 1)[1]
-            flat = selector.decode_ints(child_codec, data, extra, n_child)
-        elif kind == "array_string":
-            from .codecs import strings as _s
-            slens = rle_v2.decode(dict_data, n_child, signed=False)
-            flat = _s.decode_direct(data, slens)
-        else:
-            raise ValueError(kind)
-        return (flat, lengths, child_valid), valid
     if (kind in INT_KINDS or kind in ("timestamp", "date")
             or kind.startswith("decimal_")):
         vals = selector.decode_ints(codec, data, row["extra"], n_valid)
@@ -776,35 +661,6 @@ def _to_arrow_array(dec, kind: str, target_type: pa.DataType) -> pa.Array:
         np.cumsum(lengths.astype(np.int64), out=offsets[1:])
         lists = pa.LargeListArray.from_arrays(
             pa.array(offsets, type=pa.int64()), child)
-        if n_valid != n:
-            idx = np.zeros(n, dtype=np.int64)
-            idx[valid] = np.arange(n_valid)
-            lists = lists.take(pa.array(idx, mask=~valid))
-        return lists.cast(target_type)
-    if kind.startswith("array_"):
-        flat, lengths, child_valid = vals
-        # int64 offsets: a stripe of 65k rows x wide embeddings can exceed
-        # 2^31-1 flat elements; int32 cumsum would silently wrap. LargeList
-        # holds any size; the cast to the (32-bit-offset) target raises
-        # explicitly instead of corrupting if it genuinely overflows.
-        offsets = np.zeros(n_valid + 1, dtype=np.int64)
-        np.cumsum(lengths.astype(np.int64), out=offsets[1:])
-        child = flat if isinstance(flat, pa.Array) else pa.array(flat)
-        if kind == "array_ts":
-            child = child.cast(pa.timestamp("us"))
-            vt = getattr(target_type, "value_type", None)
-            if vt is not None and pa.types.is_timestamp(vt) and vt.tz:
-                import pyarrow.compute as pc
-                child = pc.assume_timezone(child, "UTC")  # UTC instants
-        elif kind == "array_date":
-            child = child.cast(pa.int32()).cast(pa.date32())
-        if child_valid is not None:
-            # scatter non-null child values into the full slot positions
-            total = len(child_valid)
-            cidx = np.zeros(total, dtype=np.int64)
-            cidx[child_valid] = np.arange(int(child_valid.sum()))
-            child = child.take(pa.array(cidx, mask=~child_valid))
-        lists = pa.LargeListArray.from_arrays(pa.array(offsets, type=pa.int64()), child)
         if n_valid != n:
             idx = np.zeros(n, dtype=np.int64)
             idx[valid] = np.arange(n_valid)

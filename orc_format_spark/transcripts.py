@@ -128,9 +128,10 @@ def enrich(df: DataFrame) -> DataFrame:
     name:string, args:map<string,string>>, at:timestamp>>`` column, derived
     deterministically JVM-side from the flat columns (tool turns get one
     call, every 8th a retry pair; non-tool turns NULL). Exercises the
-    engine's recursive nested flatten — per-element present leaves, the
-    in-element map's array<array<string>> keys/values leaves, and the
-    array<timestamp> leaf — on the exact shape a real agent-transcript
+    engine's recursive nested flatten — per-element present leaves
+    (``list:bool``), the in-element map's array<array<string>> keys/values
+    leaves (``list:list:string``), and the array<timestamp> leaf
+    (``list:timestamp``) — on the exact shape a real agent-transcript
     pipeline encodes."""
     def call(suffix: str, args_map):
         return F.struct(

@@ -224,15 +224,23 @@ def test_alp_float_codec_bit_identity_and_fallback():
 
 
 def test_alp_list_float64_children():
-    """ALP for array<double> children (alp_list codec): decimal-like list
-    doubles ride scaled-int mantissas; null lists, null elements, -0.0 and
-    NaN all survive; random children fall back to float_list; float32
-    lists stay raw."""
+    """ALP for array<double> children: a ``list:float64`` column's child is
+    an ordinary float64 column, so decimal-like list doubles ride the
+    child's ``alp:`` scaled-int mantissas with the child's own Present
+    stream; null lists, null elements, -0.0 and NaN all survive; random
+    children fall back off ALP; float32 children stay raw."""
     import math
 
     import numpy as np
     import pyarrow as pa
     from orc_format_spark import stripe
+
+    def child(row):
+        comp = row["compression"].split("|")[0]
+        data = bytes(row["data"])
+        return stripe._unpack_child_row(
+            deflate.decompress(data) if comp == "zlib" else data,
+            row["col_kind"][5:])
 
     rng = np.random.default_rng(5)
     vals = [list(np.round(rng.uniform(-100, 100, rng.integers(0, 6)), 2))
@@ -250,20 +258,25 @@ def test_alp_list_float64_children():
                 else (v, math.copysign(1, v)) for v in x]
 
     exp = [canon(x) for x in arr.to_pylist()]
-    row = stripe.encode_column(arr, "array_float64")
-    assert row["codec"] == "nullable:alp_list:rle_v2"
+    row = stripe.encode_column(arr, "list:float64")
+    assert row["codec"] == "list"
+    crow = child(row)
+    assert crow["codec"] == "alp:rle_v2"
+    assert crow["n_nulls"] == 1 and crow["present"]
     dec = stripe._to_arrow_array(stripe._decode_column_parts(row),
-                                 "array_float64", arr.type)
+                                 "list:float64", arr.type)
     assert [canon(x) for x in dec.to_pylist()] == exp
-    srow = stripe.encode_column_strided(arr, "array_float64", index_rows=512)
+    srow = stripe.encode_column_strided(arr, "list:float64", index_rows=512)
     sdec = stripe._decode_arrow(srow, arr.type)
     assert [canon(x) for x in sdec.to_pylist()] == exp
 
     rnd = pa.array([list(rng.uniform(0, 1, 4)) for _ in range(500)],
                    type=pa.list_(pa.float64()))
-    assert stripe.encode_column(rnd, "array_float64")["codec"] == "float_list"
+    assert not child(stripe.encode_column(rnd, "list:float64"))[
+        "codec"].startswith("alp:")
     f32 = pa.array([[1.5]], type=pa.list_(pa.float32()))
-    assert stripe.encode_column(f32, "array_float32")["codec"] == "float_list"
+    assert child(stripe.encode_column(f32, "list:float32"))[
+        "codec"] == "float_raw"
 
 
 def test_float_shuffle_fallback():

@@ -124,6 +124,43 @@ def test_encode_decode_roundtrip_after_vectorization():
     assert fsst.decode(np.frombuffer(enc, dtype=np.uint8), len(blob)) == blob
 
 
+def test_decode_255_symbols_with_escapes_builds_no_table(monkeypatch):
+    """decode reads a full 255-symbol header (every length 1-8) and
+    escapes, literal 255s included, to the exact input and the exact
+    loop-decoder output, without building a SymbolTable: only the
+    encoder needs its lookup tables."""
+    rng = np.random.default_rng(17)
+    symbols = sorted({bytes(rng.integers(0, 200, int(L), dtype=np.uint8))
+                      for L in rng.integers(1, 9, 600)})[:fsst.MAX_SYMBOLS]
+    assert len(symbols) == fsst.MAX_SYMBOLS
+    table = fsst.SymbolTable(symbols)
+    parts = [symbols[i] for i in rng.integers(0, len(symbols), 3000)]
+    parts += [bytes([255, 255, 254, 255])] * 40  # bytes no symbol starts with
+    rng.shuffle(parts)
+    blob = b"".join(parts)
+    codes = fsst._greedy_encode(np.frombuffer(blob, dtype=np.uint8), table)
+    assert (codes == fsst.ESCAPE).sum() >= 160
+    buf = table.serialize() + codes.tobytes()
+    parsed, pos = fsst.SymbolTable.deserialize(buf)
+    assert parsed.symbols == symbols and pos == len(table.serialize())
+
+    want, i = bytearray(), len(table.serialize())
+    while i < len(buf):  # the one-token-at-a-time decoder
+        if buf[i] == fsst.ESCAPE:
+            want.append(buf[i + 1])
+            i += 2
+        else:
+            want += symbols[buf[i]]
+            i += 1
+    assert bytes(want) == blob
+
+    def no_table(*args, **kwargs):
+        raise AssertionError("decode built a SymbolTable")
+
+    monkeypatch.setattr(fsst.SymbolTable, "__init__", no_table)
+    assert fsst.decode(buf, len(blob)) == blob
+
+
 def _reference_match_all(data: np.ndarray, table: fsst.SymbolTable):
     """Brute-force longest-match reference (no prescreens, no hashing)."""
     n = len(data)

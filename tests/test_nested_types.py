@@ -84,31 +84,44 @@ def test_null_array_elements_roundtrip_spark(spark):
     assert got == {1: ["a", None, "b"], 2: None, 3: []}
 
 
+def _child_row(row):
+    """The list row's child column row, unpacked from its Data stream."""
+    from orc_format_spark import stripe
+    from orc_format_spark.codecs import deflate
+    data = bytes(row["data"])
+    if row["compression"].split("|")[0] == "zlib":
+        data = deflate.decompress(data)
+    return stripe._unpack_child_row(data, row["col_kind"][5:])
+
+
 def test_null_elements_inside_arrays_roundtrip():
     """Child Present stream: nulls INSIDE list columns (list-level nulls,
-    empty lists, and all-null lists mixed) survive encode->decode."""
+    empty lists, and all-null lists mixed) survive encode->decode; the
+    child row counts them."""
     import pyarrow as pa
     from orc_format_spark import stripe
     cases = [
         (pa.array([[1, 2, None], [4], None, [None, None], []],
-                  type=pa.list_(pa.int64())), "array_int64"),
+                  type=pa.list_(pa.int64())), "array<bigint>", 3),
         (pa.array([["a", None, "b"], None, ["c"], [], [None]],
-                  type=pa.list_(pa.string())), "array_string"),
+                  type=pa.list_(pa.string())), "array<string>", 2),
         (pa.array([[1.5, None], [2.25], None], type=pa.list_(pa.float64())),
-         "array_float64"),
+         "array<double>", 1),
         (pa.array([[None, 1.0], [3.0]], type=pa.list_(pa.float32())),
-         "array_float32"),
+         "array<float>", 1),
     ]
-    for arr, kind in cases:
+    for arr, spark_type, child_nulls in cases:
+        kind = stripe.spark_kind(spark_type)
+        assert kind == "list:" + stripe.spark_kind(spark_type[6:-1])
         row = stripe.encode_column(arr, kind)
-        assert row["codec"].startswith("nullable:")
+        assert _child_row(row)["n_nulls"] == child_nulls, kind
         dec = stripe._to_arrow_array(stripe._decode_column_parts(row),
                                      kind, arr.type)
         assert dec.equals(arr), (kind, dec.to_pylist(), arr.to_pylist())
     # strided variant
     arr = pa.array([[i, None] if i % 3 == 0 else [i] for i in range(100)],
                    type=pa.list_(pa.int64()))
-    row = stripe.encode_column_strided(arr, "array_int64", index_rows=16)
+    row = stripe.encode_column_strided(arr, "list:int64", index_rows=16)
     assert stripe._decode_arrow(row, arr.type).equals(arr)
 
 
@@ -117,8 +130,28 @@ def test_no_null_elements_keeps_plain_codec():
     import pyarrow as pa
     from orc_format_spark import stripe
     arr = pa.array([[1, 2], [3]], type=pa.list_(pa.int64()))
-    row = stripe.encode_column(arr, "array_int64")
-    assert not row["codec"].startswith("nullable:")
+    crow = _child_row(stripe.encode_column(arr, "list:int64"))
+    assert crow["n_nulls"] == 0 and crow["present"] == b""
+
+
+def test_retired_array_kinds_raise_a_reencode_error():
+    """A stripe row of a per-type array kind (written before every array
+    became ``list:``), or a ``list:`` row whose child is one, names its
+    kind and stripe and asks for a re-encode."""
+    import pyarrow as pa
+    from orc_format_spark import stripe
+    row = stripe.encode_column(pa.array([[1.5], None]),
+                               "list:float64")
+    for kind in ("array_float64", "list:array_string"):
+        old = dict(row, col_kind=kind, stripe_id="b3-s0", bucket=3,
+                   col_name="c")
+        with pytest.raises(ValueError, match=(
+                rf"stripe b3-s0: column kind '{kind}' was written by an "
+                r"older engine — re-encode the table")):
+            stripe.decode_stripe_arrow(
+                [old], ["c"], pa.schema([("c", pa.list_(pa.float64()))]))
+        with pytest.raises(ValueError, match="re-encode the table"):
+            stripe.decode_column(old)
 
 
 def test_decimal38_roundtrip_spark(spark):

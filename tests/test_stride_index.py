@@ -51,9 +51,24 @@ def test_strided_array_float_roundtrip():
     rng = np.random.default_rng(2)
     vecs = [rng.standard_normal(8).astype(np.float32).tolist() for _ in range(n)]
     arr = pa.array(vecs, type=pa.list_(pa.float32()))
-    strided = stripe.encode_column_strided(arr, "array_float32", 64)
+    strided = stripe.encode_column_strided(arr, "list:float32", 64)
     got = stripe.decode_column(strided)
     assert got.to_pylist() == arr.to_pylist()
+
+
+def test_codec_ids_keep_their_persisted_positions():
+    """Stride indexes persist each codec as its position in _CODEC_IDS:
+    every id the encoder can still write keeps the slot it had when the
+    per-type list codecs were retired, so tables on disk keep decoding."""
+    pinned = {"rle_v2": 0, "for": 1, "for_scale": 2, "float_raw": 3,
+              "bool_rle": 4, "str_direct": 5, "str_dict": 6, "str_fsst": 7,
+              "bin_direct": 9, "alp:rle_v2": 30, "alp:for": 31,
+              "alp:for_scale": 32, "float_shuf": 33, "list": 40}
+    ints = ("rle_v2", "for", "for_scale")
+    pinned.update({f"dec128:{a}:{b}": 19 + 3 * i + j
+                   for i, a in enumerate(ints) for j, b in enumerate(ints)})
+    assert {c: stripe._CODEC_IDS.index(c) for c in pinned} == pinned
+    assert len(stripe._CODEC_IDS) == 41
 
 
 def test_stride_skip_decodes_under_10_percent():
